@@ -163,6 +163,10 @@ SPREAD_ESCALATE = 1.5
 VS_PREV_ESCALATE = 1.25
 
 
+#: fewest samples a fast row trims; below it the row records its median
+MIN_TRIM_SAMPLES = 6
+
+
 def row_statistic(samples_sorted: list[float], trim: bool) -> float:
     """Artifact statistic for one bench row (VERDICT r15 next #7):
     sub-second rows pay the largest RELATIVE noise and host contention on
@@ -176,8 +180,10 @@ def row_statistic(samples_sorted: list[float], trim: bool) -> float:
     and every sample stays in BENCH_DETAIL.json, so nothing is hidden
     and the old statistic remains recoverable.  Heavy rows keep the
     plain median (their relative noise is small and the median is the
-    statistic every prior round recorded)."""
-    if trim:
+    statistic every prior round recorded), and so does a fast row with
+    fewer than MIN_TRIM_SAMPLES samples: dropping 2 of them would leave
+    too few to mean (none at all below 3)."""
+    if trim and len(samples_sorted) >= MIN_TRIM_SAMPLES:
         kept = samples_sorted[:-2]
         return round(sum(kept) / len(kept), 3)
     return round(samples_sorted[len(samples_sorted) // 2], 3)
@@ -862,10 +868,7 @@ def main() -> None:
             ):
                 target = MAX_RUNS
         s = sorted(samples)
-        trim = (
-            name in fast_rows
-            or (name not in prev_q and min(s) < FAST_ROW_SEC)
-        ) and len(s) >= 6
+        trim = name in fast_rows or (name not in prev_q and min(s) < FAST_ROW_SEC)
         times[name] = row_statistic(s, trim)
         spread[name] = [round(s[0], 3), round(s[-1], 3)]
         run_counts[name] = len(s)

@@ -26,7 +26,7 @@ worse, silently null-folds — and a non-finite double renders as
 ``'inf'``/``'nan'``, which ``CAST(... AS DOUBLE)`` turns into NULL (the
 Java parser wants 'Infinity'/'NaN').  Neither is reachable from current
 callers (model states are non-empty and finite by construction), so both
-assert rather than grow a rendering branch no caller exercises.
+raise ``ValueError`` (kept under ``python -O``) instead of rendering.
 """
 
 from __future__ import annotations
@@ -37,24 +37,27 @@ import math
 def sql_double(v: float) -> str:
     """One double as an exactly-round-tripping SQL expression."""
     v = float(v)
-    assert math.isfinite(v), (
-        f"sql_double: non-finite {v!r} would CAST to NULL, not a DOUBLE "
-        "literal — render Infinity/NaN explicitly if a caller ever needs it"
-    )
+    if not math.isfinite(v):
+        raise ValueError(
+            f"sql_double: non-finite {v!r} would CAST to NULL, not a DOUBLE "
+            "literal — render Infinity/NaN explicitly if a caller ever needs it"
+        )
     return f"CAST('{v!r}' AS DOUBLE)"
 
 
 def sql_double_array(vals) -> str:
     """array<double> literal from Python floats, bit-exact."""
     vals = list(vals)
-    assert vals, "sql_double_array: empty array() parses null-typed"
+    if not vals:
+        raise ValueError("sql_double_array: empty array() parses null-typed")
     return "array(" + ", ".join(sql_double(v) for v in vals) + ")"
 
 
 def sql_long_array(vals) -> str:
     """array<bigint> literal from Python ints."""
     vals = list(vals)
-    assert vals, "sql_long_array: empty array() parses null-typed"
+    if not vals:
+        raise ValueError("sql_long_array: empty array() parses null-typed")
     return "array(" + ", ".join(str(int(v)) + "L" for v in vals) + ")"
 
 
@@ -82,5 +85,6 @@ def sql_string(s: str) -> str:
 def sql_string_array(vals) -> str:
     """array<string> literal from Python strings, exact."""
     vals = list(vals)
-    assert vals, "sql_string_array: empty array() parses null-typed"
+    if not vals:
+        raise ValueError("sql_string_array: empty array() parses null-typed")
     return "array(" + ", ".join(sql_string(v) for v in vals) + ")"

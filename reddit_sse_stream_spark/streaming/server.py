@@ -16,17 +16,16 @@ Faithful API surface:
 
 gzip/conn-limits stay at the proxy layer (nginx), as in the reference.
 
-The "ONE query, N clients" claim carries a measured number: bench.py's
-``streaming_e2e_events_per_sec`` drives FeedStreamReader -> foreachBatch ->
-SSEBroadcaster -> this server end to end with 2 concurrent HTTP clients
-consuming the chunked SSE wire format (~20k delivered events/s at sf0.1 on
-local[32], vs the reference's designed ~175 events/s per-connection ceiling).
+Delivery is pushed, not polled: each connection blocks on the
+broadcaster's condition until its client has new frames, then writes all of
+them as one chunk.  ``perfbench/run.py``'s ``live_ref`` workload measures
+this path end to end, out of process: raw-socket clients at the reference's
+120 events/s against ``serve``'s shipped settings.
 """
 
 from __future__ import annotations
 
 import threading
-import time
 import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
@@ -45,7 +44,6 @@ class SSEServer:
 
     def __init__(self, broadcaster: SSEBroadcaster, host: str = "127.0.0.1", port: int = 0):
         self.broadcaster = broadcaster
-        self._poll_interval = 0.05
         server = self
 
         class Handler(BaseHTTPRequestHandler):
@@ -83,22 +81,20 @@ class SSEServer:
                 self.end_headers()
                 cursor = 0
                 try:
-                    while not server._closing.is_set():
-                        # cursor read drains acknowledged frames: each poll
-                        # costs O(new frames), and per-connection memory
-                        # stays O(undelivered) for long-lived SSE clients
+                    while server.broadcaster.wait(client_id, cursor, server._closing.is_set):
+                        # the cursor read acks (drops) what was written
+                        # before, so a connection holds O(undelivered)
                         cursor, frames = server.broadcaster.frames_since(
                             client_id, cursor
                         )
-                        for frame in frames:
-                            data = frame.encode()
-                            self.wfile.write(b"%x\r\n%s\r\n" % (len(data), data))
-                            self.wfile.flush()
-                        time.sleep(server._poll_interval)
+                        data = "".join(frames).encode()
+                        self.wfile.write(b"%x\r\n%s\r\n" % (len(data), data))
+                        self.wfile.flush()
                 except (BrokenPipeError, ConnectionResetError):
                     pass
                 finally:
                     server.broadcaster.unregister(client_id)
+                    self.close_connection = True
 
         self._httpd = ThreadingHTTPServer((host, port), Handler)
         self._closing = threading.Event()
@@ -114,5 +110,6 @@ class SSEServer:
 
     def stop(self) -> None:
         self._closing.set()
+        self.broadcaster.wake()
         self._httpd.shutdown()
         self._httpd.server_close()

@@ -63,7 +63,8 @@ class ClientState:
 
 class SSEBroadcaster:
     """One shared streaming query -> N clients with independent compiled
-    specs. Use :meth:`foreach_batch` as the ``foreachBatch`` function."""
+    specs. Use :meth:`foreach_batch` as the ``foreachBatch`` function;
+    connections block in :meth:`wait` and read with :meth:`frames_since`."""
 
     #: serving-layer circuit breaker: the per-batch driver collect is
     #: bounded by the source's per-trigger cap (25+10 ids in reference
@@ -78,34 +79,30 @@ class SSEBroadcaster:
         max_collect_rows: int = DEFAULT_MAX_COLLECT_ROWS,
     ):
         self._clients: dict[str, ClientState] = {}
-        self._lock = threading.Lock()
+        #: guards every ClientState; notified whenever frames are appended
+        self._cond = threading.Condition()
         self._clock = clock
         self.max_collect_rows = max_collect_rows
 
     def register(self, client_id: str, spec: QuerySpec) -> ClientState:
         state = ClientState(spec=spec, last_sent=self._clock())
-        with self._lock:
+        with self._cond:
             self._clients[client_id] = state
         return state
 
     def unregister(self, client_id: str) -> None:
-        with self._lock:
+        with self._cond:
             self._clients.pop(client_id, None)
-
-    def frames_for(self, client_id: str) -> list[str]:
-        """Copy of the client's current (undrained) frame buffer."""
-        with self._lock:
-            return list(self._clients[client_id].frames)
 
     def frames_since(self, client_id: str, offset: int) -> tuple[int, list[str]]:
         """Consumer-cursor read: return ``(next_offset, frames)`` with every
         frame at sequence >= ``offset``, and DROP frames below it — the
         consumer passing ``offset`` back acknowledges delivery of everything
         before it.  Ack-based pruning keeps per-connection memory at
-        O(undelivered) and each poll at O(new frames), not O(history);
+        O(undelivered) and each read at O(new frames), not O(history);
         frames written to a socket that later breaks mid-batch are still
         re-readable because they are only dropped on the NEXT call."""
-        with self._lock:
+        with self._cond:
             st = self._clients[client_id]
             drop = min(max(offset - st.base_seq, 0), len(st.frames))
             if drop:
@@ -114,11 +111,23 @@ class SSEBroadcaster:
             out = list(st.frames)
             return st.base_seq + len(out), out
 
+    def wait(self, client_id: str, offset: int, stopped: Callable[[], bool]) -> bool:
+        """Block until a frame at ``offset`` or later exists (True) or ``stopped()`` (False)."""
+        with self._cond:
+            st = self._clients[client_id]
+            self._cond.wait_for(lambda: stopped() or st.base_seq + len(st.frames) > offset)
+            return not stopped()
+
+    def wake(self) -> None:
+        """Wake every :meth:`wait` so it re-checks its ``stopped``."""
+        with self._cond:
+            self._cond.notify_all()
+
     # ------------------------------------------------------------------ #
 
     def foreach_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """Per micro-batch: ONE driver-side materialization of the (small,
-        rate-limited) batch, then per-client filter/sort/project in memory.
+        rate-limited) batch, then :meth:`publish`.
 
         The rows that reach the driver are bounded by the source's
         per-trigger cap (25+10 ids/poll in reference mode) — this is a
@@ -133,45 +142,44 @@ class SSEBroadcaster:
                 "per trigger (max_ids_per_batch); the serving fan-out is not "
                 "a data-processing collect"
             )
+        self.publish(rows)
+
+    def publish(self, rows) -> None:
+        """Fan one batch of feed rows out to every client; wake their connections."""
         now = self._clock()
-        with self._lock:
-            clients = dict(self._clients)
-        # One M2 sort per BATCH (it used to run once per client), and one
-        # predicate/projection/format pass per DISTINCT spec: QuerySpec is
-        # a frozen dataclass, so same-spec clients (the common fan-out
-        # shape — N dashboards on one firehose query) share the computed
-        # frames and counter deltas byte-for-byte instead of re-running
-        # the pure-Python emit loop N times.  Measured on a 10k-row batch
-        # with 16 clients: 1.16M delivered-events/s with 16 DISTINCT
-        # specs vs 16.0M with one shared spec (13.8x) — the e2e bench
-        # number stays HTTP/GIL-bound in its in-process harness, so the
-        # win shows up as driver-CPU headroom, not wire throughput.
-        rows_sorted = sorted(rows, key=lambda r: (r["created_utc"], r["id"]))
         by_spec: dict = {}
-        for state in clients.values():
-            by_spec.setdefault(state.spec, []).append(state)
-        for spec, states in by_spec.items():
-            frames, d_tcs, d_tss, d_tbs = self._render_for_spec(
-                spec, rows_sorted
-            )
-            for state in states:
-                state.tcs += d_tcs
-                state.tss += d_tss
-                state.tbs += d_tbs
-                state.frames.extend(frames)
-                if frames:
-                    state.last_sent = now
+        with self._cond:
+            for state in self._clients.values():
+                by_spec.setdefault(state.spec, []).append(state)
+        # One M2 sort per BATCH and one render per DISTINCT spec (QuerySpec
+        # is frozen), both outside the lock: same-spec clients — N
+        # dashboards on one firehose query — share frames and counter
+        # deltas byte-for-byte (10k-row batch, 16 clients: 16.0M
+        # delivered-events/s on one spec vs 1.16M on 16 distinct specs).
+        rows_sorted = sorted(rows, key=lambda r: (r["created_utc"], r["id"]))
+        rendered = {s: self._render_for_spec(s, rows_sorted) for s in by_spec}
+        with self._cond:
+            for spec, states in by_spec.items():
+                frames, d_tcs, d_tss, d_tbs = rendered[spec]
+                for state in states:
+                    state.tcs += d_tcs
+                    state.tss += d_tss
+                    state.tbs += d_tbs
+                    state.frames.extend(frames)
+                    if frames:
+                        state.last_sent = now
+            self._cond.notify_all()
 
     def tick(self) -> None:
         """Idle keepalive check (the reference runs it per poll-loop
         iteration, sse.py:137-143); call on a timer or per trigger."""
         now = self._clock()
-        with self._lock:
-            clients = dict(self._clients)
-        for state in clients.values():
-            if now - state.last_sent > KEEP_ALIVE_INTERVAL:
-                state.frames.append(state.keepalive_frame())
-                state.last_sent = now
+        with self._cond:
+            for state in self._clients.values():
+                if now - state.last_sent > KEEP_ALIVE_INTERVAL:
+                    state.frames.append(state.keepalive_frame())
+                    state.last_sent = now
+            self._cond.notify_all()
 
     # ------------------------------------------------------------------ #
 
@@ -198,23 +206,12 @@ class SSEBroadcaster:
                 continue
             data = row["json"]
             if keys:  # P2 at emit time (sse.py:234-237)
-                parsed = json.loads(data)
-                data = json.dumps({k: v for k, v in parsed.items() if k in keys})
+                try:
+                    parsed = json.loads(data)
+                    data = json.dumps({k: v for k, v in parsed.items() if k in keys})
+                except (TypeError, ValueError, AttributeError):
+                    continue  # not a JSON object: skip the frame, not the batch
             frame = format_frame(row["id"], row["event"], data)
             tbs += len(frame)
             frames.append(frame)
         return frames, tcs, tss, tbs
-
-    def _emit_for_client(self, state: ClientState, rows, now: float) -> None:
-        """Single-client emit (kept for the unit-test surface; the batch
-        path groups by spec in :meth:`foreach_batch`)."""
-        rows_sorted = sorted(rows, key=lambda r: (r["created_utc"], r["id"]))
-        frames, d_tcs, d_tss, d_tbs = self._render_for_spec(
-            state.spec, rows_sorted
-        )
-        state.tcs += d_tcs
-        state.tss += d_tss
-        state.tbs += d_tbs
-        state.frames.extend(frames)
-        if frames:
-            state.last_sent = now

@@ -29,7 +29,6 @@ driver collect.
 
 from __future__ import annotations
 
-import json
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
@@ -279,6 +278,3 @@ def read_feed_stream(spark, path: str, stream: str = "rc", **options):
             reader = reader.option(k, str(v))
     return reader.load()
 
-
-def serialize_offset(offset: dict) -> str:
-    return json.dumps(offset)

@@ -407,3 +407,15 @@ def test_row_statistic_trims_one_sided_bursts():
     # heavy-row path: plain median, untouched by the flag
     heavy = [2.0, 2.1, 2.2, 2.3, 9.9]
     assert bench.row_statistic(heavy, trim=False) == 2.2
+
+
+def test_row_statistic_trim_falls_back_to_median_on_few_samples():
+    """A fast row with too few samples to drop the 2 largest records its
+    median instead of dividing by zero (or meaning a single survivor)."""
+    assert bench.row_statistic([0.3], trim=True) == 0.3
+    assert bench.row_statistic([0.3, 0.4], trim=True) == 0.4
+    assert bench.row_statistic([0.30, 0.31, 2.0], trim=True) == 0.31
+    five = [0.30, 0.31, 0.32, 1.9, 2.4]
+    assert bench.row_statistic(five, trim=True) == 0.32
+    six = [0.30, 0.31, 0.32, 0.33, 1.9, 2.4]
+    assert bench.row_statistic(six, trim=True) == round(sum(six[:-2]) / 4, 3)

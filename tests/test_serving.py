@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import http.client
 import json
+import socket
+import threading
 import time
 
 import pytest
@@ -73,8 +75,7 @@ def test_server_streams_frames_for_registered_spec(server):
         {"id": 2, "event": "rc", "author": "bob", "subreddit": "s", "domain": None,
          "over_18": None, "is_self": None, "created_utc": 11, "json": '{"k":"2"}'},
     ]
-    for state in list(bc._clients.values()):
-        bc._emit_for_client(state, rows, 0.0)
+    bc.publish(rows)
     resp.fp.raise_on_eof = False  # type: ignore[attr-defined]
     deadline = time.time() + 5
     buf = b""
@@ -88,6 +89,60 @@ def test_server_streams_frames_for_registered_spec(server):
     assert "id: 1\nevent: rc\ndata: {\"k\":\"1\"}" in text
     assert "id: 2" not in text  # bob filtered out by ?author=alice
     conn.close()
+
+
+def _raw_sse(port: int, path: str = "/"):
+    """A raw-socket SSE connection, returned once the response head is in
+    (the handler registers its client before it sends the head)."""
+    sock = socket.create_connection(("127.0.0.1", port), timeout=5)
+    sock.sendall(f"GET {path} HTTP/1.1\r\nHost: x\r\n\r\n".encode())
+    buf = b""
+    while b"\r\n\r\n" not in buf:
+        buf += sock.recv(4096)
+    head, rest = buf.split(b"\r\n\r\n", 1)
+    assert head.startswith(b"HTTP/1.1 200")
+    return sock, rest
+
+
+def test_server_writes_one_publish_as_one_chunk(server):
+    """Push delivery: every frame a publish leaves for a client goes out
+    as ONE HTTP chunk (one write, one flush), not one chunk per frame."""
+    srv, bc = server
+    sock, buf = _raw_sse(srv.port, "/?type=comments")
+    rows = [
+        {"id": i, "event": "rc", "author": "a", "subreddit": "s", "domain": None,
+         "over_18": None, "is_self": None, "created_utc": i, "json": "{}"}
+        for i in (1, 2, 3)
+    ]
+    bc.publish(rows)
+    while b"\r\n" not in buf:
+        buf += sock.recv(4096)
+    size_line, buf = buf.split(b"\r\n", 1)
+    size = int(size_line, 16)
+    while len(buf) < size:
+        buf += sock.recv(4096)
+    assert buf[:size].decode() == "".join(
+        f"id: {i}\nevent: rc\ndata: {{}}\n\n" for i in (1, 2, 3)
+    )
+    sock.close()
+
+
+def test_server_stop_wakes_an_idle_handler():
+    """A handler blocked with no frames must not outlive ``stop()``: the
+    stop wakes it, the connection closes, and its thread ends."""
+    bc = SSEBroadcaster(clock=lambda: 0.0)
+    srv = SSEServer(bc).start()
+    before = set(threading.enumerate())
+    sock, _ = _raw_sse(srv.port)
+    handlers = [t for t in threading.enumerate()
+                if t not in before and "process_request" in t.name]
+    assert len(handlers) == 1 and bc._clients
+    srv.stop()
+    handlers[0].join(5)
+    assert not handlers[0].is_alive()
+    assert bc._clients == {}
+    assert sock.recv(4096) == b""  # the server closed the stream
+    sock.close()
 
 
 # ------------------------------------------------------------ Redis adapter

@@ -223,15 +223,15 @@ def test_json_key_subset_rendered_keys_exact(spark):
 def test_renderer_guards_reject_bad_inputs():
     """Empty arrays parse null-typed and non-finite doubles CAST to NULL
     (VERDICT r15 #5) — unreachable from current callers, so the renderers
-    assert instead of silently producing a broken literal."""
+    raise instead of silently producing a broken literal."""
     from reddit_sse_stream_spark.operators.sqlrender import (
         sql_double,
         sql_string_array,
     )
 
     for bad in (float("inf"), float("-inf"), float("nan")):
-        with pytest.raises(AssertionError):
+        with pytest.raises(ValueError):
             sql_double(bad)
     for fn in (sql_double_array, sql_long_array, sql_string_array):
-        with pytest.raises(AssertionError):
+        with pytest.raises(ValueError):
             fn([])

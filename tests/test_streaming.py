@@ -145,7 +145,7 @@ def test_sink_m2_sort_and_framing():
     clock = lambda: 1000.0  # noqa: E731
     bc = SSEBroadcaster(clock=clock)
     st = bc.register("c1", QuerySpec())
-    bc._emit_for_client(st, ROWS, clock())
+    bc.publish(ROWS)
     assert st.frames == [
         format_frame(2, "rc", '{"a":"2"}'),
         format_frame(3, "rs", '{"a":"3"}'),
@@ -158,7 +158,7 @@ def test_sink_m2_sort_and_framing():
 def test_sink_a1_counters_increment_before_type_filter():
     bc = SSEBroadcaster(clock=lambda: 0.0)
     st = bc.register("c1", QuerySpec(type="submissions"))
-    bc._emit_for_client(st, ROWS, 0.0)
+    bc.publish(ROWS)
     # only the rs frame emitted, but BOTH rc rows still counted (sse.py:179)
     assert len(st.frames) == 1 and "event: rs" in st.frames[0]
     assert st.tcs == 2 and st.tss == 1
@@ -167,7 +167,7 @@ def test_sink_a1_counters_increment_before_type_filter():
 def test_sink_p2_projection_at_emit():
     bc = SSEBroadcaster(clock=lambda: 0.0)
     st = bc.register("c1", QuerySpec(filter_keys=("b",)))
-    bc._emit_for_client(st, ROWS, 0.0)
+    bc.publish(ROWS)
     datas = [f.split("data: ")[1].strip() for f in st.frames]
     assert datas == ["{}", "{}", '{"b": "2"}']
 
@@ -176,10 +176,87 @@ def test_sink_multi_client_fanout_independent_specs():
     bc = SSEBroadcaster(clock=lambda: 0.0)
     s1 = bc.register("alice_only", QuerySpec(authors=("alice",)))
     s2 = bc.register("everything", QuerySpec())
-    for st in (s1, s2):
-        bc._emit_for_client(st, ROWS, 0.0)
+    bc.publish(ROWS)
     assert len(s1.frames) == 2  # alice's rc + rs
     assert len(s2.frames) == 3
+
+
+def test_sink_poison_payload_skips_only_the_filter_frame():
+    """A row whose json is not a JSON object must not fail the shared
+    batch: a plain client still gets every frame, a ``filter=`` client
+    gets every other frame, and the skipped frame adds no bytes."""
+    poison = ["{not json", "[1, 2]", '"text"', "null", None]
+    rows = ROWS + _fake_rows(
+        [(10 + i, "rc", "carol", "news", None, None, None, 400 + i, p)
+         for i, p in enumerate(poison)]
+    )
+    bc = SSEBroadcaster(clock=lambda: 0.0)
+    plain = bc.register("plain", QuerySpec())
+    keyed = bc.register("keyed", QuerySpec(filter_keys=("a",)))
+    bc.publish(rows)
+    assert [f.split("\n")[0] for f in plain.frames] == [
+        "id: 2", "id: 3", "id: 1", "id: 10", "id: 11", "id: 12", "id: 13", "id: 14"
+    ]
+    assert keyed.frames == [
+        format_frame(2, "rc", '{"a": "2"}'),
+        format_frame(3, "rs", '{"a": "3"}'),
+        format_frame(1, "rc", '{"a": "1"}'),
+    ]
+    # counters still count the poison rows (A1 counts before emit) ...
+    assert (keyed.tcs, keyed.tss) == (plain.tcs, plain.tss) == (7, 1)
+    # ... but no frame means no bytes
+    assert keyed.tbs == sum(len(f) for f in keyed.frames)
+
+
+def test_publisher_thread_and_waiting_readers_deliver_every_frame_once():
+    """The push path under concurrency: one thread publishes batches while
+    more readers than cores block in ``wait`` and drain with
+    ``frames_since``, under a tiny switch interval; every reader gets
+    every frame exactly once, in publish order, and every counter."""
+    import sys
+    import threading
+    import time
+
+    n_batches, per_batch, n_readers = 100, 7, 8
+    total = n_batches * per_batch
+    bc = SSEBroadcaster(clock=lambda: 0.0)
+    states = [bc.register(f"c{r}", QuerySpec()) for r in range(n_readers)]
+    stopped = threading.Event()
+    got: list[list[str]] = [[] for _ in range(n_readers)]
+
+    def read(r):
+        cursor = 0
+        while len(got[r]) < total and bc.wait(f"c{r}", cursor, stopped.is_set):
+            cursor, frames = bc.frames_since(f"c{r}", cursor)
+            got[r].extend(frames)
+
+    def publish():
+        for b in range(n_batches):
+            ids = range(b * per_batch, (b + 1) * per_batch)
+            bc.publish(_fake_rows(
+                [(i, "rc", "a", "s", None, None, None, i, "{}") for i in ids]
+            ))
+
+    readers = [threading.Thread(target=read, args=(r,)) for r in range(n_readers)]
+    publisher = threading.Thread(target=publish)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in readers + [publisher]:
+            t.start()
+        deadline = time.monotonic() + 60
+        for t in [publisher] + readers:
+            t.join(max(deadline - time.monotonic(), 0))
+    finally:
+        sys.setswitchinterval(interval)
+        stopped.set()  # only matters if a reader hung: release it
+        bc.wake()
+    for t in readers:
+        t.join(5)
+        assert not t.is_alive()
+    want = [format_frame(i, "rc", "{}") for i in range(total)]
+    assert all(g == want for g in got)
+    assert all(st.tcs == total and st.tbs == len("".join(want)) for st in states)
 
 
 def test_sink_keepalive_timer_and_counter_payload():
@@ -216,8 +293,8 @@ def test_sink_foreach_batch_end_to_end(spark):
         .start()
     )
     q.awaitTermination(120)
-    rc_frames = bc.frames_for("rc_only")
-    all_frames = bc.frames_for("all")
+    _, rc_frames = bc.frames_since("rc_only", 0)
+    _, all_frames = bc.frames_since("all", 0)
     assert len(rc_frames) == len(all_frames) > 0
     assert all(f.split("\n")[1] == "event: rc" for f in rc_frames)
 
@@ -521,17 +598,17 @@ def test_frames_since_cursor_drains_acknowledged_frames():
     clock = lambda: 1000.0  # noqa: E731
     bc = SSEBroadcaster(clock=clock)
     st = bc.register("c1", QuerySpec())
-    bc._emit_for_client(st, ROWS, clock())
+    bc.publish(ROWS)
     cur, frames = bc.frames_since("c1", 0)
     assert len(frames) == 3 and cur == 3
     # frames stay re-readable until the advanced cursor acks them
-    assert len(bc.frames_for("c1")) == 3
+    assert bc.frames_since("c1", 0) == (3, frames)
     cur2, frames2 = bc.frames_since("c1", cur)
     assert frames2 == [] and cur2 == 3
-    assert bc.frames_for("c1") == []  # acknowledged prefix dropped
+    assert st.frames == []  # acknowledged prefix dropped
     assert st.base_seq == 3
     # new frames continue the sequence after a drain
-    bc._emit_for_client(st, ROWS, clock())
+    bc.publish(ROWS)
     cur3, frames3 = bc.frames_since("c1", cur2)
     assert len(frames3) == 3 and cur3 == 6
 
@@ -552,7 +629,7 @@ def test_foreach_batch_collect_bound(spark):
         bc.foreach_batch(big, 0)
     small = big.limit(5)
     bc.foreach_batch(small, 1)  # within bound: serves normally
-    assert len(bc.frames_for("c1")) == 5
+    assert len(bc.frames_since("c1", 0)[1]) == 5
 
 
 def test_streaming_dedup_under_rocksdb_state_store(spark, tmp_path):
