@@ -494,10 +494,7 @@ def streaming_e2e(
     from reddit_sse_stream_spark.streaming.sink import SSEBroadcaster
     from reddit_sse_stream_spark.streaming.source import read_feed_stream
 
-    # Serving cap raised for bench scale: the reference-mode cap is 35
-    # ids/poll; here each micro-batch carries up to 10k ids (~6k rc rows),
-    # still a bounded serving fan-out.
-    bc = SSEBroadcaster(max_collect_rows=20_000)
+    bc = SSEBroadcaster()
     srv = SSEServer(bc).start()
     counts = [0] * n_clients
     raw: list[bytes] = [b""] * n_clients

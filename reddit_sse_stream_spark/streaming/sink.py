@@ -25,6 +25,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 
 from reddit_sse_stream_spark.spec import QuerySpec
+from reddit_sse_stream_spark.streaming.source import DEFAULT_MAX_IDS
 
 KEEP_ALIVE_INTERVAL = 30  # seconds (sse.py:119)
 
@@ -66,12 +67,9 @@ class SSEBroadcaster:
     specs. Use :meth:`foreach_batch` as the ``foreachBatch`` function;
     connections block in :meth:`wait` and read with :meth:`frames_since`."""
 
-    #: serving-layer circuit breaker: the per-batch driver collect is
-    #: bounded by the source's per-trigger cap (25+10 ids in reference
-    #: mode); 100x that is generous headroom for custom caps while still
-    #: refusing to silently absorb an unbounded batch from a misconfigured
-    #: source (a real data-processing stream must not flow through here).
-    DEFAULT_MAX_COLLECT_ROWS = 100 * (25 + 10)
+    #: serving-layer circuit breaker: the rc + rs union's per-trigger caps;
+    #: refuses an unbounded batch from a misconfigured source
+    DEFAULT_MAX_COLLECT_ROWS = 2 * DEFAULT_MAX_IDS
 
     def __init__(
         self,
@@ -130,7 +128,7 @@ class SSEBroadcaster:
         rate-limited) batch, then :meth:`publish`.
 
         The rows that reach the driver are bounded by the source's
-        per-trigger cap (25+10 ids/poll in reference mode) — this is a
+        per-trigger cap (``max_ids_per_batch`` per stream) — this is a
         serving-layer fan-out, not a data-processing collect. Heavy
         transformations stay in the streaming plan upstream.
         """

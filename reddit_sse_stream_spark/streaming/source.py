@@ -5,12 +5,13 @@ datasource``).
 
 Offset model (SURVEY.md §2.1):
 
-- The reference keeps one dense integer cursor per stream and reads the next
-  contiguous window of ids each poll: 25 comments + 10 submissions
-  (sse.py:101-102,146-152). Here each stream ('rc'/'rs') is its own source
-  instance with offset ``{"id": <last_emitted>}`` over the shared event_id
-  space; a poll advances the cursor by at most ``max_ids_per_batch``
-  (the COM/SUB_BUFFER_SIZE analog — Kafka's maxOffsetsPerTrigger shape).
+- The reference keeps one dense integer cursor per stream and reads 25
+  comment / 10 submission ids per Redis round-trip, re-polling after 25 ms
+  while one comes back full (sse.py:101-110,243-250). Here each stream
+  ('rc'/'rs') is its own source instance with offset ``{"id": <last>}``
+  over the shared event_id space; a trigger reads to the head, at most
+  ``max_ids_per_batch`` ids — Kafka's maxOffsetsPerTrigger: a catch-up
+  memory bound, not a pacing rate (the trigger interval paces, S6).
 - S2 offset discovery: ``initialOffset`` resolves latest from parquet
   statistics (the reference GETs rc:max_id/rs:max_id, sse.py:88-98).
 - S3 backfill: start at ``latest - min(N, 100000)`` (clamp, sse.py:65).
@@ -42,13 +43,14 @@ FEED_DDL = (
 
 RC_TYPES = ("view", "click", "error")
 
-#: reference buffer sizes (sse.py:101-102)
-DEFAULT_BATCH = {"rc": 25, "rs": 10}
-
 #: rows per InputPartition inside one micro-batch — on a cluster this is the
-#: read-parallelism knob (35-row reference polls stay 1 partition; a 100k
-#: backfill catch-up fans out across executors).
+#: read-parallelism knob (a live trigger stays 1 partition; a 100k backfill
+#: catch-up fans out across executors).
 PARTITION_CHUNK = 10_000
+
+#: per-stream, per-trigger id cap (``max_ids_per_batch`` default): bounds a
+#: catch-up trigger's memory; the reference's 25/10 is one Redis round-trip
+DEFAULT_MAX_IDS = PARTITION_CHUNK
 
 
 class FeedPartition(InputPartition):
@@ -156,7 +158,7 @@ class FeedStreamReader(DataSourceStreamReader):
         self.stream = options.get("stream", "rc")
         if self.stream not in ("rc", "rs"):
             raise ValueError("option 'stream' must be 'rc' or 'rs'")
-        self.batch_size = int(options.get("max_ids_per_batch", DEFAULT_BATCH[self.stream]))
+        self.batch_size = int(options.get("max_ids_per_batch", DEFAULT_MAX_IDS))
         self.backfill = options.get("backfill")
         self.start_id = options.get("start_id")
         if self.backfill is not None and self.start_id is not None:
@@ -186,8 +188,8 @@ class FeedStreamReader(DataSourceStreamReader):
         return {"id": base}
 
     def latestOffset(self) -> dict:
-        # S6 — cap per-trigger advance at the buffer size, the reference's
-        # fixed poll window (maxOffsetsPerTrigger-style backpressure).
+        # S6 — read to the head, capped at batch_size ids: the memory bound
+        # on a catch-up trigger (maxOffsetsPerTrigger-style), not a pace.
         #
         # Restart caveat: after recovery from a fully-committed checkpoint
         # this instance is fresh (_last is None) and Spark calls

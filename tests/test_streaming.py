@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from reddit_sse_stream_spark.spec import QuerySpec
 from reddit_sse_stream_spark.streaming.sink import SSEBroadcaster, format_frame
 from reddit_sse_stream_spark.streaming.source import (
-    DEFAULT_BATCH,
+    DEFAULT_MAX_IDS,
     FeedStreamReader,
     _max_event_id,
     read_feed_stream,
@@ -21,6 +21,7 @@ from reddit_sse_stream_spark.streaming.source import (
 
 EVENTS = "/root/testdata/sf0.001/events.parquet"
 MAX_ID = 999  # sf0.001 events are ids 0..999
+CAP = 25  # explicit per-trigger cap, far below MAX_ID, so the ramp shows
 
 
 # ------------------------------------------------------------ offsets S2-S6
@@ -54,11 +55,33 @@ def test_v1_backfill_start_id_exclusive():
 
 
 def test_s6_latest_offset_capped_per_trigger():
-    r = FeedStreamReader({"path": EVENTS, "backfill": "100000"})
+    r = FeedStreamReader({"path": EVENTS, "backfill": "100000", "max_ids_per_batch": str(CAP)})
     assert r.initialOffset() == {"id": -1}
-    # default rc buffer = 25 ids per poll (sse.py:101)
-    assert r.latestOffset() == {"id": -1 + DEFAULT_BATCH["rc"]}
-    assert r.latestOffset() == {"id": -1 + 2 * DEFAULT_BATCH["rc"]}
+    # each trigger advances at most max_ids_per_batch ids
+    assert r.latestOffset() == {"id": -1 + CAP}
+    assert r.latestOffset() == {"id": -1 + 2 * CAP}
+
+
+def test_s6_live_trigger_reads_to_the_head(tmp_path):
+    """A live reader whose file head moved 120 ids (one second of the
+    reference's traffic) reads all of them in one trigger."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    full = pq.read_table(EVENTS)
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(full.filter(pc.field("event_id") <= MAX_ID - 120), path)
+    r = FeedStreamReader({"path": path})
+    assert r.initialOffset() == {"id": MAX_ID - 120}
+    pq.write_table(full, path)
+    assert r.latestOffset() == {"id": MAX_ID}
+
+
+def test_collect_bound_covers_both_streams_default_caps():
+    """The serving collect bound is the rc + rs union's default caps."""
+    caps = [FeedStreamReader({"path": EVENTS, "stream": s}).batch_size for s in ("rc", "rs")]
+    assert caps == [DEFAULT_MAX_IDS, DEFAULT_MAX_IDS]
+    assert SSEBroadcaster.DEFAULT_MAX_COLLECT_ROWS >= sum(caps)
 
 
 def test_read_partition_filters_stream_and_range():
@@ -552,7 +575,7 @@ def test_restart_after_committed_batch_never_reemits():
     import pyarrow as pa
 
     committed = MAX_ID - 10
-    r = FeedStreamReader({"path": EVENTS, "backfill": "100000"})
+    r = FeedStreamReader({"path": EVENTS, "backfill": "100000", "max_ids_per_batch": str(CAP)})
 
     def _ids(parts):
         batches = [b for p in parts for b in r.read(p)]
@@ -579,13 +602,13 @@ def test_restart_after_committed_batch_never_reemits():
 
 def test_fresh_start_still_caps_first_batch():
     """The restart safety net must not break the S6 ramp on a fresh query."""
-    r = FeedStreamReader({"path": EVENTS, "backfill": "100000"})
+    r = FeedStreamReader({"path": EVENTS, "backfill": "100000", "max_ids_per_batch": str(CAP)})
     base = r.initialOffset()["id"]
-    assert r.latestOffset() == {"id": base + DEFAULT_BATCH["rc"]}
+    assert r.latestOffset() == {"id": base + CAP}
     ids_seen = set()
     import pyarrow as pa
 
-    parts = r.partitions({"id": base}, {"id": base + DEFAULT_BATCH["rc"]})
+    parts = r.partitions({"id": base}, {"id": base + CAP})
     for p_ in parts:
         for b in r.read(p_):
             ids_seen |= set(pa.Table.from_batches([b])["id"].to_pylist())
@@ -630,6 +653,30 @@ def test_foreach_batch_collect_bound(spark):
     small = big.limit(5)
     bc.foreach_batch(small, 1)  # within bound: serves normally
     assert len(bc.frames_since("c1", 0)[1]) == 5
+
+
+def test_default_caps_deliver_a_full_backfill_in_one_batch(spark):
+    """serve's shape with default options: a 100k backfill over rc + rs
+    reaches every client in ONE non-empty micro-batch, inside the default
+    collect bound."""
+    bc = SSEBroadcaster()
+    st = bc.register("c1", QuerySpec())
+    sizes = []
+
+    def sink(batch_df, epoch_id):
+        before = st.base_seq + len(st.frames)
+        bc.foreach_batch(batch_df, epoch_id)
+        sizes.append(st.base_seq + len(st.frames) - before)
+
+    rc = read_feed_stream(spark, EVENTS, "rc", backfill=100000)
+    rs = read_feed_stream(spark, EVENTS, "rs", backfill=100000)
+    q = rc.unionByName(rs).writeStream.foreachBatch(sink).start()
+    q.processAllAvailable()
+    q.stop()
+    assert q.exception() is None
+    assert [n for n in sizes if n] == [MAX_ID + 1]
+    ids = sorted(int(f.split("\n", 1)[0][len("id: "):]) for f in st.frames)
+    assert ids == list(range(MAX_ID + 1))
 
 
 def test_streaming_dedup_under_rocksdb_state_store(spark, tmp_path):
@@ -847,7 +894,7 @@ def test_sse_client_source_round_trip(spark, sf_dir):
     from reddit_sse_stream_spark.streaming.server import SSEServer
     from reddit_sse_stream_spark.streaming.sink import SSEBroadcaster
 
-    bc = SSEBroadcaster(max_collect_rows=20000)
+    bc = SSEBroadcaster()
     srv = SSEServer(bc).start()
     try:
         stream = read_sse_stream(
@@ -906,9 +953,9 @@ def test_sse_relay_ingest_transform_reserve(spark, sf_dir):
     from reddit_sse_stream_spark.streaming.server import SSEServer
     from reddit_sse_stream_spark.streaming.sink import SSEBroadcaster
 
-    bc_a = SSEBroadcaster(max_collect_rows=20000)
+    bc_a = SSEBroadcaster()
     srv_a = SSEServer(bc_a).start()
-    bc_b = SSEBroadcaster(max_collect_rows=20000)
+    bc_b = SSEBroadcaster()
     srv_b = SSEServer(bc_b).start()
     q = None
     down = None
