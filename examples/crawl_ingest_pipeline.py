@@ -21,8 +21,7 @@ stage an operator the driver gate value-verifies on its own:
 Every stage is deterministic, so the funnel is replayable: same feed ->
 same admitted set, any cluster size.  At 100 TB the chain is map-side
 codegen until the one distinct exchange and the one host-keyed cap
-exchange; the streaming twin of the last stage is
-``streaming/stateful.py:streaming_host_admission``.
+exchange.
 
 Run:  python examples/crawl_ingest_pipeline.py [sf_dir]
 """

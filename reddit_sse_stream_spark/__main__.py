@@ -42,7 +42,8 @@ def _cmd_serve(args: argparse.Namespace) -> int:
         .start()
     )
     print(f"SSE server on http://{args.host}:{srv.port}/ (params: type, author,"
-          f" subreddit, domain, over_18, is_self, filter, *_backfill, *_start_id)")
+          " subreddit, domain, over_18, is_self, filter; *_backfill and"
+          " *_start_id are validated but ignored: clients join at the live cursor)")
     print("Ctrl-C to stop.")
     try:
         q.awaitTermination()

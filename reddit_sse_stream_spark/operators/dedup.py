@@ -14,18 +14,13 @@ Variants:
 - simhash:     64-bit simhash from token hashes, grouped on the full code
                (near-dup variant would band the code into 4x16-bit chunks).
 
-Two shingle/signature kernels with identical LSH plumbing around them:
-
-- Column-only (``hashed_shingles`` / ``minhash_signatures``): zero Python,
-  but Spark's higher-order array functions are CodegenFallback (interpreted)
-  — measured 8.4 s for 5 000 docs at sf0.1, dominated by the per-shingle
-  slice/concat chain.
-- Arrow/numpy (``minhash_features_fast``): one ``mapInPandas`` pass
-  producing (shingle set, signature) — 3.3 s incl. Python-worker spin-up,
-  full near-dup pipeline 17 s -> 5.6 s at sf0.1. This is the "Pandas UDF
-  for the genuinely slow path" escape hatch that per-element interpreted
-  HOFs justify; the join/groupBy stages stay identical DataFrame ops
-  either way.
+Shingle/signature kernel: ``minhash_features_fast`` is one Arrow/numpy
+``mapInPandas`` pass producing (shingle set, signature) — 3.3 s incl.
+Python-worker spin-up, full near-dup pipeline 17 s -> 5.6 s at sf0.1,
+versus 8.4 s for 5 000 docs with the interpreted (CodegenFallback)
+higher-order-function formulation. This is the "Pandas UDF for the
+genuinely slow path" escape hatch that per-element interpreted HOFs
+justify; the join/groupBy stages stay plain DataFrame ops.
 """
 
 from __future__ import annotations
@@ -125,19 +120,6 @@ def bloom_prefilter_new_docs(
     )
 
 
-def _shingles_of(words_col, k: int = 5):
-    """Word k-shingles as a deduped array from a MATERIALIZED token-array
-    column.  Callers must pass an attribute (e.g. produced by the
-    explode-of-1-element-array barrier), not the split() expression —
-    CollapseProject re-inlines captured expressions into the transform
-    lambda, re-running split once per shingle (O(len x grams))."""
-    w = F.col(words_col) if isinstance(words_col, str) else words_col
-    idx = F.sequence(F.lit(0), F.greatest(F.size(w) - k, F.lit(0)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(w, i + 1, k)))
-    )
-
-
 def _tokens_barrier(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, _w): lower-cased whitespace tokens as a concrete attribute
     (explode-of-1-element-array barrier: split runs once per row)."""
@@ -151,24 +133,6 @@ def _coeffs(num_hashes: int) -> list[tuple[int, int]]:
         ((2 * i + 1) * 0x9E3779B9 % _MERSENNE_P or 1, (i * i + i + 1) % _MERSENNE_P)
         for i in range(num_hashes)
     ]
-
-
-def hashed_shingles(docs: DataFrame, k: int = 5) -> DataFrame:
-    """(doc_id, sh array<bigint>) — xxhash64'd word k-shingles mod P.
-
-    Computed once and shared by the signature, banding, and verify stages
-    (the text never needs re-parsing downstream).  Tokens and the gram
-    array cross materialization barriers so neither split nor the gram
-    builder is re-inlined into the hashing lambda."""
-    grams = _tokens_barrier(docs).select(
-        "doc_id", F.explode(F.array(_shingles_of("_w", k))).alias("_g")
-    )
-    return grams.select(
-        "doc_id",
-        F.transform(
-            F.col("_g"), lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE_P))
-        ).alias("sh"),
-    )
 
 
 def _signature_col(num_hashes: int):
@@ -189,59 +153,6 @@ def _signature_col(num_hashes: int):
             F.zip_with(a_arr, b_arr, lambda a, b: (x * a + b) % F.lit(_MERSENNE_P)),
             lambda m, n: F.least(m, n),
         ),
-    )
-
-
-def minhash_signatures(docs: DataFrame, num_hashes: int = 64, k: int = 5) -> DataFrame:
-    """(doc_id, sig array<bigint>) — minhash over word k-shingles; pure
-    JVM-side Column algebra, no UDF, no shuffle."""
-    return hashed_shingles(docs, k).select(
-        "doc_id", _signature_col(num_hashes).alias("sig")
-    )
-
-
-def minhash_lsh_candidates(
-    docs: DataFrame,
-    num_hashes: int = 64,
-    bands: int = 16,
-    k: int = 5,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """Candidate near-dup pairs via banding: equal band-slice -> candidate.
-
-    Returns (doc_a, doc_b, n_bands_matched). The self-join key is
-    (band_idx, band_sig-hash): a plain equi-join Catalyst executes as a
-    shuffled hash join on a narrow synthetic key — the scalable LSH shape
-    (shuffles only (key, doc_id), never text or signatures).
-    """
-    sh = shingles if shingles is not None else hashed_shingles(docs, k)
-    sig = sh.select("doc_id", _signature_col(num_hashes).alias("sig"))
-    return _band_candidates(sig, num_hashes, bands)
-
-
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    candidates: DataFrame,
-    k: int = 5,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """Exact Jaccard verify over candidate pairs (the cheap second stage:
-    only candidate ids join back to shingle sets). Works on the hashed
-    shingle arrays — set ops on longs, not strings."""
-    sh = shingles if shingles is not None else hashed_shingles(docs, k)
-    a = sh.alias("a")
-    b = sh.alias("b")
-    return (
-        candidates.join(a, candidates.doc_a == F.col("a.doc_id"))
-        .join(b, candidates.doc_b == F.col("b.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.size(F.array_intersect("a.sh", "b.sh"))
-                / F.size(F.array_union("a.sh", "b.sh"))
-            ).alias("jaccard"),
-        )
     )
 
 
@@ -1065,57 +976,6 @@ def connected_components_star(
     return all_nodes.join(labels, "id", "left").select(
         "id", F.coalesce("component", F.col("id")).alias("component")
     )
-
-
-def triangle_count_degree_ordered(
-    edges: DataFrame, src: str = "id_a", dst: str = "id_b"
-) -> DataFrame:
-    """Triangle count with degree-ordering [Suri & Vassilvitskii, WWW'11]:
-    orient every edge from its lower-degree endpoint to its higher-degree
-    endpoint (ties by id), so the wedge-building self-join fans out from
-    LOW-degree vertices only — a hub of degree d contributes O(d) oriented
-    out-edges instead of O(d^2) wedges.  This is the upgrade over naive
-    ordered-edge joining (plans/catalog.py:graph_triangle_count) that
-    survives power-law graphs at 100 TB; both count every triangle exactly
-    once.
-
-    Shuffle shape: degrees = one groupBy(node); orientation = two
-    broadcast-or-shuffle joins of (edge, degree); wedges = one self-join on
-    the oriented source; closure check = one equi-join back to the oriented
-    edge set.  Everything narrow (pairs of longs).
-    """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a") != F.col("b")
-    )
-    und = e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")).distinct()
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .unionByName(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").alias("d"))
-    )
-    da = deg.select(F.col("v").alias("a"), F.col("d").alias("da"))
-    db = deg.select(F.col("v").alias("b"), F.col("d").alias("db"))
-    withdeg = und.join(da, "a").join(db, "b")
-    # orient lower(deg, id) -> higher(deg, id)
-    a_first = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    oriented = withdeg.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("lo"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("hi"),
-    )
-    w1 = oriented.select(F.col("lo").alias("c"), F.col("hi").alias("u"))
-    w2 = oriented.select(F.col("lo").alias("c"), F.col("hi").alias("v"))
-    wedges = w1.join(w2, "c").filter(F.col("u") < F.col("v"))
-    closing = oriented.select(
-        F.least("lo", "hi").alias("u"), F.greatest("lo", "hi").alias("v")
-    ).unionByName(
-        oriented.select(F.greatest("lo", "hi").alias("u"), F.least("lo", "hi").alias("v"))
-    ).distinct().filter(F.col("u") < F.col("v"))
-    # a wedge (u, v) centered at c closes iff (u, v) is an edge
-    tri = wedges.join(closing, ["u", "v"])
-    return tri.agg(F.count("*").alias("triangles"))
 
 
 def pagerank_fixedpoint(

@@ -57,30 +57,6 @@ def morton_key_sql(c1: str, c2: str, bits: int = 16) -> str:
     return "(" + " | ".join(terms) + ")"
 
 
-def zorder_layout(
-    df: DataFrame,
-    c1: str,
-    c2: str,
-    bits: int = 16,
-    n_files: int = 32,
-    key_col: str = "zkey",
-) -> DataFrame:
-    """Cluster a frame for a Z-ordered write: attach the Morton key of
-    (c1 % 2^bits, c2 % 2^bits) and range-partition by it so each output
-    file covers a compact rectangle of (c1, c2) space.  ``n_files`` is the
-    write parallelism — at real scale, pick it from target file size
-    (bytes / ~512 MB), not from cluster cores.
-
-    One exchange total (the range partitioning IS the write layout);
-    sortWithinPartitions keeps row-group level min-max tight inside each
-    file at zero extra shuffle."""
-    m = F.lit(1 << bits)
-    keyed = df.withColumn(
-        key_col, morton_key(F.pmod(F.col(c1), m), F.pmod(F.col(c2), m), bits)
-    )
-    return keyed.repartitionByRange(n_files, key_col).sortWithinPartitions(key_col)
-
-
 # --------------------------------------------------------------------------- #
 # Hilbert curve — the locality upgrade over Morton that Delta Lake's liquid   #
 # clustering and recent Iceberg work moved to: the Hilbert curve never jumps  #

@@ -1,12 +1,11 @@
-"""pyspark.ml LSH wrappers — the MLlib-native similarity/dedup primitives
-(SURVEY.md §2.8 north-star: ``MinHashLSH`` / ``BucketedRandomProjectionLSH``
-with ``approxSimilarityJoin`` / ``approxNearestNeighbors``).
+"""pyspark.ml-backed vector-index operators: the IVF coarse quantizer
+(``KMeans`` cells, n-probe pruning), its deterministic fixed-point twin,
+and product quantization (PQ codes, ADC search, recall audit, IVF-PQ and
+residual IVF-PQ).
 
-These complement the hand-rolled operators in :mod:`.dedup` and
-:mod:`.similarity`: the custom versions expose the algorithm (banding,
-hyperplanes) as inspectable DataFrame plans; the MLlib versions buy the
-battle-tested estimator API. Both scale the same way — hash to narrow
-bucket keys, equi-join on buckets.
+These complement the hand-rolled operators in :mod:`.similarity`: both
+scale the same way — assign each vector to a narrow cell or code key,
+then prune or equi-join on it.
 """
 
 from __future__ import annotations
@@ -15,8 +14,6 @@ import math
 from collections.abc import Sequence
 from typing import NamedTuple
 
-from pyspark.ml.feature import BucketedRandomProjectionLSH, CountVectorizer, MinHashLSH, RegexTokenizer, NGram
-from pyspark.ml.linalg import Vectors
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -64,46 +61,6 @@ class PqModel(NamedTuple):
         return len(self.codebook[0][0])
 
 
-def _doc_shingle_vectors(docs: DataFrame, k: int = 3, vocab_size: int = 1 << 18) -> DataFrame:
-    """documents -> sparse binary shingle vectors (the MinHashLSH input
-    format): tokenize -> word k-grams -> CountVectorizer(binary).
-
-    Documents with no k-grams (shorter than k tokens) are dropped HERE with
-    a plain ``size(_grams) > 0`` column filter — MinHash rejects empty
-    vectors, and a JVM-side array predicate beats a per-row Python UDF over
-    the vector column.  Since the vectorizer is fit on this same frame,
-    every surviving gram is in-vocabulary, so non-empty grams => non-empty
-    vector (if ``vocab_size`` ever overflows on a huge corpus, switch to
-    HashingTF, which has no vocabulary to overflow)."""
-    tok = RegexTokenizer(inputCol="text", outputCol="_tokens", pattern=r"\s+")
-    ng = NGram(n=k, inputCol="_tokens", outputCol="_grams")
-    stage = ng.transform(tok.transform(docs)).filter(F.size("_grams") > 0)
-    cv = CountVectorizer(
-        inputCol="_grams", outputCol="features", binary=True, vocabSize=vocab_size
-    ).fit(stage)
-    return cv.transform(stage).select("doc_id", "features")
-
-
-def ml_minhash_near_dups(
-    docs: DataFrame, jaccard_distance: float = 0.2, num_tables: int = 8, k: int = 3
-) -> DataFrame:
-    """approxSimilarityJoin on MinHashLSH: near-dup pairs with Jaccard
-    distance <= threshold. Returns (doc_a, doc_b, jaccard_dist)."""
-    nonzero = _doc_shingle_vectors(docs, k)
-    model = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_tables, seed=_SEED
-    ).fit(nonzero)
-    joined = model.approxSimilarityJoin(nonzero, nonzero, jaccard_distance, distCol="jaccard_dist")
-    return (
-        joined.filter(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
-        .select(
-            F.col("datasetA.doc_id").alias("doc_a"),
-            F.col("datasetB.doc_id").alias("doc_b"),
-            F.round("jaccard_dist", 4).alias("jaccard_dist"),
-        )
-    )
-
-
 def _embedding_vectors(emb: DataFrame) -> DataFrame:
     # array_to_vector is a JVM expression (pyspark.ml.functions) — the
     # array<float> -> VectorUDT interop without any Python-row round-trip
@@ -113,23 +70,6 @@ def _embedding_vectors(emb: DataFrame) -> DataFrame:
         "vec_id",
         array_to_vector(F.col("embedding").cast("array<double>")).alias("features"),
     )
-
-
-def ml_random_projection_neighbors(
-    emb: DataFrame, query_vec: Sequence[float], k: int = 5, bucket_length: float = 2.0, num_tables: int = 4
-) -> DataFrame:
-    """approxNearestNeighbors on BucketedRandomProjectionLSH (Euclidean):
-    top-k by L2 distance to the query vector."""
-    vecs = _embedding_vectors(emb)
-    model = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_tables,
-        seed=_SEED,
-    ).fit(vecs)
-    res = model.approxNearestNeighbors(vecs, Vectors.dense(list(query_vec)), k, distCol="l2_dist")
-    return res.select("vec_id", F.round("l2_dist", 4).alias("l2_dist"))
 
 
 def ivf_topk_cosine(

@@ -1069,8 +1069,7 @@ def image_ahash(media: DataFrame) -> DataFrame:
                 # Admission-gate failure policy (ADVICE r11): a
                 # malformed payload is SKIPPED like an unknown magic,
                 # never propagated — one bad container must not kill
-                # the micro-batch of an always-on stream
-                # (streaming_media_dedup shares this kernel).
+                # the micro-batch of an always-on stream.
                 try:
                     if p[:2] == b"BM":
                         w, h, rgb = _decode_bmp_pixels(p)

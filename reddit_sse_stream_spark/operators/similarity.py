@@ -687,14 +687,10 @@ def _decontam_scan(
     vec_col: str = "embedding",
     eval_id_dt: str = "bigint",
 ) -> DataFrame:
-    """The zero-shuffle GEMM scan shared by the batch and STREAMING
-    decontam surfaces: ``eval_ids`` (sorted ascending) and the
-    normalized eval matrix ``E`` ship inside the Arrow kernel closure;
-    the corpus frame — batch or streaming, mapInPandas composes with
-    both — is scored one matmul per batch.  Being stateless and
-    map-only, the streaming twin needs no keyed state and its per-row
-    output is BY CONSTRUCTION identical to the batch op's on the same
-    rows (parity still pinned in tests).
+    """The zero-shuffle GEMM scan behind :func:`decontam_embedding_cosine`:
+    ``eval_ids`` (sorted ascending) and the normalized eval matrix ``E``
+    ship inside the Arrow kernel closure; the corpus frame is scored one
+    matmul per batch.
 
     Output id columns follow the INPUT schemas (ADVICE r09: the kernel
     used to hardcode vec_id/eval_id names and long types despite taking
@@ -733,39 +729,4 @@ def _decontam_scan(
 
     return frame.mapInPandas(
         kernel, f"{id_col} {id_dt}, eval_id {eval_id_dt}, cos_sim double"
-    )
-
-
-def decontam_embedding_cosine_stream(
-    corpus_stream: DataFrame,
-    eval_static: DataFrame,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Streaming twin of :func:`decontam_embedding_cosine`: an always-on
-    ingest pipeline screens ARRIVING vectors against the (static,
-    broadcast) eval matrix before they ever enter the corpus — the
-    admission-gate deployment of the same kernel.  Stateless map-only
-    streaming: no watermark, no keyed state, exactly the per-batch GEMM
-    of the batch op, so batch/stream parity is structural (and pinned in
-    tests on a 3-micro-batch replay)."""
-    import numpy as np
-
-    eval_rows = eval_static.select(
-        id_col, F.col(vec_col).cast("array<double>").alias("v")
-    ).collect()
-    if not eval_rows:
-        raise ValueError("eval frame is empty")
-    eval_ids = np.array([r[id_col] for r in eval_rows])
-    order = np.argsort(eval_ids)
-    eval_ids = eval_ids[order]
-    E = np.array([list(r["v"]) for r in eval_rows], dtype=np.float64)[order]
-    E = E / np.maximum(np.linalg.norm(E, axis=1)[:, None], 1e-12)
-    eval_id_dt = dict(zip(eval_static.schema.names, eval_static.schema))[
-        id_col
-    ].dataType.simpleString()
-    return _decontam_scan(
-        corpus_stream, eval_ids, E, threshold, id_col=id_col,
-        vec_col=vec_col, eval_id_dt=eval_id_dt,
     )

@@ -1302,32 +1302,6 @@ def duplicate_spans(
     )
 
 
-def spans_from_positions(
-    positions: DataFrame, k: int = 8, id_col: str = "doc_id"
-) -> DataFrame:
-    """Fold duplicated word positions into maximal spans — the islands-
-    and-gaps tail of :func:`duplicate_spans`, exposed standalone so the
-    streaming marker (streaming/stateful.py:streaming_duplicate_positions)
-    can reuse it batch-side per micro-batch / on the sink table.  Input:
-    (id_col, pos) rows; output: (id_col, span_start, span_end, n_grams)
-    with span_end = last start + k - 1, identical to the batch op's span
-    semantics.  One exchange on the doc key; Catalyst reuses its
-    clustering for the (doc, island) agg."""
-    from pyspark.sql import Window
-
-    rn = F.row_number().over(Window.partitionBy(id_col).orderBy("pos"))
-    return (
-        positions.select(id_col, "pos", (F.col("pos") - rn).alias("grp"))
-        .groupBy(id_col, "grp")
-        .agg(
-            F.min("pos").cast("long").alias("span_start"),
-            (F.max("pos") + k - 1).cast("long").alias("span_end"),
-            F.count("*").cast("long").alias("n_grams"),
-        )
-        .drop("grp")
-    )
-
-
 def suffix_ranks(
     docs: DataFrame,
     text_col: str = "text",

@@ -5173,16 +5173,12 @@ def quota_admission_per_author(spark: SparkSession, sf_dir: str) -> DataFrame:
     abuse/flood-control pass a feed engine puts in front of its sink,
     generalizing the reference's single global poll-rate knob (CPS=5,
     sse.py:110,243-250) to a PER-KEY quota.  Per (author, hour): events
-    seen, events admitted, and the exact admitted ids.  Streaming twin
-    with keyed managed state: streaming/stateful.py:
-    streaming_quota_admission (batch/stream parity pinned in
-    tests/test_streaming.py).
+    seen, events admitted, and the exact admitted ids.
 
     Scale shape: ONE (author, hour)-keyed exchange serves both the
-    row_number cut and the summary aggregate; state in the streaming
-    twin is a single long per active (author, hour) — quota enforcement
-    at 100 TB is a map-side filter after a key-partitioned shuffle, not
-    a global coordination point."""
+    row_number cut and the summary aggregate — quota enforcement at
+    100 TB is a map-side filter after a key-partitioned shuffle, not a
+    global coordination point."""
     fd = feed_df(spark, sf_dir)
     hour = F.floor(F.col("created_utc") / 3600).cast("long")
     w = Window.partitionBy("author", "hour").orderBy("created_utc", "id")
@@ -16046,10 +16042,9 @@ def sample_bottomk_minwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     what lets this row carry a full value oracle), MERGEABLE (bottom-k
     of a union = bottom-k of concatenated bottom-ks, so partial samples
     fold map-side and shard samples combine by re-cutting), and
-    INCREMENTAL (the streaming twin ``streaming_bottomk_reservoir`` —
-    fifteenth keyed-state kernel — maintains the identical sample live
-    with k pairs of state per source).  The kth priority doubles as the
-    KMV distinct-count estimator's raw material.
+    INCREMENTAL (a keyed-state stream can maintain the identical sample
+    live with k pairs of state per source).  The kth priority doubles as
+    the KMV distinct-count estimator's raw material.
 
     Scale shape: one exchange on the source key, and the per-source
     rank<=k cut is a WindowGroupLimit — Spark holds only k rows per key
@@ -16141,9 +16136,7 @@ def agg_kmv_distinct_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     window's exchange) and everything after is dimension-sized.  At
     100 TB the sketch REPLACES the exact side: the n_exact column here
     exists to grade the estimator, and dropping it removes the wide
-    distinct entirely (the sketch is one bounded-state pass —
-    the streaming twin is ``streaming_bottomk_reservoir``'s state with
-    words as keys)."""
+    distinct entirely (the sketch is one bounded-state pass)."""
     from reddit_sse_stream_spark.operators.dedup import md5_hash60
 
     docs = _t(spark, sf_dir, "documents")
@@ -16288,8 +16281,7 @@ def window_sliding_distinct_kmv_approx_contract(
     rows per pane survive the exchange), and everything downstream is
     windows × k sized.  The direct path and n_exact exist here to GRADE
     the merged sketch; at 100 TB they are dropped and the pane sketches
-    are the only state — k longs per active pane, the exact shape of
-    ``streaming_bottomk_reservoir``'s keyed state."""
+    are the only state — k longs per active pane."""
     ev = _t(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     from reddit_sse_stream_spark.operators.dedup import md5_hash60
 

@@ -93,27 +93,3 @@ def connect(url: str = "redis://localhost:6379/1", stream: str = "rc") -> RedisF
             "tests use any pipeline-compatible fake"
         ) from exc
     return RedisFeedAdapter(redis.Redis.from_url(url), stream)
-
-
-def poll_to_df(spark, adapter: RedisFeedAdapter, cursor: int):
-    """One poll window as a DataFrame with the feed schema — the glue for a
-    micro-batch over a live Redis (each hash carries the denormalized
-    columns of sse.py:163-167/193-200 as strings)."""
-    from reddit_sse_stream_spark.streaming.source import FEED_DDL
-
-    poll = adapter.poll(cursor)
-    rows = [
-        (
-            r["id"],
-            r["event"],
-            r.get("author"),
-            r.get("subreddit"),
-            (r.get("domain") or None) and r["domain"].lower(),  # sse.py:198
-            None if "over_18" not in r else r["over_18"].lower() == "true",
-            None if "is_self" not in r else r["is_self"].lower() == "true",
-            int(r["created_utc"]) if "created_utc" in r else None,
-            r.get("json"),
-        )
-        for r in poll.rows
-    ]
-    return spark.createDataFrame(rows, FEED_DDL), poll

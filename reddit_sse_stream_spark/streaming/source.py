@@ -159,6 +159,9 @@ class FeedStreamReader(DataSourceStreamReader):
         if self.stream not in ("rc", "rs"):
             raise ValueError("option 'stream' must be 'rc' or 'rs'")
         self.batch_size = int(options.get("max_ids_per_batch", DEFAULT_MAX_IDS))
+        if self.batch_size <= 0:
+            # a non-positive cap would pin latestOffset() at the cursor
+            raise ValueError("option 'max_ids_per_batch' must be positive")
         self.backfill = options.get("backfill")
         self.start_id = options.get("start_id")
         if self.backfill is not None and self.start_id is not None:
@@ -197,7 +200,7 @@ class FeedStreamReader(DataSourceStreamReader):
         # offset in, so the ramp re-seeds from initialOffset() — for a
         # backfill reader that base sits behind the committed offset and the
         # returned end can regress.  Correctness is preserved by the
-        # _emitted_max monotonic floor in partitions(): the authoritative
+        # monotonic _floor clamp in partitions(): the authoritative
         # batch start from the offset log folds into _last there, and a
         # regressed window is clamped empty instead of re-reading ids.
         latest = _max_event_id(self.path)

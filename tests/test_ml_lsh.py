@@ -1,4 +1,4 @@
-"""MLlib LSH / IVF similarity operators: recall against exact ground truth."""
+"""MLlib-backed IVF / PQ similarity operators: recall against exact ground truth."""
 
 from __future__ import annotations
 
@@ -25,33 +25,6 @@ def emb(spark, sf_dir):
 @pytest.fixture(scope="module")
 def qvec(emb):
     return list(emb.filter(F.col("vec_id") == 0).first()["embedding"])
-
-
-def test_ml_minhash_finds_exact_dups(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    dup_pairs = {
-        tuple(sorted((r["a"], r["b"])))
-        for r in docs.alias("x")
-        .join(docs.alias("y"), F.expr("x.text = y.text AND x.doc_id < y.doc_id"))
-        .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-        .collect()
-    }
-    got = {
-        (r["doc_a"], r["doc_b"])
-        for r in ml_lsh.ml_minhash_near_dups(docs, jaccard_distance=0.1).collect()
-    }
-    # exact duplicates have Jaccard distance 0 -> must all be found
-    assert dup_pairs <= got
-    for a, b in got - dup_pairs:  # near-dups are plausible extras, not noise
-        assert abs(a - b) >= 0  # structural sanity only
-
-
-def test_ml_random_projection_neighbors_are_close(emb, qvec):
-    got = ml_lsh.ml_random_projection_neighbors(emb, qvec, k=5)
-    rows = sorted(got.collect(), key=lambda r: r["l2_dist"])
-    assert 0 < len(rows) <= 5
-    # the query vector itself (vec_id=0, distance 0) must rank first
-    assert rows[0]["vec_id"] == 0 and rows[0]["l2_dist"] == 0.0
 
 
 def test_ivf_full_probe_equals_bruteforce(emb, qvec):
@@ -83,17 +56,12 @@ def test_ivf_partial_probe_scores_are_exact_cosines(emb, qvec):
 
 
 def test_wrapper_plans_have_no_python_row_udf(spark, sf_dir):
-    """The VectorUDT interop must stay JVM-side (array_to_vector) or
-    Arrow-batched — a row-at-a-time Python UDF (BatchEvalPython node) in
-    these wrapper plans would serialize every row through the Python worker."""
+    """The VectorUDT interop must stay JVM-side (array_to_vector) — a
+    row-at-a-time Python UDF (BatchEvalPython node) in this wrapper plan
+    would serialize every row through the Python worker."""
     emb = load_table(spark, sf_dir, "embeddings")
     vecs = ml_lsh._embedding_vectors(emb)
     plan = vecs._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-
-    docs = load_table(spark, sf_dir, "documents").limit(50)
-    feats = ml_lsh._doc_shingle_vectors(docs)
-    plan = feats._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
 
 

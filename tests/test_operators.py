@@ -73,16 +73,6 @@ def test_exact_dedup_groups(docs):
     assert groups == {0: 2, 2: 1, 3: 1}
 
 
-def test_minhash_lsh_finds_near_dups(docs):
-    cands = dedup.minhash_lsh_candidates(docs, num_hashes=64, bands=32, k=3)
-    pairs = dedup.ngram_jaccard_pairs(docs, cands, k=3)
-    got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in pairs.collect()}
-    assert got.get((0, 1)) == 1.0  # exact dup always collides
-    near = got.get((0, 2)) or got.get((1, 2))
-    assert near is not None and 0.5 < near < 1.0
-    assert not any(3 in p for p in got)  # unrelated doc never pairs
-
-
 def test_simhash_exact_dups_equal_and_near_dups_close(docs):
     sh = {r["doc_id"]: r["simhash"] for r in dedup.simhash(docs).collect()}
     assert sh[0] == sh[1]
@@ -902,22 +892,6 @@ def test_bloom_prefilter_equals_exact(spark, sf_dir, n_buckets):
         ).collect()
     }
     assert got == exact
-
-
-def test_degree_ordered_triangles_match_naive(spark):
-    """Degree-ordered counting must equal the naive ordered-edge count on
-    known graphs: a triangle, K4 (4 triangles), a square (0), and a hub
-    star plus one closing edge (1)."""
-    cases = [
-        ([(1, 2), (2, 3), (1, 3)], 1),
-        ([(a, b) for a in range(4) for b in range(a + 1, 4)], 4),
-        ([(1, 2), (2, 3), (3, 4), (4, 1)], 0),
-        ([(0, i) for i in range(1, 7)] + [(1, 2)], 1),
-    ]
-    for rows, want in cases:
-        edges = spark.createDataFrame(rows, "id_a long, id_b long")
-        got = dedup.triangle_count_degree_ordered(edges).collect()[0]["triangles"]
-        assert got == want, (rows, got, want)
 
 
 def test_bucket_pair_explode_full_recall_and_uniqueness(spark):

@@ -183,34 +183,6 @@ def test_cosine_lsh_candidates_equi_join_on_bucket(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_write_layout_partition_pruning_and_rowgroup_stats(spark, sf_dir, tmp_path):
-    """Partitioned+clustered output layout: a partition-column predicate must
-    prune at planning time (PartitionFilters, only matching dirs listed) and
-    the clustered column must carry row-group min/max stats for skipping."""
-    from reddit_sse_stream_spark.sources import formats
-
-    ev = load_table(spark, sf_dir, "events")
-    out = str(tmp_path / "events_layout")
-    formats.write_layout(ev, out, partition_by=["event_type"], cluster_by=["event_id"])
-
-    got = spark.read.parquet(out).filter(F.col("event_type") == "click")
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(event_type" in plan
-    # partition pruning is structural: only the matching directory is read
-    # (input_file_name reflects execution, unlike inputFiles' unpruned listing)
-    read_files = [r[0] for r in got.select(F.input_file_name()).distinct().collect()]
-    assert read_files and all("event_type=click" in f for f in read_files)
-
-    # row-group stats on the clustered column: sorted -> tight min/max
-    import pyarrow.parquet as pq
-
-    f = [p for p in got.inputFiles() if p.endswith(".parquet")][0].replace("file:", "")
-    md = pq.ParquetFile(f).metadata
-    idx = [md.schema.column(i).name for i in range(md.num_columns)].index("event_id")
-    stats = md.row_group(0).column(idx).statistics
-    assert stats.has_min_max
-
-
 @pytest.mark.parametrize(
     ("name", "hinted_dim_broadcasts"),
     [

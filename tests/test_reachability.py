@@ -1,0 +1,102 @@
+"""Every package module must be reachable from a non-test entry point.
+
+Builds the static import graph (AST, no imports executed) from the
+program's roots — ``python -m reddit_sse_stream_spark``, the catalog, the
+bench, the examples, the tools and the perfbench harness — and fails if a
+``reddit_sse_stream_spark`` module is imported only by tests.  A module
+that is test-only on purpose goes on ``ALLOWED_UNREACHED`` with its reason;
+the list must stay exact, so an entry that gains a real caller fails too.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+import pytest
+
+REPO = Path(__file__).resolve().parent.parent
+PKG = "reddit_sse_stream_spark"
+
+#: test-only modules kept on purpose: module -> why
+ALLOWED_UNREACHED = {
+    f"{PKG}.streaming.client_source": "README's switching table: ingest an SSE endpoint as a stream",
+    f"{PKG}.sources.redis_adapter": "README's switching table: the reference's Redis key layout",
+    f"{PKG}.streaming.writer": "COVERAGE S7-durable: the replayable SSE-frame file archive",
+    f"{PKG}.streaming.fsops": "the filesystem seam behind streaming.writer",
+}
+
+
+def _roots() -> list[Path]:
+    files = [
+        REPO / PKG / "__main__.py",
+        REPO / PKG / "plans" / "catalog.py",
+        REPO / "bench.py",
+    ]
+    for d in ("examples", "tools", "perfbench"):
+        files += [p for p in sorted((REPO / d).rglob("*.py")) if "tests" not in p.parts]
+    return files
+
+
+def _module_name(path: Path) -> str:
+    parts = path.relative_to(REPO).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _package_modules() -> dict[str, Path]:
+    return {_module_name(p): p for p in (REPO / PKG).rglob("*.py")}
+
+
+def _imports(path: Path, mods: dict[str, Path]) -> set[str]:
+    """Package modules that importing ``path`` loads, parents included."""
+    name = _module_name(path)
+    pkg = name if path.name == "__init__.py" else name.rpartition(".")[0]
+    found: set[str] = set()
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Import):
+            found.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:  # relative: ``from . import x`` in package ``pkg``
+                anchor = pkg.split(".")[: pkg.count(".") + 2 - node.level]
+                base = ".".join(anchor + ([base] if base else []))
+            found.add(base)
+            found.update(f"{base}.{a.name}" for a in node.names)
+    loaded = set()
+    for mod in found:
+        parts = mod.split(".")
+        # importing a.b.c runs a/__init__, a/b/__init__ and a/b/c
+        loaded.update(".".join(parts[:i]) for i in range(1, len(parts) + 1))
+    return loaded & mods.keys()
+
+
+@pytest.fixture(scope="module")
+def reachable() -> set[str]:
+    mods = _package_modules()
+    seen: set[str] = set()
+    todo: list[str] = []
+    for root in _roots():
+        if root.is_relative_to(REPO / PKG):
+            todo.append(_module_name(root))
+        todo.extend(_imports(root, mods))
+    todo.append(PKG)  # ``-m reddit_sse_stream_spark`` runs the package __init__
+    while todo:
+        mod = todo.pop()
+        if mod in seen:
+            continue
+        seen.add(mod)
+        todo.extend(_imports(mods[mod], mods))
+    return seen
+
+
+def test_every_package_module_has_a_non_test_importer(reachable):
+    # reached only through its package's __init__: pins that rule
+    assert f"{PKG}.functions.observability" in reachable
+    unreached = sorted(set(_package_modules()) - reachable - ALLOWED_UNREACHED.keys())
+    assert not unreached, f"package modules only tests reach: {unreached}"
+
+
+def test_allow_list_is_exact(reachable):
+    mods = _package_modules()
+    stale = sorted(m for m in ALLOWED_UNREACHED if m not in mods or m in reachable)
+    assert not stale, f"allow-listed modules that are gone or now reached: {stale}"

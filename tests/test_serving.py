@@ -1,6 +1,6 @@
 """End-to-end serving tests: HTTP SSE endpoint (param parsing, 400 paths,
 frame streaming), the Redis-layout adapter against a protocol-faithful fake,
-observed metrics, salted joins, and file-format roundtrips."""
+observed metrics and salted joins."""
 
 from __future__ import annotations
 
@@ -11,11 +11,10 @@ import threading
 import time
 
 import pytest
-from pyspark.sql import functions as F
 
 from reddit_sse_stream_spark.functions import observed_feed_counters, salted_join
 from reddit_sse_stream_spark.sources.feed import feed_df
-from reddit_sse_stream_spark.sources.redis_adapter import RedisFeedAdapter, poll_to_df
+from reddit_sse_stream_spark.sources.redis_adapter import RedisFeedAdapter
 from reddit_sse_stream_spark.spec import QuerySpec
 from reddit_sse_stream_spark.streaming.sink import SSEBroadcaster
 from reddit_sse_stream_spark.streaming.server import SSEServer
@@ -222,15 +221,6 @@ def test_adapter_poll_full_window_sets_fast_poll_flag():
     assert poll.cursor == 2
 
 
-def test_adapter_poll_to_df(spark):
-    ad = RedisFeedAdapter(FakeRedis(_store()), "rc", buffer_size=5)
-    df, poll = poll_to_df(spark, ad, -1)
-    rows = {r["id"]: r for r in df.collect()}
-    assert set(rows) == {0, 1, 3}
-    assert rows[0]["event"] == "rc" and rows[0]["created_utc"] == 100
-    assert rows[0]["json"] == '{"x":"0"}'
-
-
 # --------------------------------------------------------- observed metrics
 
 
@@ -280,37 +270,6 @@ def test_salted_join_left_preserves_unmatched(spark, sf_dir):
     dim = spark.createDataFrame([("click", 1.5)], "subreddit string, weight double")
     left = salted_join(ev, dim, "subreddit", num_salts=4, how="left")
     assert left.count() == ev.count()
-
-
-# ------------------------------------------------------- format roundtrips
-
-
-@pytest.mark.parametrize("fmt", ["parquet", "json", "csv", "orc"])
-def test_format_roundtrip(spark, sf_dir, tmp_path, fmt):
-    from reddit_sse_stream_spark.sources.formats import read_table, write_table
-    from reddit_sse_stream_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    path = str(tmp_path / f"events_{fmt}")
-    write_table(ev, path, fmt)
-    back = read_table(spark, path, ev.schema, fmt)
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, ev.collect()))
-
-
-def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
-    """partitionBy layout + partition pruning: reading one partition value
-    must scan only that directory (PartitionFilters, not data filters)."""
-    from reddit_sse_stream_spark.sources.formats import write_table
-    from reddit_sse_stream_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    path = str(tmp_path / "events_part")
-    write_table(ev, path, "parquet", partition_by=["event_type"])
-    back = spark.read.parquet(path)
-    one = back.filter(F.col("event_type") == "click")
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert one.count() == ev.filter(F.col("event_type") == "click").count()
 
 
 # ----------------------------------------------- 64-client heterogeneous e2e

@@ -112,57 +112,6 @@ def test_morton_key_matches_python_reference(spark, sf_dir):
         assert r["zkey"] == _py_morton(r["user_id"] % 65536, r["event_id"] % 65536)
 
 
-def test_zorder_layout_tightens_both_dimensions(spark, sf_dir):
-    """The point of the layout: after range-partitioning by the Morton key,
-    each partition (= output file) covers a compact rectangle, so the mean
-    per-file area (span_c1 x span_c2) must be far below a single-column
-    layout's, and pruning works on BOTH dimensions.  Compared against
-    range-partitioning by c2 alone, which leaves c1 unpruned (full span in
-    every file)."""
-    from reddit_sse_stream_spark.operators import layout
-
-    # synthetic 2-D grid: both dims uniform so areas are comparable
-    n = 1 << 12
-    df = spark.range(n).select(
-        (F.col("id") % 64).alias("c1"),
-        F.floor(F.col("id") / 64).alias("c2"),
-    )
-
-    def mean_area(frame) -> float:
-        spans = (
-            frame.withColumn("p", F.spark_partition_id())
-            .groupBy("p")
-            .agg(
-                (F.max("c1") - F.min("c1") + 1).alias("s1"),
-                (F.max("c2") - F.min("c2") + 1).alias("s2"),
-            )
-            .select(F.avg(F.col("s1") * F.col("s2")).alias("a"))
-            .first()
-        )
-        return float(spans["a"])
-
-    z = layout.zorder_layout(df, "c1", "c2", bits=6, n_files=16)
-    single = df.repartitionByRange(16, "c2")
-    area_z, area_single = mean_area(z), mean_area(single)
-    # 64x64 grid into 16 files: ideal z-rectangles are 16x16 (area 256);
-    # c2-only ranging gives 64-wide stripes (area >= 64*4 = 256 too) — but
-    # the z layout must bound BOTH spans, so require each dimension's mean
-    # span to be well under the full width, which single-column ranging
-    # cannot do for c1.
-    z_spans = (
-        z.withColumn("p", F.spark_partition_id())
-        .groupBy("p")
-        .agg(
-            (F.max("c1") - F.min("c1") + 1).alias("s1"),
-            (F.max("c2") - F.min("c2") + 1).alias("s2"),
-        )
-        .agg(F.avg("s1").alias("m1"), F.avg("s2").alias("m2"))
-        .first()
-    )
-    assert z_spans["m1"] <= 32 and z_spans["m2"] <= 32, z_spans
-    assert area_z <= area_single
-
-
 def test_dynamic_partition_pruning_fires_on_dim_filter(spark, sf_dir, tmp_path):
     """Dynamic partition pruning: a fact table partitioned on the join key
     must get a runtime pruning subquery when joined to a filtered dim —

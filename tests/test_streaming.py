@@ -54,6 +54,14 @@ def test_v1_backfill_start_id_exclusive():
         FeedStreamReader({"path": EVENTS, "backfill": "5", "start_id": "9"})
 
 
+def test_non_positive_cap_is_rejected():
+    """A cap <= 0 would pin every latestOffset() at the cursor: the stream
+    would never advance and report no error."""
+    for cap in ("0", "-5"):
+        with pytest.raises(ValueError, match="max_ids_per_batch"):
+            FeedStreamReader({"path": EVENTS, "max_ids_per_batch": cap})
+
+
 def test_s6_latest_offset_capped_per_trigger():
     r = FeedStreamReader({"path": EVENTS, "backfill": "100000", "max_ids_per_batch": str(CAP)})
     assert r.initialOffset() == {"id": -1}
@@ -322,48 +330,7 @@ def test_sink_foreach_batch_end_to_end(spark):
     assert all(f.split("\n")[1] == "event: rc" for f in rc_frames)
 
 
-# ------------------------------------------------- arbitrary stateful state
-
-
-def test_stateful_running_totals(spark):
-    """applyInPandasWithState: per-subreddit running counters accumulate
-    across MULTIPLE micro-batches (capped source -> >= 3 batches)."""
-    from reddit_sse_stream_spark.streaming.stateful import running_totals_by_subreddit
-
-    rc = read_feed_stream(spark, EVENTS, "rc", backfill=100000, max_ids_per_batch=400)
-    q = (
-        running_totals_by_subreddit(rc)
-        .writeStream.format("memory")
-        .queryName("stateful_totals")
-        .outputMode("update")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    # last update per key = final running totals
-    final = {
-        r["subreddit"]: (r["total_sent"], r["batches"])
-        for r in spark.sql(
-            """
-            SELECT subreddit, total_sent, batches FROM (
-              SELECT *, row_number() OVER (PARTITION BY subreddit
-                                           ORDER BY batches DESC) rn
-              FROM stateful_totals) WHERE rn = 1
-            """
-        ).collect()
-    }
-    from reddit_sse_stream_spark.sources.feed import feed_df
-
-    expected = {
-        r["subreddit"]: r["n"]
-        for r in feed_df(spark, "/root/testdata/sf0.001")
-        .filter(F.col("event") == "rc")
-        .groupBy("subreddit")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert {k: v[0] for k, v in final.items()} == expected
-    assert all(b >= 2 for _, b in final.values()), "state must span multiple batches"
+# ------------------------------------------- engine-managed state, restarts
 
 
 def test_streaming_dedup_within_watermark(spark):
@@ -447,54 +414,6 @@ def test_checkpoint_restart_no_dupes_no_gaps(spark, tmp_path):
     assert not dupes, f"duplicate ids after restart: {dict(list(dupes.items())[:5])}"
     missing = expected_ids - set(counts)
     assert not missing, f"gaps after restart: {sorted(missing)[:10]}"
-
-
-@pytest.mark.xfail(
-    reason="container env skew: the TWS driver worker spawns from "
-    "SPARK_HOME's bundled pyspark (/opt/spark/python), which mismatches "
-    "the pip pyspark running the session; crashes in _handle_pre_init "
-    "before user code runs. applyInPandasWithState (same operator, "
-    "test above) is the supported path here.",
-    raises=Exception,
-    strict=False,
-)
-def test_transform_with_state_matches_apply_in_pandas_with_state(spark):
-    """The transformWithStateInPandas twin produces the same final totals
-    as the applyInPandasWithState implementation."""
-    from reddit_sse_stream_spark.streaming.stateful import running_totals_tws
-
-    rc = read_feed_stream(spark, EVENTS, "rc", backfill=100000, max_ids_per_batch=400)
-    q = (
-        running_totals_tws(rc)
-        .writeStream.format("memory")
-        .queryName("tws_totals")
-        .outputMode("update")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    final = {
-        r["subreddit"]: r["total_sent"]
-        for r in spark.sql(
-            """
-            SELECT subreddit, total_sent FROM (
-              SELECT *, row_number() OVER (PARTITION BY subreddit
-                                           ORDER BY batches DESC) rn
-              FROM tws_totals) WHERE rn = 1
-            """
-        ).collect()
-    }
-    from reddit_sse_stream_spark.sources.feed import feed_df
-
-    expected = {
-        r["subreddit"]: r["n"]
-        for r in feed_df(spark, "/root/testdata/sf0.001")
-        .filter(F.col("event") == "rc")
-        .groupBy("subreddit")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert final == expected
 
 
 def test_stream_stream_join_with_watermarks(spark):
@@ -747,79 +666,6 @@ def test_observe_metrics_match_reference_counters(spark, sf_dir):
     assert m["bytes_total"] > 0
 
 
-def test_streaming_ohlc_matches_batch_bars(spark, sf_dir, tmp_path):
-    """Batch/stream parity for OHLC: replaying the events table as a
-    multi-batch file stream through the stateful OHLC operator must
-    produce EXACTLY the batch ts_ohlc_hourly bars — first/last anchors in
-    state resolve by the same (ts, event_id) total order the batch window
-    uses, and the turnover accumulates in the same fixed-point domain, so
-    the micro-batch split cannot change any bar."""
-    from reddit_sse_stream_spark.plans.catalog import QUERIES
-    from reddit_sse_stream_spark.sources.tables import load_table
-    from reddit_sse_stream_spark.streaming.stateful import streaming_ohlc_hourly
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "ts", "event_id", "value"
-    )
-    # 3 separate files -> 3 micro-batches with maxFilesPerTrigger=1
-    src = tmp_path / "ev_stream"
-    for i in range(3):
-        ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        streaming_ohlc_hourly(stream)
-        .writeStream.format("memory")
-        .queryName("ohlc_stream")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    # update mode re-emits a bar per batch; n_events grows monotonically,
-    # so the final state per bar is its max-n emission (order-independent
-    # — memory-sink row order across batches is not contractual)
-    got = {}
-    for r in spark.sql("SELECT * FROM ohlc_stream").collect():
-        cur = got.get(r["bar_hour"])
-        if cur is None or r["n_events"] > cur[4]:
-            got[r["bar_hour"]] = (
-                r["open"],
-                r["high"],
-                r["low"],
-                r["close"],
-                r["n_events"],
-                r["turnover_fp"],
-            )
-    batch = {
-        r["bar_hour"]: (
-            r["open"],
-            r["high"],
-            r["low"],
-            r["close"],
-            r["n_events"],
-            r["turnover"],
-        )
-        for r in QUERIES["ts_ohlc_hourly"].spark(spark, sf_dir).collect()
-    }
-    assert set(got) == set(batch)
-    for k, (o, h, l, c, n, t_fp) in got.items():
-        bo, bh, bl, bc, bn, bt = batch[k]
-        assert (o, h, l, c, n) == (bo, bh, bl, bc, bn), (k, got[k], batch[k])
-        # batch turnover is round(sum_fp/1e6, 2); reproduce from the
-        # streaming fixed-point accumulator
-        import math
-        rounded = math.copysign(
-            math.floor((abs(t_fp) + 5000) / 10000) / 100.0, t_fp
-        ) if t_fp else 0.0
-        assert rounded == bt, (k, t_fp, bt)
-
-
 # ------------------------------------------------- SSE client ingest source
 
 
@@ -1014,52 +860,6 @@ def test_sse_relay_ingest_transform_reserve(spark, sf_dir):
         srv_b.stop()
 
 
-def test_streaming_dedup_first_matches_batch_survivors(spark, sf_dir, tmp_path):
-    """Batch/stream parity for the exact-dedup admission gate: replaying
-    the documents table in doc_id-ordered micro-batches through
-    streaming_dedup_first must admit EXACTLY the batch survivors
-    (min doc_id per digest), each digest exactly once."""
-    from reddit_sse_stream_spark.sources.tables import load_table
-    from reddit_sse_stream_spark.streaming.stateful import streaming_dedup_first
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    src = tmp_path / "docs_stream"
-    # id-ordered batches: lower ids arrive in earlier micro-batches, so
-    # the streaming admit-first policy coincides with batch keep-min
-    n = docs.count()
-    docs.filter(F.col("doc_id") < n // 3).coalesce(1).write.mode("append").parquet(str(src))
-    docs.filter((F.col("doc_id") >= n // 3) & (F.col("doc_id") < 2 * n // 3)).coalesce(1).write.mode("append").parquet(str(src))
-    docs.filter(F.col("doc_id") >= 2 * n // 3).coalesce(1).write.mode("append").parquet(str(src))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        streaming_dedup_first(stream)
-        .writeStream.format("memory")
-        .queryName("dedup_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        r["digest"]: r["keep_id"]
-        for r in spark.sql("SELECT * FROM dedup_stream WHERE digest <> ''").collect()
-    }
-    batch = {
-        r["digest"]: r["keep_id"]
-        for r in docs.groupBy(F.md5("text").alias("digest"))
-        .agg(F.min("doc_id").alias("keep_id"))
-        .collect()
-    }
-    assert got == batch
-    # each digest admitted exactly once (append-mode emit-once contract)
-    rows = spark.sql("SELECT digest FROM dedup_stream WHERE digest <> ''").collect()
-    assert len(rows) == len({r["digest"] for r in rows})
-
-
 def test_streaming_session_window_closed_sessions_match_batch(spark, sf_dir, tmp_path):
     """Streaming session windows (gap-based session_window + watermark,
     append mode) must emit exactly the batch sessions that the watermark
@@ -1171,703 +971,9 @@ def test_broadcaster_same_spec_clients_share_render():
     assert s1.tcs == 2 * late.tcs and s1.frames == s2.frames
 
 
-def test_streaming_quota_admission_matches_batch_gate(spark, sf_dir, tmp_path):
-    """Batch/stream parity for the per-(author, hour) quota gate: replaying
-    the feed in created_utc-ordered micro-batches through
-    streaming_quota_admission must admit EXACTLY the ids the batch twin's
-    row_number cut admits, and never more than QUOTA_CAP per key."""
-    from reddit_sse_stream_spark.plans.catalog import QUERIES
-    from reddit_sse_stream_spark.sources.feed import feed_df
-    from reddit_sse_stream_spark.streaming.stateful import (
-        QUOTA_CAP,
-        streaming_quota_admission,
-    )
-
-    fd = feed_df(spark, sf_dir).select("author", "created_utc", "id")
-    # created_utc-ordered batches: arrival order across micro-batches is
-    # consistent with the batch twin's (created_utc, id) admission order
-    cuts = fd.approxQuantile("created_utc", [0.33, 0.66], 0.0)
-    t1, t2 = int(cuts[0]), int(cuts[1])
-    src = tmp_path / "feed_stream"
-    fd.filter(F.col("created_utc") < t1).coalesce(1).write.mode("append").parquet(str(src))
-    fd.filter((F.col("created_utc") >= t1) & (F.col("created_utc") < t2)).coalesce(1).write.mode("append").parquet(str(src))
-    fd.filter(F.col("created_utc") >= t2).coalesce(1).write.mode("append").parquet(str(src))
-    stream = (
-        spark.readStream.schema(fd.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        streaming_quota_admission(stream)
-        .writeStream.format("memory")
-        .queryName("quota_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = spark.sql("SELECT author, hour, id FROM quota_stream").collect()
-    per_key: dict[tuple, list[int]] = {}
-    for r in got:
-        per_key.setdefault((r["author"], r["hour"]), []).append(r["id"])
-    assert all(len(v) <= QUOTA_CAP for v in per_key.values())
-    batch = {
-        (r["author"], r["hour"]): r["admitted_ids"]
-        for r in QUERIES["quota_admission_per_author"].spark(spark, sf_dir).collect()
-    }
-    got_ids = {k: ",".join(str(i) for i in sorted(v)) for k, v in per_key.items()}
-    assert got_ids == {k: v for k, v in batch.items() if v}
-
-
-def test_streaming_quota_state_survives_checkpoint_restart(spark, sf_dir, tmp_path):
-    """Quota state is fault-tolerant: a key that fills its quota before a
-    STOP must stay throttled after a checkpointed RESTART sees more of its
-    events — the property that makes the gate a real admission control and
-    not a per-process counter (the reference's CPS pacing dies with the
-    connection, sse.py:110)."""
-    from reddit_sse_stream_spark.sources.feed import feed_df
-    from reddit_sse_stream_spark.streaming.stateful import (
-        QUOTA_CAP,
-        streaming_quota_admission,
-    )
-
-    fd = feed_df(spark, sf_dir).select("author", "created_utc", "id")
-    cut = int(fd.approxQuantile("created_utc", [0.5], 0.0)[0])
-    src = tmp_path / "feed_src"
-    ck = tmp_path / "ck"
-    out = tmp_path / "admitted"
-    fd.filter(F.col("created_utc") < cut).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(src))
-
-    def run_once() -> None:
-        stream = (
-            spark.readStream.schema(fd.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        # parquet sink, not memory: the memory sink refuses checkpoint
-        # RECOVERY, and recovery is exactly what this test proves
-        q = (
-            streaming_quota_admission(stream)
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", str(ck))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    run_once()  # first half, then the query STOPS (availableNow drains)
-    n_first = spark.read.parquet(str(out)).count()
-    assert n_first > 0
-    fd.filter(F.col("created_utc") >= cut).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(src))
-    run_once()  # restart from the same checkpoint over the second half
-
-    rows = spark.read.parquet(str(out)).collect()
-    per_key: dict[tuple, set] = {}
-    for r in rows:
-        per_key.setdefault((r["author"], r["hour"]), set()).add(r["id"])
-    # the cap binds ACROSS the restart: no key ever exceeds it, no id twice
-    assert all(len(v) <= QUOTA_CAP for v in per_key.values())
-    assert sum(len(v) for v in per_key.values()) == len(rows)
-    # and keys spanning the cut admitted pre-restart events first: the
-    # second run could only top keys up, never re-admit or exceed
-    assert len(rows) > n_first
-
-
-def test_streaming_countmin_matches_batch_grid(spark, sf_dir, tmp_path):
-    """Batch/stream parity for the Count-Min sketch: replaying the events
-    table in micro-batches through streaming_countmin must leave, as the
-    LATEST emission per (j, cell), exactly the batch grid's counts — and
-    the state key space must be bounded by d*w regardless of how many
-    distinct users the stream carried."""
-    from reddit_sse_stream_spark.operators.sketches import cms_cell_rows
-    from reddit_sse_stream_spark.sources.tables import load_table
-    from reddit_sse_stream_spark.streaming.stateful import streaming_countmin
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
-    src = tmp_path / "cms_stream"
-    third = ev.count() // 3 + 1
-    for b in range(3):
-        ev.filter(
-            (F.col("event_id") >= b * third) & (F.col("event_id") < (b + 1) * third)
-        ).coalesce(1).write.mode("append").parquet(str(src))
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        streaming_countmin(stream)
-        .writeStream.format("memory")
-        .queryName("cms_stream")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {}
-    for r in spark.sql("SELECT j, cell, cnt FROM cms_stream").collect():
-        k = (r["j"], r["cell"])
-        got[k] = max(got[k], r["cnt"]) if k in got else r["cnt"]  # monotone
-    batch = {
-        (r["j"], r["cell"]): r["cnt"]
-        for r in ev.select(
-            cms_cell_rows(F.col("user_id").cast("string"), 4, 64).alias("p")
-        )
-        .groupBy(F.col("p.j").alias("j"), F.col("p.cell").alias("cell"))
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    assert got == batch
-    assert len(got) <= 4 * 64
-
-
-def test_streaming_countmin_state_survives_checkpoint_restart(spark, sf_dir, tmp_path):
-    """CMS cell state is fault-tolerant: totals accumulated before a STOP
-    must continue (not restart from zero) after a checkpointed RESTART
-    over the rest of the stream — if state were lost, the max emission
-    per cell would be the second half's partial count, below the full
-    batch grid.  foreachBatch parquet capture because the update-mode
-    stateful operator cannot drive a plain append file sink."""
-    from reddit_sse_stream_spark.operators.sketches import cms_cell_rows
-    from reddit_sse_stream_spark.sources.tables import load_table
-    from reddit_sse_stream_spark.streaming.stateful import streaming_countmin
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
-    cut = ev.count() // 2
-    src = tmp_path / "cms_src"
-    ck = tmp_path / "cms_ck"
-    out = tmp_path / "cms_out"
-    ev.filter(F.col("event_id") < cut).coalesce(1).write.mode("append").parquet(str(src))
-
-    def run_once() -> None:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        q = (
-            streaming_countmin(stream)
-            .writeStream.foreachBatch(
-                lambda df, _bid: df.write.mode("append").parquet(str(out))
-            )
-            .option("checkpointLocation", str(ck))
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    run_once()
-    assert spark.read.parquet(str(out)).count() > 0
-    ev.filter(F.col("event_id") >= cut).coalesce(1).write.mode("append").parquet(str(src))
-    run_once()
-
-    got = {}
-    for r in spark.read.parquet(str(out)).collect():
-        k = (r["j"], r["cell"])
-        got[k] = max(got.get(k, 0), r["cnt"])  # totals are monotone
-    full = {
-        (r["j"], r["cell"]): r["cnt"]
-        for r in ev.select(
-            cms_cell_rows(F.col("user_id").cast("string"), 4, 64).alias("p")
-        )
-        .groupBy(F.col("p.j").alias("j"), F.col("p.cell").alias("cell"))
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    assert got == full
-
-
-def test_streaming_source_minhash_matches_independent_replica(spark, sf_dir, tmp_path):
-    """Batch/stream parity for the incremental source sketch, checked
-    against an ENGINE-INDEPENDENT Python replica of the md5/permutation
-    family: after replaying the documents table in micro-batches, the
-    latest emission per (source, seed) must equal the replica's min over
-    the full corpus — state continued across batches (min of mins), and
-    the hash family is identical on a third implementation."""
-    import hashlib
-
-    from reddit_sse_stream_spark.operators.dedup import _MERSENNE_P, _coeffs
-    from reddit_sse_stream_spark.sources.tables import load_table
-    from reddit_sse_stream_spark.streaming.stateful import (
-        streaming_source_minhash,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "text"
-    )
-    src = tmp_path / "docs_stream"
-    third = docs.count() // 3 + 1
-    for b in range(3):
-        docs.filter(
-            (F.col("doc_id") >= b * third) & (F.col("doc_id") < (b + 1) * third)
-        ).coalesce(1).write.mode("append").parquet(str(src))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        streaming_source_minhash(stream)
-        .writeStream.format("memory")
-        .queryName("srcmh_stream")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {}
-    for r in spark.sql("SELECT src, i, sig FROM srcmh_stream").collect():
-        k = (r["src"], r["i"])
-        got[k] = min(got[k], r["sig"]) if k in got else r["sig"]  # monotone dec
-
-    coeffs = _coeffs(16)
-    expected: dict = {}
-    for row in docs.collect():
-        ws = row["text"].lower().split()
-        if len(ws) < 5:
-            continue
-        for p in range(len(ws) - 4):
-            gram = " ".join(ws[p : p + 5])
-            h = int(hashlib.md5(gram.encode()).hexdigest()[:15], 16) % _MERSENNE_P
-            for i, (a, b) in enumerate(coeffs):
-                hv = (h * a + b) % _MERSENNE_P
-                k = (row["source"], i)
-                if k not in expected or hv < expected[k]:
-                    expected[k] = hv
-    assert got == expected
-
-
-def test_streaming_duplicate_positions_parity_with_census_replay(
-    spark, sf_dir, tmp_path
-):
-    """Batch/stream parity for the streaming span marker (VERDICT r08 next
-    #6), against TWO references: (1) an engine-independent Python census
-    replay (iterate docs in doc_id order, a position is emitted iff its
-    gram hash was seen strictly earlier), and (2) the equivalent batch
-    definition (row_number over (doc_id, pos) per gram > 1).  The folded
-    spans must also match spans_from_positions on the replica's
-    positions — the full streaming story: marker (stateful, incremental)
-    + span fold (per-doc, batch-side)."""
-    import hashlib
-
-    from pyspark.sql import Window
-
-    from reddit_sse_stream_spark.operators.text import spans_from_positions
-    from reddit_sse_stream_spark.sources.tables import load_table
-    from reddit_sse_stream_spark.streaming.stateful import (
-        streaming_duplicate_positions,
-    )
-
-    k = 8
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") < 200)
-    )
-    src = tmp_path / "docs_dupspan_stream"
-    third = 200 // 3 + 1
-    for b in range(3):
-        docs.filter(
-            (F.col("doc_id") >= b * third) & (F.col("doc_id") < (b + 1) * third)
-        ).coalesce(1).write.mode("append").parquet(str(src))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        streaming_duplicate_positions(stream, k=k)
-        .writeStream.format("memory")
-        .queryName("dupspan_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    streamed = {
-        (r["doc_id"], r["pos"])
-        for r in spark.sql("SELECT doc_id, pos FROM dupspan_stream").collect()
-    }
-
-    # reference 1: engine-independent census replay
-    seen: set[int] = set()
-    expected: set[tuple[int, int]] = set()
-    for row in sorted(docs.collect(), key=lambda r: r["doc_id"]):
-        ws = row["text"].lower().split()
-        if len(ws) < k:
-            continue
-        for pos in range(len(ws) - k + 1):
-            h = int(
-                hashlib.md5(
-                    " ".join(ws[pos : pos + k]).encode()
-                ).hexdigest()[:15],
-                16,
-            )
-            if h in seen:
-                expected.add((row["doc_id"], pos))
-            seen.add(h)
-    assert streamed == expected
-    assert expected, "fixture must contain duplicated grams"
-
-    # reference 2: the batch non-first-occurrence definition
-    from reddit_sse_stream_spark.operators.dedup import md5_hash60
-
-    words = F.split(F.lower(F.col("text")), r"\s+")
-    gram_h = F.transform(
-        F.sequence(F.lit(0), F.size("ws") - k),
-        lambda i: md5_hash60(F.concat_ws(" ", F.slice("ws", i + 1, k))),
-    )
-    grams = (
-        docs.select("doc_id", F.explode(F.array(words)).alias("ws"))
-        .filter(F.size("ws") >= k)
-        .select("doc_id", F.posexplode(gram_h).alias("pos", "h"))
-    )
-    occ = F.row_number().over(Window.partitionBy("h").orderBy("doc_id", "pos"))
-    batch_def = {
-        (r["doc_id"], r["pos"])
-        for r in grams.withColumn("occ", occ).where(F.col("occ") > 1).collect()
-    }
-    assert streamed == batch_def
-
-    # span fold parity on the streamed positions
-    pos_df = spark.createDataFrame(
-        sorted(streamed), "doc_id long, pos long"
-    )
-    spans = {
-        (r["doc_id"], r["span_start"], r["span_end"], r["n_grams"])
-        for r in spans_from_positions(pos_df, k=k).collect()
-    }
-    # replica fold: merge consecutive positions per doc
-    by_doc: dict[int, list[int]] = {}
-    for d, p in sorted(expected):
-        by_doc.setdefault(d, []).append(p)
-    span_ref = set()
-    for d, ps in by_doc.items():
-        start = prev = ps[0]
-        n = 1
-        for p in ps[1:]:
-            if p == prev + 1:
-                prev = p
-                n += 1
-            else:
-                span_ref.add((d, start, prev + k - 1, n))
-                start = prev = p
-                n = 1
-        span_ref.add((d, start, prev + k - 1, n))
-    assert spans == span_ref
-
-
-def test_streaming_decontam_matches_batch(spark, sf_dir, tmp_path):
-    """The embedding-decontam admission gate as a stream: replay the
-    corpus side in 3 micro-batches through the stateless GEMM scan and
-    the union of emissions must equal the batch operator's output on the
-    same frame — map-only parity, no state to drift."""
-    from reddit_sse_stream_spark.operators.similarity import (
-        decontam_embedding_cosine,
-        decontam_embedding_cosine_stream,
-    )
-    from reddit_sse_stream_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    batch = {
-        (r.vec_id, r.eval_id, r.cos_sim)
-        for r in decontam_embedding_cosine(
-            emb, F.col("vec_id") % 20 == 0, threshold=0.2
-        ).collect()
-    }
-    assert batch, "fixture must flag something at the loose threshold"
-
-    corpus = emb.filter(F.col("vec_id") % 20 != 0)
-    src = tmp_path / "emb_stream"
-    n = corpus.count()
-    third = n // 3 + 1
-    ordered = corpus.orderBy("vec_id").collect()
-    for b in range(3):
-        spark.createDataFrame(
-            ordered[b * third : (b + 1) * third], corpus.schema
-        ).coalesce(1).write.mode("append").parquet(str(src))
-    stream = (
-        spark.readStream.schema(corpus.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        decontam_embedding_cosine_stream(
-            stream, emb.filter(F.col("vec_id") % 20 == 0), threshold=0.2
-        )
-        .writeStream.format("memory")
-        .queryName("decontam_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    streamed = {
-        (r.vec_id, r.eval_id, r.cos_sim)
-        for r in spark.sql(
-            "SELECT vec_id, eval_id, cos_sim FROM decontam_stream"
-        ).collect()
-    }
-    assert streamed == batch
-
-
-def test_streaming_dupspan_census_survives_checkpoint_restart(
-    spark, sf_dir, tmp_path
-):
-    """The gram census is fault-tolerant: a gram first seen BEFORE a stop
-    must still mark later occurrences as duplicates after a checkpointed
-    restart — otherwise the marker silently re-admits every boilerplate
-    gram at each failover.  Replay doc_id halves around a restart and pin
-    the union of emissions against the census-replay reference."""
-    import hashlib
-
-    from reddit_sse_stream_spark.sources.tables import load_table
-    from reddit_sse_stream_spark.streaming.stateful import (
-        streaming_duplicate_positions,
-    )
-
-    k = 8
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") < 120)
-    )
-    src = tmp_path / "docs_src"
-    ck = tmp_path / "ck"
-    out = tmp_path / "dup_pos"
-    docs.filter(F.col("doc_id") < 60).coalesce(1).write.mode("append").parquet(
-        str(src)
-    )
-
-    def run_once() -> None:
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        q = (
-            streaming_duplicate_positions(stream, k=k)
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", str(ck))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    run_once()
-    docs.filter(F.col("doc_id") >= 60).coalesce(1).write.mode("append").parquet(
-        str(src)
-    )
-    run_once()
-
-    streamed = {
-        (r["doc_id"], r["pos"])
-        for r in spark.read.parquet(str(out)).collect()
-    }
-    seen: set[int] = set()
-    expected: set[tuple[int, int]] = set()
-    for row in sorted(docs.collect(), key=lambda r: r["doc_id"]):
-        ws = row["text"].lower().split()
-        if len(ws) < k:
-            continue
-        for pos in range(len(ws) - k + 1):
-            h = int(
-                hashlib.md5(
-                    " ".join(ws[pos : pos + k]).encode()
-                ).hexdigest()[:15],
-                16,
-            )
-            if h in seen:
-                expected.add((row["doc_id"], pos))
-            seen.add(h)
-    assert streamed == expected
-    # the restart boundary is load-bearing only if some dup pair SPANS it
-    assert any(d >= 60 for d, _ in expected) and any(d < 60 for d, _ in expected)
-
-
-def test_streaming_vocab_first_seen_matches_batch_census(spark, sf_dir, tmp_path):
-    """Batch/stream parity for the vocabulary census: replaying documents
-    in doc_id-ordered micro-batches must emit every word EXACTLY once
-    with the same first_doc as the batch word -> min(doc_id) reduction
-    (the census inside text_vocab_growth), and the cumulative emitted
-    count equals the Heaps-curve vocabulary checkpoint at each prefix."""
-    from reddit_sse_stream_spark.sources.tables import load_table
-    from reddit_sse_stream_spark.streaming.stateful import (
-        streaming_vocab_first_seen,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    src = tmp_path / "vocab_stream"
-    n = docs.count()
-    cut = n // 2
-    docs.filter(F.col("doc_id") < cut).coalesce(1).write.mode("append").parquet(str(src))
-    docs.filter(F.col("doc_id") >= cut).coalesce(1).write.mode("append").parquet(str(src))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        streaming_vocab_first_seen(stream)
-        .writeStream.format("memory")
-        .queryName("vocab_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        r["word"]: r["first_doc"]
-        for r in spark.sql(
-            "SELECT * FROM vocab_stream WHERE word <> ''"
-        ).collect()
-    }
-    words = F.split(F.lower(F.col("text")), r"\s+")
-    batch = {
-        r["word"]: r["first_doc"]
-        for r in docs.select(
-            "doc_id",
-            F.explode(
-                F.filter(words, lambda w: F.length(w) > 0)
-            ).alias("word"),
-        )
-        .groupBy("word")
-        .agg(F.min("doc_id").alias("first_doc"))
-        .collect()
-    }
-    assert got == batch
-    # emit-once: no word appears twice across batches
-    rows = spark.sql("SELECT word FROM vocab_stream WHERE word <> ''").collect()
-    assert len(rows) == len({r["word"] for r in rows})
-    # the cumulative count at the first-batch prefix IS the Heaps
-    # checkpoint: words whose first_doc < cut
-    n_first_batch = sum(1 for fd in got.values() if fd < cut)
-    assert n_first_batch == len({w for w, fd in batch.items() if fd < cut})
-
-
-def test_streaming_gram_novelty_matches_batch_decay_curve(spark, sf_dir, tmp_path):
-    """Batch/stream parity for the novelty decay curve: replaying the
-    documents table in the SAME 10 equal-width doc_id bands the batch row
-    uses (one parquet file per band, one micro-batch per file) must emit
-    every distinct trigram exactly once, and counting emissions per band
-    (band of first_doc = the band that introduced the gram) reproduces
-    the batch curve's n_novel_types column band-for-band."""
-    from reddit_sse_stream_spark.operators.text import novelty_decay_curve
-    from reddit_sse_stream_spark.sources.tables import load_table
-    from reddit_sse_stream_spark.streaming.stateful import (
-        streaming_gram_novelty,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    mn, mx = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    span = mx - mn + 1
-    src = tmp_path / "gram_stream"
-    for b in range(10):
-        band = docs.filter(F.expr(f"((doc_id - {mn}) * 10) div {span} = {b}"))
-        band.coalesce(1).write.mode("append").parquet(str(src))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        streaming_gram_novelty(stream)
-        .writeStream.format("memory")
-        .queryName("gram_novelty_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = spark.sql(
-        "SELECT gram, first_doc FROM gram_novelty_stream WHERE gram <> ''"
-    ).collect()
-    # emit-once: no gram appears twice across micro-batches
-    assert len(got) == len({r["gram"] for r in got})
-    stream_novel_per_band: dict[int, int] = {}
-    for r in got:
-        b = (r["first_doc"] - mn) * 10 // span
-        stream_novel_per_band[b] = stream_novel_per_band.get(b, 0) + 1
-    curve = {
-        r["batch"]: r["n_novel_types"]
-        for r in novelty_decay_curve(docs).collect()
-    }
-    assert stream_novel_per_band == curve
-    # cumulative emitted count == total distinct-gram vocabulary
-    assert len(got) == sum(curve.values())
-
-
-def test_streaming_media_dedup_matches_batch_survivors(spark, sf_dir, tmp_path):
-    """Batch/stream parity for the perceptual media-dedup gate: replaying
-    REAL image containers in media_id-ordered micro-batches must admit
-    exactly the batch first-per-fingerprint survivors (min media_id per
-    aHash), each fingerprint once — the multimodal twin of the exact-
-    dedup admission gate."""
-    from reddit_sse_stream_spark.operators.multimodal import (
-        image_ahash,
-        synthesize_media,
-    )
-    from reddit_sse_stream_spark.sources.tables import load_table
-    from reddit_sse_stream_spark.streaming.stateful import (
-        streaming_media_dedup,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % 3 == 0
-    )
-    media = synthesize_media(docs, real_media=True)
-    src = tmp_path / "media_stream"
-    n = docs.agg(F.max("doc_id")).first()[0]
-    media.filter(F.col("media_id") < n // 2).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(src))
-    media.filter(F.col("media_id") >= n // 2).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(src))
-    stream = (
-        spark.readStream.schema(media.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        streaming_media_dedup(stream)
-        .writeStream.format("memory")
-        .queryName("media_dedup_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r["hash_hi"], r["hash_lo"]): r["keep_id"]
-        for r in spark.sql(
-            "SELECT * FROM media_dedup_stream WHERE keep_id IS NOT NULL"
-        ).collect()
-    }
-    batch = {
-        (r["hash_hi"], r["hash_lo"]): r["keep_id"]
-        for r in image_ahash(media)
-        .groupBy("hash_hi", "hash_lo")
-        .agg(F.min("media_id").alias("keep_id"))
-        .collect()
-    }
-    assert got == batch
-    assert len(got) > 0
-
-
 def test_streaming_drop_duplicates_within_watermark(spark):
     """Spark's BUILT-IN streaming dedup (dropDuplicatesWithinWatermark)
-    over the feed stream — the engine-managed sibling of the repo's
-    keyed-state dedup kernels (streaming/stateful.py): dedup on the
+    over the feed stream — keyed state the engine manages: dedup on the
     author key within the watermark horizon must emit exactly one row
     per distinct author when every event fits one horizon, matching the
     batch DISTINCT."""
@@ -1901,1012 +1007,12 @@ def test_streaming_drop_duplicates_within_watermark(spark):
     assert set(authors) == expected
 
 
-def test_streaming_session_finalize_timeout_emits_and_evicts(spark, tmp_path):
-    """The timeout-driven kernel must emit each quiet key's session
-    summary exactly once when its ProcessingTimeTimeout fires on a later
-    micro-batch, matching the batch per-author aggregate.
-
-    With ProcessingTimeTimeout the engine keeps scheduling empty
-    micro-batches to evaluate timers ('No new data but cleaning up
-    state'), so processAllAvailable never settles — the test polls the
-    sink until the expected emission count lands (instrumented run:
-    every key is invoked exactly twice, data then hasTimedOut)."""
-    import time as _t
-
-    from reddit_sse_stream_spark.sources.feed import feed_df
-    from reddit_sse_stream_spark.streaming.stateful import (
-        streaming_session_finalize,
-    )
-
-    fd = feed_df(spark, "/root/testdata/sf0.001").select("author", "id")
-    src = tmp_path / "sess_stream"
-    fd.coalesce(1).write.mode("append").parquet(str(src))
-    stream = (
-        spark.readStream.schema(fd.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    expected = {
-        r["author"]: (r["n"], r["lo"], r["hi"])
-        for r in fd.groupBy("author")
-        .agg(
-            F.count("*").alias("n"),
-            F.min("id").alias("lo"),
-            F.max("id").alias("hi"),
-        )
-        .collect()
-    }
-    q = (
-        streaming_session_finalize(stream)
-        .writeStream.format("memory")
-        .queryName("sess_fin")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        deadline = _t.monotonic() + 120
-        while _t.monotonic() < deadline:
-            if spark.sql("SELECT * FROM sess_fin").count() >= len(expected):
-                break
-            _t.sleep(0.5)
-        rows = spark.sql("SELECT * FROM sess_fin").collect()
-    finally:
-        q.stop()
-    got = {
-        r["author"]: (r["n_events"], r["first_id"], r["last_id"])
-        for r in rows
-    }
-    assert len(rows) == len(got) == len(expected)  # exactly once per key
-    assert got == expected
-
-
-def test_streaming_kanon_release_matches_batch_group_filter(spark, sf_dir, tmp_path):
-    """Set-equality parity for the k-anonymity release gate: whatever the
-    micro-batch split, the released ids must be EXACTLY the events whose
-    (event_type, hour) group reaches KANON_K members in the batch view —
-    and a deliberately adversarial split (round-robin, so most groups
-    straddle batches) must not change that."""
-    from reddit_sse_stream_spark.streaming.stateful import (
-        KANON_K,
-        streaming_kanon_release,
-    )
-
-    ev = _kanon_synthetic_events(spark)
-    src = tmp_path / "kanon_stream"
-    for i in range(3):
-        ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        streaming_kanon_release(stream)
-        .writeStream.format("memory")
-        .queryName("kanon_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        r["event_id"]
-        for r in spark.sql("SELECT event_id FROM kanon_stream").collect()
-    }
-    batch = _kanon_batch_release_set(ev, KANON_K)
-    assert got == batch
-    assert len(got) > 0  # some groups genuinely release...
-    assert len(got) < ev.count()  # ...and some really are suppressed
-    # no id released twice
-    rows = spark.sql("SELECT event_id FROM kanon_stream").collect()
-    assert len(rows) == len(got)
-
-
-def _kanon_synthetic_events(spark):
-    """Events with CONTROLLED quasi-identifier group sizes {2,3,4,5,7,9}
-    per type — the real sf0.001 table's (type, hour) groups never reach
-    KANON_K=5, so tests on it would pass vacuously (empty == empty); this
-    frame guarantees both released and suppressed groups exist."""
-    rows = []
-    eid = 0
-    for t_i, t in enumerate(["a", "b", "c"]):
-        for h_i, size in enumerate([2, 3, 4, 5, 7, 9]):
-            for j in range(size):
-                # spread inside the hour; hours disjoint per (type, h_i)
-                sec = (t_i * 6 + h_i) * 3600 + j * 60
-                rows.append((eid, t, sec))
-                eid += 1
-    df = spark.createDataFrame(rows, "event_id long, event_type string, sec long")
-    return df.select(
-        "event_id", "event_type", F.timestamp_seconds("sec").alias("ts")
-    )
-
-
-def _kanon_batch_release_set(ev, k) -> set:
-    from pyspark.sql import Window as _W
-
-    hour = F.floor(F.unix_timestamp("ts") / 3600).cast("long").alias("hour")
-    w = _W.partitionBy("event_type", "hour")
-    return {
-        r["event_id"]
-        for r in ev.select("event_type", hour, "event_id")
-        .withColumn("c", F.count("*").over(w))
-        .filter(F.col("c") >= k)
-        .collect()
-    }
-
-
-def test_streaming_cusum_drift_matches_sequential_replay(spark, sf_dir, tmp_path):
-    """Exact-event parity for the CUSUM drift kernel: replaying the
-    documents table in doc_id-ordered micro-batches must emit EXACTLY
-    the drift events a plain-Python sequential CUSUM over the same
-    per-source doc_id order produces — baseline, slack, threshold,
-    resets and all.  A synthetic length spike is injected into one
-    source so at least one drift event provably exists."""
-    import pandas as pd
-
-    from reddit_sse_stream_spark.sources.tables import load_table
-    from reddit_sse_stream_spark.streaming.stateful import (
-        CUSUM_BASELINE_N,
-        streaming_cusum_drift,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "source", "doc_id", "n_chars"
-    )
-    # inject a drift: src0 docs in the top doc_id third get 10x length
-    n = docs.agg(F.max("doc_id")).collect()[0][0]
-    docs = docs.withColumn(
-        "n_chars",
-        F.when(
-            (F.col("source") == "src0") & (F.col("doc_id") > 2 * n / 3),
-            F.col("n_chars") * 10,
-        ).otherwise(F.col("n_chars")),
-    )
-    src = tmp_path / "cusum_stream"
-    third = n // 3
-    docs.filter(F.col("doc_id") <= third).coalesce(1).write.mode("append").parquet(str(src))
-    docs.filter((F.col("doc_id") > third) & (F.col("doc_id") <= 2 * third)).coalesce(1).write.mode("append").parquet(str(src))
-    docs.filter(F.col("doc_id") > 2 * third).coalesce(1).write.mode("append").parquet(str(src))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        streaming_cusum_drift(stream)
-        .writeStream.format("memory")
-        .queryName("cusum_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = [
-        (r["source"], r["doc_id"], r["direction"], r["stat"])
-        for r in spark.sql(
-            "SELECT * FROM cusum_stream ORDER BY source, doc_id"
-        ).collect()
-    ]
-
-    # plain-Python sequential replay (the independent derivation)
-    pdf = docs.toPandas().sort_values("doc_id")
-    expect = []
-    st: dict = {}
-    for _, row in pdf.iterrows():
-        s, d, x = row["source"], int(row["doc_id"]), int(row["n_chars"])
-        ph, cnt, bsum, base, sp, sn = st.get(s, (0, 0, 0, 0, 0, 0))
-        if ph == 0:
-            cnt += 1
-            bsum += x
-            if cnt >= CUSUM_BASELINE_N:
-                base = bsum // cnt
-                ph = 1
-            st[s] = (ph, cnt, bsum, base, sp, sn)
-            continue
-        slack, thresh = base // 10, 5 * base
-        sp = max(0, sp + (x - base - slack))
-        sn = max(0, sn + (base - x - slack))
-        if sp > thresh:
-            expect.append((s, d, 1, sp))
-            sp = sn = 0
-        elif sn > thresh:
-            expect.append((s, d, -1, sn))
-            sp = sn = 0
-        st[s] = (ph, cnt, bsum, base, sp, sn)
-    expect.sort()
-    assert got == expect
-    assert any(e[0] == "src0" and e[2] == 1 for e in got)  # the injected spike fires
-
-
-def test_streaming_spacesaving_matches_replay_and_epsilon_bound(
-    spark, sf_dir, tmp_path
-):
-    """Two independent checks on the SpaceSaving kernel: (1) exact
-    emission parity with a plain-Python replay of the same algorithm
-    over the same per-shard word sequences; (2) the algorithm's
-    guarantee against EXACT counts — count_est - err <= true <=
-    count_est for every monitored word, and every word whose true shard
-    frequency exceeds N_shard/K is monitored at the end."""
-    import hashlib
-    from collections import Counter
-
-    from reddit_sse_stream_spark.sources.tables import load_table
-    from reddit_sse_stream_spark.streaming.stateful import (
-        SPACESAVING_K,
-        SPACESAVING_SHARDS,
-        streaming_spacesaving_topk,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    src = tmp_path / "ss_stream"
-    n = docs.count()
-    for i in range(3):
-        docs.filter(
-            (F.col("doc_id") >= i * n / 3) & (F.col("doc_id") < (i + 1) * n / 3)
-        ).coalesce(1).write.mode("append").parquet(str(src))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        streaming_spacesaving_topk(stream)
-        .writeStream.format("memory")
-        .queryName("ss_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = sorted(
-        (r["shard"], r["batch_idx"], r["word"], r["count_est"], r["err"])
-        for r in spark.sql("SELECT * FROM ss_stream").collect()
-    )
-
-    def shard_of(w):
-        return int(hashlib.md5(w.encode()).hexdigest()[:15], 16) % SPACESAVING_SHARDS
-
-    pdf = docs.toPandas().sort_values("doc_id")
-    # batch boundaries identical to the file splits above
-    batches = [
-        pdf[(pdf["doc_id"] >= i * n / 3) & (pdf["doc_id"] < (i + 1) * n / 3)]
-        for i in range(3)
-    ]
-    st: dict = {s: [0, [], [], []] for s in range(SPACESAVING_SHARDS)}
-    expect = []
-    true_counts: dict = {s: Counter() for s in range(SPACESAVING_SHARDS)}
-    for batch in batches:
-        seen_shards = set()
-        for _, row in batch.iterrows():
-            for w in [x for x in row["text"].lower().split() if x]:
-                s = shard_of(w)
-                seen_shards.add(s)
-                true_counts[s][w] += 1
-                bidx, words, counts, errs = st[s]
-                if w in words:
-                    counts[words.index(w)] += 1
-                elif len(words) < SPACESAVING_K:
-                    words.append(w)
-                    counts.append(1)
-                    errs.append(0)
-                else:
-                    mn = min(counts)
-                    j = min(
-                        (i for i, c in enumerate(counts) if c == mn),
-                        key=lambda i: words[i],
-                    )
-                    words[j], errs[j], counts[j] = w, mn, mn + 1
-        for s in seen_shards:
-            st[s][0] += 1
-            bidx, words, counts, errs = st[s]
-            for w, c, e in zip(words, counts, errs):
-                expect.append((s, bidx, w, c, e))
-    assert got == sorted(expect)
-    # epsilon guarantee on the FINAL state per shard
-    for s in range(SPACESAVING_SHARDS):
-        bidx, words, counts, errs = st[s]
-        nsh = sum(true_counts[s].values())
-        for w, c, e in zip(words, counts, errs):
-            true = true_counts[s][w]
-            assert c - e <= true <= c, (s, w)
-        monitored = set(words)
-        for w, true in true_counts[s].items():
-            if true > nsh / SPACESAVING_K:
-                assert w in monitored, (s, w)
-
-
-def test_streaming_kanon_state_survives_checkpoint_restart(spark, sf_dir, tmp_path):
-    """The k-anonymity buffer is fault-tolerant: a group whose events
-    straddle a STOP/RESTART must still release EXACTLY the batch-view
-    set — sub-K buffers rehydrate from the checkpoint, counts continue,
-    and nothing releases twice.  This is the property that makes the
-    gate a privacy control rather than a per-process filter."""
-    from reddit_sse_stream_spark.streaming.stateful import (
-        KANON_K,
-        streaming_kanon_release,
-    )
-
-    ev = _kanon_synthetic_events(spark)
-    src = tmp_path / "kanon_src"
-    ck = tmp_path / "ck"
-    out = tmp_path / "released"
-    # round-robin 2/3-1/3 split: most groups straddle the restart
-    # boundary, and the first phase is big enough that some groups
-    # already release before the stop (asserted below)
-    ev.filter(F.col("event_id") % 3 > 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(src))
-
-    def run_once() -> None:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        q = (
-            streaming_kanon_release(stream)
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", str(ck))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    run_once()
-    n_first = spark.read.parquet(str(out)).count()
-    ev.filter(F.col("event_id") % 3 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(src))
-    run_once()
-
-    got = [r["event_id"] for r in spark.read.parquet(str(out)).collect()]
-    assert len(got) == len(set(got))  # nothing released twice
-    batch = _kanon_batch_release_set(ev, KANON_K)
-    assert set(got) == batch
-    assert 0 < n_first < len(got)  # releases happened on BOTH sides of the restart
-
-
-def test_streaming_tombstone_erasure_forward_contract(spark, sf_dir, tmp_path):
-    """Exact parity for the tombstone gate: events after a user's
-    tombstone never emit, events before it always do, users without
-    tombstones flow untouched — whatever the micro-batch split.  The
-    expected set is a direct per-user recount over (seq, kind) order."""
-    import hashlib
-
-    from reddit_sse_stream_spark.sources.tables import load_table
-    from reddit_sse_stream_spark.streaming.stateful import (
-        streaming_tombstone_erasure,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id"
-    )
-    # seq = event_id for events; tombstones for ~1/4 of users land at a
-    # deterministic mid-stream seq derived from the user's hash
-    n = ev.agg(F.max("event_id")).collect()[0][0]
-    events = ev.select(
-        "user_id",
-        F.col("event_id").alias("seq"),
-        F.lit("event").alias("kind"),
-        "event_id",
-    )
-    users = ev.select("user_id").distinct()
-    from reddit_sse_stream_spark.operators.dedup import md5_hash60
-
-    h = md5_hash60(F.concat(F.lit("tomb:"), F.col("user_id").cast("string")))
-    tombs = (
-        users.filter(F.pmod(h, F.lit(4)) == 0)
-        .select(
-            "user_id",
-            F.pmod(h, F.lit(n)).alias("seq"),
-            F.lit("erase").alias("kind"),
-            F.lit(-1).cast("long").alias("event_id"),
-        )
-    )
-    union = events.unionAll(tombs)
-    src = tmp_path / "tomb_stream"
-    # contiguous seq ranges per micro-batch — the standing replay
-    # contract (arrival order consistent with seq order): the forward
-    # contract is then exact, not dependent on file-arrival luck
-    for i in range(3):
-        union.filter(
-            (F.col("seq") >= i * (n + 1) / 3) & (F.col("seq") < (i + 1) * (n + 1) / 3)
-        ).coalesce(1).write.mode("append").parquet(str(src))
-    stream = (
-        spark.readStream.schema(union.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        streaming_tombstone_erasure(stream)
-        .writeStream.format("memory")
-        .queryName("tomb_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        r["event_id"]
-        for r in spark.sql("SELECT event_id FROM tomb_stream").collect()
-    }
-
-    def h60(u):
-        return int(hashlib.md5(f"tomb:{u}".encode()).hexdigest()[:15], 16)
-
-    erase_at = {}
-    for r in users.collect():
-        u = r["user_id"]
-        if h60(u) % 4 == 0:
-            erase_at[u] = h60(u) % n
-    expect = {
-        r["event_id"]
-        for r in ev.collect()
-        if r["user_id"] not in erase_at or r["event_id"] < erase_at[r["user_id"]]
-    }
-    assert got == expect
-    assert 0 < len(got) < ev.count()  # both suppressed and passed exist
-
-
-# -------------------------------------------- shared adversarial-split gate
-#
-# VERDICT r12 next #4: the keyed-state kernels share the
-# applyInPandasWithState idiom but each carried its own replay harness —
-# this is the ONE parametrized contract every kernel must pass, so a new
-# kernel gets the parity gate for free by adding a _KernelSpec.
-#
-# Contract: SPLIT-INVARIANCE under the standing replay contract.  The
-# same input replayed (a) as ONE micro-batch and (b) sliced at SEEDED
-# RANDOM arrival boundaries — duplicate cut points yield EMPTY
-# micro-batches, boundaries land mid-key, singleton slices occur — must
-# canonicalize to the same result.  Each spec's ``canon`` projects the
-# raw emissions onto exactly what its kernel CONTRACTS to be
-# split-invariant (emit-once sets for admission gates, latest-per-key
-# for monotone update-mode counters), so the test is the codified
-# contract, not a lucky fixture.  Arrival slices are CONTIGUOUS value
-# ranges of the spec's arrival column (ties inseparable), which is the
-# replay contract every order-sensitive kernel documents.
-
-
-class _KernelSpec:
-    def __init__(self, name, build, kernel, canon, arrival, mode="append",
-                 poll_done=None):
-        self.name = name
-        self.build = build        # (spark, sf_dir) -> batch input frame
-        self.kernel = kernel      # stream DataFrame -> stream DataFrame
-        self.canon = canon        # list[Row] -> comparable
-        self.arrival = arrival    # monotone replay-order column
-        self.mode = mode          # the kernel's applyInPandasWithState mode
-        self.poll_done = poll_done  # not None => ProcessingTimeTimeout kernel
-        # poll_done(canon_result, n_input_rows) -> bool: all timers fired
-
-    def __repr__(self):  # pytest id
-        return self.name
-
-
-def _docs(spark, sf_dir, cap=None):
-    from reddit_sse_stream_spark.sources.tables import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-    return d.filter(F.col("doc_id") < cap) if cap else d
-
-
-def _events(spark, sf_dir):
-    from reddit_sse_stream_spark.sources.tables import load_table
-
-    return load_table(spark, sf_dir, "events")
-
-
-def _feed(spark, sf_dir):
-    from reddit_sse_stream_spark.sources.feed import feed_df
-
-    return feed_df(spark, sf_dir)
-
-
-def _tomb_union(spark, sf_dir):
-    from reddit_sse_stream_spark.operators.dedup import md5_hash60
-
-    ev = _events(spark, sf_dir).select("user_id", "event_id")
-    n = ev.agg(F.max("event_id")).collect()[0][0]
-    events = ev.select(
-        "user_id",
-        F.col("event_id").alias("seq"),
-        F.lit("event").alias("kind"),
-        "event_id",
-    )
-    users = ev.select("user_id").distinct()
-    h = md5_hash60(F.concat(F.lit("tomb:"), F.col("user_id").cast("string")))
-    tombs = users.filter(F.pmod(h, F.lit(4)) == 0).select(
-        "user_id",
-        F.pmod(h, F.lit(n)).alias("seq"),
-        F.lit("erase").alias("kind"),
-        F.lit(-1).cast("long").alias("event_id"),
-    )
-    return events.unionAll(tombs)
-
-
-def _media(spark, sf_dir):
-    from reddit_sse_stream_spark.operators.multimodal import synthesize_media
-
-    return synthesize_media(
-        _docs(spark, sf_dir).filter(F.col("doc_id") % 3 == 0),
-        real_media=True,
-    )
-
-
-def _latest_by(key_cols, val_cols, monotone_col):
-    """Canon for update-mode kernels: per key, the emission with the
-    largest monotone column IS the final value (counters only grow /
-    minima only shrink, so 'latest' is order-recoverable from values)."""
-
-    def canon(rows):
-        best = {}
-        for r in rows:
-            k = tuple(r[c] for c in key_cols)
-            m = r[monotone_col]
-            if k not in best or m > best[k][0]:
-                best[k] = (m, tuple(r[c] for c in val_cols))
-        return {k: v for k, (_, v) in best.items()}
-
-    return canon
-
-
-def _emit_set(cols):
-    """Canon for append-mode emit-once kernels: the exact emission set
-    (and its exactly-once-ness: duplicates collapse, so the length check
-    lives in the caller via the nonempty assertion + set equality)."""
-
-    def canon(rows):
-        return {tuple(r[c] for c in cols) for r in rows}
-
-    return canon
-
-
-def _minhash_canon(rows):
-    best = {}
-    for r in rows:
-        k = (r["src"], r["i"])
-        if k not in best or r["sig"] < best[k]:
-            best[k] = r["sig"]
-    return best
-
-
-def _session_canon(rows):
-    out = {}
-    for r in rows:
-        a = r["author"]
-        n, lo, hi = out.get(a, (0, None, None))
-        out[a] = (
-            n + r["n_events"],
-            r["first_id"] if lo is None else min(lo, r["first_id"]),
-            r["last_id"] if hi is None else max(hi, r["last_id"]),
-        )
-    return out
-
-
-def _spacesaving_canon(rows):
-    per_shard = {}
-    for r in rows:
-        per_shard.setdefault(r["shard"], []).append(r)
-    out = {}
-    for shard, rs in per_shard.items():
-        last = max(r["batch_idx"] for r in rs)
-        out[shard] = {
-            (r["word"], r["count_est"], r["err"])
-            for r in rs
-            if r["batch_idx"] == last
-        }
-    return out
-
-
-def _kernel_specs():
-    from reddit_sse_stream_spark.streaming import stateful as st
-
-    return [
-        _KernelSpec(
-            "running_totals",
-            lambda s, d: _feed(s, d).select("subreddit", "id", "event", "json"),
-            st.running_totals_by_subreddit,
-            _latest_by(["subreddit"], ["total_sent", "total_bytes"], "total_sent"),
-            "id",
-            mode="update",
-        ),
-        _KernelSpec(
-            "ohlc_hourly",
-            lambda s, d: _events(s, d).select("ts", "event_id", "value"),
-            st.streaming_ohlc_hourly,
-            _latest_by(
-                ["bar_hour"],
-                ["open", "high", "low", "close", "n_events", "turnover_fp"],
-                "n_events",
-            ),
-            "event_id",
-            mode="update",
-        ),
-        _KernelSpec(
-            "dedup_first",
-            lambda s, d: _docs(s, d).select("doc_id", "text"),
-            st.streaming_dedup_first,
-            _emit_set(["digest", "keep_id"]),
-            "doc_id",
-        ),
-        _KernelSpec(
-            "quota_admission",
-            lambda s, d: _feed(s, d).select("author", "id", "created_utc"),
-            st.streaming_quota_admission,
-            _emit_set(["author", "hour", "id"]),
-            "created_utc",
-        ),
-        _KernelSpec(
-            "countmin",
-            lambda s, d: _events(s, d).select("user_id"),
-            st.streaming_countmin,
-            _latest_by(["j", "cell"], ["cnt"], "cnt"),
-            "user_id",
-            mode="update",
-        ),
-        _KernelSpec(
-            "source_minhash",
-            lambda s, d: _docs(s, d, cap=150).select("source", "text", "doc_id"),
-            st.streaming_source_minhash,
-            _minhash_canon,
-            "doc_id",
-            mode="update",
-        ),
-        _KernelSpec(
-            "duplicate_positions",
-            lambda s, d: _docs(s, d, cap=150).select("doc_id", "text"),
-            st.streaming_duplicate_positions,
-            _emit_set(["doc_id", "pos"]),
-            "doc_id",
-        ),
-        _KernelSpec(
-            "vocab_first_seen",
-            lambda s, d: _docs(s, d, cap=150).select("doc_id", "text"),
-            st.streaming_vocab_first_seen,
-            _emit_set(["word", "first_doc"]),
-            "doc_id",
-        ),
-        _KernelSpec(
-            "gram_novelty",
-            lambda s, d: _docs(s, d, cap=150).select("doc_id", "text"),
-            st.streaming_gram_novelty,
-            _emit_set(["gram", "first_doc"]),
-            "doc_id",
-        ),
-        _KernelSpec(
-            "media_dedup",
-            _media,
-            st.streaming_media_dedup,
-            _emit_set(["hash_hi", "hash_lo", "keep_id"]),
-            "media_id",
-        ),
-        _KernelSpec(
-            "session_finalize",
-            lambda s, d: _feed(s, d).select("author", "id"),
-            st.streaming_session_finalize,
-            _session_canon,
-            "id",
-            poll_done=lambda c, n: sum(v[0] for v in c.values()) == n,
-        ),
-        _KernelSpec(
-            # natural sf0.001 hours are all sub-K (nothing ever releases,
-            # which tests nothing): square-root hour binning makes group
-            # sizes GROW with the hour, so the input spans never-released
-            # sub-K groups AND released groups in one stream
-            "kanon_release",
-            lambda s, d: _events(s, d).select(
-                "event_type",
-                F.timestamp_seconds(
-                    F.floor(F.sqrt("event_id")) * 3600
-                ).alias("ts"),
-                "event_id",
-            ),
-            st.streaming_kanon_release,
-            _emit_set(["event_type", "hour", "event_id"]),
-            "event_id",
-        ),
-        _KernelSpec(
-            # natural doc lengths never cross 5x the baseline, and the
-            # natural 20-way source split leaves only 5 post-baseline
-            # docs per key (zero emissions tests nothing): collapse to 2
-            # interleaved synthetic sources and inject a +100 level
-            # shift at doc 300 and a collapse at doc 420 so both fire
-            # upward AND downward detections, with resets in between
-            "cusum_drift",
-            lambda s, d: _docs(s, d).select(
-                F.concat(F.lit("g"), (F.col("doc_id") % 2).cast("string"))
-                .alias("source"),
-                "doc_id",
-                F.when(F.col("doc_id") < 300, 100 + F.col("doc_id") % 7)
-                .when(F.col("doc_id") < 420, 200 + F.col("doc_id") % 5)
-                .otherwise(F.lit(20))
-                .cast("long")
-                .alias("n_chars"),
-            ),
-            st.streaming_cusum_drift,
-            _emit_set(["source", "doc_id", "direction", "stat"]),
-            "doc_id",
-        ),
-        _KernelSpec(
-            "spacesaving_topk",
-            lambda s, d: _docs(s, d, cap=150).select("doc_id", "text"),
-            st.streaming_spacesaving_topk,
-            _spacesaving_canon,
-            "doc_id",
-        ),
-        _KernelSpec(
-            "tombstone_erasure",
-            _tomb_union,
-            st.streaming_tombstone_erasure,
-            _emit_set(["event_id"]),
-            "seq",
-        ),
-        # fifteenth kernel, added AFTER the shared gate existed: this one
-        # _KernelSpec line is its ENTIRE test surface (VERDICT r12 next
-        # #4's "a fifteenth kernel gets the parity contract for free",
-        # demonstrated).  Canon: the final reservoir per source is the
-        # bottom-k by (prio, doc_id) of ALL emissions — evicted rows have
-        # strictly larger priorities, so the cut recovers it exactly.
-        # seventeenth kernel (r14): the URL canonicalization chain run ON
-        # A STREAM feeding a per-canonical-host admission cap — this one
-        # _KernelSpec line is again its entire gate surface (parity +
-        # restart inherited), plus one batch-twin equality test below
-        _KernelSpec(
-            "host_admission",
-            lambda s, d: _feed(s, d).select("id", "domain"),
-            st.streaming_host_admission,
-            _emit_set(["host", "id"]),
-            "id",
-        ),
-        _KernelSpec(
-            "bottomk_reservoir",
-            lambda s, d: _docs(s, d).select("source", "doc_id"),
-            st.streaming_bottomk_reservoir,
-            lambda rows: {
-                src: sorted(
-                    {(r["prio"], r["doc_id"]) for r in rows if r["source"] == src}
-                )[: st.RESERVOIR_K]
-                for src in {r["source"] for r in rows}
-            },
-            "doc_id",
-            mode="update",
-        ),
-    ]
-
-
-_ADV_QNO = [0]  # unique memory-sink names across the parametrized runs
-
-
-def _replay_kernel(spark, tmp_path, spec, input_df, cuts):
-    """Write the input as contiguous arrival-range slices (one parquet
-    file per slice, in slice order), stream with maxFilesPerTrigger=1,
-    run the kernel, return canon(all emissions)."""
-    import time as _t
-
-    _ADV_QNO[0] += 1
-    qname = f"adv_{spec.name}_{_ADV_QNO[0]}"
-    src = tmp_path / qname
-    arr = F.col(spec.arrival)
-    bounds = [None, *cuts, None]
-    for i in range(len(bounds) - 1):
-        sl = input_df
-        if bounds[i] is not None:
-            sl = sl.filter(arr >= bounds[i])
-        if bounds[i + 1] is not None:
-            sl = sl.filter(arr < bounds[i + 1])
-        sl.coalesce(1).write.mode("append").parquet(str(src))
-    stream = (
-        spark.readStream.schema(input_df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    writer = (
-        spec.kernel(stream)
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode(spec.mode)
-    )
-    if spec.poll_done is None:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination(300)
-        return spec.canon(spark.sql(f"SELECT * FROM {qname}").collect())
-    # ProcessingTimeTimeout kernel: the engine keeps scheduling empty
-    # micro-batches to fire timers, so availableNow/processAllAvailable
-    # never cover the final eviction — poll until every timer has fired
-    n_input = input_df.count()
-    q = writer.start()
-    try:
-        deadline = _t.monotonic() + 180
-        while _t.monotonic() < deadline:
-            got = spec.canon(spark.sql(f"SELECT * FROM {qname}").collect())
-            if spec.poll_done(got, n_input):
-                return got
-            _t.sleep(0.5)
-        return got
-    finally:
-        q.stop()
-
-
-def test_streaming_host_admission_matches_batch_first_k(spark, sf_dir, tmp_path):
-    """The host-admission kernel's single-batch output must equal the
-    batch first-K-by-id cut over the SAME canonicalized frame — the
-    arrival-order analogue of feed_url_host_cap's md5-order cap (and a
-    check that the urlnorm chain produces identical hosts on the
-    streaming path)."""
-    from pyspark.sql import Window
-
-    from reddit_sse_stream_spark.plans.catalog import _url_canon_frame
-    from reddit_sse_stream_spark.streaming import stateful as st
-
-    spec = next(s for s in _kernel_specs() if s.name == "host_admission")
-    input_df = spec.build(spark, sf_dir)
-    got = _replay_kernel(spark, tmp_path, spec, input_df, [])
-    c = _url_canon_frame(spark, sf_dir).select("id", "host")
-    w = Window.partitionBy("host").orderBy("id")
-    want = {
-        (r["host"], r["id"])
-        for r in c.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= st.HOST_CAP)
-        .collect()
-    }
-    assert got == want and want
-
-
-@pytest.mark.parametrize("spec", _kernel_specs(), ids=lambda s: s.name)
-def test_stateful_kernel_adversarial_split_parity(spark, sf_dir, tmp_path, spec):
-    """EVERY keyed-state kernel, one contract: replaying the same input
-    as a single micro-batch and as seeded-random contiguous arrival
-    slices (empty and singleton batches included) must canonicalize
-    identically.  A fifteenth kernel joins the gate by adding its
-    _KernelSpec — no bespoke harness."""
-    import random
-
-    input_df = spec.build(spark, sf_dir).cache()
-    try:
-        arr_vals = sorted(
-            r[0] for r in input_df.select(spec.arrival).distinct().collect()
-        )
-        assert len(arr_vals) > 10, f"{spec.name}: input too small to split"
-        # seeded per kernel; choices() (with replacement) makes duplicate
-        # cut points — i.e. EMPTY micro-batches — likely by construction
-        rng = random.Random(f"adv-split:{spec.name}")
-        cuts = sorted(rng.choices(arr_vals, k=5))
-        ref = _replay_kernel(spark, tmp_path, spec, input_df, [])
-        got = _replay_kernel(spark, tmp_path, spec, input_df, cuts)
-    finally:
-        input_df.unpersist()
-    assert ref, f"{spec.name}: single-batch replay emitted nothing"
-    assert got == ref
-
-
-def _replay_kernel_restart(spark, tmp_path, spec, input_df, mid):
-    """Two-session replay through ONE checkpoint: write the arrival-range
-    first half, run to completion (availableNow), STOP; write the second
-    half, start a NEW query on the same checkpoint and file sink; return
-    canon(all parquet output rows).  The file source's checkpoint must
-    resume past the first half's files and the state store must restore
-    every kernel's state — emitting exactly the single-session answer.
-
-    Timer (ProcessingTimeTimeout) kernels get the same two-session shape
-    with one deviation (VERDICT r13 next #4): timers need not replay
-    deterministically, so session 1 still stops via availableNow —
-    deliberately leaving not-yet-fired timers as LIVE STATE in the
-    checkpoint — and session 2 runs CONTINUOUSLY (empty micro-batches
-    keep firing timers) while we poll the file sink until
-    ``spec.poll_done`` says every key has flushed.  The invariants that
-    ARE deterministic and asserted: state survives the restart, no
-    closed session is emitted twice, and every session eventually emits
-    exactly once (poll_done sums emissions against the input count, so a
-    double emission overshoots and can never satisfy it; the caller's
-    canon-equality check then pins the values)."""
-    import time as _t
-
-    _ADV_QNO[0] += 1
-    qname = f"rst_{spec.name}_{_ADV_QNO[0]}"
-    src = tmp_path / f"{qname}_src"
-    out = tmp_path / f"{qname}_out"
-    ckpt = tmp_path / f"{qname}_ckpt"
-    arr = F.col(spec.arrival)
-
-    def read_out():
-        try:
-            return spark.read.parquet(str(out)).collect()
-        except Exception:
-            # session 1 of a timer kernel can commit zero part files
-            # (no timer fired before availableNow drained the data)
-            return []
-
-    def run_once(final=False):
-        stream = (
-            spark.readStream.schema(input_df.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        writer = spec.kernel(stream).writeStream.option(
-            "checkpointLocation", str(ckpt)
-        )
-        if spec.mode == "append":
-            writer = writer.format("parquet").option("path", str(out))
-        else:
-            # file sinks only take append mode; update-mode kernels
-            # persist via foreachBatch (every snapshot appended — the
-            # latest-per-key canon recovers the final value exactly as
-            # it does for the memory sink)
-            writer = writer.foreachBatch(
-                lambda df, _id: df.write.mode("append").parquet(str(out))
-            )
-        writer = writer.outputMode(spec.mode)
-        if spec.poll_done is None or not final:
-            q = writer.trigger(availableNow=True).start()
-            q.awaitTermination(300)
-            return
-        # timer kernel, post-restart session: forced flush — run with
-        # the default ASAP trigger so the engine schedules timer-firing
-        # empty batches, and poll the sink until every session emitted
-        n_input = input_df.count()
-        q = writer.start()
-        try:
-            deadline = _t.monotonic() + 240
-            while _t.monotonic() < deadline:
-                if spec.poll_done(spec.canon(read_out()), n_input):
-                    return
-                _t.sleep(0.5)
-        finally:
-            q.stop()
-
-    input_df.filter(arr < mid).coalesce(1).write.mode("append").parquet(
-        str(src)
-    )
-    run_once()
-    input_df.filter(arr >= mid).coalesce(1).write.mode("append").parquet(
-        str(src)
-    )
-    run_once(final=True)
-    return spec.canon(read_out())
-
-
-@pytest.mark.parametrize("spec", _kernel_specs(), ids=lambda s: s.name)
-def test_stateful_kernel_restart_exactly_once(spark, sf_dir, tmp_path, spec):
-    """Checkpoint-restart contract for ALL 17 kernels (16 data-driven +
-    the processing-time session finalizer), shared: stop after the
-    first half of the stream, restart a NEW query from the same
-    checkpoint with the rest, and the total output must canonicalize
-    exactly to the single-session single-batch answer — state restored,
-    no replayed emissions, no gaps.  Append-mode kernels write the file
-    sink directly; update-mode kernels persist snapshots via
-    foreachBatch and their latest-per-key canon recovers the final
-    value.  The timer kernel does not replay its timers
-    deterministically, so its second session runs continuously and is
-    polled until every session flushed (see _replay_kernel_restart) —
-    the asserted invariants are restart-survival and exactly-once, not
-    timer timing.  Like the adversarial-split gate, a new kernel
-    inherits this by existing in the spec list."""
-    input_df = spec.build(spark, sf_dir).cache()
-    try:
-        arr_vals = sorted(
-            r[0] for r in input_df.select(spec.arrival).distinct().collect()
-        )
-        mid = arr_vals[len(arr_vals) // 2]
-        ref = _replay_kernel(spark, tmp_path, spec, input_df, [])
-        got = _replay_kernel_restart(spark, tmp_path, spec, input_df, mid)
-    finally:
-        input_df.unpersist()
-    assert ref, f"{spec.name}: single-batch replay emitted nothing"
-    assert got == ref
-
-
 def test_streaming_alignment_gate_matches_batch(spark, sf_dir, tmp_path):
     """The image-text alignment gate on a STREAM equals the batch
     catalog row exactly — same chain, not a twin implementation: the
     stream runs multimodal.alignment_media_frame + the same scoring
     SQL (catalog._align_score_gate), so batch and streaming curation
-    CANNOT drift (the host-admission pattern, r14).  Stateless map-only
+    CANNOT drift.  Stateless map-only
     chain -> append mode needs no watermark, and per-row results are
     invariant to micro-batch boundaries by construction (pinned here by
     a 3-batch split)."""

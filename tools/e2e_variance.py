@@ -34,9 +34,9 @@ the host noise that moves BOTH arms of a pair together divides out.
 
 Arm A defaults to the current ``bench.streaming_e2e`` (override with
 ``--a`` to pair any two builds of the same surface — e.g. a kernel's
-old vs new sort, r13's tombstone demonstration).  Arm B defaults to
-a known-direction demonstration variant (the same server with 4x smaller
-micro-batches — more per-batch scheduling overhead, predictably slower),
+old vs new sort).  Arm B defaults to a known-direction demonstration
+variant (the same server with 4x smaller micro-batches — more per-batch
+scheduling overhead, predictably slower),
 and ``--b mymod:fn`` swaps in any callable ``fn(spark, sf_dir) -> dict``
 with a ``streaming_e2e_events_per_sec`` key — e.g. the OLD server build
 checked out under a different module name, which is how a future
