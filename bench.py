@@ -14,7 +14,6 @@ collect — the plan runs distributed end to end, like it would on a cluster).
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import re
@@ -53,7 +52,7 @@ HEADLINE = (
     "pack_sequences_by_source",
     # round-5 additions: the heaviest new TPC-H shape (two lineitem-wide
     # aggregates + a decorrelated min join-back) and the new map-only
-    # embedding sketch — no prev-round rows, so vs_prev skips them
+    # embedding sketch
     "tpch_q2_min_cost_supplier",
     "embed_random_projection",
     # mid-round-5 additions: ranked retrieval + iterative graph
@@ -95,26 +94,25 @@ HEADLINE = (
     # round-10 additions: the Heaps-curve corpus analytic (word ->
     # min-first-doc reduction, all checkpoints on one exchange) and the
     # IVF index-maintenance path (train-once + map-only assignment of
-    # the arriving half) — no prev-round rows, so vs_prev skips them
+    # the arriving half)
     "text_vocab_growth",
     "knn_ivf_incremental_assign",
     # round-11 additions: DoReMi-style domain reweighting (one bigram
     # exchange + per-domain agg + broadcast total) and the learned
     # quality linear probe (3 fixed-point GD rounds, 4-double driver
-    # state) — no prev-round rows, so vs_prev skips them
+    # state)
     "corpus_doremi_reweight",
     "corpus_quality_linear_probe",
     # round-12 additions: the two-pass retrieval expansion (BM25 topk ->
     # broadcast winners -> term pooling) and the pairwise-preference MM
-    # fit (equi self-join + dimension-frame rounds) — no prev-round
-    # rows, so vs_prev skips them
+    # fit (equi self-join + dimension-frame rounds)
     "search_rm3_expansion",
     "pref_bradley_terry_strength",
     # late-r12 note: the IVF nprobe tuning curve and the binned
     # interval-overlap join stay OUT of the headline deliberately — the
     # lean final line sits at 1766/1800 bytes and either name pushes it
     # over FINAL_LINE_BUDGET, where the last-resort shed would truncate
-    # query names out of next round's vs_prev audit.  Both rows are in
+    # query names off the final line.  Both rows are in
     # the scale-sweep roster, which is the scaling evidence that
     # matters for them (their absolute cost is ANN-family/join-family
     # shaped, already priced by knn_ivfpq_* and join_* rows here).
@@ -140,27 +138,19 @@ HIGH_VARIANCE = frozenset({
     "knn_ivfpq_residual_topk",
     "dedup_source_minhash_sampled",
     # VERDICT r11 next #3/#4: the widest same-code spread of the r11
-    # artifact (2.5x over 7 runs) and the 3-run sub-second row that hit
-    # the 1.52x vs_prev edge
+    # artifact (2.5x over 7 runs) and a 3-run sub-second row that read
+    # 1.52x its prior-round median
     "knn_ivf_incremental_assign",
     "p2_json_key_subset",
 })
 BASE_RUNS = 5  # VERDICT r12 next #7: no artifact row below 5 runs
 MAX_RUNS = 7
 #: VERDICT r12 next #7: sub-second rows pay the largest RELATIVE noise
-#: (12/45 rows over 1.5x spread in r12, mostly <0.5 s rows) — rows whose
-#: PRIOR-round median sat under FAST_ROW_SEC run as ONE contiguous
-#: JVM-warm group at the END of the loop (no heavy row's GC debris or
-#: page-cache churn lands between their samples) with MAX_RUNS each; a
-#: row with no prior median self-identifies by its first sample.
+#: (12/45 rows over 1.5x spread in r12, mostly <0.5 s rows) — a row whose
+#: first sample is under FAST_ROW_SEC is a fast row: it takes MAX_RUNS
+#: samples and records a trimmed mean (:func:`row_statistic`).
 FAST_ROW_SEC = 0.5
 SPREAD_ESCALATE = 1.5
-#: VERDICT r10 next #8: a 3-run row whose median is already >1.25x its
-#: prior-round median escalates to MAX_RUNS the SAME round — r10's
-#: vs_prev tail (pack_sequences_by_source at 1.32) was a 3-run sample
-#: below the 1.5x spread trigger, exactly the shape that should buy
-#: itself more data before landing in the artifact.
-VS_PREV_ESCALATE = 1.25
 
 
 #: fewest samples a fast row trims; below it the row records its median
@@ -173,8 +163,8 @@ def row_statistic(samples_sorted: list[float], trim: bool) -> float:
     this shared sandbox is ONE-SIDED (steal only adds time), so a single
     burst during the 7-sample window inflates the median and flags
     phantom regressions (11 in r15, every one reproduced at r14 speed by
-    the driver's own 8-core leg).  Fast rows (``trim=True``: prior-round
-    median under FAST_ROW_SEC, >= 6 samples) therefore record a
+    an 8-core re-run).  Fast rows (``trim=True``: first
+    sample under FAST_ROW_SEC, >= 6 samples) therefore record a
     one-sided trimmed mean — drop the 2 LARGEST samples, mean the rest —
     instead of the raw median; min/max stay on the spread stdout line
     and every sample stays in BENCH_DETAIL.json, so nothing is hidden
@@ -189,20 +179,10 @@ def row_statistic(samples_sorted: list[float], trim: bool) -> float:
     return round(samples_sorted[len(samples_sorted) // 2], 3)
 
 
-def should_escalate(samples: list[float], prev_median: float | None) -> bool:
+def should_escalate(samples: list[float]) -> bool:
     """True when a BASE_RUNS sample has earned MAX_RUNS: its own min-max
-    spread crossed SPREAD_ESCALATE (noise this round), or its median sits
-    more than VS_PREV_ESCALATE above the prior round's median (a would-be
-    vs_prev tail entry — escalate now, not next round).  The vs_prev gate
-    uses the RAW ratio: the machine factor isn't known until every row has
-    run, and over-escalating on a slow host only costs extra samples."""
-    if max(samples) / max(min(samples), 1e-9) > SPREAD_ESCALATE:
-        return True
-    if prev_median:
-        med = sorted(samples)[len(samples) // 2]
-        if med / prev_median > VS_PREV_ESCALATE:
-            return True
-    return False
+    spread crossed SPREAD_ESCALATE (noise this run)."""
+    return max(samples) / max(min(samples), 1e-9) > SPREAD_ESCALATE
 
 
 class PeakRssSampler:
@@ -320,127 +300,6 @@ class PeakRssSampler:
     def stop(self) -> None:
         self._stop.set()
         self._thread.join(timeout=5)
-
-
-def recover_from_tail(tail: str) -> dict:
-    """Best-effort recovery of a bench summary from a driver artifact whose
-    ``parsed`` is null (the driver keeps only the last ~2 KiB of stdout; a
-    final line longer than that window arrives HEAD-TRUNCATED and fails
-    json.loads).  This is what broke the vs_prev chain in r07→r08: BENCH_r07
-    had ``parsed: null``, so r08 silently compared against r06 and every
-    r07-added headline row escaped regression audit (VERDICT r08 next #1).
-
-    The fragment still contains the queries dict up to its closing
-    ``},"runs_per_query"`` delimiter plus the scalar summary fields, so:
-
-    - queries: every ``"name":float`` pair in the region before
-      ``"runs_per_query"`` (starting after ``"queries":{`` when the window
-      caught it), dropping a head-truncated first pair (no leading quote);
-    - scalars (sf, calib_jvm_sec, calib_py_sec): regexed from the whole
-      fragment — they ride near the end of the line, inside any window.
-
-    Returns {} when the fragment carries no queries region at all."""
-    last = tail.rstrip().rsplit("\n", 1)[-1]
-    end = last.find('"runs_per_query"')
-    if end < 0:
-        return {}
-    region = last[:end]
-    qstart = region.rfind('"queries":{')
-    if qstart >= 0:
-        region = region[qstart + len('"queries":{') :]
-    elif not region.startswith('"'):
-        # head-truncated mid-pair: drop the partial first entry
-        cut = region.find(',"')
-        region = region[cut + 1 :] if cut >= 0 else ""
-    queries = {
-        m.group(1): float(m.group(2))
-        for m in re.finditer(
-            # full float syntax incl. sign and exponent (ADVICE r09 low:
-            # the exponent-less form captured '5.0' from '5e-05' — query
-            # times are round(x,3) today, but a format change would have
-            # silently corrupted recovered vs_prev ratios)
-            r'"([A-Za-z0-9_]+)":(-?[0-9]+(?:\.[0-9]+)?(?:[eE][+-]?[0-9]+)?)',
-            region,
-        )
-    }
-    if not queries:
-        return {}
-    out: dict = {"queries": queries, "recovered_from_tail": True}
-    for field in ("sf", "calib_jvm_sec", "calib_py_sec"):
-        m = re.search(
-            rf'"{field}":(-?[0-9]+(?:\.[0-9]+)?(?:[eE][+-]?[0-9]+)?)',
-            last[end:],
-        )
-        if m:
-            out[field] = float(m.group(1))
-    return out
-
-
-def _prev_bench() -> tuple[int, dict]:
-    """Latest committed BENCH_r{N}.json as (round, parsed summary dict), or
-    (0, {}) — so each round's output carries per-query vs_prev ratios and a
-    >1.5x regression is visible in the round summary without a manual diff
-    of artifacts (VERDICT r04 next #6).  When the latest artifact's
-    ``parsed`` is null, its summary is recovered from the raw ``tail``
-    field (:func:`recover_from_tail`) so one malformed round can never
-    break the N vs N-1 comparison chain again (VERDICT r08 next #1)."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    best: tuple[int, dict] = (0, {})
-    for f in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", f)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        if rnd <= best[0]:
-            continue
-        try:
-            data = json.load(open(f))
-            # the external driver wraps the bench JSON line under "parsed"
-            if isinstance(data.get("parsed"), dict):
-                data = data["parsed"]
-            elif isinstance(data.get("tail"), str):
-                data = recover_from_tail(data["tail"])
-            queries = data.get("queries", {})
-        except (OSError, ValueError):
-            continue
-        if isinstance(queries, dict) and queries:
-            best = (rnd, data)
-    return best
-
-
-def calibration(spark) -> dict[str, float]:
-    """Fixed synthetic workloads, independent of every catalog query, timed
-    each round (VERDICT r05 next #6): the vs-prev machine factor is derived
-    from the query set ITSELF, so a uniform genuine regression (a session
-    conf mistake, a slow default flipped) would be laundered as
-    "environment".  These two probes cannot regress from catalog code:
-
-    - ``calib_jvm_sec``: spark.range -> whole-stage-codegen sum (pure JVM
-      throughput: codegen, task scheduling, 32-thread scaling)
-    - ``calib_py_sec``: a single-threaded pure-Python arithmetic loop
-      (host CPU + interpreter speed)
-
-    Medians of 3; their vs-prev ratio is reported as calibration_factor
-    next to machine_factor_vs_prev, and machine_factor_disagrees flags a
-    >1.3x divergence — the signature of a real uniform regression."""
-    jvm = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        spark.range(0, 200_000_000, 1, 32).selectExpr(
-            "sum(id * 2 + 1) AS s"
-        ).write.format("noop").mode("overwrite").save()
-        jvm.append(time.perf_counter() - t0)
-    py = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        acc = 0
-        for i in range(3_000_000):
-            acc += i * i
-        py.append(time.perf_counter() - t0)
-    return {
-        "calib_jvm_sec": round(sorted(jvm)[1], 3),
-        "calib_py_sec": round(sorted(py)[1], 3),
-    }
 
 
 #: Heterogeneous 64-client spec mix (VERDICT r10 next #7): 8 distinct
@@ -662,101 +521,6 @@ def streaming_e2e_samples(spark, sf_dir: str, runs: int = E2E_RUNS) -> dict:
     }
 
 
-def compare_to_prev(
-    times: dict[str, float],
-    sf: float,
-    prev_data: dict,
-    calib: dict[str, float] | None,
-    cur_min: dict[str, float] | None = None,
-) -> dict:
-    """Pure vs-prev comparison — factored out of main() so the flagging
-    logic is unit-testable on synthetic artifacts (VERDICT r06 next #3:
-    the real disagree signal depends on the host, so the LOGIC needs a
-    host-independent test).
-
-    - ``vs_prev``: per-query ratio current/prev, only for queries present
-      in both and only when the prior artifact is at the SAME sf (ratios
-      across scale factors are noise).
-    - ``machine_factor``: median ratio.  The prev round ran on a different
-      machine state, so a UNIFORM shift is an environment factor, not N
-      code regressions (r05 measured untouched queries at a flat 1.7-1.9x
-      with zero code change, SCALING.md); a query is flagged only when it
-      regressed >1.5x RELATIVE to that median.
-    - ``cur_min`` (VERDICT r09 next #1, spread gating): per-query MINIMUM
-      sample this round.  Infrastructure noise on this shared host is
-      one-sided — contention only ADDS time — so the min is the cleanest
-      noise floor available.  When provided, a query is flagged only if
-      even its BEST run is >1.5x (median-relative) slower than the prior
-      median: a lone inflated median whose min is back at the prior level
-      is the signature of scheduling noise, not a code regression (r09's
-      corpus_batch_lineage was flagged at 3.32x on a point whose 10-run
-      median said ~1.5x and whose min was 1.39x).
-    - ``calibration_factor``: geometric mean of the synthetic-probe ratios
-      (catalog-independent, so a genuine uniform regression cannot hide in
-      it); 1.0 when the prior carries no probes.
-    - ``machine_factor_disagrees``: >1.3x divergence between the two
-      factors — only meaningful when BOTH estimators exist; with no
-      same-sf prior machine_factor is the 1.0 default and comparing the
-      probes against it manufactures a divergence with no query data
-      behind it (ADVICE r06 low)."""
-    prev = prev_data.get("queries", {})
-    if prev_data.get("sf") != sf:
-        prev = {}
-    vs_prev = {
-        name: round(times[name] / prev[name], 2)
-        for name in times
-        if prev.get(name)
-    }
-    ratios = sorted(vs_prev.values())
-    machine_factor = ratios[len(ratios) // 2] if ratios else 1.0
-    mf = max(machine_factor, 1e-9)
-    regressions = sorted(
-        n
-        for n, r in vs_prev.items()
-        if r / mf > 1.5
-        and (
-            cur_min is None
-            or n not in cur_min
-            or cur_min[n] / prev[n] / mf > 1.5
-        )
-    )
-    calib_ratios = sorted(
-        calib[k] / prev_data[k]
-        for k in ("calib_jvm_sec", "calib_py_sec")
-        if calib is not None
-        and isinstance(prev_data.get(k), (int, float))
-        and prev_data[k] > 0
-    )
-    calib_factor = 1.0
-    if calib_ratios:
-        prod = 1.0
-        for r in calib_ratios:
-            prod *= r
-        calib_factor = round(prod ** (1.0 / len(calib_ratios)), 3)
-    # Disagree only when the query-derived factor is outside the band of
-    # EVERY probe family.  The families measure different machine axes
-    # (JVM codegen vs Python interpreter) and the JVM probe in particular
-    # is load-volatile across rounds (measured 0.071-0.225 s on
-    # equivalent hosts, r07): one wild probe with the other family
-    # agreeing with the queries is probe noise / a one-axis host shift,
-    # not the uniform-regression signature — that signature is queries
-    # shifting while BOTH catalog-independent probes stay put.
-    disagree = bool(
-        vs_prev
-        and calib_ratios
-        and all(
-            not (1 / 1.3 <= machine_factor / r <= 1.3) for r in calib_ratios
-        )
-    )
-    return {
-        "vs_prev": vs_prev,
-        "machine_factor": machine_factor,
-        "regressions": regressions,
-        "calibration_factor": calib_factor,
-        "machine_factor_disagrees": disagree,
-    }
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
@@ -808,33 +572,16 @@ def main() -> None:
     # SPREAD_ESCALATE self-escalates to MAX_RUNS.  The median of a larger
     # sample is the artifact value; min/max spread and per-row run counts
     # ride a preceding stdout line AND BENCH_DETAIL.json (full samples) so
-    # the regression detector — and the round's reviewer — can gate on
-    # spread instead of trusting a lone point (r09's artifact flagged a
-    # phantom 3.32x regression and hid a real 6.59->4.73 s win).
-    prev_round, prev_data = _prev_bench()
-    prev_q = (
-        prev_data.get("queries", {}) if prev_data.get("sf") == sf else {}
-    )
+    # a reader can gate on spread instead of trusting a lone point (r09's
+    # artifact flagged a phantom 3.32x regression and hid a real
+    # 6.59->4.73 s win).
     times: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
     run_counts: dict[str, int] = {}
     detail: dict[str, dict] = {}
     sampler = PeakRssSampler().start()
-    # Fast-row batching (VERDICT r12 next #7): known-fast rows regroup
-    # at the END of the loop, contiguous, so their 7-run samples share a
-    # maximally-warm JVM and no heavy row runs between them.
-    fast_rows = {
-        n for n in HEADLINE if 0 < prev_q.get(n, 0.0) < FAST_ROW_SEC
-    }
-    row_order = [n for n in HEADLINE if n not in fast_rows] + [
-        n for n in HEADLINE if n in fast_rows
-    ]
-    for name in row_order:
-        target = (
-            MAX_RUNS
-            if (name in HIGH_VARIANCE or name in fast_rows)
-            else BASE_RUNS
-        )
+    for name in HEADLINE:
+        target = MAX_RUNS if name in HIGH_VARIANCE else BASE_RUNS
         samples: list[float] = []
         sampler.reset()
         while len(samples) < target:
@@ -847,25 +594,12 @@ def main() -> None:
             # later ones (SCALING.md r05); between queries no cross-query
             # frame survives, so this is safe by construction
             release_local_checkpoints(spark)
-            if (
-                name not in prev_q
-                and len(samples) == 1
-                and samples[0] < FAST_ROW_SEC
-            ):
-                # sub-second row with no prior median (new this round or
-                # prev ran at another sf): buy it the full sample anyway.
-                # Rows WITH a prior median >= FAST_ROW_SEC that merely got
-                # faster this round stay at BASE_RUNS — they were ordered
-                # among the heavy rows, so escalating them here would both
-                # cost samples and break the contiguous warm-group
-                # rationale (ADVICE r13).
-                target = MAX_RUNS
-            if len(samples) == target == BASE_RUNS and should_escalate(
-                samples, prev_q.get(name)
-            ):
+            if len(samples) == 1 and samples[0] < FAST_ROW_SEC:
+                target = MAX_RUNS  # fast row: buy it the full sample
+            if len(samples) == target == BASE_RUNS and should_escalate(samples):
                 target = MAX_RUNS
         s = sorted(samples)
-        trim = name in fast_rows or (name not in prev_q and min(s) < FAST_ROW_SEC)
+        trim = samples[0] < FAST_ROW_SEC
         times[name] = row_statistic(s, trim)
         spread[name] = [round(s[0], 3), round(s[-1], 3)]
         run_counts[name] = len(s)
@@ -890,23 +624,16 @@ def main() -> None:
     # the full feed (reference_pipeline_example) in times[...] seconds.
     n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     pipeline_sec = times.get("reference_pipeline_example", 0.0) or 1e-9
-    calib = calibration(spark)
-    cmp = compare_to_prev(
-        times,
-        sf,
-        prev_data,
-        calib,
-        cur_min={n: lo for n, (lo, _hi) in spread.items()},
-    )
-    if not cmp["vs_prev"]:
-        prev_round = 0
-    vs_prev = cmp["vs_prev"]
-    machine_factor = cmp["machine_factor"]
-    regressions = cmp["regressions"]
-    calib_factor = cmp["calibration_factor"]
-    disagree = cmp["machine_factor_disagrees"]
+    # the host these rows ran on: N of the session's local[N] master (None
+    # under any other master) and Spark's own default parallelism
+    sc = spark.sparkContext
+    m = re.fullmatch(r"local\[(\d+)\]", sc.master)
+    context = {
+        "cpus": int(m.group(1)) if m else None,
+        "default_parallelism": sc.defaultParallelism,
+    }
     # full-fidelity sidecar: everything the budget-capped final line may
-    # shed (all samples, spreads, streaming detail, vs_prev) lands here
+    # shed (all samples, spreads, streaming detail) lands here
     with open(
         os.path.join(os.path.dirname(os.path.abspath(__file__)),
                      "BENCH_DETAIL.json"), "w"
@@ -915,10 +642,7 @@ def main() -> None:
             {
                 "sf": sf,
                 "rows": detail,
-                "vs_prev": vs_prev,
-                "machine_factor": machine_factor,
-                "regressions": regressions,
-                "calibration": calib,
+                **context,
                 "streaming_e2e": e2e,
                 "streaming_e2e_samples": e2e_samples,
                 "streaming_fanout64": fanout64,
@@ -933,8 +657,7 @@ def main() -> None:
     # samples the odds that ONE run catches a GC/compaction hiccup grow
     # with n, and 12 of the 15 rows the raw gate flagged on the r13
     # sanity run collapsed below 1.45x once the single largest sample
-    # was dropped (full samples stay in BENCH_DETAIL.json; the
-    # regression detector gates on cur_min, unaffected).  Rows at < 6
+    # was dropped (full samples stay in BENCH_DETAIL.json).  Rows at < 6
     # samples keep the raw basis — too few points to call one an
     # outlier.
     def _spread_basis(name: str) -> float:
@@ -951,26 +674,20 @@ def main() -> None:
         sf=sf,
         n_events=n_events,
         pipeline_sec=pipeline_sec,
-        prev_round=prev_round,
-        vs_prev=vs_prev,
-        machine_factor=machine_factor,
-        regressions=regressions,
-        calib=calib,
-        calib_factor=calib_factor,
-        disagree=disagree,
+        context=context,
         e2e=e2e,
         noisy=noisy,
     ):
         print(line)
 
 
-#: Hard budget for the FINAL stdout line. The external driver keeps only the
-#: last ~2 KiB of stdout and parses the final line as the round's bench
-#: record; BENCH_r07 came back "parsed": null because the per-query vs_prev
-#: dict rode on the same line as the (grown) queries dict and pushed the
-#: line head out of the tail window. Bulky dicts now go on their OWN
-#: preceding lines and this guard keeps the final line parseable even if a
-#: future round doubles the headline list.
+#: Hard budget for the FINAL stdout line. A reader that keeps only the
+#: last ~2 KiB of stdout parses the final line as the bench record; the r07
+#: record came back unparseable because a bulky per-query dict rode on the
+#: same line as the (grown) queries dict and pushed the line head out of
+#: the tail window. Bulky dicts now go on their OWN preceding lines and
+#: this guard keeps the final line parseable even if the headline list
+#: doubles.
 FINAL_LINE_BUDGET = 1800
 
 
@@ -983,25 +700,19 @@ def summary_lines(
     sf: float,
     n_events: int,
     pipeline_sec: float,
-    prev_round: int,
-    vs_prev: dict[str, float],
-    machine_factor: float,
-    regressions: list,
-    calib: dict[str, float],
-    calib_factor: float,
-    disagree: bool,
+    context: dict,
     e2e: dict,
     noisy: list,
 ) -> list[str]:
     """Render the bench stdout: bulky context lines first, compact
-    self-contained summary as the FINAL line (the only one the driver is
+    self-contained summary as the FINAL line (the only one a tail reader is
     guaranteed to capture whole).
 
     If even the lean final line would blow FINAL_LINE_BUDGET, the queries
-    dict is split: the slowest entries stay on the final line (they are the
-    regression-relevant ones) and the full dict is repeated on a preceding
-    ``headline_queries_full`` line, with ``queries_truncated`` flagging the
-    cut so a reader knows to look one line up.
+    dict is split: the slowest entries stay on the final line and the full
+    dict is repeated on a preceding ``headline_queries_full`` line, with
+    ``queries_truncated`` flagging the cut so a reader knows to look one
+    line up.
     """
     lines = [
         json.dumps(
@@ -1012,7 +723,7 @@ def summary_lines(
             }
         ),
         json.dumps(
-            {"metric": "bench_context", "vs_prev": vs_prev, **calib},
+            {"metric": "bench_context", **context},
             separators=(",", ":"),
         ),
     ]
@@ -1032,31 +743,15 @@ def summary_lines(
         "sf": sf,
         "feed_events": n_events,
         "pipeline_events_per_sec": round(n_events / pipeline_sec, 1),
-        "vs_prev_round": prev_round,
-        "machine_factor_vs_prev": machine_factor,
-        "regressions_vs_prev": regressions,
-        "calibration_factor": calib_factor,
-        "machine_factor_disagrees": disagree,
         **e2e,
     }
     final = json.dumps(summary, separators=(",", ":"))
     if len(final) > FINAL_LINE_BUDGET:
         # shed the noisy-row NAME list first (its content is recoverable
         # from the spread line + BENCH_DETAIL.json) — losing it costs a
-        # convenience field; truncating the queries dict would cost next
-        # round's vs_prev coverage for the dropped rows
+        # convenience field; truncating the queries dict would cost the
+        # dropped rows' medians
         summary["spread_over_1p5x"] = len(noisy)
-        final = json.dumps(summary, separators=(",", ":"))
-    if len(final) > FINAL_LINE_BUDGET:
-        # same shed for the regression NAME list (VERDICT r15 what's-wrong
-        # #1: six regression names rode the r15 final line, blew the
-        # budget, and the query-dict truncation below cut the 6 fastest
-        # medians out of the driver's vs_prev audit — exactly the
-        # audit-escape this shed order exists to prevent).  The names are
-        # fully derivable from the preceding bench_context vs_prev line
-        # plus BENCH_DETAIL.json's "regressions" field; the count keeps
-        # the headline signal.
-        summary["regressions_vs_prev"] = len(regressions)
         final = json.dumps(summary, separators=(",", ":"))
     for derivable in (
         # next shed tiers, cheapest information loss first: streaming
@@ -1079,22 +774,16 @@ def summary_lines(
     if len(final) > FINAL_LINE_BUDGET:
         # re-round query medians to 2 decimals before dropping any NAME:
         # a complete dict at 10 ms resolution beats a 3-decimal dict
-        # missing rows (the dropped rows would silently escape next
-        # round's vs_prev audit; 10 ms is well inside the 1.25x/1.5x
-        # detector's noise floor, and 3-decimal medians stay on the
-        # spread line + BENCH_DETAIL.json)
+        # missing rows (3-decimal medians stay on the spread line +
+        # BENCH_DETAIL.json)
         summary["queries"] = {k: round(v, 2) for k, v in times.items()}
         final = json.dumps(summary, separators=(",", ":"))
     for derivable in (
         # final tier before ANY query name is dropped (VERDICT r15
         # what's-wrong #1): every one of these scalars is duplicated in
-        # BENCH_DETAIL.json or derivable from the bench_context line
-        # (calib rides there verbatim), while a dropped query median
-        # silently escapes next round's vs_prev audit — the per-query
-        # dict outranks them all.
+        # BENCH_DETAIL.json, while a dropped query median is gone from
+        # the final line — the per-query dict outranks them all.
         "spread_over_1p5x",
-        "machine_factor_disagrees",
-        "calibration_factor",
         "feed_events",
         "streaming_e2e_rate_min_max",
     ):

@@ -777,9 +777,7 @@ def connected_components(
     round a node takes the min of its label and its neighbors' labels;
     fixpoint = every node holds the min id of its component. Rounds needed
     = graph diameter, and near-dup graphs are short chains/cliques, so this
-    converges in a handful of rounds. (For adversarial long-chain graphs
-    the production upgrade is large-star/small-star [Kiveris et al. 2014],
-    which squares distances per round — same join primitive, fewer rounds.)
+    converges in a handful of rounds.
 
     Each round is one shuffle join (labels x edges, keyed on node id) plus
     a groupBy-min; ``localCheckpoint`` truncates the lineage so the plan
@@ -858,124 +856,15 @@ def connected_components(
         prev_sum = label_sum
     else:
         # Silently returning non-fixpoint labels would mis-cluster; a
-        # long-chain graph that exhausts max_iter needs more rounds or the
-        # large-star/small-star variant (diameter -> log rounds).
+        # long-chain graph that exhausts max_iter needs more rounds.
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds; "
-            "raise max_iter (diameter-bound) or switch to the "
-            "large-star/small-star formulation for long-chain graphs"
+            "raise max_iter (rounds = graph diameter)"
         )
     # the returned frame reads only the FINAL labels checkpoint; the edge
     # frame's blocks (the largest intermediate) are dead weight from here
     _unpersist_checkpoint(sym)
     return labels.select(F.col("id"), F.col("comp").alias("component"))
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star rounds
-    [Kiveris et al., "Connected Components in MapReduce and Beyond", 2014]
-    — the adversarial-graph upgrade over min-label propagation
-    (:func:`connected_components`): each round contracts path lengths
-    multiplicatively, so convergence is O(log d) rounds instead of O(d)
-    for diameter d.  A 10^6-node chain needs ~20 rounds here vs 10^6
-    label-propagation rounds.
-
-    Per round, both operators are one groupBy-min + one re-emit keyed on
-    node id — the same narrow (node, node) shuffle shape as label
-    propagation, nothing wider:
-
-    - large-star(u): connect every neighbor v > u to m = min(N(u) + {u})
-    - small-star(u): connect every neighbor v <= u to m
-
-    Convergence = the edge multiset stops changing (checked with a
-    count+checksum aggregate — one driver scalar per round, no collect).
-    Output matches :func:`connected_components`: (id, component) with
-    component = min id reachable.
-    """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a") != F.col("b")
-    )
-    # canonical small->large direction, deduped
-    # LAZY (r10 sync-fold): all_nodes' eager checkpoint materializes the
-    # seed frame; each round's _signature probe materializes that round's
-    # frame — one action per round instead of two
-    cur = (
-        e.select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    all_nodes = (
-        cur.select(F.col("u").alias("id"))
-        .unionByName(cur.select(F.col("v").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def _signature(df: DataFrame) -> tuple:
-        # decimal(38,0) sum: 64-bit hash values would overflow a long
-        # accumulator under ANSI mode on graphs with many edges
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    def _star(df: DataFrame, large: bool) -> DataFrame:
-        # neighborhoods of u in BOTH directions, plus u itself
-        nbrs = df.select(F.col("u").alias("ctr"), F.col("v").alias("nbr")).unionByName(
-            df.select(F.col("v").alias("ctr"), F.col("u").alias("nbr"))
-        )
-        withself = nbrs.unionByName(
-            nbrs.select("ctr").distinct().select(
-                F.col("ctr"), F.col("ctr").alias("nbr")
-            )
-        )
-        mins = withself.groupBy("ctr").agg(F.min("nbr").alias("m"))
-        # join the self-including set: small-star must also emit (u, m) for
-        # the center itself, else the center disconnects from its min
-        # neighbor when every edge incident to it is redirected
-        joined = withself.join(mins, "ctr")
-        if large:
-            keep = joined.filter(F.col("nbr") > F.col("ctr"))
-        else:
-            keep = joined.filter(F.col("nbr") <= F.col("ctr"))
-        out = keep.select(
-            F.least("nbr", "m").alias("u"), F.greatest("nbr", "m").alias("v")
-        ).filter(F.col("u") != F.col("v"))
-        return out.distinct()
-
-    sig = _signature(cur)
-    for _ in range(max_iter):
-        prev = cur
-        cur = _star(_star(cur, large=True), large=False).localCheckpoint(
-            eager=False
-        )
-        # materialize (the signature probe) BEFORE dropping the previous
-        # round's blocks — the lazy frame's lineage reads them
-        new_sig = _signature(cur)
-        _unpersist_checkpoint(prev)  # superseded round's edge blocks
-        if new_sig == sig:
-            break
-        sig = new_sig
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
-            "rounds (expected O(log diameter)); the input graph is "
-            "pathological or max_iter is too small"
-        )
-    # fixpoint: every edge connects a node to its component minimum
-    labels = cur.groupBy(F.col("v").alias("id")).agg(F.min("u").alias("component"))
-    return all_nodes.join(labels, "id", "left").select(
-        "id", F.coalesce("component", F.col("id")).alias("component")
-    )
 
 
 def pagerank_fixedpoint(

@@ -30,14 +30,6 @@ def token_count(text: Column | str) -> Column:
     return F.size(F.split(col, r"\s+"))
 
 
-def bpe_ish_token_count(text: Column | str) -> Column:
-    """BPE-ish subword proxy: count alternating letter/digit/punct runs —
-    a cheap deterministic stand-in for a real tokenizer's token count."""
-    col = F.col(text) if isinstance(text, str) else text
-    # one token per run of letters, digits, or single punctuation char
-    return F.size(F.split(F.trim(col), r"(?<=[a-zA-Z0-9])(?=[^a-zA-Z0-9])|(?<=[^a-zA-Z0-9\s])(?=[a-zA-Z0-9])|\s+"))
-
-
 def marker_hits(text: Column | str, marker: str) -> Column:
     """Occurrences of ' marker ' (space-delimited) — oracle-parity trick:
     (len(x) - len(replace(x, m, ''))) / len(m), identical in any SQL engine."""
@@ -1018,13 +1010,12 @@ def bpe_train_merges(
     """REAL byte-pair-encoding merge training over the corpus — the
     iterative tokenizer-learning loop itself (Sennrich et al. 2016), not
     the one-round pair census (:func:`bpe_pair_merge_counts` keeps that
-    as the census entry) and not the regex proxy
-    (:func:`bpe_ish_token_count`).  Each round: count adjacent symbol
-    pairs over the weighted word vocabulary, pick the most frequent pair
-    (ties -> lexicographically smallest — deterministic), fuse it
-    corpus-wide, repeat.  Output is the learned merge table
-    (round, pair_left, pair_right, merged, cnt) — the artifact a real
-    tokenizer ships.
+    as the census entry) and not a regex run-count proxy.  Each round:
+    count adjacent symbol pairs over the weighted word vocabulary, pick
+    the most frequent pair (ties -> lexicographically smallest —
+    deterministic), fuse it corpus-wide, repeat.  Output is the learned
+    merge table (round, pair_left, pair_right, merged, cnt) — the
+    artifact a real tokenizer ships.
 
     Representation that makes the merge a pure string op in ANY engine:
     each word's symbol sequence is ``<s1><s2>...<sn>`` (words restricted
@@ -1106,7 +1097,7 @@ def bpe_token_counts(
     """Tokenize the corpus with the merges :func:`bpe_train_merges` just
     learned and report per-document REAL subword token counts — the
     token-accounting pass a training-mix scheduler actually needs (the
-    regex proxy :func:`bpe_ish_token_count` stays as the zero-training
+    whitespace :func:`token_count` stays as the zero-training
     fallback).  Application is single-pass in rank order (each learned
     merge applied once, corpus-wide, in the order it was learned — the
     standard fast approximation; the encoding makes each application one

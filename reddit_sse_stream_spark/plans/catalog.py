@@ -4,10 +4,10 @@ training-data-pipeline extensions) expressed twice —
 - ``spark``:  idiomatic PySpark over ``{sf_dir}/*.parquet``
 - ``oracle``: equivalent ANSI SQL for DuckDB (same tables as views)
 
-The driver hash-compares both at sf0.01 (CORRECTNESS_r{N}.json). Column
+``tools/verify_local.py`` compares both on the same sf dir. Column
 names/types are aligned on both sides (aggregates aliased identically,
 booleans cast to INTEGER, doubles rounded) because the compare sorts
-columns by name and hashes values.
+columns by name and compares values order-insensitively.
 
 Section map (SURVEY.md §2 coverage):
   feed_*  / filter_* / project_* / merge_* / agg_feed_*  — the reference's
@@ -20,7 +20,7 @@ Section map (SURVEY.md §2 coverage):
 
 Queries marked ``oracle=None`` are genuinely non-SQL-expressible in DuckDB
 (xxhash64-based sketches, LSH approximations, Arrow mapInPandas plumbing);
-the driver records a weaker rows-only check for those.
+``tools/verify_local.py`` makes a weaker rows-only check for those.
 """
 
 from __future__ import annotations
@@ -8537,7 +8537,7 @@ def decontam_split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Composition is by reuse, not re-derivation: the split labels come
     from the REGISTERED ``corpus_split_leakage_safe`` query (same plan:
-    md5-gram jaccard pairs -> large/small-star CC -> salted split on the
+    md5-gram jaccard pairs -> min-label CC -> salted split on the
     cluster rep) and the gram side is the same ``word_ngram_hashes``
     xxhash64 frame the multi-suite report joins (string-keyed oracle
     value-checks the hash contract, as there).
@@ -15389,397 +15389,6 @@ def layout_zorder_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The registry — and therefore the CLI ``list`` order and any external
-# checker that samples the registry in order — is deliberately sorted by
-# EXTERNAL-VERIFICATION VALUE, using a generic rule that encodes no
-# knowledge of any particular checker's sampling window:
-#
-#   1. oracled queries with no externally recorded green result yet, in
-#      original registration order — these benefit most from an external
-#      check (and this automatically front-loads queries whose oracles
-#      were just fixed, so the fix gets proven);
-#   2. oracled queries already proven green, LEAST-RECENTLY-PROVEN FIRST
-#      (``_PRIOR_GREEN_ROUND``: latest proving round per query across the
-#      committed CORRECTNESS_r*.json artifacts — regenerate with
-#      ``python tools/regen_prior_green.py``).  The external driver
-#      regenerates testdata between rounds, so an old green row AGES: a
-#      fixed sampling window keeps re-proving the stalest rows against
-#      fresh data instead of re-confirming last round's (VERDICT r04
-#      next #5);
-#   3. queries without an oracle last — there is nothing to hash-check.
-#
-# Rationale (also in README.md): rotating not-yet-verified (then
-# longest-unverified) queries to the front grows — then continually
-# refreshes — externally-verified coverage, and every query cycles
-# through eventually.
-
-_PRIOR_GREEN_ROUND = {
-    "a1_running_totals": 15,
-    "a2_bytes_total": 15,
-    "a3_max_cursor": 15,
-    "agg_countmin_heavy_hitters": 15,
-    "agg_countmin_merge_invariant": 15,
-    "agg_heavy_hitters_exact": 9,
-    "agg_kmv_distinct_estimate": 13,
-    "agg_moments_merge_invariant": 13,
-    "agg_skew_salted_two_phase": 15,
-    "agg_sorted_user_list": 14,
-    "agg_two_phase_ntile_twin": 9,
-    "aggx_approx_distinct": 15,
-    "aggx_approx_quantiles": 15,
-    "aggx_corr_covar": 14,
-    "aggx_cube_events": 11,
-    "aggx_distinct_users": 11,
-    "aggx_grouping_sets": 11,
-    "aggx_hll_sketch_union": 14,
-    "aggx_regression_exact": 14,
-    "aggx_rollup_grouping_id": 14,
-    "aggx_rollup_orders": 11,
-    "aggx_siegel_trend_sampled": 14,
-    "aggx_stats_per_type": 11,
-    "aggx_theil_sen_trend": 14,
-    "anomaly_seasonal_adjusted": 13,
-    "anomaly_zscore_hourly": 9,
-    "bpe_pair_merge_counts": 11,
-    "bpe_tokenize_counts": 14,
-    "bpe_train_merges": 14,
-    "corpus_batch_lineage": 14,
-    "corpus_cap_per_source": 10,
-    "corpus_curriculum_order": 14,
-    "corpus_diverse_sample": 10,
-    "corpus_doremi_reweight": 11,
-    "corpus_dsir_weights": 14,
-    "corpus_filter_gate": 10,
-    "corpus_greedy_coverage_pick": 11,
-    "corpus_ipf_raking_mix": 14,
-    "corpus_lang_gini": 12,
-    "corpus_loss_proxy_calibration": 12,
-    "corpus_mix_schedule": 10,
-    "corpus_mixture_grid_search": 13,
-    "corpus_probe_calibration_bins": 13,
-    "corpus_quality_linear_probe": 12,
-    "corpus_quality_quantile_gate": 11,
-    "corpus_shard_assignments": 10,
-    "corpus_shuffle_locality_audit": 12,
-    "corpus_snapshot_diff": 11,
-    "corpus_snapshot_merge": 12,
-    "corpus_split_leakage_safe": 10,
-    "corpus_token_budget_waterfill": 12,
-    "corpus_topic_tagging": 12,
-    "corpus_train_val_split": 10,
-    "corpus_two_phase_rank_twin": 9,
-    "decontam_drop_contaminated": 10,
-    "decontam_embedding_cosine": 10,
-    "decontam_multi_suite_report": 11,
-    "decontam_ngram_overlap": 9,
-    "decontam_split_leakage_report": 13,
-    "dedup_bloom_fp_audit": 14,
-    "dedup_cc_clusters": 10,
-    "dedup_cluster_best_quality": 10,
-    "dedup_containment_grams": 11,
-    "dedup_cross_source_matrix": 11,
-    "dedup_embedding_cosine": 12,
-    "dedup_embedding_cosine_lsh": 15,
-    "dedup_exact_groups": 12,
-    "dedup_exact_keep_first": 12,
-    "dedup_incremental_bloom": 10,
-    "dedup_incremental_minhash": 10,
-    "dedup_incremental_new_only": 10,
-    "dedup_lsh_recall_audit": 12,
-    "dedup_method_agreement": 11,
-    "dedup_minhash_md5": 10,
-    "dedup_minhash_twin_containment": 13,
-    "dedup_ngram_jaccard": 15,
-    "dedup_priority_source_union": 14,
-    "dedup_rate_by_ingestion_batch": 13,
-    "dedup_semdedup_cells": 10,
-    "dedup_simhash_exact_dup_invariant": 13,
-    "dedup_simhash_hamming_pairs": 10,
-    "dedup_simhash_md5": 10,
-    "dedup_sketch_merge_invariant": 15,
-    "dedup_source_minhash_matrix": 15,
-    "dedup_source_minhash_sampled": 9,
-    "dedup_substring_containment": 10,
-    "dedup_tfidf_cosine": 11,
-    "dedup_threshold_curve": 11,
-    "dq_benford_first_digit": 14,
-    "dq_bootstrap_ci_mean": 13,
-    "dq_erasure_propagation": 13,
-    "dq_expectation_report": 9,
-    "dq_gate_agreement_kappa": 12,
-    "dq_join_cardinality_estimate": 13,
-    "dq_join_skew_profile": 13,
-    "dq_k_anonymity": 13,
-    "dq_l_diversity": 13,
-    "dq_length_drift_ks": 14,
-    "dq_mad_outlier_gate": 13,
-    "dq_signal_correlation_matrix": 13,
-    "dq_t_closeness": 13,
-    "embed_drift_by_lang": 12,
-    "embed_hard_negatives": 15,
-    "embed_kmeans_fixedpoint": 14,
-    "embed_l2_norm": 12,
-    "embed_matryoshka_retention": 12,
-    "embed_norm_stats_by_lang": 9,
-    "embed_pca_power_iteration": 10,
-    "embed_pq_codes": 10,
-    "embed_quantize_int8": 12,
-    "embed_random_projection": 10,
-    "embed_standardize": 12,
-    "f1_type_dispatch": 14,
-    "f2_author_whitelist": 15,
-    "f3_subreddit_whitelist": 15,
-    "f4_domain_whitelist": 15,
-    "f5_whitelist_combiner": 15,
-    "f6_f7_flag_filters": 15,
-    "f8_null_elimination": 15,
-    "f_combined_full": 15,
-    "feat_target_encode_loo": 14,
-    "feed_domain_suffix_blocklist": 13,
-    "feed_url_canonical_host": 15,
-    "feed_url_host_cap": 15,
-    "fn_array_ops": 12,
-    "fn_bitwise_ops": 15,
-    "fn_datetime_buckets": 13,
-    "fn_fuzzy_match_levenshtein": 15,
-    "fn_histogram_bins": 14,
-    "fn_histogram_equidepth": 10,
-    "fn_histogram_equidepth_approx_contract": 12,
-    "fn_map_ops": 12,
-    "fn_math_scalars": 12,
-    "fn_null_ops": 13,
-    "fn_percentiles": 12,
-    "fn_percentiles_two_phase": 12,
-    "fn_regexp_ops": 13,
-    "fn_sequence_range": 10,
-    "fn_string_ops": 12,
-    "funnel_attribution_last_touch": 11,
-    "funnel_time_to_convert": 11,
-    "funnel_time_to_convert_approx_contract": 13,
-    "funnel_view_click_purchase": 9,
-    "graph_pagerank_transitions": 11,
-    "graph_triangle_count": 9,
-    "join_anti_customers_without_orders": 11,
-    "join_asof_last_click": 11,
-    "join_blocked_entity_resolution": 13,
-    "join_broadcast_star_counts": 11,
-    "join_cross_region_nation": 14,
-    "join_er_multipass_blocking": 13,
-    "join_full_outer_click_purchase": 13,
-    "join_interval_binned_overlap": 13,
-    "join_lateral_topk_per_nation": 10,
-    "join_range_clicks_before_purchase": 11,
-    "join_right_outer_orders": 14,
-    "join_semi_customers_with_orders": 11,
-    "join_skew_salted": 15,
-    "knn_batch_topk": 11,
-    "knn_bruteforce_cosine": 12,
-    "knn_ivf_fixedpoint_cells": 10,
-    "knn_ivf_incremental_assign": 10,
-    "knn_ivf_metric_consistency": 14,
-    "knn_ivf_nprobe_recall_curve": 13,
-    "knn_ivfpq_residual_topk": 10,
-    "knn_ivfpq_topk": 10,
-    "knn_lsh_bucketed": 13,
-    "knn_pq_adc_topk": 10,
-    "knn_pq_recall_audit": 10,
-    "layout_compaction_plan": 13,
-    "layout_hilbert_skipping_audit": 13,
-    "layout_zorder_keys": 10,
-    "layout_zorder_skipping_audit": 13,
-    "limit_topk_events_by_value": 11,
-    "llm_corpus_prep_pipeline": 14,
-    "llm_dataset_card": 12,
-    "m1_m2_interleave_sort": 15,
-    "media_audio_fingerprint": 11,
-    "media_audio_silence_segments": 12,
-    "media_features": 11,
-    "media_features_meta": 11,
-    "media_frame_sample": 13,
-    "media_image_ahash": 12,
-    "media_text_alignment_by_source": 15,
-    "media_text_alignment_gate": 15,
-    "media_text_alignment_threshold_curve": 15,
-    "media_video_scene_cuts": 11,
-    "p2_json_key_subset": 15,
-    "pack_chunk_boundary_stats": 12,
-    "pack_context_length_curve": 11,
-    "pack_length_buckets": 10,
-    "pack_length_buckets_approx_contract": 12,
-    "pack_sequences_by_source": 14,
-    "path_top_event_trigrams": 9,
-    "pivot_event_counts": 11,
-    "posexplode_words": 13,
-    "pref_bradley_terry_strength": 12,
-    "psl_rule_classes_registered_domain": 15,
-    "q1_domain_blocks_comments": 15,
-    "quota_admission_per_author": 14,
-    "recursive_cte_ancestors": 10,
-    "reference_pipeline_example": 12,
-    "retention_hourly_cohorts": 9,
-    "s1_range_scan": 14,
-    "s3_backfill_clamp": 14,
-    "s4_start_id_resume": 14,
-    "s8_keepalive_counters": 15,
-    "sample_bottomk_minwise": 13,
-    "sample_neyman_allocation": 13,
-    "sample_stratified_deterministic": 14,
-    "sample_temperature_by_lang": 9,
-    "sample_weighted_priority": 14,
-    "scd2_as_of_lookup": 11,
-    "scd2_point_in_time_join": 12,
-    "scd2_user_state_history": 11,
-    "search_bm25_topk": 14,
-    "search_hybrid_rrf": 14,
-    "search_ndcg_curve": 13,
-    "search_rm3_expansion": 12,
-    "session_window_agg": 13,
-    "sessionize_events": 13,
-    "setop_except_all_values": 13,
-    "setop_except_users": 11,
-    "setop_intersect_all_values": 13,
-    "setop_intersect_users": 11,
-    "stream_lateness_watermark_profile": 11,
-    "subq_correlated_exists": 13,
-    "subq_in_big_spenders": 13,
-    "subq_scalar_above_avg": 13,
-    "text_bigram_lm_bits": 10,
-    "text_char_entropy": 11,
-    "text_chunk_dedup_rewrite": 15,
-    "text_chunk_dup_rate": 10,
-    "text_chunk_windows": 15,
-    "text_clean_normalize": 10,
-    "text_code_detect": 12,
-    "text_duplicate_spans": 15,
-    "text_encoding_quality": 14,
-    "text_fingerprint": 12,
-    "text_gopher_gate": 14,
-    "text_lang_confusion": 12,
-    "text_lang_predict": 14,
-    "text_lang_scores": 12,
-    "text_longest_repeat": 10,
-    "text_mattr_diversity": 10,
-    "text_novelty_decay_curve": 12,
-    "text_novelty_first_owner": 14,
-    "text_pii_redact": 10,
-    "text_pmi_top_pairs": 14,
-    "text_quality_score": 12,
-    "text_rarity_score": 15,
-    "text_repetition_bigrams": 9,
-    "text_repetition_runs": 14,
-    "text_stopword_scrub": 9,
-    "text_suffix_ranks": 10,
-    "text_token_count": 12,
-    "text_tokenizer_fertility_by_lang": 11,
-    "text_vocab_df": 15,
-    "text_vocab_growth": 10,
-    "text_winnow_fingerprints": 11,
-    "text_zipf_fit": 12,
-    "tpch_q10_returned_customers": 14,
-    "tpch_q11_important_parts": 10,
-    "tpch_q12_priority_lines": 14,
-    "tpch_q13_customer_distribution": 12,
-    "tpch_q14_promo_revenue": 14,
-    "tpch_q15_top_supplier": 12,
-    "tpch_q16_supplier_counts": 10,
-    "tpch_q17_small_quantity_revenue": 15,
-    "tpch_q18_large_orders": 14,
-    "tpch_q19_disjunctive_revenue": 14,
-    "tpch_q1_pricing_summary": 15,
-    "tpch_q20_dominant_supplier": 10,
-    "tpch_q21_waiting_supplier": 15,
-    "tpch_q22_idle_customers": 12,
-    "tpch_q2_min_cost_supplier": 10,
-    "tpch_q3_shipping_priority": 15,
-    "tpch_q4_order_priority": 12,
-    "tpch_q5_region_revenue": 15,
-    "tpch_q6_forecast_revenue": 15,
-    "tpch_q7_volume_shipping": 15,
-    "tpch_q8_market_share": 15,
-    "tpch_q9_profit_by_nation_year": 9,
-    "ts_ewma_features": 10,
-    "ts_gapfill_ffill": 12,
-    "ts_ohlc_hourly": 11,
-    "ts_rolling_features": 15,
-    "ts_seasonal_decompose": 13,
-    "udaf_geomean_orders": 12,
-    "udf_grouped_map_zscore": 11,
-    "udf_pandas_scalar_charge": 13,
-    "udtf_word_explode": 12,
-    "unpivot_customer_balances": 13,
-    "variant_json_extract_agg": 10,
-    "vocab_coverage_topk": 11,
-    "vocab_size_coverage_curve": 13,
-    "window_activity_streaks": 12,
-    "window_first_last_nth": 15,
-    "window_lag_delta": 11,
-    "window_range_time_frame": 14,
-    "window_rank_family": 15,
-    "window_running_sum_per_user": 11,
-    "window_sliding_counts": 14,
-    "window_sliding_distinct_kmv_approx_contract": 14,
-    "window_sliding_distinct_users": 11,
-    "window_topk_orders_per_customer": 11,
-    "x1_try_cast_validation": 13,
-    "x4_json_extract": 15,
-}
-
-
-# Queries whose DEFINITION changed after their latest recorded proof: the
-# green row in _PRIOR_GREEN_ROUND validated an OLDER semantics, so it is
-# not evidence about the current code — these outrank everything, even
-# never-proven queries (VERDICT r06 next #1: proof age alone let the r06
-# BM25/regression rewrites ship on r05-era proofs).  Regenerate with
-# ``python tools/regen_prior_green.py`` (it git-diffs each query's
-# defining identifiers against the commit that recorded its last proof);
-# entries are pruned when a newer CORRECTNESS artifact re-proves them.
-_CHANGED_SINCE_PROOF: set = {
-    # (r15's two urlnorm feed rows were re-proven green by the r15 driver
-    # window — CORRECTNESS_r15 hash_match — and are pruned; the map above
-    # now folds r15 in.)
-    #
-    # r16 (VERDICT r15 next #1): the r15 OPTIMIZATION session rewrote the
-    # defining code of the IVF/PQ/minhash/projection/kmeans family
-    # (operators/sqlrender.py constants in ml_lsh/dedup/corpus/similarity),
-    # suffix_ranks (seed 32->64), rm3_expansion_terms (single-pass),
-    # pagerank_fixedpoint (lazy checkpoints) and the BT catalog query
-    # AFTER their last driver proofs; the only family rows the r15 sample
-    # fronted were dedup_embedding_cosine_lsh / embed_hard_negatives /
-    # dedup_source_minhash_matrix (all green).  Every other VALUE-ORACLED
-    # query that transitively reaches a rewritten operator (call-graph
-    # closure, tools/regen_prior_green.py + manual audit) re-proves under
-    # the driver before anything else; prune each on its next green row.
-    # Results are pinned identical by tests (test_sqlrender.py bit-level
-    # A/B, pagerank-vs-numpy, seed-invariance) — this tier is the
-    # independent DuckDB re-proof those tests do not replace.
-    "corpus_diverse_sample",
-    "corpus_quality_linear_probe",
-    "dedup_incremental_minhash",
-    "dedup_lsh_recall_audit",
-    "dedup_minhash_md5",
-    "dedup_minhash_twin_containment",
-    "dedup_semdedup_cells",
-    "embed_kmeans_fixedpoint",
-    "embed_pca_power_iteration",
-    "embed_pq_codes",
-    "embed_random_projection",
-    "graph_pagerank_transitions",
-    "knn_ivf_fixedpoint_cells",
-    "knn_ivf_incremental_assign",
-    "knn_ivf_metric_consistency",
-    "knn_ivf_nprobe_recall_curve",
-    "knn_ivfpq_residual_topk",
-    "knn_ivfpq_topk",
-    "knn_lsh_bucketed",
-    "knn_pq_adc_topk",
-    "knn_pq_recall_audit",
-    "pref_bradley_terry_strength",
-    "search_rm3_expansion",
-    "text_longest_repeat",
-    "text_suffix_ranks",
-}
-
-
 @_register(
     "vocab_size_coverage_curve",
     r"""
@@ -17197,25 +16806,3 @@ def dq_bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ci_hi_x1e4",
         )
     )
-
-
-def _registry_rank(item):
-    name, qd = item
-    if qd.oracle is None:
-        return (3, 0)
-    if name in _CHANGED_SINCE_PROOF:
-        return (0, 0)
-    if name not in _PRIOR_GREEN_ROUND:
-        return (1, 0)
-    return (2, _PRIOR_GREEN_ROUND[name])
-
-
-def _reorder_registry() -> None:
-    unknown = set(_PRIOR_GREEN_ROUND) - set(QUERIES)
-    assert not unknown, f"prior-green names not registered: {unknown}"
-    ranked = sorted(QUERIES.items(), key=_registry_rank)  # stable: keeps
-    QUERIES.clear()                                       # registration order
-    QUERIES.update(ranked)                                # within each rank
-
-
-_reorder_registry()

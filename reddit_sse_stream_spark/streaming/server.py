@@ -33,9 +33,14 @@ from urllib.parse import parse_qs, urlparse
 from reddit_sse_stream_spark.spec import QuerySpec, SpecError
 from reddit_sse_stream_spark.streaming.sink import SSEBroadcaster
 
+# Every frame is a named event (sink.format_frame), and EventSource hands
+# named events only to listeners registered for that name, never onmessage.
 _TEST_PAGE = b"""<html><body><script>
 var evtSource = new EventSource('/');
-evtSource.onmessage = function(e) { console.log(e.data); }
+function log(e) { console.log(e.type, e.data); }
+evtSource.addEventListener('rc', log);
+evtSource.addEventListener('rs', log);
+evtSource.addEventListener('keepalive', log);
 </script>SSE test page</body></html>"""
 
 

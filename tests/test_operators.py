@@ -669,50 +669,6 @@ def test_cosine_pairs_exact_guards_quadratic_blowup(spark, sf_dir):
     assert similarity.cosine_pairs_exact(emb.limit(20), threshold=-1.0).count() > 0
 
 
-def test_connected_components_star_matches_label_propagation(spark):
-    """large-star/small-star must produce the identical clustering as
-    min-label propagation on chains, cliques, islands, and a random graph."""
-    from reddit_sse_stream_spark.operators import dedup as dd
-
-    cases = [
-        [(1, 2), (2, 3), (3, 4), (10, 11), (6, 7)],
-        [(i, i + 1) for i in range(30)],  # long chain: O(log d) rounds
-        [(0, i) for i in range(1, 8)] + [(20, 21), (21, 22), (5, 6)],
-    ]
-    import random
-
-    rng = random.Random(7)
-    cases.append([(rng.randrange(40), rng.randrange(40)) for _ in range(60)])
-    for rows in cases:
-        rows = [(a, b) for a, b in rows if a != b]
-        edges = spark.createDataFrame(rows, "id_a long, id_b long")
-        want = {
-            r["id"]: r["component"]
-            for r in dd.connected_components(edges, max_iter=100).collect()
-        }
-        got = {
-            r["id"]: r["component"]
-            for r in dd.connected_components_star(edges).collect()
-        }
-        assert got == want
-
-
-def test_connected_components_star_converges_fast_on_long_chain(spark):
-    """A 200-node chain (diameter 199) must converge within the star
-    method's O(log d) bound — far below the label-propagation round count."""
-    from reddit_sse_stream_spark.operators import dedup as dd
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(200)], "id_a long, id_b long"
-    )
-    got = {
-        r["id"]: r["component"]
-        for r in dd.connected_components_star(chain, max_iter=12).collect()
-    }
-    assert set(got.values()) == {0}
-    assert len(got) == 201
-
-
 def test_word_ngrams_short_doc_guard(spark):
     """Docs shorter than n words contribute no grams (the sequence() guard:
     Spark's sequence(1, 0) would step DOWN without it)."""

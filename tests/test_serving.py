@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import http.client
 import json
+import re
 import socket
 import threading
 import time
@@ -16,7 +17,7 @@ from reddit_sse_stream_spark.functions import observed_feed_counters, salted_joi
 from reddit_sse_stream_spark.sources.feed import feed_df
 from reddit_sse_stream_spark.sources.redis_adapter import RedisFeedAdapter
 from reddit_sse_stream_spark.spec import QuerySpec
-from reddit_sse_stream_spark.streaming.sink import SSEBroadcaster
+from reddit_sse_stream_spark.streaming.sink import KEEP_ALIVE_INTERVAL, SSEBroadcaster
 from reddit_sse_stream_spark.streaming.server import SSEServer
 
 # --------------------------------------------------------------- SSE server
@@ -53,11 +54,28 @@ def test_server_400_on_non_int_backfill(server):
 
 
 def test_server_test_page(server):
+    """The /test page must log what the server sends.  Every frame is a
+    named event, and EventSource never passes named events to
+    ``onmessage``, so the page has to subscribe to each event name the
+    broadcaster emits: both feed streams and the keepalive."""
     srv, _ = server
     conn, resp = _get(srv.port, "/test")
     assert resp.status == 200
-    assert b"EventSource" in resp.read()
+    page = resp.read().decode()
     conn.close()
+    assert "EventSource" in page
+    now = [0.0]
+    bc = SSEBroadcaster(clock=lambda: now[0])
+    bc.register("c", QuerySpec())
+    base = {"author": "a", "subreddit": "s", "domain": None, "over_18": None,
+            "is_self": None, "created_utc": 10, "json": "{}"}
+    bc.publish([{**base, "id": 1, "event": "rc"}, {**base, "id": 2, "event": "rs"}])
+    now[0] = 2 * KEEP_ALIVE_INTERVAL
+    bc.tick()
+    _, frames = bc.frames_since("c", 0)
+    emitted = {re.search(r"^event: (\S+)$", f, re.M).group(1) for f in frames}
+    assert emitted == {"rc", "rs", "keepalive"}
+    assert emitted <= set(re.findall(r"addEventListener\('([^']+)'", page))
 
 
 def test_server_streams_frames_for_registered_spec(server):
