@@ -335,7 +335,7 @@ def streaming_e2e(
 ) -> dict:
     """Measured number for the "ONE query, N clients" serving design
     (VERDICT r04 next #8; r06 next #7 raised the fan-out to 8 concurrent
-    clients): drive the actual FeedStreamReader -> foreachBatch ->
+    clients): drive the actual reddit_feed source -> foreachBatch ->
     SSEBroadcaster -> SSEServer path end to end, with concurrent HTTP
     clients consuming the SSE wire format, and report delivered
     events/sec across clients plus the per-client rate and the

@@ -132,7 +132,7 @@ class SSEBroadcaster:
         serving-layer fan-out, not a data-processing collect. Heavy
         transformations stay in the streaming plan upstream.
         """
-        rows = batch_df.limit(self.max_collect_rows + 1).collect()
+        rows = batch_df.collect()
         if len(rows) > self.max_collect_rows:
             raise RuntimeError(
                 f"SSE serving batch exceeds max_collect_rows="

@@ -22,17 +22,21 @@ Offset model (SURVEY.md §2.1):
   per id). A replayable file-backed source has no such holes; late data is
   instead handled downstream with ``withWatermark`` — documented deviation.
 
-Each micro-batch partition reads the events parquet with a pyarrow
-range+type filter (predicate pushdown at the row-group level), derives the
-feed columns, and yields Arrow RecordBatches — executor-side, parallel, no
-driver collect.
+The reader is a stateless ``SimpleDataSourceStreamReader``: Spark hands
+``read(start)`` the batch start, so the reference's "ids after N" cursor
+needs no driver-side bookkeeping, and the append-only file makes
+``readBetweenOffsets(start, end)`` a pure function for replay after a
+restart. Both read on the driver with a pyarrow range+type filter
+(predicate pushdown at the row-group level), derive the feed columns, and
+return Arrow RecordBatches; ``max_ids_per_batch`` bounds what one read
+holds.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Iterator
 
-from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 from reddit_sse_stream_spark.spec import MAX_BACKFILL
 
@@ -43,22 +47,9 @@ FEED_DDL = (
 
 RC_TYPES = ("view", "click", "error")
 
-#: rows per InputPartition inside one micro-batch — on a cluster this is the
-#: read-parallelism knob (a live trigger stays 1 partition; a 100k backfill
-#: catch-up fans out across executors).
-PARTITION_CHUNK = 10_000
-
 #: per-stream, per-trigger id cap (``max_ids_per_batch`` default): bounds a
 #: catch-up trigger's memory; the reference's 25/10 is one Redis round-trip
-DEFAULT_MAX_IDS = PARTITION_CHUNK
-
-
-class FeedPartition(InputPartition):
-    def __init__(self, path: str, stream: str, start_id: int, end_id: int):
-        self.path = path
-        self.stream = stream
-        self.start_id = start_id  # exclusive
-        self.end_id = end_id  # inclusive
+DEFAULT_MAX_IDS = 10_000
 
 
 def _max_event_id(path: str) -> int:
@@ -150,7 +141,7 @@ def _read_feed_batches(path: str, stream: str, start_id: int, end_id: int):
     yield from out.to_batches(max_chunksize=8192)
 
 
-class FeedStreamReader(DataSourceStreamReader):
+class FeedStreamReader(SimpleDataSourceStreamReader):
     def __init__(self, options: dict):
         self.path = options.get("path")
         if not self.path:
@@ -160,95 +151,32 @@ class FeedStreamReader(DataSourceStreamReader):
             raise ValueError("option 'stream' must be 'rc' or 'rs'")
         self.batch_size = int(options.get("max_ids_per_batch", DEFAULT_MAX_IDS))
         if self.batch_size <= 0:
-            # a non-positive cap would pin latestOffset() at the cursor
+            # a non-positive cap would pin every read() at its start
             raise ValueError("option 'max_ids_per_batch' must be positive")
         self.backfill = options.get("backfill")
         self.start_id = options.get("start_id")
         if self.backfill is not None and self.start_id is not None:
             raise ValueError("backfill and start_id are mutually exclusive")  # V1
-        self._last: int | None = None  # cursor base for per-trigger capping
-        #: committed floor, set only when a regressed offset window is
-        #: detected (partitions() called with end < start); clamps later
-        #: windows so delivered ids are never re-emitted
-        self._floor: int | None = None
 
     def initialOffset(self) -> dict:
         latest = _max_event_id(self.path)
         if self.start_id is not None:
-            base = int(self.start_id) - 1  # S4 (sse.py:126-129)
-        elif self.backfill is not None:
+            return {"id": int(self.start_id) - 1}  # S4 (sse.py:126-129)
+        if self.backfill is not None:
             n = min(int(self.backfill), MAX_BACKFILL)  # S3 clamp (sse.py:65)
-            base = max(latest - n, -1)
-        else:
-            base = latest
-        # Seed the per-trigger cap base (only once — Spark may call
-        # initialOffset() again mid-query, and re-seeding would move the cap
-        # base backward and re-emit committed ranges).  latestOffset() can
-        # then treat "_last is None" as restart-from-checkpoint, where
-        # offsets come from the log and initialOffset() is never called.
-        if self._last is None:
-            self._last = base
-        return {"id": base}
+            return {"id": max(latest - n, -1)}
+        return {"id": latest}
 
-    def latestOffset(self) -> dict:
-        # S6 — read to the head, capped at batch_size ids: the memory bound
-        # on a catch-up trigger (maxOffsetsPerTrigger-style), not a pace.
-        #
-        # Restart caveat: after recovery from a fully-committed checkpoint
-        # this instance is fresh (_last is None) and Spark calls
-        # latestOffset() BEFORE partitions()/commit() can fold the committed
-        # offset in, so the ramp re-seeds from initialOffset() — for a
-        # backfill reader that base sits behind the committed offset and the
-        # returned end can regress.  Correctness is preserved by the
-        # monotonic _floor clamp in partitions(): the authoritative
-        # batch start from the offset log folds into _last there, and a
-        # regressed window is clamped empty instead of re-reading ids.
-        latest = _max_event_id(self.path)
-        if self._last is None:
-            self._last = self.initialOffset()["id"]
-        nxt = max(min(latest, self._last + self.batch_size), self._last)
-        self._last = nxt
-        return {"id": nxt}
+    def read(self, start: dict) -> tuple[Iterator, dict]:
+        # S6 — read to the head, at most batch_size ids: the memory bound on
+        # a catch-up trigger (maxOffsetsPerTrigger-style), not a pace.  A
+        # list iterator, not a generator: Spark copies the cached iterator.
+        lo = start["id"]
+        end = max(min(_max_event_id(self.path), lo + self.batch_size), lo)
+        return iter(list(self.readBetweenOffsets(start, {"id": end}))), {"id": end}
 
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        # Restart resume: after recovery from a checkpoint the cap base
-        # (_last) is fresh while `start` carries the committed offset — fold
-        # it in so the next latestOffset() continues from the checkpoint
-        # instead of replaying the cap ramp from initialOffset.
-        if self._last is None or start["id"] > self._last:
-            self._last = start["id"]
-        lo, hi = start["id"], end["id"]
-        if hi < lo:
-            # Regressed window: `start` is the committed offset restored
-            # from the log, `end` came from a latestOffset() ramp re-seeded
-            # below it after restart.  Remember the committed floor — the
-            # NEXT batch's log start will be the regressed end, and without
-            # the clamp it would re-read (= re-emit) ids up to here.  For a
-            # normal batch (hi >= lo) partitions() stays a pure function of
-            # (start, end), which replay of a pending batch depends on.
-            self._floor = max(self._floor or lo, lo)
-            return [FeedPartition(self.path, self.stream, lo, lo)]
-        if self._floor is not None:
-            lo = max(lo, self._floor)
-        if hi <= lo:
-            return [FeedPartition(self.path, self.stream, lo, lo)]
-        chunks = []
-        cur = lo
-        while cur < hi:
-            nxt = min(cur + PARTITION_CHUNK, hi)
-            chunks.append(FeedPartition(self.path, self.stream, cur, nxt))
-            cur = nxt
-        return chunks
-
-    def read(self, partition: FeedPartition) -> Iterator:
-        yield from _read_feed_batches(
-            partition.path, partition.stream, partition.start_id, partition.end_id
-        )
-
-    def commit(self, end: dict) -> None:
-        # also folds the committed offset into the cap base (restart safety)
-        if self._last is None or end["id"] > self._last:
-            self._last = end["id"]
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator:
+        return _read_feed_batches(self.path, self.stream, start["id"], end["id"])
 
 
 class RedditFeedDataSource(DataSource):
@@ -266,7 +194,7 @@ class RedditFeedDataSource(DataSource):
     def schema(self) -> str:
         return FEED_DDL
 
-    def streamReader(self, schema) -> FeedStreamReader:
+    def simpleStreamReader(self, schema) -> FeedStreamReader:
         return FeedStreamReader(self.options)
 
 

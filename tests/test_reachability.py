@@ -22,8 +22,6 @@ PKG = "reddit_sse_stream_spark"
 ALLOWED_UNREACHED = {
     f"{PKG}.streaming.client_source": "README's switching table: ingest an SSE endpoint as a stream",
     f"{PKG}.sources.redis_adapter": "README's switching table: the reference's Redis key layout",
-    f"{PKG}.streaming.writer": "COVERAGE S7-durable: the replayable SSE-frame file archive",
-    f"{PKG}.streaming.fsops": "the filesystem seam behind streaming.writer",
 }
 
 

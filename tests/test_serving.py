@@ -357,7 +357,7 @@ def test_fanout64_heterogeneous_per_client_frames(spark, sf_dir):
     """VERDICT r10 next #7: the ONE-query/N-clients design at an N that
     matters — 64 concurrent HTTP clients over 8 DISTINCT compiled specs
     (firehose, both type filters, subreddit/author whitelists, JSON
-    key-subset projections) against the real FeedStreamReader ->
+    key-subset projections) against the real reddit_feed source ->
     foreachBatch -> SSEBroadcaster -> SSEServer path.  Every client's
     delivered frame multiset must equal an expectation computed
     independently from the raw parquet with pure Python."""

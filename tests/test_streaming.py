@@ -1,7 +1,8 @@
 """Streaming tests (SURVEY.md §5): deterministic replay of the events table
 through the custom Python DataSource, offset/backfill/start_id arithmetic
-(S2-S4), per-trigger capping (S6), the SSE broadcaster (S7/S8, A1/A2
-counters, M2 sort), and a watermarked windowed aggregation."""
+(S2-S4), per-trigger capping of ``read(start)`` (S6), restart from a
+checkpoint, the SSE broadcaster (S7/S8, A1/A2 counters, M2 sort), and a
+watermarked windowed aggregation."""
 
 from __future__ import annotations
 
@@ -21,7 +22,7 @@ from reddit_sse_stream_spark.streaming.source import (
 
 EVENTS = "/root/testdata/sf0.001/events.parquet"
 MAX_ID = 999  # sf0.001 events are ids 0..999
-CAP = 25  # explicit per-trigger cap, far below MAX_ID, so the ramp shows
+CAP = 25  # explicit per-trigger cap, far below MAX_ID, so the cap shows
 
 
 # ------------------------------------------------------------ offsets S2-S6
@@ -55,19 +56,31 @@ def test_v1_backfill_start_id_exclusive():
 
 
 def test_non_positive_cap_is_rejected():
-    """A cap <= 0 would pin every latestOffset() at the cursor: the stream
-    would never advance and report no error."""
+    """A cap <= 0 would pin every read() at its start: the stream would
+    never advance and report no error."""
     for cap in ("0", "-5"):
         with pytest.raises(ValueError, match="max_ids_per_batch"):
             FeedStreamReader({"path": EVENTS, "max_ids_per_batch": cap})
 
 
+def _ids(batches) -> list[int]:
+    import pyarrow as pa
+
+    batches = list(batches)
+    return pa.Table.from_batches(batches)["id"].to_pylist() if batches else []
+
+
 def test_s6_latest_offset_capped_per_trigger():
     r = FeedStreamReader({"path": EVENTS, "backfill": "100000", "max_ids_per_batch": str(CAP)})
-    assert r.initialOffset() == {"id": -1}
-    # each trigger advances at most max_ids_per_batch ids
-    assert r.latestOffset() == {"id": -1 + CAP}
-    assert r.latestOffset() == {"id": -1 + 2 * CAP}
+    start = r.initialOffset()
+    assert start == {"id": -1}
+    # each trigger advances at most max_ids_per_batch ids from its start
+    rows, end = r.read(start)
+    assert end == {"id": -1 + CAP}
+    assert _ids(rows)
+    rows, end = r.read(end)
+    assert end == {"id": -1 + 2 * CAP}
+    assert all(CAP - 1 < i <= 2 * CAP - 1 for i in _ids(rows))
 
 
 def test_s6_live_trigger_reads_to_the_head(tmp_path):
@@ -80,9 +93,14 @@ def test_s6_live_trigger_reads_to_the_head(tmp_path):
     path = str(tmp_path / "events.parquet")
     pq.write_table(full.filter(pc.field("event_id") <= MAX_ID - 120), path)
     r = FeedStreamReader({"path": path})
-    assert r.initialOffset() == {"id": MAX_ID - 120}
+    start = r.initialOffset()
+    assert start == {"id": MAX_ID - 120}
+    assert r.read(start)[1] == start  # nothing new: the offset holds
     pq.write_table(full, path)
-    assert r.latestOffset() == {"id": MAX_ID}
+    rows, end = r.read(start)
+    assert end == {"id": MAX_ID}
+    ids = _ids(rows)
+    assert ids and min(ids) > MAX_ID - 120
 
 
 def test_collect_bound_covers_both_streams_default_caps():
@@ -96,9 +114,7 @@ def test_read_partition_filters_stream_and_range():
     import pyarrow as pa
 
     r = FeedStreamReader({"path": EVENTS, "stream": "rc"})
-    parts = r.partitions({"id": -1}, {"id": 99})
-    batches = [b for p in parts for b in r.read(p)]
-    tbl = pa.Table.from_batches(batches)
+    tbl = pa.Table.from_batches(list(r.readBetweenOffsets({"id": -1}, {"id": 99})))
     ids = tbl["id"].to_pylist()
     assert ids == sorted(ids)
     assert min(ids) >= 0 and max(ids) <= 99
@@ -468,8 +484,8 @@ def test_stream_stream_join_with_watermarks(spark):
 
 
 def test_streaming_replay_scales_to_sf01(spark):
-    """100k events through the source in chunked partitions (10k ids per
-    InputPartition -> parallel reads) — count must match the batch feed."""
+    """100k events through the source in one uncapped read — count must
+    match the batch feed."""
     path = "/root/testdata/sf0.1/events.parquet"
     rc = read_feed_stream(spark, path, "rc", backfill=100000, max_ids_per_batch=100000)
     q = rc.writeStream.format("memory").queryName("big_replay").outputMode("append").start()
@@ -484,54 +500,59 @@ def test_streaming_replay_scales_to_sf01(spark):
     assert got["n"] == got["d"] == expected
 
 
-def test_restart_after_committed_batch_never_reemits():
-    """Recovery where the last batch was fully committed: Spark restores
-    offsets from the checkpoint log and calls latestOffset() FIRST, so a
-    fresh backfill reader re-seeds its cap ramp from the backfill base and
-    reports an end offset BEHIND the committed one.  The _emitted_max
-    monotonic floor in partitions() must make that regression harmless: no
-    id at or below the committed offset is ever read again."""
-    import pyarrow as pa
+def test_restart_after_committed_batch_never_reemits(spark, tmp_path):
+    """Restart where the last batch was fully committed: the engine
+    re-plans that batch from the offset log before it calls read(), so the
+    stateless reader resumes at the committed offset instead of re-seeding
+    from initialOffset() (the backfill base, far behind it). The parquet
+    sink must hold every rc id exactly once."""
+    from collections import Counter
 
-    committed = MAX_ID - 10
-    r = FeedStreamReader({"path": EVENTS, "backfill": "100000", "max_ids_per_batch": str(CAP)})
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
 
-    def _ids(parts):
-        batches = [b for p in parts for b in r.read(p)]
-        if not batches:
-            return []
-        return pa.Table.from_batches(batches)["id"].to_pylist()
+    def run_to_head():
+        stream = read_feed_stream(
+            spark, EVENTS, "rc", backfill=100000, max_ids_per_batch=300
+        )
+        q = (
+            stream.writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        q.processAllAvailable()
+        q.stop()
+        assert q.exception() is None
 
-    # recovery: latestOffset() before any partitions()/commit()
-    regressed = r.latestOffset()["id"]
-    assert regressed < committed  # the bug's precondition holds
+    run_to_head()
+    n_first = spark.read.parquet(out).count()
+    run_to_head()  # nothing new in the file: the restart must add no row
 
-    # batch planned with the authoritative log start: regressed window
-    assert _ids(r.partitions({"id": committed}, {"id": regressed})) == []
-
-    # cap base folded to the committed offset -> no backward travel
-    nxt = r.latestOffset()["id"]
-    assert nxt >= committed
-
-    # next batch's log start is the regressed offset; the monotonic floor
-    # clamps it so delivered ids are not re-emitted
-    ids = _ids(r.partitions({"id": regressed}, {"id": nxt}))
-    assert all(i > committed for i in ids)
+    expected = {
+        r["event_id"]
+        for r in spark.sql(
+            "SELECT event_id FROM parquet.`" + EVENTS + "` "
+            "WHERE event_type IN ('view','click','error')"
+        ).collect()
+    }
+    counts = Counter(r["id"] for r in spark.read.parquet(out).collect())
+    assert n_first == len(expected)
+    dupes = {i: c for i, c in counts.items() if c > 1}
+    assert not dupes, f"duplicate ids after restart: {dict(list(dupes.items())[:5])}"
+    missing = expected - set(counts)
+    assert not missing, f"gaps after restart: {sorted(missing)[:10]}"
 
 
 def test_fresh_start_still_caps_first_batch():
-    """The restart safety net must not break the S6 ramp on a fresh query."""
+    """A fresh query's first read is capped like every other."""
     r = FeedStreamReader({"path": EVENTS, "backfill": "100000", "max_ids_per_batch": str(CAP)})
     base = r.initialOffset()["id"]
-    assert r.latestOffset() == {"id": base + CAP}
-    ids_seen = set()
-    import pyarrow as pa
-
-    parts = r.partitions({"id": base}, {"id": base + CAP})
-    for p_ in parts:
-        for b in r.read(p_):
-            ids_seen |= set(pa.Table.from_batches([b])["id"].to_pylist())
-    assert ids_seen  # the capped first window actually reads rows
+    rows, end = r.read({"id": base})
+    assert end == {"id": base + CAP}
+    ids = _ids(rows)
+    assert ids  # the capped first window actually reads rows
+    assert all(base < i <= base + CAP for i in ids)
 
 
 def test_frames_since_cursor_drains_acknowledged_frames():
