@@ -8,8 +8,11 @@
 a tail-capturing consumer always gets the complete compact summary —
 VERDICT r05 #4 found the r05 artifact head-truncated.)
 
-Each query is forced to full materialization with a noop write (no driver
-collect — the plan runs distributed end to end, like it would on a cluster).
+Each query runs RUNS times and is forced to full materialization with a
+noop write (no driver collect — the plan runs distributed end to end, like
+it would on a cluster).  ``BENCH_DETAIL.json`` records every run's
+build/execute seconds and Spark job counts (:func:`profile_row`).  The
+serving path is benchmarked out of process by ``perfbench/``.
 """
 
 from __future__ import annotations
@@ -108,81 +111,63 @@ HEADLINE = (
     # fit (equi self-join + dimension-frame rounds)
     "search_rm3_expansion",
     "pref_bradley_terry_strength",
-    # late-r12 note: the IVF nprobe tuning curve and the binned
-    # interval-overlap join stay OUT of the headline deliberately — the
-    # lean final line sits at 1766/1800 bytes and either name pushes it
-    # over FINAL_LINE_BUDGET, where the last-resort shed would truncate
-    # query names off the final line.  Both rows are in
-    # the scale-sweep roster, which is the scaling evidence that
-    # matters for them (their absolute cost is ANN-family/join-family
-    # shaped, already priced by knn_ivfpq_* and join_* rows here).
+    # The IVF nprobe tuning curve and the binned interval-overlap join
+    # stay out of the headline: both are in the scale-sweep roster, which
+    # is the scaling evidence that matters for them (their absolute cost
+    # is ANN-family/join-family shaped, already priced by knn_ivfpq_* and
+    # join_* rows here).
 )
 
-#: Rows whose recorded same-code spread exceeds 1.5x on this shared
-#: infrastructure (SCALING.md r09 variance addendum: gopher spanned
-#: 0.549-1.531 s and residual IVF-PQ 7.5-17.5 s across identical-code
-#: runs) always get MAX_RUNS samples (VERDICT r09 next #1) — a
-#: median-of-3 on these is noise, and the r09 artifact both flagged a
-#: phantom regression and hid a real win because of it.  Every other row
-#: starts at BASE_RUNS and escalates to MAX_RUNS when its own observed
-#: spread crosses SPREAD_ESCALATE — so a newly-noisy row self-corrects
-#: without a list edit here.
-HIGH_VARIANCE = frozenset({
-    "text_gopher_gate",
-    "text_quality_score",
-    "corpus_batch_lineage",
-    "corpus_dsir_weights",
-    "text_chunk_dedup_rewrite",
-    "quota_admission_per_author",
-    "knn_ivfpq_topk",
-    "knn_ivfpq_residual_topk",
-    "dedup_source_minhash_sampled",
-    # VERDICT r11 next #3/#4: the widest same-code spread of the r11
-    # artifact (2.5x over 7 runs) and a 3-run sub-second row that read
-    # 1.52x its prior-round median
-    "knn_ivf_incremental_assign",
-    "p2_json_key_subset",
-})
-BASE_RUNS = 5  # VERDICT r12 next #7: no artifact row below 5 runs
-MAX_RUNS = 7
-#: VERDICT r12 next #7: sub-second rows pay the largest RELATIVE noise
-#: (12/45 rows over 1.5x spread in r12, mostly <0.5 s rows) — a row whose
-#: first sample is under FAST_ROW_SEC is a fast row: it takes MAX_RUNS
-#: samples and records a trimmed mean (:func:`row_statistic`).
-FAST_ROW_SEC = 0.5
-SPREAD_ESCALATE = 1.5
+#: Every row runs this many times and records the plain median of its
+#: total seconds.  The per-run Spark job counts in BENCH_DETAIL.json
+#: repeat between runs where wall time does not, so a change to a row's
+#: cost is read from its jobs, not from de-noised wall time.
+RUNS = 5
 
 
-#: fewest samples a fast row trims; below it the row records its median
-MIN_TRIM_SAMPLES = 6
+def profile_row(spark, name: str, sf_dir: str) -> dict:
+    """Run catalog row ``name`` once: build its DataFrame (driver-side
+    Python, including any training actions the builder runs), then
+    execute it into a noop sink.  Returns the seconds of each phase and
+    the Spark jobs each phase issued.
 
+    Jobs are counted as the ids newer than the last one seen, not by how
+    many ids the status store holds: the store keeps only
+    ``spark.ui.retainedJobs`` jobs and drops a tenth of them at once when
+    it fills, which a long session reaches.  Jobs that carry a job group
+    (a streaming query's) are not counted."""
+    st = spark.sparkContext.statusTracker()
+    seen = max(st.getJobIdsForGroup(None) or [-1])
 
-def row_statistic(samples_sorted: list[float], trim: bool) -> float:
-    """Artifact statistic for one bench row (VERDICT r15 next #7):
-    sub-second rows pay the largest RELATIVE noise and host contention on
-    this shared sandbox is ONE-SIDED (steal only adds time), so a single
-    burst during the 7-sample window inflates the median and flags
-    phantom regressions (11 in r15, every one reproduced at r14 speed by
-    an 8-core re-run).  Fast rows (``trim=True``: first
-    sample under FAST_ROW_SEC, >= 6 samples) therefore record a
-    one-sided trimmed mean — drop the 2 LARGEST samples, mean the rest —
-    instead of the raw median; min/max stay on the spread stdout line
-    and every sample stays in BENCH_DETAIL.json, so nothing is hidden
-    and the old statistic remains recoverable.  Heavy rows keep the
-    plain median (their relative noise is small and the median is the
-    statistic every prior round recorded), and so does a fast row with
-    fewer than MIN_TRIM_SAMPLES samples: dropping 2 of them would leave
-    too few to mean (none at all below 3)."""
-    if trim and len(samples_sorted) >= MIN_TRIM_SAMPLES:
-        kept = samples_sorted[:-2]
-        return round(sum(kept) / len(kept), 3)
-    return round(samples_sorted[len(samples_sorted) // 2], 3)
+    def new_jobs() -> int:
+        nonlocal seen
+        ids = [i for i in st.getJobIdsForGroup(None) or [] if i > seen]
+        seen = max(ids, default=seen)
+        return len(ids)
 
-
-def should_escalate(samples: list[float]) -> bool:
-    """True when a BASE_RUNS sample has earned MAX_RUNS: its own min-max
-    spread crossed SPREAD_ESCALATE (noise this run)."""
-    return max(samples) / max(min(samples), 1e-9) > SPREAD_ESCALATE
+    # the counting stays outside both timed phases: one look at the
+    # status store costs about 70 ms on a 4-core host once it holds
+    # 1,000 jobs
+    t0 = time.perf_counter()
+    df = QUERIES[name].spark(spark, sf_dir)
+    build_s = time.perf_counter() - t0
+    build_jobs = new_jobs()
+    t1 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    exec_s = time.perf_counter() - t1
+    exec_jobs = new_jobs()
+    # release finished localCheckpoint blocks: accumulated dead
+    # checkpoints from prior queries measured 3-6x degradation on later
+    # ones (SCALING.md r05); between queries no cross-query frame
+    # survives, so this is safe by construction
+    release_local_checkpoints(spark)
+    return {
+        "build_s": round(build_s, 3),
+        "exec_s": round(exec_s, 3),
+        "total_s": round(build_s + exec_s, 3),
+        "build_jobs": build_jobs,
+        "exec_jobs": exec_jobs,
+    }
 
 
 class PeakRssSampler:
@@ -302,259 +287,19 @@ class PeakRssSampler:
         self._thread.join(timeout=5)
 
 
-#: Heterogeneous 64-client spec mix (VERDICT r10 next #7): 8 distinct
-#: compiled predicates x 8 clients each over the ONE shared streaming
-#: query — firehose, both type filters, subreddit/author whitelists,
-#: and JSON key-subset projections.  The fan-out bench feeds BOTH
-#: streams (rc + rs interleaved, VERDICT r14 next #5), so every path —
-#: including /?type=submissions — delivers real events and the
-#: per-path dispatch is measured under genuine 64-client load.
-#: Values match the testdata generator's derived feed
-#: (author = u{user_id%50}, subreddit = event_type, props = {"k": N}).
-FANOUT64_PATHS = (
-    "/",
-    "/?type=comments",
-    "/?type=submissions",
-    "/?subreddit=view",
-    "/?subreddit=view&subreddit=error",
-    "/?author=u1&author=u2&author=u3",
-    "/?type=comments&filter=k",
-    "/?filter=nope",
-)
-
-
-def streaming_e2e(
-    spark,
-    sf_dir: str,
-    n_clients: int = 8,
-    paths: tuple = ("/?type=comments",),
-    backfill: int = 100000,
-    capture: bool = False,
-    max_ids_per_batch: int = 10000,
-    streams: tuple = ("rc",),
-) -> dict:
-    """Measured number for the "ONE query, N clients" serving design
-    (VERDICT r04 next #8; r06 next #7 raised the fan-out to 8 concurrent
-    clients): drive the actual reddit_feed source -> foreachBatch ->
-    SSEBroadcaster -> SSEServer path end to end, with concurrent HTTP
-    clients consuming the SSE wire format, and report delivered
-    events/sec across clients plus the per-client rate and the
-    min/max per-client delivery counts (fairness of the fan-out under
-    real contention — the design's whole point vs the reference's
-    one-Redis-scan-per-connection loop, sse.py:101-110).
-
-    This is the real serving stack — Python DataSource micro-batches,
-    driver-side bounded fan-out, chunked HTTP streaming — not the
-    batch-shaped feed pipeline the headline number measures."""
-    import http.client
-    import threading
-
-    from reddit_sse_stream_spark.streaming.server import SSEServer
-    from reddit_sse_stream_spark.streaming.sink import SSEBroadcaster
-    from reddit_sse_stream_spark.streaming.source import read_feed_stream
-
-    bc = SSEBroadcaster()
-    srv = SSEServer(bc).start()
-    counts = [0] * n_clients
-    raw: list[bytes] = [b""] * n_clients
-    last_data_at = [0.0] * n_clients
-    conns: list = [None] * n_clients
-    stop = threading.Event()
-
-    def client(i: int) -> None:
-        # Blocking reads: an SSE stream has no natural end, and a socket
-        # timeout permanently poisons http.client's response object, so the
-        # main thread terminates the read loop by closing the connection
-        # once delivery has gone quiet.
-        conn = http.client.HTTPConnection("127.0.0.1", srv.port)
-        conn.request("GET", paths[i % len(paths)])
-        resp = conn.getresponse()
-        resp.fp.raise_on_eof = False  # type: ignore[attr-defined]
-        conns[i] = conn
-        buf = b""
-        while True:
-            try:
-                chunk = resp.read1(1 << 16)  # chunked-decoding-aware read
-            except Exception:
-                # socket closed / half-read chunk on teardown — http.client
-                # can surface OSError, HTTPException, or an AttributeError
-                # from _close_conn on an already-detached fp
-                break
-            if not chunk:
-                # b'' can surface between chunks while the stream is
-                # alive — only the stop flag (set before the socket is
-                # closed) ends the loop
-                if stop.is_set():
-                    break
-                time.sleep(0.02)
-                continue
-            buf += chunk
-            n = buf.count(b"\n\n")  # one blank line terminates each frame
-            if n:
-                counts[i] += n
-                last_data_at[i] = time.perf_counter()
-                if capture:
-                    raw[i] += buf[: buf.rindex(b"\n\n") + 2]
-                buf = buf[buf.rindex(b"\n\n") + 2 :]
-
-    threads = [threading.Thread(target=client, args=(i,), daemon=True) for i in range(n_clients)]
-    t0 = time.perf_counter()
-    for t in threads:
-        t.start()
-    # every client must be REGISTERED before the first micro-batch is
-    # broadcast, or a late joiner misses frames and the per-client
-    # delivery comparison below is raced (matters at 64 clients)
-    deadline = time.perf_counter() + 30
-    while len(bc._clients) < n_clients and time.perf_counter() < deadline:
-        time.sleep(0.01)
-    # a partial fan-out must fail LOUDLY (ADVICE r11): falling through
-    # with missing clients degrades into a silently raced per-client
-    # frame comparison downstream
-    registered = len(bc._clients)
-    if registered < n_clients:
-        raise RuntimeError(
-            f"streaming e2e fan-out incomplete: {registered}/{n_clients} "
-            "clients registered within 30s"
-        )
-    # Default micro-batch trigger + processAllAvailable, NOT availableNow:
-    # availableNow snapshots latestOffset() once, and the source's
-    # per-trigger id cap would truncate the run to a single batch.
-    # ``streams``: the fan-out bench feeds BOTH reference streams
-    # (rc + rs via the M1 interleave) so the submissions dispatch path
-    # delivers real events under load — an rc-only slice measured
-    # /?type=submissions at zero work (VERDICT r14 next #5).  The
-    # 8-client headline keeps its historical rc-only slice for
-    # round-over-round comparability.
-    from reddit_sse_stream_spark.operators.merge import interleave
-
-    feed = None
-    for s in streams:
-        one = read_feed_stream(
-            spark,
-            f"{sf_dir}/events.parquet",
-            s,
-            backfill=backfill,
-            max_ids_per_batch=max_ids_per_batch,
-        )
-        feed = one if feed is None else interleave(feed, one)
-    q = feed.writeStream.foreachBatch(bc.foreach_batch).start()
-    q.processAllAvailable()
-    q.stop()
-    # drain: wait until delivery has been quiet for 2s (a 0.3s window can
-    # fall inside a micro-batch gap and cut the stream short), then
-    # unblock the clients by closing their sockets
-    quiet = 0
-    seen = -1
-    while quiet < 4:
-        cur = sum(counts)
-        quiet = quiet + 1 if cur == seen else 0
-        seen = cur
-        time.sleep(0.5)
-    stop.set()
-    for conn in conns:
-        try:
-            conn.sock.shutdown(2)  # both directions; unblocks recv
-        except Exception:
-            pass
-        try:
-            conn.close()  # http.client can raise from a half-read chunk
-        except Exception:
-            pass
-    for t in threads:
-        t.join(timeout=30)
-    srv.stop()
-    wall = max(last_data_at) - t0 if any(last_data_at) else float("inf")
-    delivered = sum(counts)
-    out = {
-        "streaming_e2e_clients": n_clients,
-        "streaming_e2e_events_delivered": delivered,
-        "streaming_e2e_wall_sec": round(wall, 3),
-        "streaming_e2e_events_per_sec": round(delivered / wall, 1),
-        "streaming_e2e_events_per_sec_per_client": round(
-            delivered / n_clients / wall, 1
-        ),
-        "streaming_e2e_client_min_max": [min(counts), max(counts)],
-    }
-    if len(paths) > 1:
-        per_path: dict[str, list[int]] = {}
-        for i, c in enumerate(counts):
-            per_path.setdefault(paths[i % len(paths)], []).append(c)
-        out["per_path_delivered"] = {
-            p: {"clients": len(cs), "min": min(cs), "max": max(cs)}
-            for p, cs in per_path.items()
-        }
-    if capture:
-        out["frames"] = [
-            [f + "\n\n" for f in r.decode().split("\n\n") if f]
-            for r in raw
-        ]
-    return out
-
-
-#: VERDICT r10 next #1: the e2e was the last driver-visible perf number
-#: measured as a single point, and its slot — right AFTER the 41-query
-#: headline loop — depressed it systematically: the r11 two-arm experiment
-#: (tools/e2e_variance.py, SCALING.md) measured fresh-state medians of
-#: ~20.7k events/s vs post-suite ~12.8k with NON-overlapping spreads
-#: (fresh min 17.5k > post max 14.5k), which is exactly the r10
-#: 21.5k -> 15.8k "regression on a faster host with no streaming change".
-#: So: the e2e now runs FIRST (fresh JVM state, the state the number
-#: claims to describe) and E2E_RUNS times, with the median run as the
-#: headline fields and the min/max rate spread alongside.
-E2E_RUNS = 5
-
-
-def streaming_e2e_samples(spark, sf_dir: str, runs: int = E2E_RUNS) -> dict:
-    """Median-of-``runs`` wrapper around :func:`streaming_e2e`: headline
-    fields come from the median-rate run, plus the cross-run rate spread
-    and run count; the full per-run dicts ride under ``samples`` for
-    BENCH_DETAIL.json."""
-    samples = [streaming_e2e(spark, sf_dir) for _ in range(runs)]
-    by_rate = sorted(samples, key=lambda s: s["streaming_e2e_events_per_sec"])
-    med = by_rate[len(by_rate) // 2]
-    rates = [s["streaming_e2e_events_per_sec"] for s in by_rate]
-    return {
-        **med,
-        "streaming_e2e_runs": len(samples),
-        "streaming_e2e_rate_min_max": [rates[0], rates[-1]],
-        "samples": samples,
-    }
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
     spark = get_spark("bench")
-
-    # Streaming e2e FIRST (VERDICT r10 next #1): the serving number
-    # describes the fresh-state stack, and measuring it after the
-    # headline loop depressed it ~1.6x (two-arm experiment in
-    # SCALING.md r11).  One warm-up pass at the smallest sf heats the
-    # JVM/Python-DataSource/HTTP paths, then E2E_RUNS timed runs.
-    warm_dir = "/root/testdata/sf0.001"
-    if not os.path.isdir(warm_dir):
-        warm_dir = sf_dir
-    streaming_e2e(spark, warm_dir)
-    e2e = streaming_e2e_samples(spark, sf_dir)
-    e2e_samples = e2e.pop("samples")
-    # 64-client heterogeneous fan-out (VERDICT r10 next #7): 8 distinct
-    # specs x 8 clients on ONE shared query — the N-clients-N-scans fix
-    # proven at an N that matters.  Bounded backfill keeps it a fan-out
-    # stress (frame correctness per spec is pinned in test_serving.py).
-    fanout64 = streaming_e2e(
-        spark,
-        sf_dir,
-        n_clients=64,
-        paths=FANOUT64_PATHS,
-        backfill=20000,
-        streams=("rc", "rs"),
-    )
 
     # Warm-up: run every headline query once at the SMALLEST sf so the JVM,
     # whole-stage codegen compile, Python workers, and parquet footers are
     # hot — the timed loop then measures per-query data work (steady state),
     # not first-compile. Codegen caches key on generated source, which is
     # identical across sf dirs for the same query.
+    warm_dir = "/root/testdata/sf0.001"
+    if not os.path.isdir(warm_dir):
+        warm_dir = sf_dir
     for name in HEADLINE:
         QUERIES[name].spark(spark, warm_dir).write.format("noop").mode(
             "overwrite"
@@ -565,53 +310,19 @@ def main() -> None:
         "overwrite"
     ).save()
 
-    # Adaptive run counts (VERDICT r09 next #1): every row starts at
-    # BASE_RUNS medians; rows with a RECORDED >1.5x same-code spread
-    # (HIGH_VARIANCE, from SCALING.md's variance addendum) go straight to
-    # MAX_RUNS, and any other row whose own observed max/min crosses
-    # SPREAD_ESCALATE self-escalates to MAX_RUNS.  The median of a larger
-    # sample is the artifact value; min/max spread and per-row run counts
-    # ride a preceding stdout line AND BENCH_DETAIL.json (full samples) so
-    # a reader can gate on spread instead of trusting a lone point (r09's
-    # artifact flagged a phantom 3.32x regression and hid a real
-    # 6.59->4.73 s win).
     times: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
-    run_counts: dict[str, int] = {}
     detail: dict[str, dict] = {}
     sampler = PeakRssSampler().start()
     for name in HEADLINE:
-        target = MAX_RUNS if name in HIGH_VARIANCE else BASE_RUNS
-        samples: list[float] = []
         sampler.reset()
-        while len(samples) < target:
-            start = time.perf_counter()
-            df = QUERIES[name].spark(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - start)
-            # release finished localCheckpoint blocks: accumulated dead
-            # checkpoints from prior queries measured 3-6x degradation on
-            # later ones (SCALING.md r05); between queries no cross-query
-            # frame survives, so this is safe by construction
-            release_local_checkpoints(spark)
-            if len(samples) == 1 and samples[0] < FAST_ROW_SEC:
-                target = MAX_RUNS  # fast row: buy it the full sample
-            if len(samples) == target == BASE_RUNS and should_escalate(samples):
-                target = MAX_RUNS
-        s = sorted(samples)
-        trim = samples[0] < FAST_ROW_SEC
-        times[name] = row_statistic(s, trim)
-        spread[name] = [round(s[0], 3), round(s[-1], 3)]
-        run_counts[name] = len(s)
+        runs = [profile_row(spark, name, sf_dir) for _ in range(RUNS)]
+        s = sorted(r["total_s"] for r in runs)
+        times[name] = s[len(s) // 2]
+        spread[name] = [s[0], s[-1]]
         detail[name] = {
-            "median": round(s[len(s) // 2], 3),
-            "stat": "trimmed_mean_drop2" if trim else "median",
-            "value": times[name],
-            "runs": len(s),
-            "min": round(s[0], 3),
-            "max": round(s[-1], 3),
-            "iqr": [round(s[len(s) // 4], 3), round(s[(3 * len(s)) // 4], 3)],
-            "samples_sorted": [round(x, 3) for x in s],
+            "median": times[name],
+            "runs": runs,
             # peak RSS across this row's runs (VERDICT r10 next #4): the
             # pyworkers series is the live one — JVM RSS ratchets
             **sampler.peaks_mb(),
@@ -632,51 +343,22 @@ def main() -> None:
         "cpus": int(m.group(1)) if m else None,
         "default_parallelism": sc.defaultParallelism,
     }
-    # full-fidelity sidecar: everything the budget-capped final line may
-    # shed (all samples, spreads, streaming detail) lands here
+    # full-fidelity sidecar: every run of every row, with its
+    # build/execute split and job counts
     with open(
         os.path.join(os.path.dirname(os.path.abspath(__file__)),
                      "BENCH_DETAIL.json"), "w"
     ) as fh:
-        json.dump(
-            {
-                "sf": sf,
-                "rows": detail,
-                **context,
-                "streaming_e2e": e2e,
-                "streaming_e2e_samples": e2e_samples,
-                "streaming_fanout64": fanout64,
-            },
-            fh, indent=1, sort_keys=True,
-        )
-    # Rows whose own dispersion crossed 1.5x this run: their median is
-    # honest (>= MAX_RUNS samples once escalated) but a single-round delta
-    # on them should be read against BENCH_DETAIL.json, not taken raw.
-    # TRIMMED basis at >= 6 samples (r13): raising the run floor to 5-7
-    # made the raw max/min gate an order-statistics artifact — with 7
-    # samples the odds that ONE run catches a GC/compaction hiccup grow
-    # with n, and 12 of the 15 rows the raw gate flagged on the r13
-    # sanity run collapsed below 1.45x once the single largest sample
-    # was dropped (full samples stay in BENCH_DETAIL.json).  Rows at < 6
-    # samples keep the raw basis — too few points to call one an
-    # outlier.
-    def _spread_basis(name: str) -> float:
-        s = detail[name]["samples_sorted"]
-        hi = s[-2] if len(s) >= 6 else s[-1]
-        return hi / max(s[0], 1e-9)
-
-    noisy = sorted(n for n in detail if _spread_basis(n) > 1.5)
+        json.dump({"sf": sf, "rows": detail, **context}, fh, indent=1,
+                  sort_keys=True)
     for line in summary_lines(
         times=times,
         spread=spread,
         total=total,
-        run_counts=run_counts,
         sf=sf,
         n_events=n_events,
         pipeline_sec=pipeline_sec,
         context=context,
-        e2e=e2e,
-        noisy=noisy,
     ):
         print(line)
 
@@ -696,31 +378,24 @@ def summary_lines(
     times: dict[str, float],
     spread: dict[str, list[float]],
     total: float,
-    run_counts: dict[str, int],
     sf: float,
     n_events: int,
     pipeline_sec: float,
     context: dict,
-    e2e: dict,
-    noisy: list,
 ) -> list[str]:
     """Render the bench stdout: bulky context lines first, compact
     self-contained summary as the FINAL line (the only one a tail reader is
     guaranteed to capture whole).
 
-    If even the lean final line would blow FINAL_LINE_BUDGET, the queries
-    dict is split: the slowest entries stay on the final line and the full
-    dict is repeated on a preceding ``headline_queries_full`` line, with
+    If the final line would blow FINAL_LINE_BUDGET, the queries dict is
+    split: the slowest entries stay on the final line and the full dict is
+    repeated on a preceding ``headline_queries_full`` line, with
     ``queries_truncated`` flagging the cut so a reader knows to look one
     line up.
     """
     lines = [
         json.dumps(
-            {
-                "metric": "headline_query_spread",
-                "spread": spread,
-                "runs": run_counts,
-            }
+            {"metric": "headline_query_spread", "runs": RUNS, "spread": spread}
         ),
         json.dumps(
             {"metric": "bench_context", **context},
@@ -732,65 +407,11 @@ def summary_lines(
         "value": total,
         "unit": "sec",
         "queries": times,
-        "runs_per_query": {
-            "base": BASE_RUNS,
-            "max": MAX_RUNS,
-            "at_max": sum(1 for n in run_counts.values() if n >= MAX_RUNS),
-        },
-        "spread_over_1p5x": noisy[:8] + (
-            [f"+{len(noisy) - 8}"] if len(noisy) > 8 else []
-        ),
         "sf": sf,
         "feed_events": n_events,
         "pipeline_events_per_sec": round(n_events / pipeline_sec, 1),
-        **e2e,
     }
     final = json.dumps(summary, separators=(",", ":"))
-    if len(final) > FINAL_LINE_BUDGET:
-        # shed the noisy-row NAME list first (its content is recoverable
-        # from the spread line + BENCH_DETAIL.json) — losing it costs a
-        # convenience field; truncating the queries dict would cost the
-        # dropped rows' medians
-        summary["spread_over_1p5x"] = len(noisy)
-        final = json.dumps(summary, separators=(",", ":"))
-    for derivable in (
-        # next shed tiers, cheapest information loss first: streaming
-        # fields DERIVABLE from the kept ones (delivered = rate*wall;
-        # per-client = rate/clients) or secondary (wall), then fields
-        # fully duplicated in BENCH_DETAIL.json (client_min_max rides
-        # every e2e sample there; runs_per_query is the spread line's
-        # "runs" dict).  clients, events_per_sec, and rate_min_max — the
-        # median+spread signal — always stay.
-        "streaming_e2e_events_per_sec_per_client",
-        "streaming_e2e_events_delivered",
-        "streaming_e2e_wall_sec",
-        "streaming_e2e_client_min_max",
-        "runs_per_query",
-    ):
-        if len(final) <= FINAL_LINE_BUDGET:
-            break
-        summary.pop(derivable, None)
-        final = json.dumps(summary, separators=(",", ":"))
-    if len(final) > FINAL_LINE_BUDGET:
-        # re-round query medians to 2 decimals before dropping any NAME:
-        # a complete dict at 10 ms resolution beats a 3-decimal dict
-        # missing rows (3-decimal medians stay on the spread line +
-        # BENCH_DETAIL.json)
-        summary["queries"] = {k: round(v, 2) for k, v in times.items()}
-        final = json.dumps(summary, separators=(",", ":"))
-    for derivable in (
-        # final tier before ANY query name is dropped (VERDICT r15
-        # what's-wrong #1): every one of these scalars is duplicated in
-        # BENCH_DETAIL.json, while a dropped query median is gone from
-        # the final line — the per-query dict outranks them all.
-        "spread_over_1p5x",
-        "feed_events",
-        "streaming_e2e_rate_min_max",
-    ):
-        if len(final) <= FINAL_LINE_BUDGET:
-            break
-        summary.pop(derivable, None)
-        final = json.dumps(summary, separators=(",", ":"))
     if len(final) > FINAL_LINE_BUDGET:
         lines.append(
             json.dumps(

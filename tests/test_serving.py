@@ -319,7 +319,7 @@ def _expected_feed(sf_dir: str) -> list[dict]:
 
 
 def _expected_frames_for_path(path: str, rows: list[dict]) -> list[str]:
-    """Pure-Python replica of the spec semantics for the FANOUT64 paths —
+    """Pure-Python replica of the spec semantics for FANOUT64_PATHS —
     type filter over BOTH streams, author/subreddit whitelists
     (single-entity per path, so no combiner subtleties), P2 key-subset
     at emit (sse.py:234-237)."""
@@ -353,36 +353,95 @@ def _expected_frames_for_path(path: str, rows: list[dict]) -> list[str]:
     return out
 
 
+#: 8 distinct compiled predicates x 8 clients each over the ONE shared
+#: streaming query: firehose, both type filters, subreddit/author
+#: whitelists, and JSON key-subset projections.  Values match the
+#: testdata generator's derived feed (author = u{user_id%50}, subreddit =
+#: event_type, props = {"k": N}).
+FANOUT64_PATHS = (
+    "/",
+    "/?type=comments",
+    "/?type=submissions",
+    "/?subreddit=view",
+    "/?subreddit=view&subreddit=error",
+    "/?author=u1&author=u2&author=u3",
+    "/?type=comments&filter=k",
+    "/?filter=nope",
+)
+
+
+def _read_frames(sock, buf: bytes, want: int, deadline: float) -> list[str]:
+    """De-chunk the SSE body on ``sock`` (``buf`` holds what arrived after
+    the response head) until it holds ``want`` frames, the stream ends or
+    ``deadline`` (monotonic) passes; return its frames."""
+    body = b""
+    while body.count(b"\n\n") < want:
+        size, sep, rest = buf.partition(b"\r\n")
+        if sep and len(rest) >= int(size, 16) + 2:
+            n = int(size, 16)
+            body, buf = body + rest[:n], rest[n + 2 :]
+            continue
+        left = deadline - time.monotonic()
+        if left <= 0:
+            break
+        sock.settimeout(left)
+        try:
+            data = sock.recv(1 << 16)
+        except TimeoutError:
+            break
+        if not data:
+            break
+        buf += data
+    return [f + "\n\n" for f in body.decode().split("\n\n") if f]
+
+
 def test_fanout64_heterogeneous_per_client_frames(spark, sf_dir):
-    """VERDICT r10 next #7: the ONE-query/N-clients design at an N that
-    matters — 64 concurrent HTTP clients over 8 DISTINCT compiled specs
-    (firehose, both type filters, subreddit/author whitelists, JSON
-    key-subset projections) against the real reddit_feed source ->
-    foreachBatch -> SSEBroadcaster -> SSEServer path.  Every client's
+    """The ONE-query/N-clients design at an N that matters: 64 concurrent
+    HTTP clients over 8 DISTINCT compiled specs against the real
+    reddit_feed source -> foreachBatch -> SSEBroadcaster -> SSEServer
+    path, fed rc + rs the way ``serve`` unions them.  Every client's
     delivered frame multiset must equal an expectation computed
     independently from the raw parquet with pure Python."""
-    import bench
+    from reddit_sse_stream_spark.streaming.source import read_feed_stream
 
-    result = bench.streaming_e2e(
-        spark,
-        sf_dir,
-        n_clients=64,
-        paths=bench.FANOUT64_PATHS,
-        capture=True,
-        streams=("rc", "rs"),
-    )
-    assert result["streaming_e2e_clients"] == 64
     rows = _expected_feed(sf_dir)
     assert any(r["event"] == "rc" for r in rows), "testdata has no rc"
     assert any(r["event"] == "rs" for r in rows), "testdata has no rs"
-    expected = {
-        p: _expected_frames_for_path(p, rows) for p in bench.FANOUT64_PATHS
-    }
-    # with BOTH streams fed (VERDICT r14 next #5) every path delivers —
-    # the submissions dispatch path is no longer measured at zero work
+    expected = {p: _expected_frames_for_path(p, rows) for p in FANOUT64_PATHS}
+    # with BOTH streams fed every path delivers, the submissions dispatch
+    # path included
     assert all(expected.values())
-    for i, frames in enumerate(result["frames"]):
-        path = bench.FANOUT64_PATHS[i % len(bench.FANOUT64_PATHS)]
+    paths = [FANOUT64_PATHS[i % len(FANOUT64_PATHS)] for i in range(64)]
+
+    bc = SSEBroadcaster()
+    srv = SSEServer(bc).start()
+    # every client is registered before its response head arrives, so
+    # none misses the first micro-batch
+    clients = [_raw_sse(srv.port, p) for p in paths]
+    try:
+        assert len(bc._clients) == 64
+        events = f"{sf_dir}/events.parquet"
+        rc = read_feed_stream(spark, events, "rc", backfill=100000)
+        rs = read_feed_stream(spark, events, "rs", backfill=100000)
+        q = rc.unionByName(rs).writeStream.foreachBatch(bc.foreach_batch).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        deadline = time.monotonic() + 60
+        got = [
+            _read_frames(sock, buf, len(expected[p]), deadline)
+            for (sock, buf), p in zip(clients, paths)
+        ]
+        # every frame the broadcaster queued, delivered or not: no client
+        # was handed more than its expectation
+        queued = sorted(st.base_seq + len(st.frames) for st in bc._clients.values())
+    finally:
+        for sock, _ in clients:
+            sock.close()
+        srv.stop()
+    assert queued == sorted(len(expected[p]) for p in paths)
+    for i, (frames, path) in enumerate(zip(got, paths)):
         assert sorted(frames) == sorted(expected[path]), (
             f"client {i} ({path}): got {len(frames)} frames, "
             f"want {len(expected[path])}"
@@ -390,12 +449,11 @@ def test_fanout64_heterogeneous_per_client_frames(spark, sf_dir):
     # same-spec clients received byte-identical streams (the by-spec
     # sharing in foreach_batch); the firehose is the disjoint union of
     # the two type-filtered streams
-    per = result["per_path_delivered"]
-    assert per["/"]["min"] == per["/"]["max"]
-    assert per["/"]["min"] == (
-        per["/?type=comments"]["min"] + per["/?type=submissions"]["min"]
-    )
-    assert per["/?type=submissions"]["min"] > 0
-    assert per["/?type=submissions"]["min"] == (
-        per["/?type=submissions"]["max"]
-    )
+    by_path: dict[str, list[list[str]]] = {}
+    for frames, path in zip(got, paths):
+        by_path.setdefault(path, []).append(frames)
+    for path, streams in by_path.items():
+        assert all(s == streams[0] for s in streams), path
+    n = {p: len(s[0]) for p, s in by_path.items()}
+    assert n["/"] == n["/?type=comments"] + n["/?type=submissions"]
+    assert n["/?type=submissions"] > 0

@@ -1,9 +1,9 @@
-"""Per-row overhead profiler for the optimization round: splits each
-query's wall time into (a) DataFrame BUILD (driver-side Python incl. any
-training actions the builder runs) and (b) the noop-sink EXECUTE, and
-records the Spark job/stage counts each phase issued — the fixed-overhead
-axes (driver syncs, scheduling boundaries, Catalyst work) that dominate
-at bench scale where the data itself is tiny.
+"""Per-row overhead profiler: splits each query's wall time into (a)
+DataFrame BUILD (driver-side Python incl. any training actions the builder
+runs) and (b) the noop-sink EXECUTE, and records the Spark jobs each phase
+issued — the fixed-overhead axes (driver syncs, scheduling boundaries,
+Catalyst work) that dominate at bench scale where the data itself is tiny.
+The split is ``bench.profile_row``, the same one every bench row records.
 
 Usage: python tools/profile_rows.py [sf_dir] query [query ...]
        python tools/profile_rows.py --runs 3 /root/testdata/sf0.1 knn_ivfpq_topk
@@ -14,35 +14,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import profile_row
 from reddit_sse_stream_spark.plans.catalog import QUERIES
 from reddit_sse_stream_spark.session import get_spark, release_local_checkpoints
-
-
-def profile(spark, name: str, sf_dir: str) -> dict:
-    st = spark.sparkContext.statusTracker()
-    j0 = len(st.getJobIdsForGroup(None) or [])
-    spark.sparkContext.setJobDescription(f"profile:{name}:build")
-    t0 = time.perf_counter()
-    df = QUERIES[name].spark(spark, sf_dir)
-    t1 = time.perf_counter()
-    j1 = len(st.getJobIdsForGroup(None) or [])
-    spark.sparkContext.setJobDescription(f"profile:{name}:execute")
-    df.write.format("noop").mode("overwrite").save()
-    t2 = time.perf_counter()
-    j2 = len(st.getJobIdsForGroup(None) or [])
-    spark.sparkContext.setJobDescription(None)
-    release_local_checkpoints(spark)
-    return {
-        "build_s": round(t1 - t0, 3),
-        "exec_s": round(t2 - t1, 3),
-        "total_s": round(t2 - t0, 3),
-        "build_jobs": j1 - j0,
-        "exec_jobs": j2 - j1,
-    }
 
 
 def main() -> None:
@@ -68,7 +45,7 @@ def main() -> None:
         release_local_checkpoints(spark)
     out: dict[str, list] = {}
     for name in names:
-        out[name] = [profile(spark, name, sf_dir) for _ in range(runs)]
+        out[name] = [profile_row(spark, name, sf_dir) for _ in range(runs)]
     print(json.dumps(out, indent=1))
 
 
