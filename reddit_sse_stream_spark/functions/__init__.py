@@ -1,7 +1,3 @@
-"""Reusable Column helpers: the reference's scalar surface (X1-X10,
-SURVEY.md §2.6) plus engine utilities (observed metrics, salted joins)."""
-
-from reddit_sse_stream_spark.functions.observability import observed_feed_counters
-from reddit_sse_stream_spark.functions.skew import salted_join
-
-__all__ = ["observed_feed_counters", "salted_join"]
+"""Reusable Column helpers: data-quality expectation checks
+(:mod:`reddit_sse_stream_spark.functions.expectations`).  Import the
+submodule; this package re-exports nothing."""

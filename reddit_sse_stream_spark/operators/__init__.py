@@ -1,34 +1,4 @@
-"""Operator library: projection, merge/sort, dedup (exact / minhash-LSH /
-simhash), text analysis, similarity search (brute force / LSH / MLlib /
-IVF), multimodal plumbing."""
-
-from reddit_sse_stream_spark.operators.dedup import (
-    exact_dedup_groups,
-    exact_dedup_keep_first,
-    minhash_features_fast,
-    near_dup_pairs,
-    simhash,
-)
-from reddit_sse_stream_spark.operators.merge import event_time_sort, interleave
-from reddit_sse_stream_spark.operators.projection import json_get, json_key_subset
-from reddit_sse_stream_spark.operators.similarity import brute_force_topk, cosine, lsh_topk
-from reddit_sse_stream_spark.operators.text import fingerprint, lang_scores, quality_score, token_count
-
-__all__ = [
-    "exact_dedup_groups",
-    "exact_dedup_keep_first",
-    "minhash_features_fast",
-    "near_dup_pairs",
-    "simhash",
-    "interleave",
-    "event_time_sort",
-    "json_get",
-    "json_key_subset",
-    "brute_force_topk",
-    "cosine",
-    "lsh_topk",
-    "token_count",
-    "quality_score",
-    "lang_scores",
-    "fingerprint",
-]
+"""Operator library: projection, dedup (exact / minhash-LSH / simhash),
+text analysis, similarity search (brute force / LSH / MLlib / IVF), corpus
+plumbing, packing, sketches, layout keys, time series and multimodal
+columns.  Import the submodule you need; this package re-exports nothing."""

@@ -59,9 +59,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so catalog queries can be written
-    in either DataFrame or SQL form against the same names DuckDB uses."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -1,4 +1,4 @@
-"""Operator-level unit tests: P2 projection edge cases, merge sort, dedup
+"""Operator-level unit tests: P2 projection edge cases, dedup
 family, text functions, vector math vs numpy ground truth."""
 
 from __future__ import annotations
@@ -9,7 +9,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from reddit_sse_stream_spark.operators import dedup, merge, multimodal, projection, similarity, text
+from reddit_sse_stream_spark.operators import dedup, multimodal, projection, similarity, text
 from reddit_sse_stream_spark.sources.tables import load_table
 
 
@@ -35,16 +35,6 @@ def test_p2_values_stay_strings(spark):
     df = spark.createDataFrame([('{"k": 87}',)], "json string")
     out = df.select(projection.json_key_subset("json", ["k"]).alias("d")).first()[0]
     assert json.loads(out) == {"k": "87"}
-
-
-# ------------------------------------------------------------------- merge
-
-
-def test_m1_m2_interleave_and_sort(spark):
-    rc = spark.createDataFrame([(1, "rc", 300), (2, "rc", 100)], "id long, event string, created_utc long")
-    rs = spark.createDataFrame([(3, "rs", 200), (4, "rs", 100)], "id long, event string, created_utc long")
-    got = [tuple(r) for r in merge.event_time_sort(merge.interleave(rc, rs)).collect()]
-    assert got == [(2, "rc", 100), (4, "rs", 100), (3, "rs", 200), (1, "rc", 300)]
 
 
 # ------------------------------------------------------------------- dedup

@@ -3,9 +3,9 @@
 Builds the static import graph (AST, no imports executed) from the
 program's roots — ``python -m reddit_sse_stream_spark``, the catalog, the
 bench, the examples, the tools and the perfbench harness — and fails if a
-``reddit_sse_stream_spark`` module is imported only by tests.  A module
-that is test-only on purpose goes on ``ALLOWED_UNREACHED`` with its reason;
-the list must stay exact, so an entry that gains a real caller fails too.
+``reddit_sse_stream_spark`` module is imported only by tests.  Package
+``__init__.py`` files import nothing, so a re-export cannot count as a
+caller: every module needs a real non-test importer.
 """
 
 from __future__ import annotations
@@ -17,13 +17,6 @@ import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 PKG = "reddit_sse_stream_spark"
-
-#: test-only modules kept on purpose: module -> why
-ALLOWED_UNREACHED = {
-    f"{PKG}.streaming.client_source": "README's switching table: ingest an SSE endpoint as a stream",
-    f"{PKG}.sources.redis_adapter": "README's switching table: the reference's Redis key layout",
-}
-
 
 def _roots() -> list[Path]:
     files = [
@@ -87,14 +80,17 @@ def reachable() -> set[str]:
     return seen
 
 
+def test_package_inits_import_nothing():
+    # a re-export would make its module look reached by whatever imports
+    # the package
+    importing = sorted(
+        _module_name(p)
+        for p in (REPO / PKG).rglob("__init__.py")
+        if any(isinstance(n, (ast.Import, ast.ImportFrom)) for n in ast.walk(ast.parse(p.read_text())))
+    )
+    assert not importing, f"package __init__ files with imports: {importing}"
+
+
 def test_every_package_module_has_a_non_test_importer(reachable):
-    # reached only through its package's __init__: pins that rule
-    assert f"{PKG}.functions.observability" in reachable
-    unreached = sorted(set(_package_modules()) - reachable - ALLOWED_UNREACHED.keys())
+    unreached = sorted(set(_package_modules()) - reachable)
     assert not unreached, f"package modules only tests reach: {unreached}"
-
-
-def test_allow_list_is_exact(reachable):
-    mods = _package_modules()
-    stale = sorted(m for m in ALLOWED_UNREACHED if m not in mods or m in reachable)
-    assert not stale, f"allow-listed modules that are gone or now reached: {stale}"

@@ -1,6 +1,6 @@
 """End-to-end serving tests: HTTP SSE endpoint (param parsing, 400 paths,
-frame streaming), the Redis-layout adapter against a protocol-faithful fake,
-observed metrics and salted joins."""
+frame streaming, shutdown) and a 64-client heterogeneous fan-out against an
+independent oracle."""
 
 from __future__ import annotations
 
@@ -13,9 +13,6 @@ import time
 
 import pytest
 
-from reddit_sse_stream_spark.functions import observed_feed_counters, salted_join
-from reddit_sse_stream_spark.sources.feed import feed_df
-from reddit_sse_stream_spark.sources.redis_adapter import RedisFeedAdapter
 from reddit_sse_stream_spark.spec import QuerySpec
 from reddit_sse_stream_spark.streaming.sink import KEEP_ALIVE_INTERVAL, SSEBroadcaster
 from reddit_sse_stream_spark.streaming.server import SSEServer
@@ -160,134 +157,6 @@ def test_server_stop_wakes_an_idle_handler():
     assert bc._clients == {}
     assert sock.recv(4096) == b""  # the server closed the stream
     sock.close()
-
-
-# ------------------------------------------------------------ Redis adapter
-
-
-class FakePipeline:
-    def __init__(self, store):
-        self.store = store
-        self.ops = []
-
-    def get(self, key):
-        self.ops.append(("get", key))
-
-    def hgetall(self, key):
-        self.ops.append(("hgetall", key))
-
-    def execute(self):
-        out = []
-        for op, key in self.ops:
-            if op == "get":
-                out.append(self.store.get(key))
-            else:
-                out.append(self.store.get(key, {}))
-        self.ops = []
-        return out
-
-
-class FakeRedis:
-    """Pipeline-compatible in-memory stand-in (bytes in, bytes out, like
-    redis-py without decode_responses)."""
-
-    def __init__(self, store):
-        self.store = store
-        self.pipeline_calls = 0
-
-    def pipeline(self):
-        self.pipeline_calls += 1
-        return FakePipeline(self.store)
-
-
-def _store():
-    s = {"rc:max_id": b"4", "rs:max_id": b"1"}
-    for i in (0, 1, 3):  # id 2 missing -> gap; id 4 beyond written data
-        s[f"rc:id:{i}"] = {
-            b"json": b'{"x":"%d"}' % i,
-            b"created_utc": str(100 + i).encode(),
-            b"author": b"a",
-            b"subreddit": b"s",
-        }
-    return s
-
-
-def test_adapter_max_ids_single_roundtrip():
-    fake = FakeRedis(_store())
-    rc, rs = RedisFeedAdapter(fake, "rc").max_ids()
-    assert (rc, rs) == (4, 1)
-    assert fake.pipeline_calls == 1  # S2: one pipelined round-trip
-
-
-def test_adapter_poll_gap_and_was_full():
-    fake = FakeRedis(_store())
-    ad = RedisFeedAdapter(fake, "rc", buffer_size=5)
-    poll = ad.poll(-1)
-    assert [r["id"] for r in poll.rows] == [0, 1, 3]  # gap at 2 skipped (S5)
-    assert poll.cursor == 3
-    assert poll.was_full is False  # missing ids clear the flag (sse.py:183)
-    assert fake.pipeline_calls == 1  # S1: one pipelined round-trip per poll
-
-
-def test_adapter_poll_full_window_sets_fast_poll_flag():
-    store = _store()
-    store["rc:id:2"] = {b"json": b'{"x":"2"}', b"created_utc": b"102",
-                       b"author": b"a", b"subreddit": b"s"}
-    ad = RedisFeedAdapter(FakeRedis(store), "rc", buffer_size=3)
-    poll = ad.poll(-1)
-    assert poll.was_full is True  # caller fast-polls at 25ms (S6)
-    assert poll.cursor == 2
-
-
-# --------------------------------------------------------- observed metrics
-
-
-def test_observe_batch_counters(spark, sf_dir):
-    fd = feed_df(spark, sf_dir)
-    observed, obs = observed_feed_counters(fd)
-    observed.write.format("noop").mode("overwrite").save()
-    got = obs.get
-    expected = fd.groupBy().pivot("event").count().first()
-    assert got["tcs"] == expected["rc"]
-    assert got["tss"] == expected["rs"]
-    assert got["tbs"] > 0
-
-
-def test_observe_streaming_counters(spark):
-    from reddit_sse_stream_spark.streaming.source import read_feed_stream
-
-    stream = read_feed_stream(
-        spark, "/root/testdata/sf0.001/events.parquet", "rc",
-        backfill=100000, max_ids_per_batch=100000,
-    )
-    observed, _ = observed_feed_counters(stream, name="stream_stats")
-    q = observed.writeStream.format("noop").start()
-    q.processAllAvailable()
-    progress = q.lastProgress
-    q.stop()
-    metrics = progress["observedMetrics"]["stream_stats"]
-    assert metrics["tcs"] > 0 and metrics["tss"] == 0
-    assert metrics["tbs"] > 0
-
-
-# --------------------------------------------------------------- salted join
-
-
-def test_salted_join_matches_plain_join(spark, sf_dir):
-    ev = feed_df(spark, sf_dir).select("id", "subreddit", "author")
-    dim = spark.createDataFrame(
-        [("click", 1.5), ("view", 1.0), ("purchase", 3.0)], "subreddit string, weight double"
-    )
-    plain = ev.join(dim, "subreddit").select("id", "weight")
-    salted = salted_join(ev, dim, "subreddit", num_salts=4).select("id", "weight")
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_salted_join_left_preserves_unmatched(spark, sf_dir):
-    ev = feed_df(spark, sf_dir).select("id", "subreddit")
-    dim = spark.createDataFrame([("click", 1.5)], "subreddit string, weight double")
-    left = salted_join(ev, dim, "subreddit", num_salts=4, how="left")
-    assert left.count() == ev.count()
 
 
 # ----------------------------------------------- 64-client heterogeneous e2e

@@ -192,13 +192,20 @@ def test_sink_m2_sort_and_framing():
     clock = lambda: 1000.0  # noqa: E731
     bc = SSEBroadcaster(clock=clock)
     st = bc.register("c1", QuerySpec())
-    bc.publish(ROWS)
+    # rc 5 and rs 4 tie with rc 2 on created_utc: ties break on id, not on
+    # stream or arrival order
+    bc.publish(ROWS + _fake_rows([
+        (5, "rc", "carol", "news", None, None, None, 100, '{"a":"5"}'),
+        (4, "rs", "dave", "news", "example.com", False, True, 100, '{"a":"4"}'),
+    ]))
     assert st.frames == [
         format_frame(2, "rc", '{"a":"2"}'),
+        format_frame(4, "rs", '{"a":"4"}'),
+        format_frame(5, "rc", '{"a":"5"}'),
         format_frame(3, "rs", '{"a":"3"}'),
         format_frame(1, "rc", '{"a":"1","b":"2"}'),
     ]
-    assert st.tcs == 2 and st.tss == 1
+    assert st.tcs == 3 and st.tss == 2
     assert st.tbs == sum(len(f) for f in st.frames)
 
 
@@ -685,200 +692,6 @@ def test_observe_metrics_match_reference_counters(spark, sf_dir):
     assert m["rc_total"] == kept
     assert m["events_total"] == feed_df(spark, sf_dir).count()
     assert m["bytes_total"] > 0
-
-
-# ------------------------------------------------- SSE client ingest source
-
-
-def test_sse_parse_frames_and_tail():
-    from reddit_sse_stream_spark.streaming.client_source import _parse_frames
-
-    buf = (
-        b"id: 1\nevent: rc\ndata: {\"a\":1}\n\n"
-        b"id: 2\nevent: rs\ndata: {\"b\":2}\n\n"
-        b"id: 3\nevent: rc\ndata: {\"c"  # incomplete frame stays in tail
-    )
-    rows, tail = _parse_frames(buf)
-    assert rows == [(1, "rc", '{"a":1}'), (2, "rs", '{"b":2}')]
-    assert tail.startswith(b"id: 3")
-    # keepalive frames (no integer id) surface with id=None
-    rows2, _ = _parse_frames(b"event: keep_alive\ndata: {}\n\n")
-    assert rows2 == [(None, "keep_alive", "{}")]
-
-
-def test_sse_client_replay_cache_exact():
-    from reddit_sse_stream_spark.streaming.client_source import (
-        SSEClientSimpleReader,
-    )
-
-    r = SSEClientSimpleReader({"url": "http://unused/"})
-    # simulate two reads without a socket by priming the cache directly
-    r._batches[0] = [(1, "rc", "a"), (2, "rc", "b")]
-    r._batches[2] = [(3, "rc", "c")]
-    assert list(r.readBetweenOffsets({"n": 0}, {"n": 2})) == r._batches[0]
-    # coalesced replay across two cached batches
-    assert list(r.readBetweenOffsets({"n": 0}, {"n": 3})) == [
-        (1, "rc", "a"),
-        (2, "rc", "b"),
-        (3, "rc", "c"),
-    ]
-    r.commit({"n": 2})
-    assert 0 not in r._batches and 2 in r._batches
-
-
-def test_sse_client_replay_gap_fails_loudly():
-    """A replay range the process-local cache cannot cover (fresh reader
-    after a driver restart) must RAISE, not return a truncated iterator —
-    Spark would otherwise commit a short batch: silent data loss (ADVICE
-    r05 medium)."""
-    import pytest as _pytest
-
-    from reddit_sse_stream_spark.streaming.client_source import (
-        SSEClientSimpleReader,
-    )
-
-    fresh = SSEClientSimpleReader({"url": "http://unused/"})
-    with _pytest.raises(RuntimeError, match="replay cache cannot cover"):
-        list(fresh.readBetweenOffsets({"n": 0}, {"n": 2}))
-    # a gap in the MIDDLE of a coalesced range fails too
-    partial = SSEClientSimpleReader({"url": "http://unused/"})
-    partial._batches[0] = [(1, "rc", "a")]
-    with _pytest.raises(RuntimeError, match="offset 1 is missing"):
-        list(partial.readBetweenOffsets({"n": 0}, {"n": 3}))
-
-
-def test_sse_client_source_round_trip(spark, sf_dir):
-    """Serve the feed over the engine's own SSE server and INGEST it back
-    through the sse_client DataSource: every broadcast rc frame must come
-    back as a streaming row with the same id and payload — the wire-format
-    loop a reference migration needs (their consumers point at us; we can
-    drain a live reference deployment)."""
-    import json as _json
-    import time as _time
-
-    from reddit_sse_stream_spark.sources.feed import feed_df
-    from reddit_sse_stream_spark.streaming.client_source import read_sse_stream
-    from reddit_sse_stream_spark.streaming.server import SSEServer
-    from reddit_sse_stream_spark.streaming.sink import SSEBroadcaster
-
-    bc = SSEBroadcaster()
-    srv = SSEServer(bc).start()
-    try:
-        stream = read_sse_stream(
-            spark,
-            f"http://127.0.0.1:{srv.port}/?type=comments",
-            poll_timeout_sec=0.5,
-        )
-        q = (
-            stream.filter(F.col("event") == "rc")
-            .writeStream.format("memory")
-            .queryName("sse_ingest")
-            .outputMode("append")
-            .start()
-        )
-        # wait for the HTTP client (the reader's persistent connection) to
-        # register with the broadcaster before pushing frames
-        deadline = _time.time() + 60
-        while not bc._clients and _time.time() < deadline:
-            _time.sleep(0.1)
-        assert bc._clients, "SSE client never connected"
-        batch = feed_df(spark, sf_dir).filter(F.col("event") == "rc").limit(50)
-        sent = {r["id"]: r["json"] for r in batch.collect()}
-        bc.foreach_batch(batch, 0)
-        deadline = _time.time() + 120
-        got = {}
-        while len(got) < len(sent) and _time.time() < deadline:
-            _time.sleep(0.5)
-            got = {
-                r["id"]: r["data"]
-                for r in spark.sql("SELECT * FROM sse_ingest").collect()
-            }
-        q.stop()
-        assert set(got) == set(sent)
-        for i, payload in sent.items():
-            assert _json.loads(got[i]) == _json.loads(payload)
-    finally:
-        srv.stop()
-
-
-def test_sse_relay_ingest_transform_reserve(spark, sf_dir):
-    """Relay topology — the migration bridge: ingest an upstream SSE feed
-    (server A, standing in for a live reference deployment) through the
-    sse_client source, reshape it in the streaming plan, and RE-SERVE it
-    over this engine's own broadcaster (server B).  A downstream consumer
-    of B must receive exactly the rc frames A emitted, payload-intact —
-    proving a reference client can sit BEHIND this engine unchanged while
-    the stream flows through a Spark plan in the middle."""
-    import time as _time
-
-    from reddit_sse_stream_spark.sources.feed import feed_df
-    from reddit_sse_stream_spark.streaming.client_source import (
-        _RawSSEConnection,
-        _parse_frames,
-        read_sse_stream,
-    )
-    from reddit_sse_stream_spark.streaming.server import SSEServer
-    from reddit_sse_stream_spark.streaming.sink import SSEBroadcaster
-
-    bc_a = SSEBroadcaster()
-    srv_a = SSEServer(bc_a).start()
-    bc_b = SSEBroadcaster()
-    srv_b = SSEServer(bc_b).start()
-    q = None
-    down = None
-    try:
-        stream = read_sse_stream(
-            spark,
-            f"http://127.0.0.1:{srv_a.port}/?type=comments",
-            poll_timeout_sec=0.5,
-        )
-        # reshape SSE frames back into the feed schema the broadcaster
-        # serves (payload rides in json; id doubles as the sort key)
-        relayed = stream.filter(F.col("event") == "rc").select(
-            "id",
-            "event",
-            F.lit(None).cast("string").alias("author"),
-            F.lit(None).cast("string").alias("subreddit"),
-            F.lit(None).cast("string").alias("domain"),
-            F.lit(None).cast("boolean").alias("over_18"),
-            F.lit(None).cast("boolean").alias("is_self"),
-            F.col("id").alias("created_utc"),
-            F.col("data").alias("json"),
-        )
-        q = relayed.writeStream.foreachBatch(bc_b.foreach_batch).start()
-        # upstream client (the spark source) must be connected to A before
-        # frames are pushed
-        deadline = _time.time() + 60
-        while not bc_a._clients and _time.time() < deadline:
-            _time.sleep(0.1)
-        assert bc_a._clients, "relay never connected to upstream"
-        # downstream consumer on B
-        down = _RawSSEConnection(f"http://127.0.0.1:{srv_b.port}/?type=comments")
-        deadline = _time.time() + 60
-        while len(bc_b._clients) == 0 and _time.time() < deadline:
-            _time.sleep(0.1)
-        assert bc_b._clients, "downstream consumer never connected"
-        batch = feed_df(spark, sf_dir).filter(F.col("event") == "rc").limit(30)
-        sent = {r["id"]: r["json"] for r in batch.collect()}
-        bc_a.foreach_batch(batch, 0)
-        got = {}
-        tail = b""
-        deadline = _time.time() + 120
-        while len(got) < len(sent) and _time.time() < deadline:
-            tail += down.poll(0.5)
-            rows, tail = _parse_frames(tail)
-            for fid, ev, data in rows:
-                if ev == "rc":
-                    got[fid] = data
-        assert set(got) == set(sent)
-        assert all(json.loads(got[i]) == json.loads(sent[i]) for i in sent)
-    finally:
-        if q is not None:
-            q.stop()
-        if down is not None:
-            down.close()
-        srv_a.stop()
-        srv_b.stop()
 
 
 def test_streaming_session_window_closed_sessions_match_batch(spark, sf_dir, tmp_path):
