@@ -112,10 +112,9 @@ HEADLINE = (
     "search_rm3_expansion",
     "pref_bradley_terry_strength",
     # The IVF nprobe tuning curve and the binned interval-overlap join
-    # stay out of the headline: both are in the scale-sweep roster, which
-    # is the scaling evidence that matters for them (their absolute cost
-    # is ANN-family/join-family shaped, already priced by knn_ivfpq_* and
-    # join_* rows here).
+    # stay out of the headline: their absolute cost is ANN-family/
+    # join-family shaped, already priced by knn_ivfpq_* and join_* rows
+    # here.
 )
 
 #: Every row runs this many times and records the plain median of its

@@ -676,27 +676,19 @@ def lsh_recall_audit(
     )
 
 
-def simhash(docs: DataFrame, bits: int = 64, hash_fn=None, impl: str = "arrow") -> DataFrame:
+def simhash(docs: DataFrame, bits: int = 64, hash_fn=None) -> DataFrame:
     """(doc_id, simhash BIGINT): sign-aggregated token-hash fingerprint.
 
     Token hashing stays JVM-side behind the ``hash_fn`` seam (default
     xxhash64; pass :func:`md5_hash60` with ``bits<=60`` for the
-    ANSI-oracle-able variant — both impls then produce bit-identical
-    codes, so the md5 oracle stays green on either).
+    ANSI-oracle-able variant).
 
-    The per-bit +/-1 vote + sign-pack step has two implementations:
-
-    - ``impl="arrow"`` (default): ONE Arrow-batched pandas UDF over the
-      token-hash array — a numpy (n_tokens x bits) popcount matrix per
-      row.  This is the 100 TB path: one Python boundary crossing per
-      batch, embarrassingly parallel, no shuffle.
-    - ``impl="hof"``: the original unrolled ``F.aggregate`` chain — kept
-      for the cross-impl equality test.  Spark HOFs are CodegenFallback
-      (interpreted), and this shape runs ``bits`` separate interpreted
-      passes over every row's token array, which this module's own
-      measurements flag as the dominating cost beyond ~1e4 evaluations —
-      do not use it at scale.
+    The per-bit +/-1 vote + sign-pack step is ONE Arrow-batched pandas
+    UDF over the token-hash array — a numpy (n_tokens x bits) popcount
+    matrix per row: one Python boundary crossing per batch, no shuffle.
     """
+    from pyspark.sql.functions import pandas_udf
+
     if hash_fn is None:
         hash_fn = F.xxhash64
     # token barrier: hashing lambda sees an attribute, so split isn't
@@ -705,41 +697,19 @@ def simhash(docs: DataFrame, bits: int = 64, hash_fn=None, impl: str = "arrow") 
         "doc_id", F.transform(F.col("_w"), lambda t: hash_fn(t)).alias("th")
     )
 
-    if impl == "arrow":
-        from pyspark.sql.functions import pandas_udf
+    @pandas_udf("long")
+    def _pack(col: pd.Series) -> pd.Series:
+        shifts = np.arange(bits, dtype=np.uint64)
+        out = np.empty(len(col), dtype=np.uint64)
+        for i, arr in enumerate(col):
+            h = np.asarray(arr, dtype=np.int64).astype(np.uint64)
+            # (n_tokens, bits) bit matrix; vote(b) = 2*ones - n_tokens
+            ones = ((h[:, None] >> shifts) & np.uint64(1)).sum(axis=0)
+            mask = (2 * ones) > len(h)  # vote > 0
+            out[i] = np.sum(mask.astype(np.uint64) << shifts, dtype=np.uint64)
+        return pd.Series(out.view(np.int64))
 
-        n_bits = bits
-
-        @pandas_udf("long")
-        def _pack(col: pd.Series) -> pd.Series:
-            shifts = np.arange(n_bits, dtype=np.uint64)
-            out = np.empty(len(col), dtype=np.uint64)
-            for i, arr in enumerate(col):
-                h = np.asarray(arr, dtype=np.int64).astype(np.uint64)
-                # (n_tokens, bits) bit matrix; vote(b) = 2*ones - n_tokens
-                ones = ((h[:, None] >> shifts) & np.uint64(1)).sum(axis=0)
-                mask = (2 * ones) > len(h)  # vote > 0
-                out[i] = np.sum(mask.astype(np.uint64) << shifts, dtype=np.uint64)
-            return pd.Series(out.view(np.int64))
-
-        return th.select("doc_id", _pack("th").alias("simhash"))
-
-    # vote(b) = sum over tokens of (bit b set ? +1 : -1); shift amounts must
-    # be literal ints for shiftright, so unroll the (fixed) bit loop.
-    def _voter(b: int):
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-        ).otherwise(F.lit(-1))
-
-    packed = F.lit(0).cast("long")
-    for b in range(bits):
-        vote = F.aggregate(F.col("th"), F.lit(0).cast("long"), _voter(b))
-        packed = packed.bitwiseOR(
-            F.when(vote > 0, F.lit(1 << b if b < 63 else -(1 << 63)).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return th.select("doc_id", packed.alias("simhash"))
+    return th.select("doc_id", _pack("th").alias("simhash"))
 
 
 def _unpersist_checkpoint(df: DataFrame) -> None:
@@ -1268,54 +1238,4 @@ def source_minhash_merge_invariant(
             F.lit(num_hashes).cast("long").alias("n_slots"),
             F.sum(mismatch).cast("long").alias("n_mismatch"),
         )
-    )
-
-
-def gram_candidate_bound(
-    docs: DataFrame,
-    n: int = 3,
-    df_cap: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """The gram-join family's candidate-volume bound, as a 1-row audit
-    frame: ``(hot_grams, df2_cold, df2_all)`` over the SAME distinct
-    word-n-gram universe the containment/jaccard rows join on (lowered
-    text, md5 60-bit gram hashes, per-doc dedup).
-
-    - ``hot_grams``: grams hotter than ``df_cap`` docs — dropped from
-      candidate generation by the hot-gram guard;
-    - ``df2_cold``: Σ df(g)² over the COLD universe — the exact row count
-      entering the candidate equi-join (what actually scales the work);
-    - ``df2_all``: the uncapped Σ df(g)² — what the join would cost with
-      no guard.
-
-    SCALING.md's sweep regenerates this per scale factor every round
-    (VERDICT r11 next #6): the r10/r11 density experiments measured the
-    guard engaging once; this makes the bound a standing column instead
-    of a one-off experiment.  One gram exchange, 1-row output."""
-    words = F.split(F.lower(F.col(text_col)), r"\s+")
-    tok = docs.select(id_col, F.explode(F.array(words)).alias("words")).filter(
-        F.size("words") >= n
-    )
-    sh = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.size("words") - n),
-            lambda i: md5_hash60(F.concat_ws(" ", F.slice("words", i + 1, n))),
-        )
-    )
-    dfc = (
-        tok.select(id_col, F.explode(sh).alias("g")).groupBy("g").count()
-    )
-    cap = F.lit(df_cap)
-    return dfc.agg(
-        F.sum((F.col("count") > cap).cast("long")).alias("hot_grams"),
-        F.sum(
-            F.when(F.col("count") <= cap, F.col("count") * F.col("count")).otherwise(
-                F.lit(0)
-            )
-        )
-        .cast("long")
-        .alias("df2_cold"),
-        F.sum(F.col("count") * F.col("count")).cast("long").alias("df2_all"),
     )

@@ -125,89 +125,22 @@ def word_ngrams(df: DataFrame, n: int, text_col: str = "text") -> DataFrame:
     return tok.select("doc_id", F.explode(grams).alias("gram"))
 
 
-def word_ngram_hashes(
-    df: DataFrame, n: int, text_col: str = "text", impl: str = "jvm"
-) -> DataFrame:
+def word_ngram_hashes(df: DataFrame, n: int, text_col: str = "text") -> DataFrame:
     """(doc_id, gram_h): hash of each word n-gram — the scale-path join key
     for decontamination.  An 8-byte long crosses the shuffle instead of a
     40-60 byte gram string (the gram join was this repo's worst scaler
     when string-keyed).
 
-    Two implementations, same join semantics:
-
-    - ``impl="jvm"`` (default): xxhash64 over the built-in n-gram
-      expansion — whole-stage codegen, zero Python.  Caveat measured in
-      the physical plan: Catalyst re-inlines ``split(text)`` under the
-      Generate, so the expansion is O(doc_len x n_grams) per document.
-      For feed/web-scale documents (hundreds of words) the codegen
-      constant wins anyway — measured 6x faster than the kernel at
-      sf0.1.
-    - ``impl="arrow"``: one Arrow pass — tokenize once, crc32 each token
-      once (worker-lifetime memo — token frequency is Zipfian), numpy
-      rolling polynomial over sliding windows: O(doc_len) per document.
-      The path for LONG documents (books, transcripts: 10^5+ tokens),
-      where the JVM path's quadratic term dominates.
-
-    Hash semantics (why a kernel with a different hash family is still
-    correct): tokens contain no whitespace, so the joined gram string
-    determines the token tuple and vice versa — tuple-hash equality IS
-    gram-string equality modulo ~2^-61 collisions, and the kernel splits
-    on the explicit ASCII class ``[ \\t\\n\\r\\f\\v]+`` — exactly Java's
-    ``\\s`` (Python's own ``\\s`` is Unicode-aware and would diverge on
-    U+00A0/U+2028-class whitespace; both impls keep empty edge tokens).
+    xxhash64 over the built-in n-gram expansion (:func:`word_ngrams`):
+    whole-stage codegen, zero Python.  Tokens are split on Java's ``\\s``,
+    the ASCII class ``[ \\t\\n\\r\\f\\v]+`` (Unicode spaces such as
+    U+00A0/U+2028 are token characters), and empty edge tokens are kept.
     DuckDB's RE2 ``\\s`` is the same set minus ``\\v`` (U+000B) — an
     oracle-side-only caveat, and no testdata column carries vertical
-    tabs.  Distinct/overlap counts are
-    value-checked against the string-keyed DuckDB oracle at every test
-    SF, and the two impls are count-equivalence-tested against each
-    other (same verification pattern as minhash_features_fast)."""
-    if impl == "jvm":
-        return word_ngrams(df, n, text_col).select(
-            "doc_id", F.xxhash64("gram").alias("gram_h")
-        )
-
-    import numpy as np
-    import pandas as pd
-
-    p = (1 << 61) - 1
-
-    def batches(it):
-        import re
-        import zlib
-
-        from numpy.lib.stride_tricks import sliding_window_view
-
-        memo: dict[str, int] = {}
-
-        def tok_hash(t: str) -> int:
-            h = memo.get(t)
-            if h is None:
-                h = zlib.crc32(t.encode("utf-8")) % p
-                memo[t] = h
-            return h
-
-        # ASCII class, NOT \s: Python's \s is Unicode-aware (U+00A0,
-        # U+2028, ...) while Java's and RE2's \s match ASCII whitespace
-        # only — the two impls must tokenize identically on ANY input
-        # (ADVICE r04; the Unicode-whitespace fuzz cases pin this).
-        ws = re.compile(r"[ \t\n\r\f\v]+")
-        for pdf in it:
-            out_id, out_h = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                toks = ws.split(text)
-                if len(toks) < n:
-                    continue
-                th = np.array([tok_hash(t) for t in toks], dtype=np.int64)
-                win = sliding_window_view(th, n)
-                s = np.zeros(win.shape[0], dtype=np.int64)
-                for j in range(n):
-                    s = (s * 31 + win[:, j]) % p
-                out_id.extend([doc_id] * len(s))
-                out_h.extend(s.tolist())
-            yield pd.DataFrame({"doc_id": out_id, "gram_h": out_h})
-
-    return df.select("doc_id", text_col).mapInPandas(
-        batches, "doc_id long, gram_h long"
+    tabs.  Distinct/overlap counts are value-checked against the
+    string-keyed DuckDB oracle at every test SF."""
+    return word_ngrams(df, n, text_col).select(
+        "doc_id", F.xxhash64("gram").alias("gram_h")
     )
 
 

@@ -506,7 +506,7 @@ def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     hint on customer: at TPC-H proportions customer is ~15% of lineitem's
     rows, which OOMs a static broadcast at 100 TB — AQE converts the join
     to broadcast at runtime only when the filtered build side is genuinely
-    small (see EXPLAIN.md)."""
+    small (plan shape pinned in tests/test_plans.py)."""
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = _t(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1995-03-15 00:00:00").cast("timestamp")

@@ -74,11 +74,10 @@ def release_local_checkpoints(spark: SparkSession, full_gc: bool = True) -> int:
     by one (a connected_components result held across queries, a
     concurrently running query's intermediate) fails permanently on its
     next use.  Call it only at a quiescent point where no checkpoint-
-    backed frame is live: between bench/sweep queries (bench.py,
-    tools/scale_sweep.py — each query is rebuilt from its callable, so
-    nothing survives the boundary) or at end-of-suite.  Never call it
-    mid-query, from a concurrent thread, or while holding a frame you
-    intend to reuse.  (Per-operator checkpoint tracking would narrow the
+    backed frame is live: between bench queries (bench.py — each query
+    is rebuilt from its callable, so nothing survives the boundary) or at
+    end-of-suite.  Never call it mid-query, from a concurrent thread, or
+    while holding a frame you intend to reuse.  (Per-operator checkpoint tracking would narrow the
     blast radius; the session-wide sweep is kept because the library's
     operators deliberately leave no live checkpoint behind after their
     returned DataFrame is materialized, making "between queries" exactly

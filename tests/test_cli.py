@@ -5,14 +5,20 @@ reference-replacement loop (serve -> filter params -> SSE frames -> 400s)."""
 from __future__ import annotations
 
 import json
+import os
 import socket
 import subprocess
 import sys
+import threading
 import time
 import urllib.error
 import urllib.request
 
 import pytest
+
+EVENTS = "/root/testdata/sf0.001/events.parquet"
+#: the served feed starts with this many events; a test appends the rest
+FEED_START = 800
 
 
 def _free_port() -> int:
@@ -22,12 +28,32 @@ def _free_port() -> int:
 
 
 @pytest.fixture(scope="module")
-def served():
+def feed(tmp_path_factory):
+    """(path, events): a prefix of the event log that a test can grow, the
+    way the live feed grows under ``serve``."""
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(EVENTS)
+    path = str(tmp_path_factory.mktemp("feed") / "events.parquet")
+    pq.write_table(events.slice(0, FEED_START), path)
+    return path, events
+
+
+def _publish(feed, n_rows: int) -> None:
+    import pyarrow.parquet as pq
+
+    path, events = feed
+    pq.write_table(events.slice(0, n_rows), path + ".tmp")
+    os.replace(path + ".tmp", path)
+
+
+@pytest.fixture(scope="module")
+def served(feed):
     port = _free_port()
     proc = subprocess.Popen(
         [
             sys.executable, "-m", "reddit_sse_stream_spark", "serve",
-            "--events", "/root/testdata/sf0.001/events.parquet",
+            "--events", feed[0],
             "--backfill", "100000", "--port", str(port), "--poll-ms", "300",
         ],
         stdout=subprocess.DEVNULL,
@@ -73,3 +99,22 @@ def test_serve_validation_400(served):
     with pytest.raises(urllib.error.HTTPError) as exc:
         urllib.request.urlopen(f"{served}/?comment_backfill=x", timeout=10)
     assert exc.value.code == 400
+
+
+def test_consume_sse_stops_after_max_events(served, feed, capsys):
+    # a client joins at the live cursor, so grow the feed until it has read
+    from tools.consume_sse import main
+
+    codes = []
+    t = threading.Thread(
+        target=lambda: codes.append(main([f"{served}/", "--max", "2"])), daemon=True
+    )
+    t.start()
+    for n_rows in range(FEED_START + 10, feed[1].num_rows + 1, 10):
+        t.join(timeout=0.5)
+        if not t.is_alive():
+            break
+        _publish(feed, n_rows)
+    t.join(timeout=30)
+    assert codes == [0]
+    assert len(capsys.readouterr().out.splitlines()) == 2

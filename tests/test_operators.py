@@ -71,23 +71,30 @@ def test_simhash_exact_dups_equal_and_near_dups_close(docs):
     assert ham_near < ham_far
 
 
-def test_simhash_arrow_kernel_equals_hof(spark, sf_dir):
-    """The Arrow vote/pack kernel must be bit-identical to the interpreted
-    F.aggregate formulation, on BOTH hash seams (xxhash64/64-bit with
+def test_simhash_kernel_matches_python_vote(spark, sf_dir):
+    """The Arrow vote/pack kernel must equal a plain per-bit +/-1 vote over
+    the same JVM token hashes, on BOTH hash seams (xxhash64/64-bit with
     negative hashes exercising the sign bit, and md5/60-bit)."""
     docs = load_table(spark, sf_dir, "documents").limit(200)
-    for bits, hash_fn in [(64, None), (60, dedup.md5_hash60)]:
-        fast = {
+
+    def vote(hs, bits):
+        code = sum(
+            1 << b
+            for b in range(bits)
+            if sum(1 if (h >> b) & 1 else -1 for h in hs) > 0
+        )
+        return code - (1 << 64) if code >= 1 << 63 else code
+
+    for bits, hash_fn in [(64, F.xxhash64), (60, dedup.md5_hash60)]:
+        got = {
             r["doc_id"]: r["simhash"]
             for r in dedup.simhash(docs, bits=bits, hash_fn=hash_fn).collect()
         }
-        slow = {
-            r["doc_id"]: r["simhash"]
-            for r in dedup.simhash(
-                docs, bits=bits, hash_fn=hash_fn, impl="hof"
-            ).collect()
-        }
-        assert fast == slow
+        th = dedup._tokens_barrier(docs).select(
+            "doc_id", F.transform(F.col("_w"), lambda t: hash_fn(t)).alias("th")
+        )
+        want = {r["doc_id"]: vote(r["th"], bits) for r in th.collect()}
+        assert got == want
 
 
 def test_simhash_hamming_banding_is_complete(spark, sf_dir):
@@ -675,58 +682,18 @@ def test_word_ngrams_short_doc_guard(spark):
     assert bi.filter(F.col("doc_id") == 1).count() == 5
 
 
-def test_word_ngram_hashes_impls_are_count_equivalent(spark, sf_dir):
-    """The JVM (xxhash64-of-string) and Arrow (rolling-poly) gram-hash
-    paths use different hash families, so the VALUES differ — but gram
-    identity must be preserved identically: per-doc total and distinct
-    gram counts, and cross-doc overlap structure, must match."""
-    docs = load_table(spark, sf_dir, "documents").limit(300)
-
-    def counts(impl):
-        return {
-            (r["doc_id"], r["n"], r["nd"])
-            for r in text.word_ngram_hashes(docs, 5, impl=impl)
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n"), F.count_distinct("gram_h").alias("nd"))
-            .collect()
-        }
-
-    assert counts("jvm") == counts("arrow")
-
-    def overlap_pairs(impl):
-        g = text.word_ngram_hashes(docs, 5, impl=impl)
-        a, b = g.alias("a"), g.alias("b")
-        return {
-            (r["x"], r["y"], r["n"])
-            for r in a.join(
-                b,
-                (F.col("a.gram_h") == F.col("b.gram_h"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .groupBy(F.col("a.doc_id").alias("x"), F.col("b.doc_id").alias("y"))
-            .agg(F.count_distinct("a.gram_h").alias("n"))
-            .collect()
-        }
-
-    assert overlap_pairs("jvm") == overlap_pairs("arrow")
-
-
-def test_word_ngram_hashes_impls_agree_on_adversarial_text(spark):
-    """Fuzz over whitespace-heavy / short / repetitive texts: the JVM and
-    Arrow paths must tokenize identically on ANY input, not just the
-    corpus.  The Arrow kernel splits on the explicit ASCII class (Java's
-    \\s); Unicode whitespace (U+00A0 NBSP, U+2028 LS, U+3000) must be
-    treated as TOKEN CHARACTERS by both impls — Python's Unicode-aware
-    \\s would split there while java.util.regex \\s does not (ADVICE
-    r04), so the seps pool mixes ASCII separators with Unicode
-    pseudo-separators and words carrying embedded Unicode spaces.  Cases
-    are drawn once (deterministic seed) and run as one batch so the
-    Spark overhead is paid once."""
+def test_word_ngram_hashes_split_on_ascii_whitespace_only(spark):
+    """Fuzz over whitespace-heavy / short / repetitive texts: per-doc total
+    and distinct gram counts must equal a tokenizer that splits on the
+    explicit ASCII class (Java's \\s), keeping empty edge tokens.
+    Unicode whitespace (U+00A0 NBSP, U+2028 LS, U+3000) must be a TOKEN
+    CHARACTER — Python's Unicode-aware \\s would split there while
+    java.util.regex \\s does not (ADVICE r04), so the seps pool mixes
+    ASCII separators with Unicode pseudo-separators and words carrying
+    embedded Unicode spaces.  Cases are drawn once (deterministic seed)
+    and run as one batch so the Spark overhead is paid once."""
     import random
-
-    from pyspark.sql import functions as F
-
-    from reddit_sse_stream_spark.operators import text
+    import re
 
     rng = random.Random(0xC0FFEE)
     words = ["a", "bb", "ccc", "Ab", "\u00e9t\u00e9", "x1", "", "zz",
@@ -744,16 +711,20 @@ def test_word_ngram_hashes_impls_agree_on_adversarial_text(spark):
         cases.append((i, t))
     df = spark.createDataFrame(cases, "doc_id long, text string")
 
-    def counts(impl):
-        return {
-            (r["doc_id"], r["n"], r["nd"])
-            for r in text.word_ngram_hashes(df, 3, impl=impl)
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n"), F.count_distinct("gram_h").alias("nd"))
-            .collect()
-        }
-
-    assert counts("jvm") == counts("arrow")
+    got = {
+        (r["doc_id"], r["n"], r["nd"])
+        for r in text.word_ngram_hashes(df, 3)
+        .groupBy("doc_id")
+        .agg(F.count("*").alias("n"), F.count_distinct("gram_h").alias("nd"))
+        .collect()
+    }
+    want = set()
+    for doc_id, t in cases:
+        toks = re.split(r"[ \t\n\r\f\v]+", t)
+        grams = [tuple(toks[j : j + 3]) for j in range(len(toks) - 2)]
+        if grams:
+            want.add((doc_id, len(grams), len(set(grams))))
+    assert got == want
 
 
 def test_repetition_score_flags_boilerplate(spark):

@@ -5,7 +5,8 @@ program's roots — ``python -m reddit_sse_stream_spark``, the catalog, the
 bench, the examples, the tools and the perfbench harness — and fails if a
 ``reddit_sse_stream_spark`` module is imported only by tests.  Package
 ``__init__.py`` files import nothing, so a re-export cannot count as a
-caller: every module needs a real non-test importer.
+caller: every module needs a real non-test importer.  README's "Running"
+block may name only scripts and ``-m`` subcommands that exist.
 """
 
 from __future__ import annotations
@@ -94,3 +95,29 @@ def test_package_inits_import_nothing():
 def test_every_package_module_has_a_non_test_importer(reachable):
     unreached = sorted(set(_package_modules()) - reachable)
     assert not unreached, f"package modules only tests reach: {unreached}"
+
+
+def _readme_running_commands() -> list[list[str]]:
+    """The ``python ...`` command lines of README's fenced "Running" block."""
+    text = (REPO / "README.md").read_text()
+    block = text.split("\n## Running\n", 1)[1].split("```", 2)[1]
+    return [
+        line.split("#", 1)[0].split()
+        for line in block.splitlines()
+        if line.startswith("python ")
+    ]
+
+
+def test_readme_running_block_names_real_entry_points():
+    from reddit_sse_stream_spark.__main__ import main
+
+    cmds = _readme_running_commands()
+    scripts = [c[1] for c in cmds if c[1].endswith(".py")]
+    subs = [c[3] for c in cmds if c[1:3] == ["-m", PKG]]
+    assert scripts and subs
+    assert [s for s in scripts if not (REPO / s).is_file()] == []
+    for sub in subs:
+        # argparse exits 0 on a subcommand's --help and 2 on an unknown one
+        with pytest.raises(SystemExit) as exc:
+            main([sub, "--help"])
+        assert exc.value.code == 0, f"README runs unknown subcommand {sub!r}"

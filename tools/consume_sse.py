@@ -11,8 +11,8 @@ event, exactly like the reference consumer's ``process_message``.
 
 from __future__ import annotations
 
+import argparse
 import json
-import sys
 import urllib.request
 
 
@@ -31,22 +31,20 @@ def iter_events(url: str):
                 fields[k.strip()] = v.lstrip()
 
 
-def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    url = args[0] if args else "http://127.0.0.1:8765/"
-    max_n = None
-    for a in sys.argv[1:]:
-        if a.startswith("--max"):
-            max_n = int(a.split("=", 1)[1]) if "=" in a else None
+def main(argv: list[str] | None = None) -> int:
+    p = argparse.ArgumentParser(description="Print the events of an SSE endpoint.")
+    p.add_argument("url", nargs="?", default="http://127.0.0.1:8765/")
+    p.add_argument("--max", type=int, metavar="N", help="stop after N events")
+    args = p.parse_args(argv)
     n = 0
-    for event_id, event, data in iter_events(url):
+    for event_id, event, data in iter_events(args.url):
         try:
             payload = json.loads(data)
         except json.JSONDecodeError:
             payload = data
         print({"id": event_id, "event": event, "data": payload})
         n += 1
-        if max_n is not None and n >= max_n:
+        if args.max is not None and n >= args.max:
             break
     return 0
 
