@@ -24,10 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from reddit_sse_stream_spark.operators import dedup, text
-from reddit_sse_stream_spark.operators.sqlrender import (
-    sql_double_array,
-    sql_long_array,
-)
+from reddit_sse_stream_spark.operators.sqlrender import sql_double_array
 
 #: 2^60 as a double — md5_hash60 values are uniform on [0, 2^60), so
 #: dividing yields a deterministic pseudo-uniform u in [0, 1).
@@ -388,106 +385,35 @@ def kmeans_fixedpoint(
     iters: int = 3,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    dim: int = 64,
 ) -> DataFrame:
     """Lloyd's k-means over the embedding column with EVERY step in exact
     integer arithmetic — the semantic-clustering pass a curation pipeline
     runs before cluster-balanced sampling, per-cluster dedup, or topic
-    pruning (SemDeDup-style), built on the same determinism playbook as
-    :func:`pca_top_component`: fixed rounds, driver-held model state,
-    unrollable as SQL CTEs for the value oracle.
+    pruning (SemDeDup-style), unrollable as SQL CTEs for the value
+    oracle.  Output ``(id, cluster, dist2_fp)``.
 
-    Recipe (no accumulated double ever):
+    This is :func:`ml_lsh.pq_train` with ONE subspace (the codebook is
+    the k centroids, code ``c0`` the cluster, ``recon_fp`` the squared
+    distance to it), so it shares that recipe: quantize once at 1e6
+    (int64), seeds = the ``k`` lowest-``id_col`` vectors (no RNG),
+    argmin of an int64 squared distance with ties to the LOWEST cluster,
+    floor-mean updates (one IEEE double op on a < 2^53 numerator), an
+    emptied cluster keeps its centroid, ``k`` clamps to the vectors
+    present.
 
-    - quantize once: ``xq_d = floor(x_d * 1e6 + 0.5)`` (int64) — all
-      distances and centroids live in this integer domain;
-    - init: the ``k`` lowest-``id_col`` vectors (deterministic, no RNG);
-    - assign: ``argmin_c Σ_d (xq_d − c_d)²`` — pure int64 products
-      (|diff| <= 2e6, dim·diff² <= 2.6e14), ties to the LOWEST cluster
-      index;
-    - update: ``c'_d = floor(Σ xq_d / n_c)`` — the sum is an exact int64,
-      the division one IEEE double op on a < 2^53 numerator (holds to
-      ~9e9 members per cluster at |xq| <= 1e6; quantize coarser past
-      that), so both engines floor the identical quotient; an EMPTIED
-      cluster keeps its previous centroid;
-    - after ``iters`` updates, one final assign produces the output
-      ``(id, cluster, dist2_fp)`` — dist2_fp exact int64, hash-stable.
+    Scale shape: every round runs inside one grouped-map task, so
+    training is one job that returns only the k·dim centroid table; at
+    corpus scale it trains on a bounded sample.  The final assignment is
+    one map pass with the centroids as plan literals.  The iterate count
+    is fixed and small by design (cluster-balanced curation wants a
+    coarse stable partition, not convergence to machine epsilon)."""
+    from reddit_sse_stream_spark.operators.ml_lsh import pq_train
 
-    Scale shape: the model (k·dim ints — 256 longs at the defaults) is
-    DRIVER state, never a data collect: each round is one map pass over
-    the localCheckpoint'd quantized vectors with the centroids baked in
-    as literals (k distance folds per row behind an explode barrier so
-    ProjectCollapse cannot re-inline the folds into the argmin chain),
-    then a (k·dim)-key posexplode aggregate — partial-agg combines
-    map-side, the exchange carries k·dim rows per task.  k map passes
-    over 100 TB is the canonical distributed-Lloyd's cost; the iterate
-    count is fixed and small by design (cluster-balanced curation wants
-    a coarse stable partition, not convergence to machine epsilon)."""
-    import math
-
-    x = F.col(vec_col).cast("array<double>")
-    xq = F.transform(x, lambda v: F.floor(v * 1_000_000 + 0.5).cast("long"))
-    base = df.select(F.col(id_col).alias("_id"), xq.alias("xq")).localCheckpoint(
-        eager=False
-    )
-    cents = [list(r["xq"]) for r in base.orderBy("_id").limit(k).collect()]
-    # the real dimensionality comes from the data, not the caller: a dim
-    # parameter larger than the vectors KeyErrors the update loop, smaller
-    # silently truncates centroids (ADVICE r06 low) — the collected init
-    # vectors are authoritative, the parameter is only a documented default
-    if cents:
-        dim = len(cents[0])
-
-    def dist_fold(c: list[int]) -> "F.Column":
-        c_lit = F.expr(sql_long_array(c))  # r15: see sqlrender.py
-        return F.aggregate(
-            F.zip_with(F.col("xq"), c_lit, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, e: acc + e,
-        )
-
-    def assign(frame: DataFrame) -> DataFrame:
-        # explode-of-1-element-array barrier: the k distance folds must
-        # materialize ONCE per row; without it ProjectCollapse substitutes
-        # each fold into least() + every when() equality (3x the folds —
-        # the HOF re-inline trap, see operators/text.py:word_ngrams)
-        withd = frame.select(
-            "_id",
-            "xq",
-            F.explode(
-                F.array(
-                    F.struct(
-                        *[dist_fold(c).alias(f"d_{j}") for j, c in enumerate(cents)]
-                    )
-                )
-            ).alias("b"),
-        )
-        best = F.least(*[F.col(f"b.d_{j}") for j in range(k)])
-        cl = F.when(F.col("b.d_0") == best, 0)
-        for j in range(1, k):
-            cl = cl.when(F.col(f"b.d_{j}") == best, j)
-        return withd.select(
-            "_id", "xq", cl.alias("cluster"), best.alias("dist2_fp")
-        )
-
-    for _ in range(iters):
-        sums = (
-            assign(base)
-            .select("cluster", F.posexplode("xq").alias("d", "v"))
-            .groupBy("cluster", "d")
-            .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
-        )
-        got = {(r["cluster"], r["d"]): (r["s"], r["n"]) for r in sums.collect()}
-        cents = [
-            [math.floor(got[(j, d)][0] / got[(j, d)][1]) for d in range(dim)]
-            if (j, 0) in got
-            else cents[j]
-            for j in range(k)
-        ]
-    return assign(base).select(
-        F.col("_id").alias(id_col),
-        F.col("cluster").cast("int").alias("cluster"),
-        "dist2_fp",
+    codes = pq_train(
+        df, n_sub=1, k=k, iters=iters, vec_col=vec_col, id_col=id_col
+    ).codes
+    return codes.select(
+        id_col, F.col("c0").alias("cluster"), F.col("recon_fp").alias("dist2_fp")
     )
 
 

@@ -1141,8 +1141,12 @@ def source_minhash_matrix(
         # a sampled union CAN be empty (both sources tiny, every hash
         # outside the range): define the estimate as 0.0, not null/÷0
         exact = F.when(union > 0, exact).otherwise(F.lit(0.0))
+    # broadcast the (<= n_sources^2)-row intersection counts up front:
+    # left to AQE, the planned sort-merge join became a broadcast join at
+    # run time, and whether the pair side's exchange had already been
+    # submitted by then decided between 6 and 7 jobs
     return (
-        pairs.join(inter, ["source_a", "source_b"], "left")
+        pairs.join(F.broadcast(inter), ["source_a", "source_b"], "left")
         .select(
             "source_a",
             "source_b",

@@ -36,7 +36,7 @@ class IvfModel(NamedTuple):
 
     assignments: DataFrame  # (id_col, cell)
     centroids: list[tuple[int, list[float]]]  # [(cell, unit-vector)]
-    unit: DataFrame | None = None  # (_id, u), localCheckpoint-backed
+    unit: DataFrame  # (_id, u), localCheckpoint-backed
 
 
 class PqModel(NamedTuple):
@@ -169,21 +169,18 @@ def _unit_fixedpoint(
 def unit_cells(unit: DataFrame, cents_now) -> DataFrame:
     """Map-only cell assignment of a (_id, u) unit frame against a
     driver-held centroid table — the shared kernel of every IVF
-    assignment: Lloyd rounds 2+ and the final frame in
-    :func:`ivf_train`, and the index-maintenance surface
-    :func:`ivf_assign`.
+    assignment: the final frame of :func:`ivf_train` and the
+    index-maintenance surface :func:`ivf_assign`.
 
     The centroid table ships as ONE rendered SQL expression through
-    ``F.expr`` (r15): the r10 ``F.lit(list-of-lists)`` form produced a
-    single Catalyst Literal node but PySpark EXPANDS a list lit into
-    ``array(lit, lit, ...)`` — n_cells*dim+n_cells py4j roundtrips (520
-    at the defaults) before the JVM ever sees it, measured ~0.55 s of
-    driver time per assignment build; the rendered string is ONE py4j
-    call and one server-side parse (~0.08 s warm).  Doubles render via
-    the shortest-roundtrip CAST (:func:`sqlrender.sql_double`), so the parsed
-    constants — and therefore the distance folds and assignments — are
-    bit-identical (oracle-verified, plus an A/B equality check in
-    tests).  Same zip_with distance fold, array_min over
+    ``F.expr``: PySpark expands a list ``F.lit`` into ``array(lit, lit,
+    ...)``, n_cells*dim+n_cells py4j roundtrips (520 at the defaults,
+    ~0.55 s of driver time per assignment build), while the rendered
+    string is one py4j call and one server-side parse (~0.08 s warm).
+    Doubles render via the shortest-roundtrip CAST
+    (:func:`sqlrender.sql_double`), so the parsed constants — and
+    therefore the distance folds and assignments — are bit-identical to
+    the training kernel's (oracle-verified).  array_min over
     struct(dist, cell) keeps the lowest-cell tiebreak.  Cell ids ride a
     parallel array because Lloyd dropouts make them non-contiguous
     (transform index != cell id)."""
@@ -213,23 +210,116 @@ def ivf_assign(
 ) -> DataFrame:
     """Index MAINTENANCE: assign ARRIVING vectors to an
     already-trained IVF coarse quantizer — the other half of the 100 TB
-    story :func:`ivf_train` starts.  The index is built once (the
-    training is the bounded, driver-synced part); from then on every new
+    story :func:`ivf_train` starts.  The index is built once (training
+    is one grouped-map job over a bounded sample); from then on every new
     ingest batch gets its partition column from this map-only pass — no
     retraining, no shuffle, no driver state beyond the centroid table a
     plan literal carries.  Batch or streaming: the plan is a stateless
     projection, so it composes with ``readStream`` unchanged.
 
     ``centroids`` is an :class:`IvfModel` or its ``centroids`` list; the
-    assignment arithmetic is byte-for-byte the training's own
-    (:func:`unit_cells`), so an old vector re-assigned lands in its
-    training-time cell — the invariant the incremental-twin catalog row
-    pins against the unrolled SQL oracle."""
+    assignment is the training's own final pass (:func:`unit_cells`),
+    so an old vector re-assigned lands in its training-time cell — the
+    invariant the incremental-twin catalog row pins against the
+    unrolled SQL oracle."""
     cents = getattr(centroids, "centroids", centroids)
     unit = _unit_fixedpoint(emb, vec_col, id_col)
     return unit_cells(unit, cents).select(
         F.col("_id").alias(id_col), "cell"
     )
+
+
+def _lloyd(x, k: int, iters: int, dist, mean, keep_empty: bool):
+    """Lloyd's k-means over the rows of ``x`` (in id order), the numpy
+    kernel of every fixed-point training.  Seeds are the first ``k``
+    rows, numbered 0..k-1 (clamped to the rows present); each round
+    assigns every row to the centroid with the smallest integer
+    ``dist`` (ties to the lowest index, ``argmin``'s first hit), then
+    replaces each centroid by ``mean`` of its members.  A centroid
+    that wins no member keeps its value (``keep_empty``) or drops out;
+    either way the survivors keep their ids.  ``iters=0`` returns the
+    seeds.  Returns (ids, centroids)."""
+    import numpy as np
+
+    ids = list(range(min(k, len(x))))
+    cents = list(x[: len(ids)])
+    for _ in range(iters):
+        near = np.stack([dist(x, c) for c in cents], axis=1).argmin(axis=1)
+        nxt = [
+            (cid, mean(x[near == i]) if (near == i).any() else c)
+            for i, (cid, c) in enumerate(zip(ids, cents))
+            if keep_empty or (near == i).any()
+        ]
+        ids, cents = [cid for cid, _ in nxt], [c for _, c in nxt]
+    return ids, cents
+
+
+def _train_grouped(
+    frame: DataFrame,
+    key: str,
+    vec: str,
+    what: str,
+    k: int,
+    iters: int,
+    dist,
+    mean,
+    keep_empty: bool,
+) -> tuple[int, list]:
+    """Run :func:`_lloyd` on every ``key`` group of ``frame``
+    (``key, _id, nd, vec``) inside ONE grouped-map job and collect only
+    the centroid rows ``(key, cid, c)``.  ``nd`` is each row's full
+    vector dimension: a group whose rows disagree trains nothing and
+    returns just its min/max ``nd``, so ragged input fails here on the
+    driver with the dims rather than inside the task.  Returns
+    (dim, rows)."""
+    elem = frame.schema[vec].dataType.elementType.simpleString()
+    schema = f"{key} int, cid int, c array<{elem}>, lo int, hi int"
+
+    def task(pdf):
+        import numpy as np
+        import pandas as pd
+
+        pdf = pdf.sort_values("_id")
+        g, lo, hi = int(pdf[key].iloc[0]), int(pdf["nd"].min()), int(pdf["nd"].max())
+        ids, cents = [None], [None]
+        if lo == hi:
+            x = np.stack(pdf[vec].to_list())
+            ids, cents = _lloyd(x, k, iters, dist, mean, keep_empty)
+        return pd.DataFrame(
+            {key: g, "cid": ids, "c": cents, "lo": lo, "hi": hi}
+        )
+
+    rows = frame.groupBy(key).applyInPandas(task, schema).collect()
+    if not rows:
+        raise ValueError(f"{what} training needs at least one vector")
+    lo, hi = min(r["lo"] for r in rows), max(r["hi"] for r in rows)
+    if lo != hi:
+        raise ValueError(
+            f"{what} requires uniform vector dims: corpus has dims in [{lo}, {hi}]"
+        )
+    return lo, rows
+
+
+def _ivf_dist(x, c):
+    import numpy as np
+
+    return np.floor((x - c) * (x - c) * 1e12 + 0.5).astype(np.int64).sum(axis=1)
+
+
+def _ivf_mean(m):
+    import numpy as np
+
+    return (np.floor(m * 1e6 + 0.5).astype(np.int64).sum(axis=0) / 1e6) / len(m)
+
+
+def _pq_dist(x, c):
+    return ((x - c) * (x - c)).sum(axis=1)
+
+
+def _pq_mean(m):
+    import numpy as np
+
+    return np.floor(m.sum(axis=0) / len(m)).astype(np.int64)
 
 
 def ivf_train(
@@ -238,8 +328,6 @@ def ivf_train(
     id_col: str = "vec_id",
     n_cells: int = 8,
     iters: int = 2,
-    dim: int = 64,
-    fold_rounds: bool = False,
 ) -> IvfModel:
     """Deterministic IVF coarse quantizer: Lloyd's k-means on the unit
     sphere with EVERY accumulation in exact int64 fixed point, so the cell
@@ -257,182 +345,25 @@ def ivf_train(
     (addends floor-quantized at 1e-12, ties broken by cell id — a total
     order, so argmin is exact), then recompute centroid means from
     1e-6-quantized coordinate sums, each scalar step a single IEEE op.
-    The centroid table (n_cells x dim doubles) is driver state folded in
-    Python between rounds; the SQL oracle unrolls the identical rounds
-    over an exploded (vec_id, d, val) layout.  A cell that loses all
-    members drops out of the next round in both engines identically.
+    A cell that loses all members drops out of the next round; the
+    survivors keep their ids.  The SQL oracle unrolls the identical
+    rounds over an exploded (vec_id, d, val) layout.
 
-    Scale shape: assignment is a pure map pass (centroids ride along as
-    plan literals — n_cells x dim folds per row, zero shuffle); each
-    update round is one (cell, d)-keyed aggregate (n_cells*dim keys, map-
-    side combined); collecting n_cells x dim longs per round is the
-    parameter-server step.  The final (vec_id, cell) frame is what
-    becomes the partition column — probing then prunes the SCAN."""
+    Scale shape: every round runs inside ONE single-group grouped-map
+    task (numpy, :func:`_lloyd`), so training is one job that returns
+    only the n_cells x dim centroid table to the driver.  That task holds
+    the training set in memory: at 100 TB the quantizer trains on a
+    bounded sample, as IVF indexes do.  The final (vec_id, cell) frame
+    is the map-only :func:`unit_cells` pass over the full corpus — what
+    becomes the partition column, so probing then prunes the SCAN."""
     base = _unit_fixedpoint(emb, vec_col, id_col).localCheckpoint(eager=False)
-
-    # The centroid table ships as ONE nested-array Literal node
-    # (F.lit(list-of-lists)) instead of n_cells*dim individual F.lit
-    # nodes (512 at the defaults): Catalyst ANALYSIS of the big literal
-    # tree dominated every Lloyd action — measured ~0.45 s compile vs
-    # ~0.10 s execution per round at sf0.01; the single-node form halves
-    # the fresh-plan cost (r10, VERDICT r09 next #5).  Same doubles, same
-    # zip_with distance fold, array_min over struct(dist, cell) keeps the
-    # lowest-cell tiebreak — assignments are bit-identical
-    # (oracle-verified).  Cell ids ride a parallel literal because Lloyd
-    # dropouts make them non-contiguous (transform index != cell id).
-    def assign_frame(cents_now):
-        return unit_cells(base, cents_now)
-
-    # Round 1 assigns against the seed centroids IN-PLAN (VERDICT r09
-    # next #5): the n_cells smallest-id unit vectors ride a broadcast
-    # 1-row subquery (sort_array keeps cell id = _id rank, exactly the
-    # old enumerate(seeds) numbering) instead of a separate driver
-    # collect — one driver sync per training disappears, and the
-    # distance arithmetic is the same zip_with fold over the same
-    # doubles, so assignments are bit-identical.  iters=0 keeps the
-    # collect (the caller needs driver-side centroids and there is no
-    # round to ride).
-    if iters == 0:
-        seeds = base.orderBy("_id").limit(n_cells).collect()
-        cents: list[tuple[int, list[float]]] = [
-            (i, list(r["u"])) for i, r in enumerate(seeds)
-        ]
-        out = assign_frame(cents).select(
-            F.col("_id").alias(id_col), "cell"
-        )
-        return IvfModel(assignments=out, centroids=cents, unit=base)
-
-    seed_row = (
-        base.orderBy("_id")
-        .limit(n_cells)
-        .agg(F.sort_array(F.collect_list(F.struct("_id", "u"))).alias("_seeds"))
+    _, rows = _train_grouped(
+        base.select(F.lit(0).alias("g"), "_id", F.size("u").alias("nd"), "u"),
+        "g", "u", "IVF", n_cells, iters, _ivf_dist, _ivf_mean,
+        keep_empty=False,
     )
-    seed_assign = F.array_min(
-        F.transform(
-            F.col("_seeds"),
-            lambda s, i: F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("u"),
-                        s["u"],
-                        lambda a, b: F.floor(
-                            (a - b) * (a - b) * 1e12 + 0.5
-                        ).cast("long"),
-                    ),
-                    F.lit(0).cast("long"),
-                    lambda acc, e: acc + e,
-                ).alias("dist"),
-                i.cast("int").alias("cell"),
-            ),
-        )
-    )["cell"]
-
-    # In-plan Lloyd fold (r16, VERDICT r15 next #3), OPT-IN per call site
-    # via ``fold_rounds``: rounds 0..iters-2 update centroids INSIDE the
-    # plan — the (cell, d) sums regroup to a broadcast 1-row centroid
-    # table and the next round's assignment argmins against that COLUMN —
-    # so the whole training issues exactly ONE collect (the final round's
-    # sums) instead of one per round.  Measured r16 (interleaved A/B,
-    # OPTIMIZATION_r16.md): the fold WINS only where the training shares
-    # the driver with concurrent work — ivfpq_topk's threaded
-    # trainings (composite row 3.05 -> 2.69 s) — because the saved py4j
-    # roundtrips stop contending with the sibling threads; on SEQUENTIAL
-    # chains (the residual row: +0.4 s, incremental/semdedup: flat) the
-    # fold's extra in-plan exchanges cost more AQE stage-jobs than the
-    # removed action saves — r11's conclusion, re-confirmed post-
-    # sqlrender — so the default stays the per-round collect.  Exactness
-    # either way: the in-plan centroid arithmetic is the driver fold's
-    # own two IEEE ops — CAST(sfp AS DOUBLE) / 1e6 / cnt — and int64 sums
-    # stay under 2^53 at any bounded training sample (1e6-quantized unit
-    # coords), so the doubles are bit-identical to the collected path;
-    # the distance fold and the struct(dist, cell) tiebreak are
-    # byte-for-byte unit_cells' (A/B-pinned in tests/test_ml_lsh.py).
-    def sums_of(assigned: DataFrame) -> DataFrame:
-        return (
-            assigned.select(
-                "cell",
-                F.posexplode(
-                    F.transform("u", lambda v: F.floor(v * 1e6 + 0.5).cast("long"))
-                ).alias("d", "vfp"),
-            )
-            .groupBy("cell", "d")
-            .agg(F.sum("vfp").alias("sfp"), F.count("*").alias("cnt"))
-        )
-
-    def cent_row(sums: DataFrame) -> DataFrame:
-        # (cell, d, sfp, cnt) -> ONE row: array<struct<cell, c>> sorted
-        # by cell (collect_list order is nondeterministic; array_sort /
-        # sort_array pin it — d is unique per cell, cell unique overall)
-        byc = sums.groupBy("cell").agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("d"),
-                        ((F.col("sfp") / F.lit(1e6)) / F.col("cnt")).alias("v"),
-                    )
-                )
-            ).alias("dv")
-        )
-        cent = byc.select(
-            "cell", F.transform("dv", lambda s: s["v"]).alias("c")
-        )
-        return cent.agg(
-            F.sort_array(F.collect_list(F.struct("cell", "c"))).alias("_cents")
-        )
-
-    def assign_against_row(crow: DataFrame) -> DataFrame:
-        best = F.array_min(
-            F.transform(
-                F.col("_cents"),
-                lambda s: F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("u"),
-                            s["c"],
-                            lambda a, b: F.floor(
-                                (a - b) * (a - b) * 1e12 + 0.5
-                            ).cast("long"),
-                        ),
-                        F.lit(0).cast("long"),
-                        lambda acc, e: acc + e,
-                    ).alias("dist"),
-                    s["cell"].cast("int").alias("cell"),
-                ),
-            )
-        )["cell"]
-        return base.crossJoin(F.broadcast(crow)).select(
-            "_id", "u", best.alias("cell")
-        )
-
-    def cents_from(rows) -> list[tuple[int, list[float]]]:
-        if not rows:
-            raise ValueError("IVF training needs at least one vector")
-        # dimensionality comes from the data, not the parameter (same
-        # fix as corpus.kmeans_fixedpoint, ADVICE r06 low)
-        d_n = 1 + max(r["d"] for r in rows)
-        by_cell: dict[int, dict[int, float]] = {}
-        for r in rows:
-            by_cell.setdefault(r["cell"], {})[r["d"]] = (
-                r["sfp"] / 1e6
-            ) / r["cnt"]
-        return [
-            (cell, [m[d] for d in range(d_n)])
-            for cell, m in sorted(by_cell.items())
-        ]
-
-    assigned = base.crossJoin(F.broadcast(seed_row)).select(
-        "_id", "u", seed_assign.alias("cell")
-    )
-    if fold_rounds:
-        for _ in range(iters - 1):
-            assigned = assign_against_row(cent_row(sums_of(assigned)))
-        cents = cents_from(sums_of(assigned).collect())  # the ONE collect
-    else:
-        cents = cents_from(sums_of(assigned).collect())  # round 1
-        for _ in range(iters - 1):  # rounds 2..iters, one collect each
-            cents = cents_from(sums_of(assign_frame(cents)).collect())
-
-    out = assign_frame(cents).select(F.col("_id").alias(id_col), "cell")
+    cents = sorted((r["cid"], list(r["c"])) for r in rows)
+    out = unit_cells(base, cents).select(F.col("_id").alias(id_col), "cell")
     return IvfModel(assignments=out, centroids=cents, unit=base)
 
 
@@ -442,11 +373,10 @@ def ivf_fixedpoint_cells(
     id_col: str = "vec_id",
     n_cells: int = 8,
     iters: int = 2,
-    dim: int = 64,
 ) -> DataFrame:
     """Single-frame surface of :func:`ivf_train` — just the
     (id, cell) assignments, for consumers that don't probe."""
-    return ivf_train(emb, vec_col, id_col, n_cells, iters, dim).assignments
+    return ivf_train(emb, vec_col, id_col, n_cells, iters).assignments
 
 
 def pq_train(
@@ -465,30 +395,27 @@ def pq_train(
     100 TB ANN index hold billions of vectors in RAM and score them with
     table lookups (ADC) instead of full dot products.
 
-    Every step reuses the exact-integer playbook of
-    :func:`corpus.kmeans_fixedpoint` (quantize once at 1e6, integer
-    distances, floor-mean updates, ties to the lowest code, emptied
-    cells keep their centroid), so codes and reconstruction error are
-    bit-identical across engines and an unrolled-CTE oracle verifies
-    them value-for-value.
+    Every step is exact integer arithmetic: quantize once at 1e6,
+    integer squared distances, ties to the lowest code, floor-mean
+    updates, an emptied code keeps its centroid.  Seeds are the ``k``
+    smallest-id vectors (``k`` clamps to the vectors present).  So codes
+    and reconstruction error are bit-identical across engines and an
+    unrolled-CTE oracle verifies them value-for-value.
+    :func:`corpus.kmeans_fixedpoint` is this training with one subspace.
 
-    Scale shape: ALL subspaces train in ONE pass per round — the vector
-    explodes into (vec_id, sub, xq[8]) rows and the update is a single
-    (sub, cluster, d)-keyed aggregate (n_sub·k·d_sub = 1024 keys,
-    map-side combined); driver state is the full codebook
-    (n_sub·k·d_sub ints — the parameter-server step, ~8 KB).  Assignment
-    bakes the codebook in as plan literals behind the explode barrier
-    (k folds per (row, sub) — the HOF re-inline trap, see
-    kmeans_fixedpoint).  The final code pivot is one vec_id-keyed
-    aggregate."""
-    import math
-
+    Scale shape: the vector explodes into (vec_id, sub, xq[d_sub]) rows
+    and ONE grouped-map job keyed by ``sub`` runs every round of every
+    subspace in numpy (:func:`_lloyd`), returning only the codebook
+    (n_sub·k·d_sub ints, ~8 KB) to the driver.  Each task holds one
+    subspace of the training set: at 100 TB the codebook trains on a
+    bounded sample.  The final assignment bakes the codebook into the
+    plan as one rendered SQL literal (k folds per (row, sub)), and the
+    code pivot is one vec_id-keyed aggregate."""
     x = F.col(vec_col).cast("array<double>")
     xq = F.transform(x, lambda v: F.floor(v * 1_000_000 + 0.5).cast("long"))
-    # subvector extents are EXPRESSIONS over size(xq), not Python ints, so
-    # no probe job runs just to learn the dimension (was a flat ~1s per
-    # training); the divisibility guard moves to the seeds collect below,
-    # which reads the dimension off the rows it fetches anyway
+    # subvector extents are EXPRESSIONS over size(xq), not Python ints,
+    # so no probe job runs just to learn the dimension; the training
+    # task reports it
     d_sub_c = (F.size("xq") / n_sub).cast("int")
     base = (
         emb.select(F.col(id_col).alias("_id"), xq.alias("xq"))
@@ -512,215 +439,46 @@ def pq_train(
         .select("_id", "nd", F.col("p.sub").alias("sub"), F.col("p.sq").alias("sq"))
         .localCheckpoint(eager=False)
     )
-    # Seed codebook IN-PLAN for iters >= 1 (VERDICT r09 next #5): every
-    # vector explodes to exactly n_sub rows, so the first k*n_sub rows in
-    # (_id, sub) order ARE the k smallest-id vectors' subrows — grouped
-    # per sub into a broadcast array (sort_array keeps code j = _id rank,
-    # the old enumerate numbering), round 1 assigns against it, and the
-    # seed VALUES ride the same action as a unioned dump (n = -1 marker;
-    # a code that attracts no members in round 1 must keep its seed
-    # centroid for round 2, exactly the literal path's fallback).  The
-    # former separate seeds collect — one driver sync per training —
-    # disappears; iters=0 keeps it, since the codebook must reach the
-    # driver and there is no round to ride.
-    if iters == 0:
-        seeds = base.orderBy("_id", "sub").limit(k * n_sub).collect()
-        by_id = sorted({r["_id"] for r in seeds})
-        if not by_id:
-            raise ValueError("PQ training needs at least one vector")
-        dims_seen = {int(r["nd"]) for r in seeds}
-        if len(dims_seen) > 1:
-            raise ValueError(
-                f"PQ requires uniform vector dims, seeds saw {sorted(dims_seen)}"
-            )
-        dim_total = dims_seen.pop()
-        if dim_total % n_sub != 0:
-            # a silent floor would DROP the tail dims from every code —
-            # fail loudly instead (FAISS imposes the same divisibility)
-            raise ValueError(
-                f"PQ requires dim % n_sub == 0, got dim={dim_total}, "
-                f"n_sub={n_sub}"
-            )
-        d_sub = dim_total // n_sub
-        # clamp to the seeds actually present: with < k distinct vectors
-        # the codebook is simply smaller (same convention as the shorter
-        # cents list in corpus.kmeans_fixedpoint, ADVICE r07)
-        k = min(k, len(by_id))
-        # cents[sub][j] = centroid j of subspace sub
-        cents: list[list[list[int]]] = [[None] * k for _ in range(n_sub)]
-        rank = {vid: j for j, vid in enumerate(by_id)}
-        for r in seeds:
-            cents[r["sub"]][rank[r["_id"]]] = list(r["sq"])
-    else:
-        cents = []
-        d_sub = 0
-
-    seed_frame = (
-        base.orderBy("_id", "sub")
-        .limit(k * n_sub)
-        .groupBy("sub")
-        .agg(F.sort_array(F.collect_list(F.struct("_id", "sq"))).alias("_seeds"))
+    dim, rows = _train_grouped(
+        base, "sub", "sq", "PQ", k, iters, _pq_dist, _pq_mean,
+        keep_empty=True,
     )
-    seed_best = F.array_min(
-        F.transform(
-            F.col("_seeds"),
-            lambda s, j: F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("sq"), s["sq"], lambda a, b: (a - b) * (a - b)
-                    ),
-                    F.lit(0).cast("long"),
-                    lambda acc, e: acc + e,
-                ).alias("dist2"),
-                j.cast("int").alias("code"),
-            ),
+    if dim % n_sub != 0:
+        # a silent floor would DROP the tail dims from every code —
+        # fail loudly instead (FAISS imposes the same divisibility)
+        raise ValueError(
+            f"PQ requires dim % n_sub == 0, got dim={dim}, n_sub={n_sub}"
         )
+    k = 1 + max(r["cid"] for r in rows)
+    # cents[sub][j] = centroid j of subspace sub
+    cents: list[list[list[int]]] = [[None] * k for _ in range(n_sub)]
+    for r in rows:
+        cents[r["sub"]][r["cid"]] = list(r["c"])
+
+    # The full codebook as ONE rendered SQL expression: PySpark expands a
+    # list lit into ``array(lit, ...)`` element by element (n_sub*k*d_sub
+    # = 1024 py4j roundtrips at the defaults); the rendered string is one
+    # py4j call and one parse (see unit_cells).  Integer codebook values
+    # render exactly.  array_min over struct(dist2, code) keeps the
+    # lowest-code tiebreak.
+    cb_sql = (
+        "array("
+        + ", ".join(
+            "array(" + ", ".join(_sql_long_array(c) for c in sub) + ")"
+            for sub in cents
+        )
+        + ")"
     )
-
-    def assign(frame: DataFrame) -> DataFrame:
-        # The full codebook as ONE rendered SQL expression (r15): the
-        # r10 ``F.lit(list-of-lists-of-lists)`` form was a single
-        # Catalyst Literal node, but PySpark expands a list lit into
-        # ``array(lit, ...)`` element-by-element — n_sub*k*d_sub = 1024
-        # py4j roundtrips at the defaults, ~0.5 s of driver build time
-        # per assignment; the rendered string is one py4j call + one
-        # parse (see unit_cells).  Integer codebook values render
-        # exactly by construction.  Same exact-integer distance folds
-        # over the same values, array_min over struct(dist2, code)
-        # keeps the lowest-code tiebreak — codes are bit-identical
-        # (oracle-verified).
-        cb_sql = (
-            "array("
-            + ", ".join(
-                "array("
-                + ", ".join(
-                    "array("
-                    + ", ".join(str(int(v)) + "L" for v in cents[s][j])
-                    + ")"
-                    for j in range(k)
-                )
-                + ")"
-                for s in range(n_sub)
-            )
-            + ")"
-        )
-        best = F.expr(
-            "array_min(transform(element_at(" + cb_sql + ", sub + 1), "
-            "(c, j) -> struct("
-            "aggregate(zip_with(sq, c, (a, b) -> (a - b) * (a - b)), "
-            "CAST(0 AS BIGINT), (acc, e) -> acc + e) AS dist2, "
-            "CAST(j AS INT) AS code)))"
-        )
-        return frame.select(
-            "_id",
-            "nd",
-            "sub",
-            "sq",
-            best["code"].alias("code"),
-            best["dist2"].alias("dist2_fp"),
-        )
-
-    for it in range(iters):
-        # FULL-FRAME dim validation rides the first Lloyd exchange
-        # (ADVICE r09): two extra min/max columns on an aggregate that
-        # runs anyway, so a heterogeneous-dim row ANYWHERE in the corpus
-        # fails loudly instead of being silently slice-truncated.
-        # (iters=0 skips Lloyd entirely and keeps the seed-level check.)
-        if it == 0:
-            assigned = base.join(F.broadcast(seed_frame), "sub").select(
-                "_id",
-                "nd",
-                "sub",
-                "sq",
-                seed_best["code"].alias("code"),
-                seed_best["dist2"].alias("dist2_fp"),
-            )
-        else:
-            assigned = assign(base)
-        aggs = [F.sum("v").alias("s"), F.count("*").alias("n")]
-        if it == 0:
-            aggs += [F.min("nd").alias("lo"), F.max("nd").alias("hi")]
-        stats = (
-            assigned
-            .select("sub", "code", "nd", F.posexplode("sq").alias("d", "v"))
-            .groupBy("sub", "code", "d")
-            .agg(*aggs)
-        )
-        if it == 0:
-            dump = (
-                seed_frame.select(
-                    "sub", F.posexplode("_seeds").alias("code", "sv")
-                )
-                .select("sub", "code", F.posexplode("sv.sq").alias("d", "v"))
-                .select(
-                    "sub",
-                    "code",
-                    "d",
-                    F.col("v").alias("s"),
-                    F.lit(-1).cast("long").alias("n"),
-                    F.lit(None).cast("int").alias("lo"),
-                    F.lit(None).cast("int").alias("hi"),
-                )
-            )
-            rows = stats.unionByName(dump).collect()
-            seed_vals: dict[tuple[int, int, int], int] = {}
-            data_rows = []
-            for r in rows:
-                if r["n"] == -1:
-                    seed_vals[(r["sub"], r["code"], r["d"])] = r["s"]
-                else:
-                    data_rows.append(r)
-            if not seed_vals:
-                raise ValueError("PQ training needs at least one vector")
-            lo = min(r["lo"] for r in data_rows)
-            hi = max(r["hi"] for r in data_rows)
-            if lo != hi:
-                raise ValueError(
-                    "PQ requires uniform vector dims: corpus has dims in "
-                    f"[{lo}, {hi}]"
-                )
-            dim_total = lo
-            if dim_total % n_sub != 0:
-                raise ValueError(
-                    f"PQ requires dim % n_sub == 0, got dim={dim_total}, "
-                    f"n_sub={n_sub}"
-                )
-            d_sub = dim_total // n_sub
-            k = 1 + max(c for (_s, c, _d) in seed_vals)
-            got = {
-                (r["sub"], r["code"], r["d"]): (r["s"], r["n"])
-                for r in data_rows
-            }
-            cents = [
-                [
-                    [
-                        math.floor(got[(s, j, d)][0] / got[(s, j, d)][1])
-                        for d in range(d_sub)
-                    ]
-                    if (s, j, 0) in got
-                    else [seed_vals[(s, j, d)] for d in range(d_sub)]
-                    for j in range(k)
-                ]
-                for s in range(n_sub)
-            ]
-            continue
-        got = {
-            (r["sub"], r["code"], r["d"]): (r["s"], r["n"])
-            for r in stats.collect()
-        }
-        cents = [
-            [
-                [
-                    math.floor(got[(s, j, d)][0] / got[(s, j, d)][1])
-                    for d in range(d_sub)
-                ]
-                if (s, j, 0) in got
-                else cents[s][j]
-                for j in range(k)
-            ]
-            for s in range(n_sub)
-        ]
-    final = assign(base)
+    best = F.expr(
+        "array_min(transform(element_at(" + cb_sql + ", sub + 1), "
+        "(c, j) -> struct("
+        "aggregate(zip_with(sq, c, (a, b) -> (a - b) * (a - b)), "
+        "CAST(0 AS BIGINT), (acc, e) -> acc + e) AS dist2, "
+        "CAST(j AS INT) AS code)))"
+    )
+    final = base.select(
+        "_id", "sub", best["code"].alias("code"), best["dist2"].alias("dist2_fp")
+    )
     codes = final.groupBy("_id").agg(
         *[
             F.max(F.when(F.col("sub") == s, F.col("code")))
@@ -744,6 +502,90 @@ def pq_codes_fixedpoint(
     """Single-frame surface of :func:`pq_train` — just the code frame,
     for consumers that don't run ADC queries."""
     return pq_train(emb, n_sub, k, iters, vec_col, id_col).codes
+
+
+def _quantize(vec) -> list[int]:
+    """A driver-side vector in PQ's 1e6 fixed-point integer domain."""
+    return [int(math.floor(v * 1_000_000 + 0.5)) for v in vec]
+
+
+def _adc_tables(qq: list[int], codebook) -> list[list[int]]:
+    """Per-subspace ADC lookup tables for the quantized query ``qq``:
+    ``tables[s][j]`` is the int64 squared distance from the query's
+    subvector ``s`` to centroid ``j`` of subspace ``s``."""
+    d_sub = len(codebook[0][0])
+    return [
+        [
+            sum((qq[s * d_sub + d] - c[d]) ** 2 for d in range(d_sub))
+            for c in cents
+        ]
+        for s, cents in enumerate(codebook)
+    ]
+
+
+def _adc_score(tables: list[list[int]]) -> "F.Column":
+    """The ADC score of a code row: the sum over subspaces of
+    ``tables[s][c{s}]``, each table one rendered array literal."""
+    adc = None
+    for s, tab in enumerate(tables):
+        term = F.element_at(F.expr(_sql_long_array(tab)), F.col(f"c{s}") + 1)
+        adc = term if adc is None else adc + term
+    return adc.cast("long")
+
+
+def _query_vector(
+    shared: DataFrame, query_id: int, vec_col: str, id_col: str
+) -> list[float]:
+    """The raw vector of row ``query_id``; raises if it is absent."""
+    row = shared.where(F.col(id_col) == query_id).select(vec_col).first()
+    if row is None:
+        raise ValueError(f"query_id {query_id} not present in {id_col}")
+    return list(row[0])
+
+
+def _probe(qv: list[float], cents, n_probe: int):
+    """Driver-side replica of :func:`_unit_fixedpoint` on one raw query
+    vector — each step the same single IEEE double op Spark performs
+    (floor-quantized squared-coordinate sum, sqrt, 1e-12 floor), so
+    ``u_q`` is bit-identical to the frame version at zero Spark jobs —
+    and the ``n_probe`` cells nearest to it under :func:`unit_cells`'
+    integer distance, ties to the lowest cell.  Returns
+    (u_q, probe_cells)."""
+    norm_fp = sum(int(math.floor(v * v * 1e12 + 0.5)) for v in qv)
+    nrm = max(math.sqrt(norm_fp / 1e12), 1e-12)
+    u_q = [v / nrm for v in qv]
+
+    def d_fp(c: list[float]) -> int:
+        return sum(
+            int(math.floor((a - b) * (a - b) * 1e12 + 0.5)) for a, b in zip(u_q, c)
+        )
+
+    ranked = sorted((d_fp(c), cell) for cell, c in cents)
+    return u_q, [cell for _, cell in ranked[:n_probe]]
+
+
+def _probed_topk(
+    codes: DataFrame,
+    cells: DataFrame,
+    probe_cells: list[int],
+    adc: "F.Column",
+    query_id: int,
+    id_col: str,
+    k_out: int,
+) -> DataFrame:
+    """The IVF-PQ cut: codes of the probed cells minus the query row,
+    scored by ``adc``, top ``k_out`` by (adc_fp, id)."""
+    cand = codes.join(cells, on=id_col).where(
+        F.col("cell").isin([int(c) for c in probe_cells])
+        & (F.col(id_col) != query_id)
+    )
+    return (
+        cand.select(
+            F.col(id_col), F.col("cell").cast("int").alias("cell"), adc.alias("adc_fp")
+        )
+        .orderBy(F.col("adc_fp").asc(), F.col(id_col))
+        .limit(k_out)
+    )
 
 
 def pq_adc_topk(
@@ -775,38 +617,20 @@ def pq_adc_topk(
     model = pq_train(
         emb, n_sub=n_sub, k=k, iters=iters, vec_col=vec_col, id_col=id_col
     )
-    cents, codes = model.codebook, model.codes
-    k = model.k  # may be clamped below the requested k on tiny inputs
+    codes = model.codes
     if exclude_id is not None:
         # the query row trains/encodes like everything else but must not
         # appear in its own result list — filter BEFORE the top-k cut
         codes = codes.where(F.col(id_col) != exclude_id)
-    d_sub = model.d_sub
-    qq = [
-        int(math.floor(v * 1_000_000 + 0.5))
-        for v in list(query_vec)
-    ]
-    if len(qq) != n_sub * d_sub:
+    qq = _quantize(query_vec)
+    if len(qq) != n_sub * model.d_sub:
         raise ValueError(
-            f"query_vec has {len(qq)} dims, index expects {n_sub * d_sub}"
+            f"query_vec has {len(qq)} dims, index expects {n_sub * model.d_sub}"
         )
-    tables = [
-        [
-            sum(
-                (qq[s * d_sub + d] - cents[s][j][d]) ** 2
-                for d in range(d_sub)
-            )
-            for j in range(k)
-        ]
-        for s in range(n_sub)
-    ]
-    adc = None
-    for s in range(n_sub):
-        t_lit = F.expr(_sql_long_array(tables[s]))
-        term = F.element_at(t_lit, F.col(f"c{s}") + 1)
-        adc = term if adc is None else adc + term
     return (
-        codes.select(F.col(id_col), adc.cast("long").alias("adc_fp"))
+        codes.select(
+            F.col(id_col), _adc_score(_adc_tables(qq, model.codebook)).alias("adc_fp")
+        )
         .orderBy(F.col("adc_fp").asc(), F.col(id_col))
         .limit(k_out)
     )
@@ -850,8 +674,7 @@ def pq_recall_audit(
     model = pq_train(
         emb, n_sub=n_sub, k=k, iters=iters, vec_col=vec_col, id_col=id_col
     )
-    cents, codes = model.codebook, model.codes
-    k, d_sub = model.k, model.d_sub
+    codes = model.codes
 
     x = F.col(vec_col).cast("array<double>")
     xq = F.transform(x, lambda v: F.floor(v * 1_000_000 + 0.5).cast("long"))
@@ -862,21 +685,6 @@ def pq_recall_audit(
     joined = codes.join(
         quant, codes[id_col] == quant["_id"], "inner"
     ).select(codes[id_col].alias("_vid"), *[f"c{s}" for s in range(n_sub)], "xq")
-
-    def adc_for(qq: list[int]) -> "F.Column":
-        acc = None
-        for s in range(n_sub):
-            tab = [
-                sum(
-                    (qq[s * d_sub + d] - cents[s][j][d]) ** 2
-                    for d in range(d_sub)
-                )
-                for j in range(k)
-            ]
-            t_lit = F.expr(_sql_long_array(tab))
-            term = F.element_at(t_lit, F.col(f"c{s}") + 1)
-            acc = term if acc is None else acc + term
-        return acc.cast("long")
 
     def exact_for(qq: list[int]) -> "F.Column":
         q_lit = F.expr(_sql_long_array(qq))
@@ -893,7 +701,9 @@ def pq_recall_audit(
                 *[
                     F.struct(
                         F.lit(qid).alias("qid"),
-                        adc_for(qq).alias("adc_fp"),
+                        _adc_score(_adc_tables(qq, model.codebook)).alias(
+                            "adc_fp"
+                        ),
                         exact_for(qq).alias("exact_fp"),
                     )
                     for qid, qq in queries
@@ -958,119 +768,40 @@ def ivfpq_topk(
     Honest deviation from FAISS: codes quantize the RAW vector, not the
     cell residual (IVFFlat-style coarse layer + PQ compression), so the
     code frame is cell-independent and one codebook serves every cell —
-    the residual variant would add a per-cell recenter step to training
-    and the ADC tables.
+    :func:`ivfpq_residual_topk` is the residual variant.
 
     Exactness: probe selection uses the same 1e-12 fixed-point unit-
-    sphere distance as cell assignment (driver-replicated bit-for-bit —
-    every scalar step a single IEEE op on the collected unit query
-    vector), ADC is the 1e6 integer domain of PQ training, and the final
-    cut orders by (adc_fp, id) — fully SQL-verifiable end to end."""
-    # ONE scan feeds everything (VERDICT r08 next #3): the two trainings
-    # each lazily checkpoint their own DERIVED frame (normalized /
-    # exploded), but materializing those used to scan the parquet source
-    # once per training, plus a third pushdown scan for the query row.
-    # Sharing an eagerly-checkpointed (id, vector-as-double) frame makes
-    # the source scan happen exactly once; every downstream job — both
-    # trainings' Lloyd rounds, the seeds collects, the query-row lookup —
-    # reads executor-memory blocks.  The cast commutes (float->double is
-    # exact), so results are bit-identical — the exactness tests cover
-    # this path.  At 100 TB the quantizers train on a bounded sample
-    # anyway (see ivf_train), so "checkpoint the training frame" stays
-    # a sample-sized, not corpus-sized, residency.
+    sphere distance as cell assignment (driver-replicated bit-for-bit by
+    :func:`_probe`), ADC is the 1e6 integer domain of PQ training, and
+    the final cut orders by (adc_fp, id) — fully SQL-verifiable end to
+    end.
+
+    Build shape: one eagerly checkpointed (id, vector-as-double) frame
+    feeds everything, so the source is scanned once (the cast is exact,
+    so results are unchanged).  The two trainings are independent, each
+    one grouped-map job (all Lloyd rounds inside the task, on a bounded
+    sample at scale), so they run on two driver threads next to a third
+    that fetches the query row; the build waits for the slowest."""
     shared = emb.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
     ).localCheckpoint(eager=True)
-    # The two quantizers are independent trainings over the same frame;
-    # submit them from two driver threads so their Lloyd-round jobs
-    # interleave on the cluster (Spark job submission is thread-safe and
-    # each training is internally sequential, so results are unchanged —
-    # the bit-exactness tests cover this path).  Wall drops from
-    # t_ivf + t_pq to ~max(t_ivf, t_pq); on a real cluster the same
-    # orchestration keeps executors busy during each other's driver syncs.
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         ivf_f = pool.submit(
-            ivf_train,
-            shared,
-            vec_col=vec_col,
-            id_col=id_col,
-            n_cells=n_cells,
-            iters=ivf_iters,
-            # in-plan round fold (r16): wins HERE because the training
-            # shares the driver with the concurrent PQ/query threads —
-            # fewer py4j roundtrips to contend; measured 3.05 -> 2.69 s
-            # on this row, while the sequential callers measured flat or
-            # slower (see ivf_train's fold note)
-            fold_rounds=True,
+            ivf_train, shared, vec_col=vec_col, id_col=id_col,
+            n_cells=n_cells, iters=ivf_iters,
         )
         pq_f = pool.submit(
-            pq_train,
-            shared,
-            n_sub=n_sub,
-            k=k,
-            iters=pq_iters,
-            vec_col=vec_col,
-            id_col=id_col,
+            pq_train, shared, n_sub=n_sub, k=k, iters=pq_iters,
+            vec_col=vec_col, id_col=id_col,
         )
-        # third concurrent worker: the query-row lookup (reads the same
-        # eager checkpoint) — not a sequential sync after the trainings
-        q_f = pool.submit(
-            lambda: shared.where(F.col(id_col) == query_id)
-            .select(F.col(vec_col).alias("x"))
-            .first()
-        )
-        ivf = ivf_f.result()
-        pq = pq_f.result()
-        q_raw = q_f.result()
-    cells, cents = ivf.assignments, ivf.centroids
-    if q_raw is None:
-        raise ValueError(f"query_id {query_id} not present in {id_col}")
-    qv = list(q_raw["x"])
-    # driver-side replica of _unit_fixedpoint on the one query row — each
-    # step the same single IEEE double op Spark performs (floor-quantized
-    # squared-coordinate sum, sqrt, 1e-12 floor), so u_q is bit-identical
-    # to the frame version while costing zero extra Spark jobs
-    norm_fp = sum(int(math.floor(v * v * 1e12 + 0.5)) for v in qv)
-    nrm = max(math.sqrt(norm_fp / 1e12), 1e-12)
-    u_q = [v / nrm for v in qv]
-
-    def d_fp(c: list[float]) -> int:
-        return sum(
-            int(math.floor((u_q[d] - c[d]) * (u_q[d] - c[d]) * 1e12 + 0.5))
-            for d in range(len(c))
-        )
-
-    probe_cells = [
-        cell for _, cell in sorted((d_fp(c), cell) for cell, c in cents)[:n_probe]
-    ]
-
-    codes, cb = pq.codes, pq.codebook
-    k, d_sub = pq.k, pq.d_sub
-    qq = [int(math.floor(v * 1_000_000 + 0.5)) for v in qv]
-    adc = None
-    for s in range(n_sub):
-        tab = [
-            sum((qq[s * d_sub + d] - cb[s][j][d]) ** 2 for d in range(d_sub))
-            for j in range(k)
-        ]
-        t_lit = F.expr(_sql_long_array(tab))
-        term = F.element_at(t_lit, F.col(f"c{s}") + 1)
-        adc = term if adc is None else adc + term
-
-    cand = codes.join(cells, on=id_col).where(
-        F.col("cell").isin([int(c) for c in probe_cells])
-        & (F.col(id_col) != query_id)
-    )
-    return (
-        cand.select(
-            F.col(id_col),
-            F.col("cell").cast("int").alias("cell"),
-            adc.cast("long").alias("adc_fp"),
-        )
-        .orderBy(F.col("adc_fp").asc(), F.col(id_col))
-        .limit(k_out)
+        q_f = pool.submit(_query_vector, shared, query_id, vec_col, id_col)
+        ivf, pq, qv = ivf_f.result(), pq_f.result(), q_f.result()
+    _, probe_cells = _probe(qv, ivf.centroids, n_probe)
+    adc = _adc_score(_adc_tables(_quantize(qv), pq.codebook))
+    return _probed_topk(
+        pq.codes, ivf.assignments, probe_cells, adc, query_id, id_col, k_out
     )
 
 
@@ -1110,16 +841,11 @@ def ivfpq_residual_topk(
     probe = partition pruning, ADC over 8-byte codes of probed cells)
     plus one map-only residual projection between the two trainings.
 
-    Driver-sync budget (VERDICT r09 next #5): the trainings' seed
-    collects fold into their first Lloyd rounds (in-plan broadcast seed
-    frames — see ivf_train/pq_train), the shared checkpoint is LAZY
-    (materialized under IVF round 1, the first job that reads it; no
-    thread races it — the query-row fetch starts only after ivf_train
-    returns), and the query-row lookup runs on a side thread concurrent
-    with PQ training.  Sequential syncs: IVF round 1+2, PQ round 1+2 —
-    four, down from r09's ~9 (checkpoint job, two seed collects, four
-    rounds, query fetch, each its own scheduling boundary on a busy
-    host).  Job count pinned in tests/test_ml_lsh.py."""
+    Build shape: each training is one grouped-map job with every Lloyd
+    round inside the task (on a bounded sample at scale); the shared
+    checkpoint is lazy (materialized by the IVF training, the first job
+    that reads it), and the query-row fetch runs on a side thread next
+    to PQ training.  Job count pinned in tests/test_ml_lsh.py."""
     shared = emb.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
     ).localCheckpoint(eager=False)
@@ -1127,10 +853,10 @@ def ivfpq_residual_topk(
         shared, vec_col=vec_col, id_col=id_col, n_cells=n_cells, iters=ivf_iters
     )
     cells, cents = ivf.assignments, ivf.centroids
-    # residuals on the SAME unit frame ivf assigned from; centroid lookup
-    # is a map literal keyed by cell id (cells can drop out of Lloyd
-    # rounds, so ids may be non-contiguous — element_at on a dense array
-    # would misalign)
+    # residuals on the SAME unit frame ivf assigned from (training already
+    # materialized it); centroid lookup is a map literal keyed by cell id
+    # (cells can drop out of Lloyd rounds, so ids may be non-contiguous —
+    # element_at on a dense array would misalign)
     cmap = F.expr(
         "map_from_arrays("
         + _sql_long_array([cell for cell, _ in cents])
@@ -1138,13 +864,8 @@ def ivfpq_residual_topk(
         + ", ".join(_sql_double_array(c) for _, c in cents)
         + "))"
     )
-    # training already materialized the checkpointed unit frame — reuse
-    # it rather than re-running the normalization pass over the corpus
-    u = ivf.unit if ivf.unit is not None else _unit_fixedpoint(
-        shared, vec_col, id_col
-    )
     resid = (
-        u.join(
+        ivf.unit.join(
             cells.select(F.col(id_col).alias("_id"), "cell"), "_id"
         )
         .select(
@@ -1153,62 +874,27 @@ def ivfpq_residual_topk(
                 "u", F.element_at(cmap, F.col("cell")), lambda a, b: a - b
             ).alias("resid"),
         )
-        .localCheckpoint(eager=False)  # feeds every PQ Lloyd round
+        .localCheckpoint(eager=False)  # feeds training and the final codes
     )
-    # the query-row fetch only needs the (already-materialized) shared
-    # checkpoint — run it concurrent with PQ training instead of as its
-    # own sequential sync after it
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=1) as pool:
-        q_fut = pool.submit(
-            lambda: shared.where(F.col(id_col) == query_id)
-            .select(F.col(vec_col).alias("x"))
-            .first()
-        )
+        q_f = pool.submit(_query_vector, shared, query_id, vec_col, id_col)
         pq = pq_train(
             resid, n_sub=n_sub, k=k, iters=pq_iters, vec_col="resid",
             id_col=id_col,
         )
-        q_raw = q_fut.result()
-    codes, cb = pq.codes, pq.codebook
-    k, d_sub = pq.k, pq.d_sub
-    if q_raw is None:
-        raise ValueError(f"query_id {query_id} not present in {id_col}")
-    qv = list(q_raw["x"])
-    norm_fp = sum(int(math.floor(v * v * 1e12 + 0.5)) for v in qv)
-    nrm = max(math.sqrt(norm_fp / 1e12), 1e-12)
-    u_q = [v / nrm for v in qv]
-
-    def d_fp(c: list[float]) -> int:
-        return sum(
-            int(math.floor((u_q[d] - c[d]) * (u_q[d] - c[d]) * 1e12 + 0.5))
-            for d in range(len(c))
-        )
-
+        qv = q_f.result()
+    u_q, probe_cells = _probe(qv, cents, n_probe)
     by_cell = dict(cents)
-    probe_cells = [
-        cell for _, cell in sorted((d_fp(c), cell) for cell, c in cents)[:n_probe]
-    ]
     # per-probed-cell ADC tables from the query's per-cell residual —
     # the residual recipe's extra cost vs the composite's single table
-    tabs: dict[int, list[list[int]]] = {}
-    for cell in probe_cells:
-        c = by_cell[cell]
-        qq = [
-            int(math.floor((u_q[d] - c[d]) * 1_000_000 + 0.5))
-            for d in range(len(c))
-        ]
-        tabs[cell] = [
-            [
-                sum(
-                    (qq[s * d_sub + d] - cb[s][j][d]) ** 2
-                    for d in range(d_sub)
-                )
-                for j in range(k)
-            ]
-            for s in range(n_sub)
-        ]
+    tabs = {
+        cell: _adc_tables(
+            _quantize([a - b for a, b in zip(u_q, by_cell[cell])]), pq.codebook
+        )
+        for cell in probe_cells
+    }
     adc = None
     for s in range(n_sub):
         m = F.expr(
@@ -1222,17 +908,6 @@ def ivfpq_residual_topk(
             F.element_at(m, F.col("cell")), F.col(f"c{s}") + 1
         )
         adc = term if adc is None else adc + term
-
-    cand = codes.join(cells, on=id_col).where(
-        F.col("cell").isin([int(c) for c in probe_cells])
-        & (F.col(id_col) != query_id)
-    )
-    return (
-        cand.select(
-            F.col(id_col),
-            F.col("cell").cast("int").alias("cell"),
-            adc.cast("long").alias("adc_fp"),
-        )
-        .orderBy(F.col("adc_fp").asc(), F.col(id_col))
-        .limit(k_out)
+    return _probed_topk(
+        pq.codes, cells, probe_cells, adc.cast("long"), query_id, id_col, k_out
     )

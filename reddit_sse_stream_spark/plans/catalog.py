@@ -5553,14 +5553,16 @@ def embed_kmeans_fixedpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-integer Lloyd's k-means (k=4, 3 rounds) over the embedding
     column (operators/corpus.py:kmeans_fixedpoint) — the semantic-
     clustering step before cluster-balanced sampling or SemDeDup-style
-    per-cluster pruning.  Centroids are driver-held k·dim ints baked into
-    each round's map pass as literals (parameter-server shape, never a
-    data collect); distances are int64 folds behind an explode barrier;
-    centroid updates floor an exact < 2^53 quotient — so assignments AND
-    squared distances are bit-identical cross-engine, verified against a
-    3-round unrolled-CTE oracle with no tolerance band.  The reference
-    has no clustering at all (sse.py is equality filters over a feed);
-    this serves the training-data curation surface."""
+    per-cluster pruning.  It is a one-subspace PQ training: every round
+    runs inside one grouped-map task (one training job, on a bounded
+    sample at scale) that returns only the k·dim centroid table, and the
+    final assignment is one map pass with the centroids as literals;
+    distances are int64 sums and centroid updates floor an exact < 2^53
+    quotient — so assignments AND squared distances are bit-identical
+    cross-engine, verified against a 3-round unrolled-CTE oracle with no
+    tolerance band.  The reference has no clustering at all (sse.py is
+    equality filters over a feed); this serves the training-data
+    curation surface."""
     return corpus.kmeans_fixedpoint(_t(spark, sf_dir, "embeddings"))
 
 
@@ -9872,9 +9874,10 @@ def embed_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization codes (operators/ml_lsh.py:pq_codes_fixedpoint
     — Jégou et al. 2011, the FAISS IVF-PQ building block): per-subspace
     exact-integer Lloyd codebooks learned for ALL 8 subspaces in one
-    aggregate per round, every vector encoded as 8 one-byte codes + its
-    integer reconstruction error — the compression that fits a billion-
-    vector ANN index in RAM.  Codes and recon error are bit-verified
+    grouped-map job keyed by subspace (every round inside the task),
+    every vector encoded as 8 one-byte codes + its integer
+    reconstruction error — the compression that fits a billion-vector
+    ANN index in RAM.  Codes and recon error are bit-verified
     against the unrolled-CTE twin."""
     from reddit_sse_stream_spark.operators.ml_lsh import pq_codes_fixedpoint
 
@@ -10035,9 +10038,12 @@ def knn_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse quantizer prunes the corpus to the query's 2 nearest cells,
     then PQ-ADC scores only those cells' 8-byte codes — at 100 TB the
     cell is the partition column, so the probe prunes the SCAN and ADC
-    reads 8 bytes/vector of what's left.  Pure composition of the two
-    oracled quantizers; probe selection, tables, candidate set, and the
-    (adc_fp, id) cut are all value-verified in one composed SQL twin."""
+    reads 8 bytes/vector of what's left.  Each quantizer trains as one
+    grouped-map job with every Lloyd round inside the task (a bounded
+    sample at scale), the two on parallel driver threads.  Pure
+    composition of the two oracled quantizers; probe selection, tables,
+    candidate set, and the (adc_fp, id) cut are all value-verified in
+    one composed SQL twin."""
     from reddit_sse_stream_spark.operators.ml_lsh import ivfpq_topk
 
     return ivfpq_topk(_t(spark, sf_dir, "embeddings"))
