@@ -1,6 +1,7 @@
 """Benchmark harness: runs the headline catalog queries at
-``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints the summary as the FINAL JSON line:
+``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 test data) on ``local[N]``
+(N = ``$SPARK_GRAFT_CPUS``, default the host's usable CPUs) and prints
+the summary as the FINAL JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 

@@ -100,9 +100,9 @@ def pii_redact(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def rp_signs(out_dim: int, dim: int, salt: str = "rp") -> list[list[int]]:
+def rp_signs(out_dim: int, dim: int) -> list[list[int]]:
     """The deterministic ±1 sign matrix for :func:`random_projection_sketch`:
-    sign[j][d] = +1 if md5("{salt}:{d}:{j}") is even in its first 15 hex
+    sign[j][d] = +1 if md5("rp:{d}:{j}") is even in its first 15 hex
     digits, else -1.  Computed driver-side with hashlib, whose md5 of the
     identical string matches SQL ``md5()`` in any engine — so an oracle can
     either inline the same CASE-on-md5 expression or embed these literals,
@@ -110,21 +110,17 @@ def rp_signs(out_dim: int, dim: int, salt: str = "rp") -> list[list[int]]:
     import hashlib
 
     def sgn(d: int, j: int) -> int:
-        h = int(hashlib.md5(f"{salt}:{d}:{j}".encode()).hexdigest()[:15], 16)
+        h = int(hashlib.md5(f"rp:{d}:{j}".encode()).hexdigest()[:15], 16)
         return 1 if h % 2 == 0 else -1
 
     return [[sgn(d, j) for d in range(dim)] for j in range(out_dim)]
 
 
 def random_projection_sketch(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    out_dim: int = 8,
-    dim: int = 64,
+    df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
 ) -> DataFrame:
-    """Signed random projection (Achlioptas ±1 variant) of an embedding
-    column down to ``out_dim`` components — the dimensionality-reduction
+    """Signed random projection (Achlioptas ±1 variant) of a 64-dim
+    embedding column down to 8 components — the dimensionality-reduction
     sketch that feeds LSH tables, coarse clustering, or a visual map
     without shipping full vectors.
 
@@ -134,14 +130,14 @@ def random_projection_sketch(
     integer total — bit-identical across partitionings and engines — and
     the final /1e6 is one correctly-rounded IEEE division.
 
-    Scale: the sign matrix is data-independent and tiny (out_dim × dim
+    Scale: the sign matrix is data-independent and tiny (8 × 64
     literals baked into the plan — nothing is broadcast, nothing joins),
     and each component is a zip_with/aggregate over the row's own array:
-    map-only, zero shuffles, linear in out_dim × dim per row."""
-    signs = rp_signs(out_dim, dim)
+    map-only, zero shuffles, linear in 8 × 64 per row."""
+    signs = rp_signs(8, 64)
     x = F.col(vec_col).cast("array<double>")
     cols = []
-    for j in range(out_dim):
+    for j in range(8):
         # rendered SQL constant, not element-wise F.lit (r15 — see
         # operators/sqlrender.py; ±1 doubles render exactly)
         s_j = F.expr(sql_double_array(signs[j]))
@@ -240,11 +236,7 @@ def standardize_embeddings(
 
 
 def pca_top_component(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    iters: int = 4,
-    dim: int = 64,
+    df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id", dim: int = 64
 ) -> DataFrame:
     """Top principal direction of an embedding column by power iteration,
     returning each vector's projection onto it (the 1-D "spread" axis a
@@ -253,7 +245,7 @@ def pca_top_component(
     reproducibility.
 
     v_{t+1} = normalize(X^T (X v_t)), v_0 = 1/8 on every dimension, a
-    fixed ``iters`` rounds (deterministic, and unrollable as SQL CTEs for
+    fixed 4 rounds (deterministic, and unrollable as SQL CTEs for
     the oracle twin).  Every accumulation is fixed-point int64 — per-row
     dots quantize addends at 1e-12, the X^T fold at 1e-9, norm squares at
     1e-12 — and every scalar step between them is a single IEEE op
@@ -273,11 +265,11 @@ def pca_top_component(
     rows) — the iterate quantization makes the result identical either
     way once re-quantized at 1e-6.
 
-    Convergence needs a spectral gap — rate is (l2/l1)^iters per round,
-    so ``iters=4`` nails a spiked corpus (the case where a dominant axis
+    Convergence needs a spectral gap — rate is (l2/l1)^4 over the 4 rounds,
+    which nails a spiked corpus (the case where a dominant axis
     exists and matters) but no fixed round count resolves an isotropic
-    one; raise ``iters`` or gate on the Rayleigh-quotient delta when the
-    gap is unknown."""
+    one; raise the round count or gate on the Rayleigh-quotient delta
+    when the gap is unknown."""
     import math
 
     x = F.col(vec_col).cast("array<double>")
@@ -297,7 +289,7 @@ def pca_top_component(
         )
 
     v = [0.125] * dim
-    for _ in range(iters):
+    for _ in range(4):
         # explode-of-1-element-array barrier: materialize dot once per row
         # so the transform lambda below multiplies an attribute instead of
         # re-folding the whole dot product per element (HOF re-inline trap,
@@ -336,17 +328,15 @@ def pca_top_component(
 
 
 def matryoshka_norm_retention(
-    df: DataFrame,
-    prefixes: tuple[int, ...] = (8, 16, 32),
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
 ) -> DataFrame:
     """Per-vector norm retention of matryoshka-style prefix truncations:
-    for each prefix length m, ``ret_m = floor(||x[:m]||² · 1e4 / ||x||²) /
-    1e4`` — the diagnostic a pipeline runs before swapping full vectors
-    for truncated ones in a coarse ANN stage (MRL embeddings front-load
-    information; a LOW retention at the chosen prefix says these vectors
-    were not trained that way and truncation will wreck recall).
+    for each prefix length m in (8, 16, 32),
+    ``ret_m = floor(||x[:m]||² · 1e4 / ||x||²) / 1e4`` — the diagnostic a
+    pipeline runs before swapping full vectors for truncated ones in a
+    coarse ANN stage (MRL embeddings front-load information; a LOW
+    retention at the chosen prefix says these vectors were not trained
+    that way and truncation will wreck recall).
 
     Exactness: squared norms accumulate as int64 sums of
     ``floor(x_i²·1e6 + 0.5)`` addends (each a single IEEE op on the same
@@ -374,7 +364,7 @@ def matryoshka_norm_retention(
             F.floor(ssum(F.slice("q2", 1, m)) * 10000.0 / F.greatest(full, F.lit(1)))
             / 10000.0
         ).alias(f"ret_{m}")
-        for m in prefixes
+        for m in (8, 16, 32)
     ]
     return base.select(id_col, full.alias("norm2_fp6"), *cols)
 
@@ -619,14 +609,11 @@ def quantize_embeddings_int8(
 
 
 def dsir_weights(
-    docs: DataFrame,
-    target_lang: str = "en",
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """DSIR-style importance weights [Xie et al. 2023, arXiv:2302.03169]:
     score every document by how much its unigram distribution looks like
-    a TARGET slice of the corpus (here ``lang == target_lang``) relative
+    a TARGET slice of the corpus (here ``lang == 'en'``) relative
     to the full SOURCE distribution — the data-selection signal used to
     resample a raw crawl toward a target domain before training.
 
@@ -669,7 +656,7 @@ def dsir_weights(
     stats = doc_tok.groupBy("w").agg(
         F.sum("n").alias("cs"),
         F.sum(
-            F.when(F.col("lang") == target_lang, F.col("n")).otherwise(0)
+            F.when(F.col("lang") == "en", F.col("n")).otherwise(0)
         ).alias("ct"),
     )
     totals = stats.agg(
@@ -810,8 +797,9 @@ def global_dense_rank(
     df: DataFrame, *cols: str, out_col: str = "rank", n_parts: int = 32
 ) -> DataFrame:
     """EXACT global dense rank without a single-partition window — the
-    two-phase shape several operators document as their 100 TB swap
-    (suffix_ranks' seed/re-rank, quality quantile gates): range-partition
+    two-phase shape for a ranking too large for one task (the
+    single-partition windows of suffix_ranks and the quality quantile
+    gates would need it at scale): range-partition
     on the key so equal keys land in ONE partition (rank boundaries never
     split), dense-rank locally per partition, then add per-partition
     offsets (cumulative distinct-key counts — a P-sized driver fold, the
@@ -905,21 +893,19 @@ def global_ntile(
     return local.withColumn(out_col, bucket.cast("long")).drop("_pid", "_lrn")
 
 
-def doremi_domain_reweight(
-    docs: DataFrame, ref_mod: int = 10, eta_x1e6: int = 500_000
-) -> DataFrame:
+def doremi_domain_reweight(docs: DataFrame) -> DataFrame:
     """Domain-mix reweighting by per-domain excess signal — the
     multiplicative-weights step of DoReMi [Xie et al. 2023, "Doremi:
     Optimizing Data Mixtures Speeds Up Language Model Pretraining"],
     with the proxy-model excess loss replaced by an EXACT-INTEGER proxy:
     each domain's out-of-reference-vocabulary bigram rate against a
-    deterministic reference slice (doc_id % ref_mod == 0 — the "proxy
+    deterministic reference slice (doc_id % 10 == 0 — the "proxy
     training set").  Domains whose text the reference models poorly
     (high OOV rate) get upweighted, exactly DoReMi's direction, and
     every quantity is an int64 count or one IEEE double op, so both
     engines produce bit-identical weights with no exp/log anywhere.
 
-    boost_x1e6  = 1e6 + (eta_x1e6 * n_oov) div n_bigrams      (int64)
+    boost_x1e6  = 1e6 + (500000 * n_oov) div n_bigrams        (int64)
     weight_x1e6 = floor(n_docs * boost * 1e6 / sum(raw))      (2 IEEE ops)
 
     Scale shape: ONE bigram exchange (the reference vocab is a distinct
@@ -942,7 +928,7 @@ def doremi_domain_reweight(
         ).alias("bg"),
     )
     ref_vocab = (
-        big.filter(F.pmod(F.col("doc_id"), F.lit(ref_mod)) == 0)
+        big.filter(F.pmod(F.col("doc_id"), F.lit(10)) == 0)
         .select("bg")
         .distinct()
         .withColumn("_seen", F.lit(1))
@@ -973,9 +959,7 @@ def doremi_domain_reweight(
                 + F.when(
                     F.col("n_bigrams") == 0, F.lit(0)
                 ).otherwise(
-                    F.expr(
-                        f"(cast({eta_x1e6} as bigint) * n_oov) div n_bigrams"
-                    )
+                    F.expr("(cast(500000 as bigint) * n_oov) div n_bigrams")
                 )
             ).cast("long"),
         )
@@ -1003,13 +987,11 @@ def doremi_domain_reweight(
     ).orderBy("source")
 
 
-def quality_linear_probe(
-    docs: DataFrame, iters: int = 3, eta: float = 0.5
-) -> DataFrame:
+def quality_linear_probe(docs: DataFrame) -> DataFrame:
     """Learned document-quality scorer — the linear-probe skeleton of the
     CCNet / fastText-classifier quality gate [Wenzek et al. 2020,
     "CCNet"; the Gopher/LLaMA pipelines train the same shape]: a linear
-    model over cheap per-doc features, trained by ``iters`` rounds of
+    model over cheap per-doc features, trained by 3 rounds of
     full-batch gradient descent on squared loss, then every document
     scored by the learned projection.  The rule-based cousin is
     ``text.gopher_gate``; this is the data-driven half a real pipeline
@@ -1023,8 +1005,8 @@ def quality_linear_probe(
 
     Exactness playbook = :func:`pca_top_component`: per-row dots quantize
     addends at 1e-12 into int64, gradient folds at 1e-9, the weight
-    update's scalar steps are each one IEEE op (g/1e9, /n, *eta with a
-    power-of-two eta, subtract), and w re-quantizes to 1e-6 per round —
+    update's scalar steps are each one IEEE op (g/1e9, /n, *0.5 (a
+    power-of-two step size), subtract), and w re-quantizes to 1e-6 per round —
     so Spark, the driver fold, and the unrolled-CTE SQL twin produce
     bit-identical weights and scores.
 
@@ -1074,7 +1056,7 @@ def quality_linear_probe(
         )
 
     w = [0.0] * dim
-    for _ in range(iters):
+    for _ in range(3):
         # explode-of-1-element-array barrier: materialize the residual
         # once per row (HOF re-inline trap, see pca_top_component)
         withres = feat.select(
@@ -1106,7 +1088,7 @@ def quality_linear_probe(
         by_d = {r["d"]: r["gfp"] for r in grads.collect()}
         w = [
             math.floor(
-                (w[d] - eta * ((by_d.get(d, 0) / 1e9) / n)) * 1e6 + 0.5
+                (w[d] - 0.5 * ((by_d.get(d, 0) / 1e9) / n)) * 1e6 + 0.5
             )
             / 1e6
             for d in range(dim)

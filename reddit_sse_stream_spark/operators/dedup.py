@@ -37,6 +37,15 @@ from reddit_sse_stream_spark.operators.sqlrender import sql_long_array
 # overflow inside the JVM expression.
 _MERSENNE_P = (1 << 31) - 1
 
+# Every minhash family below shingles 5-word windows.  The Arrow kernel
+# signs with 64 hashes (16 bands of 4 rows), the md5 family with 8 (4
+# bands of 2 rows) and the source-level sketch with 16.
+_SHINGLE_K = 5
+_FAST_HASHES = 64
+_MD5_HASHES = 8
+_MD5_BANDS = 4
+_SOURCE_HASHES = 16
+
 
 def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     """Duplicate groups by exact text digest: digest, surviving (min) doc_id,
@@ -156,10 +165,9 @@ def _signature_col(num_hashes: int):
     )
 
 
-def minhash_features_fast(
-    docs: DataFrame, num_hashes: int = 64, k: int = 5
-) -> DataFrame:
-    """(doc_id, sh array<long>, sig array<long>) in ONE Arrow-batched pass.
+def minhash_features_fast(docs: DataFrame) -> DataFrame:
+    """(doc_id, sh array<long>, sig array<long>) in ONE Arrow-batched pass:
+    the distinct 5-word shingle hashes and their 64-hash minhash signature.
 
     numpy kernel per batch: crc32 token hashes -> rolling polynomial shingle
     hashes (sliding windows) -> unique -> (a*x+b) mod P minima. Replaces the
@@ -169,7 +177,7 @@ def minhash_features_fast(
     import numpy as np
     import pandas as pd
 
-    coeffs = _coeffs(num_hashes)
+    coeffs = _coeffs(_FAST_HASHES)
     a_vec = np.array([a for a, _ in coeffs], dtype=np.int64)[:, None]
     b_vec = np.array([b for _, b in coeffs], dtype=np.int64)[:, None]
     p = _MERSENNE_P
@@ -198,7 +206,7 @@ def minhash_features_fast(
                 th = np.array([tok_hash(t) for t in toks], dtype=np.int64)
                 if len(th) == 0:
                     th = np.zeros(1, dtype=np.int64)
-                win = sliding_window_view(th, min(k, len(th)))
+                win = sliding_window_view(th, min(_SHINGLE_K, len(th)))
                 s = np.zeros(win.shape[0], dtype=np.int64)
                 for j in range(win.shape[1]):
                     s = (s * 31 + win[:, j]) % p
@@ -391,13 +399,7 @@ def _band_candidates(sig_df: DataFrame, num_hashes: int, bands: int) -> DataFram
     )
 
 
-def near_dup_pairs(
-    docs: DataFrame,
-    threshold: float = 0.8,
-    num_hashes: int = 64,
-    bands: int = 16,
-    k: int = 5,
-) -> DataFrame:
+def near_dup_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """End-to-end near-dup detection: one Arrow shingle/signature pass,
     LSH banding, exact Jaccard verify.
 
@@ -410,8 +412,8 @@ def near_dup_pairs(
     while checkpoint blocks are weak-ref cleaned when the frame is
     garbage-collected.
     """
-    feat = minhash_features_fast(docs, num_hashes, k).localCheckpoint(eager=False)
-    cands = _band_candidates(feat.select("doc_id", "sig"), num_hashes, bands)
+    feat = minhash_features_fast(docs).localCheckpoint(eager=False)
+    cands = _band_candidates(feat.select("doc_id", "sig"), _FAST_HASHES, 16)
     a = feat.select("doc_id", "sh").alias("a")
     b = feat.select("doc_id", "sh").alias("b")
     return (
@@ -440,15 +442,11 @@ def md5_hash60(col) -> "F.Column":
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def _md5_sketch(
-    docs: DataFrame, num_hashes: int = 8, bands: int = 4, k: int = 5
-) -> tuple[DataFrame, DataFrame]:
-    """(sh, banded) for the md5 minhash family: the checkpointed
-    (doc_id, sh array<long>) shingle-hash frame feeding signature fold and
-    verify, and the (doc_id, band, key) banding frame — shared by
-    :func:`minhash_md5_near_dups` and :func:`minhash_md5_incremental_new`."""
-    words = F.split(F.lower(F.col("text")), r"\s+")
-    sh_arr = F.array_distinct(
+def _md5_shingle_hashes() -> "F.Column":
+    """Distinct md5 hashes (mod P) of the 5-word shingles of the ``words``
+    array column — the shingle set of every md5 sketch below."""
+    k = _SHINGLE_K
+    return F.array_distinct(
         F.transform(
             F.sequence(F.lit(0), F.size("words") - k),
             lambda i: F.pmod(
@@ -457,26 +455,34 @@ def _md5_sketch(
             ),
         )
     )
+
+
+def _md5_sketch(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(sh, banded) for the md5 minhash family: the checkpointed
+    (doc_id, sh array<long>) shingle-hash frame feeding signature fold and
+    verify, and the (doc_id, band, key) banding frame — shared by
+    :func:`minhash_md5_near_dups` and :func:`minhash_md5_incremental_new`."""
+    words = F.split(F.lower(F.col("text")), r"\s+")
     # explode-of-1-element-array barriers (see text.py:word_ngrams): each
     # stage's array becomes a concrete attribute, so CollapseProject can't
     # re-inline split under the shingle transform (O(len x grams)) nor the
     # md5 shingle array / signature fold into downstream lambdas (which
     # would recompute the signature once PER BAND).
     tok = docs.select("doc_id", F.explode(F.array(words)).alias("words")).filter(
-        F.size("words") >= k
+        F.size("words") >= _SHINGLE_K
     )
-    sh = tok.select("doc_id", F.explode(F.array(sh_arr)).alias("sh")).localCheckpoint(
-        eager=False
-    )
+    sh = tok.select(
+        "doc_id", F.explode(F.array(_md5_shingle_hashes())).alias("sh")
+    ).localCheckpoint(eager=False)
     sig = sh.select(
-        "doc_id", F.explode(F.array(_signature_col(num_hashes))).alias("sig")
+        "doc_id", F.explode(F.array(_signature_col(_MD5_HASHES))).alias("sig")
     )
-    rpb = num_hashes // bands
+    rpb = _MD5_HASHES // _MD5_BANDS
     banded = sig.select(
         "doc_id",
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
+                F.sequence(F.lit(0), F.lit(_MD5_BANDS - 1)),
                 lambda b: F.struct(
                     b.alias("band"),
                     F.concat_ws(
@@ -489,17 +495,10 @@ def _md5_sketch(
     return sh, banded
 
 
-def minhash_md5_incremental_new(
-    docs: DataFrame,
-    batch_pred,
-    threshold: float = 0.8,
-    num_hashes: int = 8,
-    bands: int = 4,
-    k: int = 5,
-) -> DataFrame:
+def minhash_md5_incremental_new(docs: DataFrame, batch_pred) -> DataFrame:
     """Incremental NEAR-dup gate across snapshots: of the incoming batch
     (rows where ``batch_pred`` holds), keep only documents with no near-
-    duplicate (jaccard >= ``threshold``) in the existing corpus (the rest)
+    duplicate (jaccard >= 0.8) in the existing corpus (the rest)
     — the daily-crawl admission step that :func:`incremental_new_docs`
     performs for EXACT duplicates, upgraded to the sketch family.
 
@@ -514,7 +513,7 @@ def minhash_md5_incremental_new(
     at 100 TB the corpus side's sketch is precomputed and stored, so each
     day pays one kernel pass over the NEW batch plus a band-key equi-join
     against the corpus band index."""
-    sh, banded = _md5_sketch(docs, num_hashes, bands, k)
+    sh, banded = _md5_sketch(docs)
     is_batch = batch_pred(F.col("doc_id"))
     cand = (
         banded.filter(is_batch)
@@ -541,20 +540,14 @@ def minhash_md5_incremental_new(
     bad = (
         cand.join(a, "nb")
         .join(b, "ob")
-        .filter(jac >= threshold)
+        .filter(jac >= 0.8)
         .select(F.col("nb").alias("doc_id"))
         .distinct()
     )
     return docs.filter(batch_pred(F.col("doc_id"))).join(bad, "doc_id", "left_anti")
 
 
-def minhash_md5_near_dups(
-    docs: DataFrame,
-    threshold: float = 0.8,
-    num_hashes: int = 8,
-    bands: int = 4,
-    k: int = 5,
-) -> DataFrame:
+def minhash_md5_near_dups(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Minhash-LSH near-dup pipeline with every stage ANSI-expressible:
     md5-derived shingle hashes and literal signature-slice band keys (no
     xxhash bucketing), so a SQL oracle reproduces byte-identical candidates
@@ -567,7 +560,7 @@ def minhash_md5_near_dups(
     only — just with the portable hash family.  The xxhash64/Arrow variant
     stays the throughput path; this one is the correctness anchor.
     """
-    sh, banded = _md5_sketch(docs, num_hashes, bands, k)
+    sh, banded = _md5_sketch(docs)
     cand = bucket_pair_explode(
         banded, ["band", "key"], "doc_id", "doc_a", "doc_b"
     ).distinct()
@@ -589,13 +582,7 @@ def minhash_md5_near_dups(
     )
 
 
-def lsh_recall_audit(
-    docs: DataFrame,
-    num_hashes: int = 8,
-    bands: int = 4,
-    k: int = 5,
-    df_cap: int = 64,
-) -> DataFrame:
+def lsh_recall_audit(docs: DataFrame) -> DataFrame:
     """Recall audit of minhash-LSH banding against exact shingle Jaccard,
     bucketed by Jaccard decile — the measured S-curve every pipeline
     should check before trusting a (bands, rows) choice at 100 TB: the
@@ -607,7 +594,7 @@ def lsh_recall_audit(
 
     - ``n_truth``: pairs whose EXACT md5-shingle Jaccard lands in the
       bucket, drawn from the shared-cold-shingle universe (a pair must
-      share >= 1 shingle with document frequency <= ``df_cap`` to enter
+      share >= 1 shingle with document frequency <= 64 to enter
       the audit — the same hot-key guard as the gram-jaccard family, so
       the audit itself can't go quadratic; pairs sharing only ubiquitous
       shingles are outside the audited universe, stated here because a
@@ -628,14 +615,14 @@ def lsh_recall_audit(
     gram family in tests/test_operators.py); the final audit frame is
     <= 10 rows.  Reference parity: the reference has no sketches at all —
     this audits the engine's own approximation honestly."""
-    sh, banded = _md5_sketch(docs, num_hashes, bands, k)
+    sh, banded = _md5_sketch(docs)
     cand = (
         bucket_pair_explode(banded, ["band", "key"], "doc_id", "doc_a", "doc_b")
         .distinct()
         .withColumn("hit", F.lit(1))
     )
     ex = sh.select("doc_id", F.explode("sh").alias("h"))
-    cold = ex.groupBy("h").count().filter(F.col("count") <= df_cap).select("h")
+    cold = ex.groupBy("h").count().filter(F.col("count") <= 64).select("h")
     exc = ex.join(cold, "h")
     tc = (
         exc.select(F.col("doc_id").alias("doc_a"), "h")
@@ -1010,8 +997,6 @@ def bloom_fp_audit(
 
 def source_minhash_matrix(
     docs: DataFrame,
-    num_hashes: int = 16,
-    k: int = 5,
     group_col: str = "source",
     text_col: str = "text",
     exact_sample_frac: float | None = None,
@@ -1021,7 +1006,7 @@ def source_minhash_matrix(
     crawl B" answered at sketch cost.  The min of a permuted hash over
     the UNION of a source's doc shingle sets equals the elementwise min
     of its docs' signatures (MinHash's mergeability), so a source's
-    entire sketch is ``num_hashes`` longs no matter how many petabytes
+    entire sketch is 16 longs no matter how many petabytes
     it holds, and the estimated Jaccard between two sources is the
     fraction of agreeing signature slots.  Every pair also carries the
     EXACT distinct-shingle Jaccard — the measured-error discipline of
@@ -1032,7 +1017,7 @@ def source_minhash_matrix(
     reproduces every value.
 
     Scale shape: ONE distinct on (source, shingle-hash) is the only
-    corpus-sized exchange; signatures are a (n_sources x num_hashes)
+    corpus-sized exchange; signatures are a (n_sources x 16)
     aggregate with map-side combine (min is algebraic); the pair frame
     is a broadcast cross of n_sources rows; the exact intersection
     self-joins the distinct frame on the hash key with <= n_sources rows
@@ -1055,20 +1040,11 @@ def source_minhash_matrix(
     ``n_union`` counts sampled hashes) so the two configurations are
     drop-in interchangeable downstream."""
     words = F.split(F.lower(F.col(text_col)), r"\s+")
-    sh_arr = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.size("words") - k),
-            lambda i: F.pmod(
-                md5_hash60(F.concat_ws(" ", F.slice("words", i + 1, k))),
-                F.lit(_MERSENNE_P),
-            ),
-        )
-    )
     tok = docs.select(
         F.col(group_col).alias("src"), F.explode(F.array(words)).alias("words")
-    ).filter(F.size("words") >= k)
+    ).filter(F.size("words") >= _SHINGLE_K)
     src_sh = (
-        tok.select("src", F.explode(sh_arr).alias("h"))
+        tok.select("src", F.explode(_md5_shingle_hashes()).alias("h"))
         .distinct()
         .localCheckpoint(eager=False)  # feeds signatures, sizes, intersections
     )
@@ -1082,7 +1058,7 @@ def source_minhash_matrix(
             int(exact_sample_frac * 10000)
         )
         audit_sh = src_sh.where(sample_pred)
-    coeffs = _coeffs(num_hashes)
+    coeffs = _coeffs(_SOURCE_HASHES)
     min_slots = [
         F.min(
             F.pmod(F.col("h") * F.lit(a) + F.lit(b), F.lit(_MERSENNE_P))
@@ -1100,16 +1076,16 @@ def source_minhash_matrix(
     sig = src_sh.groupBy("src").agg(*min_slots, n_col.alias("n"))
     a_side = sig.select(
         F.col("src").alias("source_a"),
-        *[F.col(f"s{i}").alias(f"a{i}") for i in range(num_hashes)],
+        *[F.col(f"s{i}").alias(f"a{i}") for i in range(_SOURCE_HASHES)],
         F.col("n").alias("na"),
     )
     b_side = sig.select(
         F.col("src").alias("source_b"),
-        *[F.col(f"s{i}").alias(f"b{i}") for i in range(num_hashes)],
+        *[F.col(f"s{i}").alias(f"b{i}") for i in range(_SOURCE_HASHES)],
         F.col("n").alias("nb"),
     )
     matches = None
-    for i in range(num_hashes):
+    for i in range(_SOURCE_HASHES):
         hit = (F.col(f"a{i}") == F.col(f"b{i}")).cast("long")
         matches = hit if matches is None else matches + hit
     pairs = (
@@ -1120,7 +1096,7 @@ def source_minhash_matrix(
             "source_b",
             "na",
             "nb",
-            (F.floor(matches * 10000.0 / num_hashes) / 10000.0).alias(
+            (F.floor(matches * 10000.0 / _SOURCE_HASHES) / 10000.0).alias(
                 "est_jaccard"
             ),
         )
@@ -1159,8 +1135,6 @@ def source_minhash_matrix(
 
 def source_minhash_merge_invariant(
     docs: DataFrame,
-    num_hashes: int = 16,
-    k: int = 5,
     group_col: str = "source",
     text_col: str = "text",
     split_col: str = "doc_id",
@@ -1179,30 +1153,21 @@ def source_minhash_merge_invariant(
     broke).
 
     Scale shape: three sketch aggregates over the same distinct
-    (source, h) frame (checkpointed once), each (n_sources x num_hashes)
+    (source, h) frame (checkpointed once), each (n_sources x 16)
     with map-side combine; the comparison is a broadcast-sized join of
     sketch rows."""
     words = F.split(F.lower(F.col(text_col)), r"\s+")
-    sh_arr = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.size("words") - k),
-            lambda i: F.pmod(
-                md5_hash60(F.concat_ws(" ", F.slice("words", i + 1, k))),
-                F.lit(_MERSENNE_P),
-            ),
-        )
-    )
     tok = docs.select(
         F.col(group_col).alias("src"),
         (F.col(split_col) % 2).alias("half"),
         F.explode(F.array(words)).alias("words"),
-    ).filter(F.size("words") >= k)
+    ).filter(F.size("words") >= _SHINGLE_K)
     src_sh = (
-        tok.select("src", "half", F.explode(sh_arr).alias("h"))
+        tok.select("src", "half", F.explode(_md5_shingle_hashes()).alias("h"))
         .distinct()
         .localCheckpoint(eager=False)
     )
-    coeffs = _coeffs(num_hashes)
+    coeffs = _coeffs(_SOURCE_HASHES)
 
     def sig(frame: DataFrame) -> DataFrame:
         return frame.groupBy("src").agg(
@@ -1227,19 +1192,19 @@ def source_minhash_merge_invariant(
                     F.coalesce(F.col(f"a.s{i}"), F.lit(_MERSENNE_P)),
                     F.coalesce(F.col(f"b.s{i}"), F.lit(_MERSENNE_P)),
                 ).alias(f"m{i}")
-                for i in range(num_hashes)
+                for i in range(_SOURCE_HASHES)
             ],
         )
     )
     mismatch = None
-    for i in range(num_hashes):
+    for i in range(_SOURCE_HASHES):
         bad = (F.col(f"m{i}") != F.col(f"s{i}")).cast("long")
         mismatch = bad if mismatch is None else mismatch + bad
     return (
         full.join(merged, "src")
         .agg(
             F.count("*").cast("long").alias("n_sources"),
-            F.lit(num_hashes).cast("long").alias("n_slots"),
+            F.lit(_SOURCE_HASHES).cast("long").alias("n_slots"),
             F.sum(mismatch).cast("long").alias("n_mismatch"),
         )
     )

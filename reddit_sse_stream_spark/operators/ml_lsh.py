@@ -494,14 +494,15 @@ def pq_train(
 def pq_codes_fixedpoint(
     emb: DataFrame,
     n_sub: int = 8,
-    k: int = 16,
     iters: int = 2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Single-frame surface of :func:`pq_train` — just the code frame,
     for consumers that don't run ADC queries."""
-    return pq_train(emb, n_sub, k, iters, vec_col, id_col).codes
+    return pq_train(
+        emb, n_sub=n_sub, iters=iters, vec_col=vec_col, id_col=id_col
+    ).codes
 
 
 def _quantize(vec) -> list[int]:
@@ -594,7 +595,6 @@ def pq_adc_topk(
     k_out: int = 5,
     n_sub: int = 8,
     k: int = 16,
-    iters: int = 2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     exclude_id: int | None = None,
@@ -614,9 +614,7 @@ def pq_adc_topk(
     bit-reproducible; the oracle rebuilds codebooks, codes, AND tables
     in SQL.  ADC is exact w.r.t. the QUANTIZED database vector — the
     standard PQ approximation (recon_fp bounds the per-vector gap)."""
-    model = pq_train(
-        emb, n_sub=n_sub, k=k, iters=iters, vec_col=vec_col, id_col=id_col
-    )
+    model = pq_train(emb, n_sub=n_sub, k=k, vec_col=vec_col, id_col=id_col)
     codes = model.codes
     if exclude_id is not None:
         # the query row trains/encodes like everything else but must not
@@ -748,10 +746,6 @@ def ivfpq_topk(
     k_out: int = 5,
     n_probe: int = 2,
     n_cells: int = 8,
-    ivf_iters: int = 2,
-    n_sub: int = 8,
-    k: int = 16,
-    pq_iters: int = 2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
@@ -789,13 +783,9 @@ def ivfpq_topk(
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         ivf_f = pool.submit(
-            ivf_train, shared, vec_col=vec_col, id_col=id_col,
-            n_cells=n_cells, iters=ivf_iters,
+            ivf_train, shared, vec_col=vec_col, id_col=id_col, n_cells=n_cells
         )
-        pq_f = pool.submit(
-            pq_train, shared, n_sub=n_sub, k=k, iters=pq_iters,
-            vec_col=vec_col, id_col=id_col,
-        )
+        pq_f = pool.submit(pq_train, shared, vec_col=vec_col, id_col=id_col)
         q_f = pool.submit(_query_vector, shared, query_id, vec_col, id_col)
         ivf, pq, qv = ivf_f.result(), pq_f.result(), q_f.result()
     _, probe_cells = _probe(qv, ivf.centroids, n_probe)
@@ -808,22 +798,16 @@ def ivfpq_topk(
 def ivfpq_residual_topk(
     emb: DataFrame,
     query_id: int = 0,
-    k_out: int = 5,
-    n_probe: int = 2,
-    n_cells: int = 8,
-    ivf_iters: int = 2,
-    n_sub: int = 8,
-    k: int = 16,
-    pq_iters: int = 2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """RESIDUAL-encoding IVF-PQ top-k — the full FAISS ``IVFx,PQy`` recipe
-    [Jégou et al. 2011 §III]: PQ codes quantize the residual u - c(cell)
-    to the vector's coarse centroid, not the raw vector, which is what
-    makes one small codebook serve a corpus whose cells sit far apart
-    (each cell's residual cloud is centered at the origin, so codebook
-    capacity is spent on LOCAL structure).  :func:`ivfpq_topk` is the
+    """RESIDUAL-encoding IVF-PQ top-5 (8 cells, 2 probed) — the full
+    FAISS ``IVFx,PQy`` recipe [Jégou et al. 2011 §III]: PQ codes quantize
+    the residual u - c(cell) to the vector's coarse centroid, not the raw
+    vector, which is what makes one small codebook serve a corpus whose
+    cells sit far apart (each cell's residual cloud is centered at the
+    origin, so codebook capacity is spent on LOCAL structure).
+    :func:`ivfpq_topk` is the
     cheaper residual-free deviation (codes are cell-independent, one ADC
     table per query); this variant pays one ADC table PER PROBED CELL
     (tables from the query's per-cell residual) and a sequential
@@ -849,9 +833,7 @@ def ivfpq_residual_topk(
     shared = emb.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
     ).localCheckpoint(eager=False)
-    ivf = ivf_train(
-        shared, vec_col=vec_col, id_col=id_col, n_cells=n_cells, iters=ivf_iters
-    )
+    ivf = ivf_train(shared, vec_col=vec_col, id_col=id_col)
     cells, cents = ivf.assignments, ivf.centroids
     # residuals on the SAME unit frame ivf assigned from (training already
     # materialized it); centroid lookup is a map literal keyed by cell id
@@ -880,12 +862,9 @@ def ivfpq_residual_topk(
 
     with ThreadPoolExecutor(max_workers=1) as pool:
         q_f = pool.submit(_query_vector, shared, query_id, vec_col, id_col)
-        pq = pq_train(
-            resid, n_sub=n_sub, k=k, iters=pq_iters, vec_col="resid",
-            id_col=id_col,
-        )
+        pq = pq_train(resid, vec_col="resid", id_col=id_col)
         qv = q_f.result()
-    u_q, probe_cells = _probe(qv, cents, n_probe)
+    u_q, probe_cells = _probe(qv, cents, 2)
     by_cell = dict(cents)
     # per-probed-cell ADC tables from the query's per-cell residual —
     # the residual recipe's extra cost vs the composite's single table
@@ -896,7 +875,7 @@ def ivfpq_residual_topk(
         for cell in probe_cells
     }
     adc = None
-    for s in range(n_sub):
+    for s in range(pq.n_sub):
         m = F.expr(
             "map_from_arrays("
             + _sql_long_array(probe_cells)
@@ -909,5 +888,5 @@ def ivfpq_residual_topk(
         )
         adc = term if adc is None else adc + term
     return _probed_topk(
-        pq.codes, cells, probe_cells, adc.cast("long"), query_id, id_col, k_out
+        pq.codes, cells, probe_cells, adc.cast("long"), query_id, id_col, 5
     )

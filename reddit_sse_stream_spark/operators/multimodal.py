@@ -1242,14 +1242,14 @@ def _decode_avi_gray_frames(payload: bytes) -> tuple[int, int, list[list[int]]]:
     return w, h, planes
 
 
-def video_scene_cuts(media: DataFrame, cut_threshold: int = 48) -> DataFrame:
+def video_scene_cuts(media: DataFrame) -> DataFrame:
     """Temporal video analysis over REAL AVI containers: per adjacent
     frame pair, the sum and mean of absolute gray differences — the
     classic pixel-domain scene-cut detector (frame-sampling pipelines
     cut clips at these boundaries before feature extraction).  All
     integer: sad = sum |g_a - g_b|, mad_x100 = (sad*100) div n_pix,
-    is_cut = mad_x100 > threshold*100 — fully SQL-verifiable against
-    the generative frame formula.
+    is_cut = mad_x100 > 4800 (a mean gray step above 48) — fully
+    SQL-verifiable against the generative frame formula.
 
     Scale shape: one zero-shuffle mapInPandas pass; output rows =
     transitions per clip (n_frames - 1)."""
@@ -1272,7 +1272,7 @@ def video_scene_cuts(media: DataFrame, cut_threshold: int = 48) -> DataFrame:
                     mad = (sad * 100) // n_pix
                     rows.append(
                         (int(m), f, sad, mad,
-                         int(mad > cut_threshold * 100))
+                         int(mad > 48 * 100))
                     )
             yield pd.DataFrame(
                 rows,

@@ -73,14 +73,12 @@ def random_hyperplane_buckets(
     n_planes: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
-    seed: int = 0,
 ) -> DataFrame:
-    """LSH scale path: sign-pattern bucket id per vector (random-hyperplane
-    cosine LSH). Deterministic pseudo-random planes from an i-indexed LCG so
-    tests are reproducible without RNG in the plan. ``seed`` selects an
-    independent plane family (one per LSH table)."""
-    planes = _lcg_planes(n_planes, dim, seed)
+    """LSH scale path: sign-pattern bucket id per 64-dim vector
+    (random-hyperplane cosine LSH). Deterministic pseudo-random planes from
+    an i-indexed LCG (plane family 0, the first LSH table's) so tests are
+    reproducible without RNG in the plan."""
+    planes = _lcg_planes(n_planes, 64)
     v = F.col(vec_col).cast("array<double>")
     bucket = F.lit(0).cast("long")
     for i, p in enumerate(planes):
@@ -192,7 +190,8 @@ def hyperplane_buckets_arrow(
     """(id, tbl, bucket) for ALL hash tables in ONE Arrow pass: a single
     (batch x dim) @ (dim x tables*planes) matmul + sign-bit packing per
     batch, instead of tables*planes interpreted HOF dot products per row.
-    Identical buckets to ``random_hyperplane_buckets(seed=t)``."""
+    Table t uses the plane family ``_lcg_planes(..., seed=t)``, so table 0
+    buckets exactly as :func:`random_hyperplane_buckets` does."""
     import numpy as np
 
     all_planes = np.array(
@@ -233,9 +232,9 @@ def near_dup_pairs_lsh(
     n_tables: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
 ) -> DataFrame:
-    """Embedding-cosine near-dup at scale: multi-table random-hyperplane LSH.
+    """Embedding-cosine near-dup at scale: multi-table random-hyperplane LSH
+    over 64-dim vectors.
 
     Each of ``n_tables`` independent plane families assigns every vector a
     bucket; candidate pairs are vectors sharing (table, bucket) — an
@@ -270,7 +269,7 @@ def near_dup_pairs_lsh(
     from pyspark.sql import Window
 
     cap = dedup._BUCKET_PAIR_CAP
-    buckets = hyperplane_buckets_arrow(emb, n_planes, n_tables, id_col, vec_col, dim)
+    buckets = hyperplane_buckets_arrow(emb, n_planes, n_tables, id_col, vec_col)
     v = emb.select(
         F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("v")
     )

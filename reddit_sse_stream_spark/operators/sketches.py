@@ -43,46 +43,42 @@ def cms_cell_rows(key_expr, d: int, w: int) -> F.Column:
 
 
 def countmin_heavy_hitters(
-    events: DataFrame,
-    d: int = 4,
-    w: int = 64,
-    top: int = 10,
-    key_col: str = "user_id",
+    events: DataFrame, d: int = 4, key_col: str = "user_id"
 ) -> DataFrame:
     """Count-Min sketch (Cormode & Muthukrishnan 2005) over the event
-    key column, audited against exact counts for the exact top-``top``
+    key column, audited against exact counts for the exact top-10
     keys.  Output per tracked key: (user_id, exact_cnt, cms_est,
     overcount) with the sketch's one-sided guarantee cms_est >= exact_cnt
-    always, and overcount <= N*e/w with probability 1-e^-d per key.
+    always, and overcount <= N*e/64 with probability 1-e^-d per key.
 
     Why it matters at 100 TB: the exact heavy-hitter aggregate
     (``agg_heavy_hitters_exact``) shuffles one key per distinct user; the
-    sketch shuffles d*w cells TOTAL after map-side combine —
-    per-partition state is a fixed d x w int grid, the exchange is
+    sketch shuffles d*64 cells TOTAL after map-side combine —
+    per-partition state is a fixed d x 64 int grid, the exchange is
     constant-size regardless of cardinality, and sketches from disjoint
     partitions/days merge by cell-wise addition (the property that makes
     it a streaming/aggregation-service primitive).  The exact side here
     exists to MEASURE the overcount at test scale.
 
-    Determinism: cell index for row j is md5_hash60('j:' || key) mod w —
+    Determinism: cell index for row j is md5_hash60('j:' || key) mod 64 —
     no seeds, no RNG; the same grid on any engine.
     """
-    if d <= 0 or w <= 0 or top <= 0:
-        raise ValueError("countmin_heavy_hitters needs d, w, top all positive")
+    if d <= 0:
+        raise ValueError("countmin_heavy_hitters needs a positive d")
     key = F.col(key_col).cast("string")
     cells = (
-        events.select(cms_cell_rows(key, d, w).alias("p"))
+        events.select(cms_cell_rows(key, d, 64).alias("p"))
         .groupBy(F.col("p.j").alias("j"), F.col("p.cell").alias("cell"))
         .agg(F.count("*").alias("cnt"))
     )
     exact = events.groupBy(key.alias("key")).agg(
         F.count("*").alias("exact_cnt")
     )
-    top_keys = exact.orderBy(F.desc("exact_cnt"), "key").limit(top)
+    top_keys = exact.orderBy(F.desc("exact_cnt"), "key").limit(10)
     probes = top_keys.select(
         "key",
         "exact_cnt",
-        cms_cell_rows(F.col("key"), d, w).alias("p"),
+        cms_cell_rows(F.col("key"), d, 64).alias("p"),
     ).select("key", "exact_cnt", F.col("p.j").alias("j"), F.col("p.cell").alias("cell"))
     return (
         probes.join(F.broadcast(cells), ["j", "cell"])
@@ -100,13 +96,9 @@ def countmin_heavy_hitters(
 
 
 def countmin_merge_invariant(
-    events: DataFrame,
-    d: int = 4,
-    w: int = 64,
-    key_col: str = "user_id",
-    split_col: str = "event_id",
+    events: DataFrame, key_col: str = "user_id", split_col: str = "event_id"
 ) -> DataFrame:
-    """Mergeability PROOF for the Count-Min grid: sketch two disjoint
+    """Mergeability PROOF for the 4 x 64 Count-Min grid: sketch two disjoint
     halves of the stream (split on ``split_col`` parity), merge by
     CELL-WISE ADDITION, and compare against the sketch of the whole —
     ONE row (n_cells, n_mismatch) with n_mismatch = 0.  The CMS
@@ -115,13 +107,13 @@ def countmin_merge_invariant(
     fold), and the property behind per-day/per-partition sketching with
     no coordination.
 
-    Scale shape: three constant-size grid aggregates (d*w cells each,
+    Scale shape: three constant-size grid aggregates (256 cells each,
     map-side combined) over one scan; the comparison is a full-outer
     join of 256-row frames."""
     half = F.pmod(F.col(split_col), F.lit(2))
     key = F.col(key_col).cast("string")
     cells = (
-        events.select(half.alias("half"), cms_cell_rows(key, d, w).alias("p"))
+        events.select(half.alias("half"), cms_cell_rows(key, 4, 64).alias("p"))
         .select("half", F.col("p.j").alias("j"), F.col("p.cell").alias("cell"))
         .localCheckpoint(eager=False)  # feeds full + both half grids
     )
@@ -157,16 +149,14 @@ def countmin_merge_invariant(
     )
 
 
-def equidepth_approx_bins(
-    df: DataFrame, col: str, k: int = 8, accuracy: int = 10000
-) -> DataFrame:
+def equidepth_approx_bins(df: DataFrame, col: str, k: int = 8) -> DataFrame:
     """The 100 TB equi-depth path that ``fn_histogram_equidepth`` /
     ``pack_length_buckets`` docstrings price against their exact ntile:
-    Greenwald-Khanna approx_percentile cutpoints + a BROADCAST RANGE
-    JOIN assigning every row its bin — two scans, zero global sort, no
-    single-partition window anywhere (VERDICT r11 watch item: the swap
-    existed only as prose; this is the code path, and the
-    ``*_approx_contract`` catalog rows are its externally-checked
+    Greenwald-Khanna approx_percentile cutpoints (accuracy 10000) + a
+    BROADCAST RANGE JOIN assigning every row its bin — two scans, zero
+    global sort, no single-partition window anywhere (VERDICT r11 watch
+    item: the swap existed only as prose; this is the code path, and
+    the ``*_approx_contract`` catalog rows are its externally-checked
     contract).
 
     Returns one row per bin (1..k) with the columns an external checker
@@ -177,7 +167,7 @@ def equidepth_approx_bins(
     - ``boundary_rank_ok``  the sketch's ACTUAL guarantee at this bin's
       upper cutpoint q_i: exact-rank bracket
       count(< q_i) - slack <= i*n/k <= count(<= q_i) + slack with
-      slack = n/accuracy + 1 (tie-aware — the lt/le pair brackets a
+      slack = n/10000 + 1 (tie-aware — the lt/le pair brackets a
       duplicate block instead of pretending ranks are unique; bin k has
       no upper cutpoint and reports 1);
     - ``partition_complete``  the range join covers every row exactly
@@ -198,7 +188,7 @@ def equidepth_approx_bins(
     # cutpoints first (they are an agg result, so the boundary counts
     # must run against the broadcast 1-row cut frame in a second pass)
     cuts = base.agg(
-        F.percentile_approx("_v", fracs, accuracy).alias("cuts"),
+        F.percentile_approx("_v", fracs, 10000).alias("cuts"),
         F.count("*").cast("long").alias("n_total"),
     )
     withc = base.crossJoin(F.broadcast(cuts))
@@ -241,7 +231,7 @@ def equidepth_approx_bins(
     covered = bin_counts.agg(
         F.sum("n_bin").cast("long").alias("n_covered")
     )
-    slack = F.col("n_total") / accuracy + 1
+    slack = F.col("n_total") / 10000 + 1
     rank_ok = F.when(F.col("bin") == k, F.lit(True))
     for i in range(1, k):
         target = F.col("n_total") * i / k

@@ -84,11 +84,12 @@ def lang_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.select("doc_id", *cols)
 
 
-def fingerprint(text: Column | str, length: int = 16) -> Column:
-    """Document fingerprint: truncated md5 of the case-folded,
-    whitespace-normalized text (rolling-hash stand-in, deterministic)."""
+def fingerprint(text: Column | str) -> Column:
+    """Document fingerprint: the first 16 hex digits of the md5 of the
+    case-folded, whitespace-normalized text (rolling-hash stand-in,
+    deterministic)."""
     col = F.col(text) if isinstance(text, str) else text
-    return F.substring(F.md5(F.regexp_replace(F.lower(col), r"\s+", " ")), 1, length)
+    return F.substring(F.md5(F.regexp_replace(F.lower(col), r"\s+", " ")), 1, 16)
 
 
 def word_ngrams(df: DataFrame, n: int, text_col: str = "text") -> DataFrame:
@@ -606,10 +607,10 @@ def tfidf_cosine_pairs(
 
 
 def novelty_first_owner(
-    df: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Corpus novelty curve: for every document, the fraction of its
-    DISTINCT word n-grams whose FIRST owner (minimum doc_id over the
+    DISTINCT word 3-grams whose FIRST owner (minimum doc_id over the
     whole corpus) is the document itself — the per-document marginal
     novelty a streaming ingest pipeline uses to decide whether a new
     crawl batch still adds information or is re-crawling known content
@@ -632,7 +633,7 @@ def novelty_first_owner(
     IEEE quotient)."""
     from pyspark.sql import Window
 
-    grams = word_ngrams(df.select(id_col, text_col), n, text_col=text_col)
+    grams = word_ngrams(df.select(id_col, text_col), 3, text_col=text_col)
     dg = (
         grams.select(id_col, "gram")
         .repartition("gram")
@@ -657,16 +658,12 @@ def novelty_first_owner(
 
 
 def novelty_decay_curve(
-    df: DataFrame,
-    n: int = 3,
-    n_batches: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Marginal-novelty decay per ingestion batch — the batch-level twin
     of :func:`novelty_first_owner` (VERDICT r11 next #8): split the
-    corpus into ``n_batches`` equal-width doc_id bands (ingestion order)
-    and report, per batch, how much of its distinct word-n-gram
+    corpus into 10 equal-width doc_id bands (ingestion order)
+    and report, per batch, how much of its distinct word-3-gram
     vocabulary is NEW (first batch to contain the gram).  The curve a
     crawl pipeline watches to decide when further ingestion stops adding
     information — a healthy fresh source decays slowly; a re-crawl of
@@ -678,15 +675,15 @@ def novelty_decay_curve(
     (batch, gram) dedup aggregate and the min-batch-per-gram window ride
     (subset partitioning: hash(gram) co-locates every (batch, gram)
     group and the gram window frame), then a batch-keyed aggregate whose
-    output is ``n_batches`` rows.  The batch id derives from a broadcast
+    output is 10 rows.  The batch id derives from a broadcast
     1-row min/max frame (integer band arithmetic — no global sort, no
     ntile window).  All ratios are exact integer division quantized at
     1e-4, bit-identical across engines."""
     from pyspark.sql import Window
 
-    band = f"(({id_col} - mn) * {n_batches}) div (mx - mn + 1)"
+    band = f"(({id_col} - mn) * 10) div (mx - mn + 1)"
     mm = df.agg(F.min(id_col).alias("mn"), F.max(id_col).alias("mx"))
-    grams = word_ngrams(df.select(id_col, text_col), n, text_col=text_col)
+    grams = word_ngrams(df.select(id_col, text_col), 3, text_col=text_col)
     bg = (
         grams.join(F.broadcast(mm))
         .select(F.expr(band).alias("batch"), "gram")
@@ -837,25 +834,22 @@ def pmi_top_pairs(
 
 
 def chunk_dedup_rewrite(
-    df: DataFrame,
-    chunk_words: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """CCNet-style paragraph-level dedup as a REWRITE: split every
-    document into fixed ``chunk_words``-word chunks, keep each chunk's
+    document into fixed 16-word chunks, keep each chunk's
     globally FIRST occurrence (minimum (doc_id, position) over the
     corpus — the deterministic keep-first policy shared with exact
     dedup), and re-assemble each document from its surviving chunks —
     the pass that strips boilerplate paragraphs repeated across a crawl
     while preserving each document's unique content in original order.
 
-    Contract: operates on FULL chunks only (the < chunk_words-word tail
+    Contract: operates on FULL chunks only (the < 16-word tail
     is out of scope, same as :func:`chunk_dup_stats`); a document whose
     every full chunk is owned elsewhere comes back with empty
     ``text_dedup`` and n_kept = 0 — the downstream gate's drop signal.
     EVERY input document appears in the output: one shorter than
-    ``chunk_words`` (no full chunk at all) comes back with n_chunks = 0,
+    16 words (no full chunk at all) comes back with n_chunks = 0,
     n_kept = 0, text_dedup = '' — a rewrite must not silently lose docs
     (ADVICE r07; previously such docs vanished via the empty posexplode).
 
@@ -871,7 +865,7 @@ def chunk_dedup_rewrite(
     from pyspark.sql import Window
 
     words = F.split(F.col(text_col), r"\s+")
-    n_full = F.floor(F.size(words) / chunk_words).cast("int")
+    n_full = F.floor(F.size(words) / 16).cast("int")
     idx = F.sequence(F.lit(0), n_full - 1)
     ch = (
         df.select(
@@ -888,9 +882,7 @@ def chunk_dedup_rewrite(
             F.when(
                 F.col("pos").isNotNull(),
                 F.array_join(
-                    F.slice(
-                        F.col("_w"), F.col("_i") * chunk_words + 1, chunk_words
-                    ),
+                    F.slice(F.col("_w"), F.col("_i") * 16 + 1, 16),
                     " ",
                 ),
             ).alias("chunk"),
@@ -1022,16 +1014,13 @@ def bpe_train_merges(
 
 
 def bpe_token_counts(
-    df: DataFrame,
-    rounds: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Tokenize the corpus with the merges :func:`bpe_train_merges` just
-    learned and report per-document REAL subword token counts — the
-    token-accounting pass a training-mix scheduler actually needs (the
-    whitespace :func:`token_count` stays as the zero-training
-    fallback).  Application is single-pass in rank order (each learned
+    learned (its default 4 rounds) and report per-document REAL subword
+    token counts — the token-accounting pass a training-mix scheduler
+    actually needs (the whitespace :func:`token_count` stays as the
+    zero-training fallback).  Application is single-pass in rank order (each learned
     merge applied once, corpus-wide, in the order it was learned — the
     standard fast approximation; the encoding makes each application one
     replace()).
@@ -1044,9 +1033,7 @@ def bpe_token_counts(
     production tokenizer adds a byte-fallback alphabet instead)."""
     merges = [
         (r["pair_left"], r["pair_right"])
-        for r in bpe_train_merges(
-            df, rounds=rounds, text_col=text_col, id_col=id_col
-        ).collect()
+        for r in bpe_train_merges(df, text_col=text_col, id_col=id_col).collect()
     ]
     words = F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("w")
     base = df.select(F.col(id_col), words).where(
@@ -1086,23 +1073,14 @@ GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
 def gopher_gate(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mwl: float = 3.0,
-    max_mwl: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    min_alpha_frac: float = 0.8,
-    min_stop: int = 2,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", min_stop: int = 2
 ) -> DataFrame:
     """The Gopher quality-rule gate (Rae et al. 2021) — the named
     keep/drop bundle of the MassiveText pipeline, complementing this
     module's generic :func:`quality_score` features and the repetition
-    rules of :func:`repetition_runs`: word count in [min_words,
-    max_words], mean word length in [min_mwl, max_mwl], symbol-to-word
-    ratio ('#' chars + '...' occurrences) <= max_symbol_ratio, >= 80% of
+    rules of :func:`repetition_runs`: word count in [50, 100 000], mean
+    word length in [3, 10], symbol-to-word ratio ('#' chars + '...'
+    occurrences) <= 0.1, >= 80% of
     words containing an alphabetic character, and at least ``min_stop``
     distinct stopwords from the paper's 8-word list present.
 
@@ -1150,10 +1128,10 @@ def gopher_gate(
     alpha_frac = _trunc4(alpha_words / denom)
     sym_ratio = _trunc4((hash_cnt + ell_cnt) / denom)
     keep = (
-        n_words.between(min_words, max_words)
-        & mwl.between(min_mwl, max_mwl)
-        & (sym_ratio <= max_symbol_ratio)
-        & (alpha_frac >= min_alpha_frac)
+        n_words.between(50, 100_000)
+        & mwl.between(3.0, 10.0)
+        & (sym_ratio <= 0.1)
+        & (alpha_frac >= 0.8)
         & (n_stop >= min_stop)
     )
     return tok.select(
@@ -1168,21 +1146,18 @@ def gopher_gate(
 
 
 def duplicate_spans(
-    df: DataFrame,
-    k: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Exact duplicated-SPAN extents [Lee et al. 2022, "Deduplicating
     Training Data Makes Language Models Better" — the suffix-array
     substring dedup, re-expressed relationally]: a word position is
-    duplicated when its k-gram occurs at more than one (doc, pos) in the
+    duplicated when its 8-gram occurs at more than one (doc, pos) in the
     corpus (within-doc repeats count, as in the paper); maximal runs of
     consecutive duplicated positions per doc are merged into spans.
     Output: (doc_id, span_start, span_end, n_grams) — span_end is the
-    last word index covered (last start + k - 1) — the surgical
+    last word index covered (last start + 7) — the surgical
     alternative to whole-doc dropping: downstream cuts just these byte
-    ranges.  Docs shorter than k words have no k-gram and are absent by
+    ranges.  Docs shorter than 8 words have no 8-gram and are absent by
     contract (this is a REPORT of spans, not a rewrite —
     :func:`chunk_dedup_rewrite` is the rewriting sibling).
 
@@ -1200,12 +1175,12 @@ def duplicate_spans(
 
     words = F.split(F.lower(F.col(text_col)), r"\s+")
     gram_h = F.transform(
-        F.sequence(F.lit(0), F.size("ws") - k),
-        lambda i: md5_hash60(F.concat_ws(" ", F.slice("ws", i + 1, k))),
+        F.sequence(F.lit(0), F.size("ws") - 8),
+        lambda i: md5_hash60(F.concat_ws(" ", F.slice("ws", i + 1, 8))),
     )
     grams = (
         df.select(id_col, F.explode(F.array(words)).alias("ws"))
-        .filter(F.size("ws") >= k)
+        .filter(F.size("ws") >= 8)
         .select(id_col, F.posexplode(gram_h).alias("pos", "h"))
     )
     shared = grams.withColumn(
@@ -1219,7 +1194,7 @@ def duplicate_spans(
         .groupBy(id_col, "grp")
         .agg(
             F.min("pos").cast("long").alias("span_start"),
-            (F.max("pos") + k - 1).cast("long").alias("span_end"),
+            (F.max("pos") + 7).cast("long").alias("span_end"),
             F.count("*").cast("long").alias("n_grams"),
         )
         .drop("grp")
@@ -1231,7 +1206,6 @@ def suffix_ranks(
     text_col: str = "text",
     id_col: str = "doc_id",
     seed_words: int = 64,
-    two_phase_rank: bool = False,
 ) -> DataFrame:
     """Corpus-wide word-level suffix-array ranks by PREFIX DOUBLING
     [Manber & Myers 1990; the index behind Lee et al. 2022's suffix-array
@@ -1272,21 +1246,11 @@ def suffix_ranks(
     it prices — the representativeness trap VERDICT r14 flagged for the
     fan-out bench.  Ranks are seed-invariant (exact), so the change is
     oracle-neutral by construction.  The dense_rank windows (seed + per-round
-    re-rank) are single-partition at test scale; ``two_phase_rank=True``
-    IS the 100 TB configuration as a real code path — every ranking goes
-    through :func:`corpus.global_dense_rank` (range-partitioned local
-    rank + per-partition offsets; equal keys land in one partition, so
-    offsets compose exactly), value-equality pinned in tests and the
-    ``corpus_two_phase_rank_twin`` audit row.  Each round
-    localCheckpoints eagerly: an iterative algorithm's lineage would
-    otherwise double per round."""
+    re-rank) are single-partition.  Each round localCheckpoints: an
+    iterative algorithm's lineage would otherwise double per round."""
     from pyspark.sql import Window
 
-    from reddit_sse_stream_spark.operators.corpus import global_dense_rank
-
     def rank_by(frame: DataFrame, cols: list[str], out: str) -> DataFrame:
-        if two_phase_rank:
-            return global_dense_rank(frame, *cols, out_col=out)
         w = Window.orderBy(*cols)
         return frame.withColumn(out, F.dense_rank().over(w).cast("long"))
 
@@ -1634,8 +1598,7 @@ def vocab_growth(
 
 
 def bpe_fertility_by_lang(
-    df: DataFrame, rounds: int = 4, text_col: str = "text",
-    id_col: str = "doc_id",
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Tokenizer-fertility equity audit: per-language subword fertility
     (BPE tokens per word, x1e4 exact integer) under the corpus-trained
@@ -1649,9 +1612,7 @@ def bpe_fertility_by_lang(
     Scale shape: adds ONE lang-keyed aggregate (|langs| keys, map-side
     combined) over the token-accounting output; the heavy lifting
     (training + Zipf-collapsed tokenization) is the composed op's."""
-    per_doc = bpe_token_counts(
-        df, rounds=rounds, text_col=text_col, id_col=id_col
-    )
+    per_doc = bpe_token_counts(df, text_col=text_col, id_col=id_col)
     return (
         per_doc.join(df.select(id_col, "lang"), id_col)
         .groupBy("lang")

@@ -70,8 +70,6 @@ def gap_fill_ffill(
 
 def rolling_features(
     events: DataFrame,
-    short_s: int = 3600,
-    long_s: int = 86400,
     key_col: str = "user_id",
     ts_col: str = "ts",
     val_col: str = "value",
@@ -79,8 +77,8 @@ def rolling_features(
 ) -> DataFrame:
     """Rolling-window feature backfill — the trailing-window aggregates a
     training pipeline materializes per event for behavioral-ML features:
-    event count and fixed-point value sum over the trailing ``short_s``
-    seconds, count over the trailing ``long_s`` seconds, and the gap to
+    event count and fixed-point value sum over the trailing hour
+    (3600 s), count over the trailing day (86400 s), and the gap to
     the key's previous event.  Every frame is a time-RANGE frame over
     floored epoch seconds (ties are peers, included in full on both
     engines) and the lag uses the (sec, id) total order, so the whole
@@ -100,12 +98,12 @@ def rolling_features(
     w_short = (
         Window.partitionBy(key_col)
         .orderBy("sec")
-        .rangeBetween(-(short_s - 1), 0)
+        .rangeBetween(-(3600 - 1), 0)
     )
     w_long = (
         Window.partitionBy(key_col)
         .orderBy("sec")
-        .rangeBetween(-(long_s - 1), 0)
+        .rangeBetween(-(86400 - 1), 0)
     )
     w_lag = Window.partitionBy(key_col).orderBy("sec", id_col)
     return base.select(

@@ -1,11 +1,12 @@
-"""SparkSession factory tuned for the harness (local[N]) but configured the
-way a 1000-executor cluster run would be: AQE on (runtime re-plan, skew-join
-splitting, partition coalescing), UTC session timezone (oracle parity with
-DuckDB's tz-naive timestamps), Arrow for every Python<->JVM batch boundary.
+"""SparkSession factory: ``local[N]`` sized to the host, configured the way
+a cluster run would be: AQE on (runtime re-plan, skew-join splitting,
+partition coalescing), UTC session timezone (oracle parity with DuckDB's
+tz-naive timestamps), Arrow for every Python<->JVM batch boundary.
 """
 
 from __future__ import annotations
 
+import gc
 import os
 
 from pyspark.sql import SparkSession
@@ -14,13 +15,16 @@ from pyspark.sql import SparkSession
 def get_spark(app_name: str = "reddit_sse_stream_spark") -> SparkSession:
     """Build (or reuse) the session.
 
-    ``spark.sql.shuffle.partitions`` is sized to the executor-thread count:
-    on a real cluster this would be ~2-3x total cores (and AQE coalesces
-    down); at local[32] on <=sf0.1 data, 32 avoids the classic
-    200-tiny-partitions overhead without losing parallelism.
+    One executor thread per CPU this process may run on
+    (``SPARK_GRAFT_CPUS`` overrides the count), and
+    ``spark.sql.shuffle.partitions`` sized to that thread count: on a real
+    cluster this would be ~2-3x total cores (and AQE coalesces down); on
+    <=sf0.1 data it avoids the classic 200-tiny-partitions overhead
+    without losing parallelism.  The driver heap is half the host's
+    physical memory, so the JVM collects before the host runs out.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+    host_mem = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -31,7 +35,7 @@ def get_spark(app_name: str = "reddit_sse_stream_spark") -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", driver_mem)
+        .config("spark.driver.memory", f"{host_mem // 2**21}m")  # half, in MiB
         .config("spark.ui.enabled", "false")
         # At 100 TB the scan parallelism is driven by file-split size; 128 MiB
         # is the classic sweet spot for parquet on object storage.
@@ -48,7 +52,7 @@ def get_spark(app_name: str = "reddit_sse_stream_spark") -> SparkSession:
     return spark
 
 
-def release_local_checkpoints(spark: SparkSession, full_gc: bool = True) -> int:
+def release_local_checkpoints(spark: SparkSession) -> int:
     """Unpersist every LOCALLY-CHECKPOINTED RDD still registered with the
     BlockManager, returning how many were released.
 
@@ -84,12 +88,12 @@ def release_local_checkpoints(spark: SparkSession, full_gc: bool = True) -> int:
     the safe point — and a registry would miss third-party checkpoints
     that cause the same degradation.)
 
-    ``full_gc=True`` (default) additionally runs a Python + JVM GC pass:
-    the ContextCleaner reclaims dead shuffle files and broadcasts only
-    after their weak refs are collected, and without an explicit collect
-    the py4j reference chain measured out to "not within a bench sweep" —
-    the same degradation class as the checkpoint blocks.  ~100ms on a
-    mostly-dead 48g heap, noise next to multi-second queries."""
+    It then runs a Python + JVM GC pass: the ContextCleaner reclaims dead
+    shuffle files and broadcasts only after their weak refs are collected,
+    and without an explicit collect the py4j reference chain measured out
+    to "not within a bench sweep" — the same degradation class as the
+    checkpoint blocks.  ~100ms on a mostly-dead heap, noise next to
+    multi-second queries."""
     jsc = spark.sparkContext._jsc.sc()
     it = jsc.getPersistentRDDs().valuesIterator()
     released = 0
@@ -103,12 +107,9 @@ def release_local_checkpoints(spark: SparkSession, full_gc: bool = True) -> int:
             # an RDD concurrently cleaned by the ContextCleaner can race;
             # releasing the rest still helps
             pass
-    if full_gc:
-        import gc
-
-        gc.collect()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
+    gc.collect()
+    try:
+        spark.sparkContext._jvm.System.gc()
+    except Exception:
+        pass
     return released

@@ -2243,25 +2243,6 @@ def test_global_dense_rank_matches_single_partition_window(spark):
     assert ranks == list(range(1, len(ranks) + 1))
 
 
-def test_suffix_ranks_two_phase_rank_configuration(spark, sf_dir):
-    """two_phase_rank=True (the 100 TB configuration — every ranking goes
-    through the range-partitioned global_dense_rank) must produce
-    bit-identical suffix ranks to the default single-partition windows."""
-    from reddit_sse_stream_spark.operators.text import suffix_ranks
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") < 150)
-    )
-    a = {(r.doc_id, r.pos): r.suffix_rank for r in suffix_ranks(docs).collect()}
-    b = {
-        (r.doc_id, r.pos): r.suffix_rank
-        for r in suffix_ranks(docs, two_phase_rank=True).collect()
-    }
-    assert a == b and a
-
-
 def test_decontam_embedding_cosine_broadcast_eval(spark, sf_dir):
     """The broadcast-eval GEMM decontam: a corpus vector equal to an eval
     vector must flag with cos_sim 1.0 and the LOWEST achieving eval id;

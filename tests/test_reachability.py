@@ -6,7 +6,9 @@ bench, the examples, the tools and the perfbench harness — and fails if a
 ``reddit_sse_stream_spark`` module is imported only by tests.  Package
 ``__init__.py`` files import nothing, so a re-export cannot count as a
 caller: every module needs a real non-test importer.  README's "Running"
-block may name only scripts and ``-m`` subcommands that exist.
+block may name only scripts and ``-m`` subcommands that exist.  Every
+defaulted parameter of a public package function must be set by some
+call in the repo (tests included), or it is a constant with a name.
 """
 
 from __future__ import annotations
@@ -121,3 +123,98 @@ def test_readme_running_block_names_real_entry_points():
         with pytest.raises(SystemExit) as exc:
             main([sub, "--help"])
         assert exc.value.code == 0, f"README runs unknown subcommand {sub!r}"
+
+
+# Column-name parameters stay settable: they name the caller's schema.
+_COLUMN_PARAMS = {"src", "dst", "weight"}
+
+
+def _repo_sources() -> list[Path]:
+    """Every .py file of the checkout, outside hidden build directories."""
+    return [
+        p
+        for p in sorted(REPO.rglob("*.py"))
+        if not any(part.startswith(".") for part in p.relative_to(REPO).parts)
+    ]
+
+
+def _const_keys(d: ast.Dict) -> set[str]:
+    return {k.value for k in d.keys if isinstance(k, ast.Constant)}
+
+
+def _passed_options() -> dict[str, set]:
+    """Per called name, the parameter names (str) and positions (int) that
+    some call in the repo gives it: by keyword, by position, or as a key of
+    a dict literal unpacked with ``**`` (directly, or through a name bound
+    to such dicts by an assignment or a ``for`` loop)."""
+    passed: dict[str, set] = {}
+    for path in _repo_sources():
+        tree = ast.parse(path.read_text(), str(path))
+        alias = {
+            a.asname: a.name
+            for n in ast.walk(tree)
+            if isinstance(n, ast.ImportFrom)
+            for a in n.names
+            if a.asname
+        }
+        dict_keys: dict[str, set[str]] = {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Assign):
+                targets, values = node.targets, [node.value]
+            elif isinstance(node, ast.For):
+                targets = [node.target]
+                seq = isinstance(node.iter, (ast.Tuple, ast.List))
+                values = node.iter.elts if seq else []
+            else:
+                continue
+            for t in targets:
+                if isinstance(t, ast.Name):
+                    for v in values:
+                        if isinstance(v, ast.Dict):
+                            dict_keys.setdefault(t.id, set()).update(_const_keys(v))
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            func = node.func
+            name = func.id if isinstance(func, ast.Name) else getattr(func, "attr", None)
+            if name is None:
+                continue
+            got = passed.setdefault(alias.get(name, name), set())
+            if any(isinstance(a, ast.Starred) for a in node.args):
+                got.add("*")
+            got.update(range(len(node.args)))
+            for kw in node.keywords:
+                if kw.arg is not None:
+                    got.add(kw.arg)
+                elif isinstance(kw.value, ast.Dict):
+                    got.update(_const_keys(kw.value))
+                elif isinstance(kw.value, ast.Name):
+                    got.update(dict_keys.get(kw.value.id, ()))
+    return passed
+
+
+def test_every_operator_option_is_passed_somewhere():
+    # A defaulted parameter no call sets is a constant with a name: the
+    # value it always takes belongs in the body.
+    passed = _passed_options()
+    unset = []
+    for path in sorted((REPO / PKG).rglob("*.py")):
+        for fn in ast.parse(path.read_text(), str(path)).body:
+            if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
+                continue
+            got = passed.get(fn.name, set())
+            positional = fn.args.posonlyargs + fn.args.args
+            first = len(positional) - len(fn.args.defaults)
+            defaulted = [(i, a.arg) for i, a in enumerate(positional) if i >= first]
+            defaulted += [
+                (None, a.arg)
+                for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
+                if d is not None
+            ]
+            for i, arg in defaulted:
+                if arg.endswith("_col") or arg in _COLUMN_PARAMS:
+                    continue
+                if arg in got or (i is not None and (i in got or "*" in got)):
+                    continue
+                unset.append(f"{_module_name(path)}.{fn.name}({arg})")
+    assert not unset, f"{len(unset)} options no call sets: {unset}"

@@ -391,7 +391,7 @@ def test_suffix_ranks_fuzz_vs_python_sorted_suffixes(spark):
     for kwargs in (
         {"seed_words": 4},
         {"seed_words": 64},
-        {"seed_words": 8, "two_phase_rank": True},
+        {"seed_words": 8},
     ):
         got = {
             (r.doc_id, r.pos): r.suffix_rank
