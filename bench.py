@@ -14,6 +14,12 @@ noop write (no driver collect — the plan runs distributed end to end, like
 it would on a cluster).  ``BENCH_DETAIL.json`` records every run's
 build/execute seconds and Spark job counts (:func:`profile_row`).  The
 serving path is benchmarked out of process by ``perfbench/``.
+
+One run's headline total does not compare across runs: the same code at
+sf0.1 on a 4-core host read 68.43 s and 52.86 s in two runs about 20
+minutes apart, with identical job counts.  To judge a change, compare
+the per-row job counts (they repeat run to run), or interleave runs of
+the parent and the change, alternating which goes first.
 """
 
 from __future__ import annotations

@@ -27,10 +27,9 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from reddit_sse_stream_spark.operators.ml_lsh import (
-        _unit_fixedpoint,
-        ivf_fixedpoint_cells,
+        ivf_train,
         ivfpq_topk,
-        pq_codes_fixedpoint,
+        pq_train,
     )
     from reddit_sse_stream_spark.session import get_spark
     from reddit_sse_stream_spark.sources.tables import load_table
@@ -41,8 +40,8 @@ def main() -> None:
 
     # ---- index build (once) -------------------------------------------
     t0 = time.time()
-    cells = ivf_fixedpoint_cells(emb)
-    codes = pq_codes_fixedpoint(emb)
+    cells = ivf_train(emb).assignments
+    codes = pq_train(emb).codes
     index = codes.join(cells, "vec_id")
     with tempfile.TemporaryDirectory() as d:
         path = os.path.join(d, "ivfpq_index")

@@ -235,6 +235,21 @@ def standardize_embeddings(
     )
 
 
+def _dot_fp(v: list[float]) -> "F.Column":
+    """int64 fixed-point dot of the ``x`` column with the driver-held
+    vector ``v``: each product floor-quantized at 1e-12, summed exactly.
+    ``v`` ships as one rendered SQL constant, not element-wise ``F.lit``
+    (sqlrender.py; bit-exact by the shortest-roundtrip CAST contract)."""
+    v_lit = F.expr(sql_double_array(v))
+    return F.aggregate(
+        F.zip_with(
+            F.col("x"), v_lit, lambda a, b: F.floor(a * b * 1e12 + 0.5).cast("long")
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, e: acc + e,
+    )
+
+
 def pca_top_component(
     df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id", dim: int = 64
 ) -> DataFrame:
@@ -278,16 +293,6 @@ def pca_top_component(
     )
     n = base.count()
 
-    def dot_fp_col(v: list[float]) -> "F.Column":
-        v_lit = F.expr(sql_double_array(v))  # r15: see sqlrender.py
-        return F.aggregate(
-            F.zip_with(
-                F.col("x"), v_lit, lambda a, b: F.floor(a * b * 1e12 + 0.5).cast("long")
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, e: acc + e,
-        )
-
     v = [0.125] * dim
     for _ in range(4):
         # explode-of-1-element-array barrier: materialize dot once per row
@@ -299,7 +304,7 @@ def pca_top_component(
                 F.array(
                     F.struct(
                         F.col("x").alias("x"),
-                        (dot_fp_col(v) / F.lit(1e12)).alias("dot"),
+                        (_dot_fp(v) / F.lit(1e12)).alias("dot"),
                     )
                 )
             ).alias("s")
@@ -323,7 +328,7 @@ def pca_top_component(
         v = [math.floor(w / nrm * 1e6 + 0.5) / 1e6 for w in u]
 
     # final projection, round-half-up to 1e-6 entirely in integer space
-    pc1 = F.floor((dot_fp_col(v) + F.lit(500000)) / F.lit(1e6)) / F.lit(1e6)
+    pc1 = F.floor((_dot_fp(v) + F.lit(500000)) / F.lit(1e6)) / F.lit(1e6)
     return base.select(F.col("_id").alias(id_col), pc1.alias("pc1"))
 
 
@@ -1041,20 +1046,6 @@ def quality_linear_probe(docs: DataFrame) -> DataFrame:
     n = feat.count()
     dim = 4
 
-    def dot_fp_col(v: list[float]) -> "F.Column":
-        # rendered SQL constant, not element-wise F.lit (r15 — sqlrender.py;
-        # bit-exact by the shortest-roundtrip CAST contract)
-        v_lit = F.expr(sql_double_array([float(c) for c in v]))
-        return F.aggregate(
-            F.zip_with(
-                F.col("x"),
-                v_lit,
-                lambda a, b: F.floor(a * b * 1e12 + 0.5).cast("long"),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, e: acc + e,
-        )
-
     w = [0.0] * dim
     for _ in range(3):
         # explode-of-1-element-array barrier: materialize the residual
@@ -1064,7 +1055,7 @@ def quality_linear_probe(docs: DataFrame) -> DataFrame:
                 F.array(
                     F.struct(
                         F.col("x").alias("x"),
-                        (dot_fp_col(w) / F.lit(1e12) - F.col("y")).alias(
+                        (_dot_fp(w) / F.lit(1e12) - F.col("y")).alias(
                             "r"
                         ),
                     )
@@ -1098,7 +1089,7 @@ def quality_linear_probe(docs: DataFrame) -> DataFrame:
     return feat.select(
         "doc_id",
         F.col("y").cast("long").alias("label"),
-        F.floor((dot_fp_col(w) + 500_000) / F.lit(1e6))
+        F.floor((_dot_fp(w) + 500_000) / F.lit(1e6))
         .cast("long")
         .alias("score_x1e6"),
     )

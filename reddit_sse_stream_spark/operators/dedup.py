@@ -835,7 +835,7 @@ def pagerank_fixedpoint(
     int64 fixed point (ranks scaled 1e12), so the ranks are bit-identical
     across engines, partitionings, and reruns, and an unrolled-CTE SQL
     twin can verify them value-for-value — the same determinism playbook
-    as ``corpus.pca_top_component`` and ``ml_lsh.ivf_fixedpoint_cells``.
+    as ``corpus.pca_top_component`` and ``ml_lsh.ivf_train``.
 
     Per iteration (all integer ops; division points are correctly-rounded
     IEEE ops on identical inputs in any engine):

@@ -1,5 +1,5 @@
-"""pyspark.ml-backed vector-index operators: the IVF coarse quantizer
-(``KMeans`` cells, n-probe pruning), its deterministic fixed-point twin,
+"""Vector-index operators on exact fixed-point Lloyd quantizers: the IVF
+coarse quantizer (unit-sphere cells, n-probe pruning, index maintenance)
 and product quantization (PQ codes, ADC search, recall audit, IVF-PQ and
 residual IVF-PQ).
 
@@ -21,8 +21,6 @@ from reddit_sse_stream_spark.operators.sqlrender import (
     sql_double_array as _sql_double_array,
     sql_long_array as _sql_long_array,
 )
-
-_SEED = 42
 
 
 class IvfModel(NamedTuple):
@@ -61,17 +59,6 @@ class PqModel(NamedTuple):
         return len(self.codebook[0][0])
 
 
-def _embedding_vectors(emb: DataFrame) -> DataFrame:
-    # array_to_vector is a JVM expression (pyspark.ml.functions) — the
-    # array<float> -> VectorUDT interop without any Python-row round-trip
-    from pyspark.ml.functions import array_to_vector
-
-    return emb.select(
-        "vec_id",
-        array_to_vector(F.col("embedding").cast("array<double>")).alias("features"),
-    )
-
-
 def ivf_topk_cosine(
     emb: DataFrame,
     query_vec: Sequence[float],
@@ -79,60 +66,23 @@ def ivf_topk_cosine(
     n_cells: int = 16,
     n_probe: int = 2,
 ) -> DataFrame:
-    """IVF-style ANN: KMeans coarse quantizer assigns each vector to a cell;
-    a query searches only the ``n_probe`` nearest cells.
+    """IVF-style ANN: the fixed-point coarse quantizer (:func:`ivf_train`)
+    assigns each vector to a cell; a query searches only the ``n_probe``
+    cells nearest to it (:func:`_probe`), scored by the exact cosine of
+    :func:`similarity.brute_force_topk`.
 
     At 100 TB the cell id becomes a partition/cluster column so probing
     prunes the SCAN (predicate pushdown on cell), not just the compute —
     the same storage-level win as the LSH bucket column.
     """
-    import numpy as np
+    from reddit_sse_stream_spark.operators.similarity import brute_force_topk
 
-    from pyspark.ml.clustering import KMeans
-
-    from reddit_sse_stream_spark.operators.similarity import brute_force_topk, l2_norm
-
-    # L2-normalize first: on the unit sphere Euclidean cells == cosine cells,
-    # so the quantizer partitions by the metric the query actually uses.
-    # Norm computed ONCE per row (not per element) and floored to avoid a
-    # zero-vector division turning the cell assignment into NaNs.
-    # explode-of-1-element-array barrier: materialize the double array once
-    # so neither the norm fold nor the scale lambda re-inlines the cast per
-    # element (see operators/text.py:word_ngrams)
-    darr = emb.select(
-        "vec_id",
-        F.explode(F.array(F.col("embedding").cast("array<double>"))).alias("_v"),
-    )
-    unit = darr.withColumn(
-        "_norm", F.greatest(l2_norm(F.col("_v")), F.lit(1e-12))
-    ).select(
-        "vec_id",
-        F.transform(F.col("_v"), lambda x: x / F.col("_norm")).alias("embedding"),
-    )
-    vecs = _embedding_vectors(unit)
-    # coarse quantizer: cell boundaries don't need full convergence, and
-    # each KMeans iteration is a full job — cap the iteration count.
-    # Train on sort(id).coalesce(1): seeded KMeans is still partitioning-
-    # AND row-order-dependent through its float reductions, so the model is
-    # pinned by feeding it ONE partition in a total order — identical cell
-    # assignments for the same data no matter how the parent frame was
-    # partitioned (test-pinned).  Real IVF trains its quantizer on a
-    # bounded sample anyway; at 100 TB this IS the sample stage (swap in
-    # .sample(seed) before the sort), while the assignment transform below
-    # stays fully distributed.
-    km = KMeans(
-        k=n_cells, seed=_SEED, maxIter=8, featuresCol="features", predictionCol="cell"
-    ).fit(vecs.sort("vec_id").coalesce(1))
-    assigned = km.transform(vecs).select("vec_id", "cell")
-    q = np.asarray(list(query_vec), dtype=float)
-    q = q / np.linalg.norm(q)
-    # rank cells by distance to the query centroid-side (tiny, driver-side)
-    cells = sorted(
-        range(len(km.clusterCenters())),
-        key=lambda c: float(np.linalg.norm(km.clusterCenters()[c] - q)),
-    )[:n_probe]
+    ivf = ivf_train(emb, n_cells=n_cells)
+    _, cells = _probe(list(query_vec), ivf.centroids, n_probe)
     cand = emb.join(
-        assigned.filter(F.col("cell").isin(cells)).select("vec_id"), "vec_id", "left_semi"
+        ivf.assignments.where(F.col("cell").isin(cells)).select("vec_id"),
+        "vec_id",
+        "left_semi",
     )
     return brute_force_topk(cand, query_vec, k)
 
@@ -142,7 +92,7 @@ def _unit_fixedpoint(
 ) -> DataFrame:
     """(_id, u): unit-normalized vectors with the deterministic
     fixed-point norm (1e-12-quantized squared-coordinate sum, sqrt,
-    1e-12 floor) — the shared front half of :func:`ivf_fixedpoint_cells`
+    1e-12 floor) — the shared front half of :func:`ivf_train`
     and the IVF-PQ query path, each scalar step a single IEEE op so a
     driver-side replica is bit-identical."""
     x = F.col(vec_col).cast("array<double>")
@@ -333,10 +283,7 @@ def ivf_train(
     sphere with EVERY accumulation in exact int64 fixed point, so the cell
     assignments — the IVF index a 100 TB corpus materializes as its
     partition column — are bit-identical across engines, partitionings,
-    and reruns, and a SQL twin can verify them value-for-value (unlike the
-    seeded MLlib quantizer in :func:`ivf_topk_cosine`, whose float
-    reductions are row-order-dependent; that entry stays as the MLlib
-    integration path).
+    and reruns, and a SQL twin can verify them value-for-value.
 
     Determinism recipe (same playbook as ``corpus.pca_top_component``):
     unit-normalize via a fixed-point norm; initial centroids = the
@@ -365,18 +312,6 @@ def ivf_train(
     cents = sorted((r["cid"], list(r["c"])) for r in rows)
     out = unit_cells(base, cents).select(F.col("_id").alias(id_col), "cell")
     return IvfModel(assignments=out, centroids=cents, unit=base)
-
-
-def ivf_fixedpoint_cells(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_cells: int = 8,
-    iters: int = 2,
-) -> DataFrame:
-    """Single-frame surface of :func:`ivf_train` — just the
-    (id, cell) assignments, for consumers that don't probe."""
-    return ivf_train(emb, vec_col, id_col, n_cells, iters).assignments
 
 
 def pq_train(
@@ -491,20 +426,6 @@ def pq_train(
     return PqModel(codes=codes, codebook=cents)
 
 
-def pq_codes_fixedpoint(
-    emb: DataFrame,
-    n_sub: int = 8,
-    iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Single-frame surface of :func:`pq_train` — just the code frame,
-    for consumers that don't run ADC queries."""
-    return pq_train(
-        emb, n_sub=n_sub, iters=iters, vec_col=vec_col, id_col=id_col
-    ).codes
-
-
 def _quantize(vec) -> list[int]:
     """A driver-side vector in PQ's 1e6 fixed-point integer domain."""
     return [int(math.floor(v * 1_000_000 + 0.5)) for v in vec]
@@ -544,25 +465,30 @@ def _query_vector(
     return list(row[0])
 
 
-def _probe(qv: list[float], cents, n_probe: int):
-    """Driver-side replica of :func:`_unit_fixedpoint` on one raw query
-    vector — each step the same single IEEE double op Spark performs
-    (floor-quantized squared-coordinate sum, sqrt, 1e-12 floor), so
-    ``u_q`` is bit-identical to the frame version at zero Spark jobs —
-    and the ``n_probe`` cells nearest to it under :func:`unit_cells`'
-    integer distance, ties to the lowest cell.  Returns
-    (u_q, probe_cells)."""
-    norm_fp = sum(int(math.floor(v * v * 1e12 + 0.5)) for v in qv)
-    nrm = max(math.sqrt(norm_fp / 1e12), 1e-12)
-    u_q = [v / nrm for v in qv]
+def rank_cells(u_q: list[float], cents) -> list[int]:
+    """Every cell of ``cents`` ordered by :func:`unit_cells`' integer
+    distance to the unit vector ``u_q``, ties to the lowest cell — the
+    driver-side probe order."""
 
     def d_fp(c: list[float]) -> int:
         return sum(
             int(math.floor((a - b) * (a - b) * 1e12 + 0.5)) for a, b in zip(u_q, c)
         )
 
-    ranked = sorted((d_fp(c), cell) for cell, c in cents)
-    return u_q, [cell for _, cell in ranked[:n_probe]]
+    return [cell for _, cell in sorted((d_fp(c), cell) for cell, c in cents)]
+
+
+def _probe(qv: list[float], cents, n_probe: int):
+    """Driver-side replica of :func:`_unit_fixedpoint` on one raw query
+    vector — each step the same single IEEE double op Spark performs
+    (floor-quantized squared-coordinate sum, sqrt, 1e-12 floor), so
+    ``u_q`` is bit-identical to the frame version at zero Spark jobs —
+    and its ``n_probe`` nearest cells (:func:`rank_cells`).  Returns
+    (u_q, probe_cells)."""
+    norm_fp = sum(int(math.floor(v * v * 1e12 + 0.5)) for v in qv)
+    nrm = max(math.sqrt(norm_fp / 1e12), 1e-12)
+    u_q = [v / nrm for v in qv]
+    return u_q, rank_cells(u_q, cents)[:n_probe]
 
 
 def _probed_topk(
@@ -654,7 +580,7 @@ def pq_recall_audit(
     ships carries its own measured-recall row).
 
     Everything is exact-integer (1e6 fixed-point training domain shared
-    with :func:`pq_codes_fixedpoint`; exact side is int64 squared L2 on
+    with :func:`pq_train`; exact side is int64 squared L2 on
     the same quantized coordinates; both top-k cuts ordered by
     (score, id)), so the audit itself is bit-reproducible and a SQL twin
     re-derives codebooks, codes, ADC tables, brute-force distances, and
@@ -752,9 +678,9 @@ def ivfpq_topk(
     """IVF-PQ composite top-k — the two pruning layers of a production
     ANN index (the FAISS ``IVFx,PQy`` shape) composed from this module's
     oracled primitives: the coarse quantizer
-    (:func:`ivf_fixedpoint_cells`) partitions the corpus into cells and
+    (:func:`ivf_train`) partitions the corpus into cells and
     the query probes only the ``n_probe`` nearest, then PQ-ADC
-    (:func:`pq_codes_fixedpoint` tables) scores ONLY the probed cells'
+    (:func:`pq_train` tables) scores ONLY the probed cells'
     codes — at 100 TB the cell is the table's partition column (written
     at index build), so the probe is partition PRUNING of an 8-byte-per-
     vector scan: two multiplicative reductions before any work happens.

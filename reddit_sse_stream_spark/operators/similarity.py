@@ -444,7 +444,7 @@ def semdedup_cell_pairs(
     O(n^2) all-pairs scan collapses to sum_c O(|c|^2) with |c| ~ n/k.
 
     Composition of two existing verified primitives: the deterministic
-    fixed-point IVF quantizer (:func:`ml_lsh.ivf_fixedpoint_cells` —
+    fixed-point IVF quantizer (:func:`ml_lsh.ivf_train` —
     fully oracled) assigns cells; within each cell ONE applyInPandas
     GEMM kernel computes the full |c| x |c| cosine block from vectors
     shipped ONCE (floor at 1e-4, same convention as
@@ -462,11 +462,11 @@ def semdedup_cell_pairs(
     over LAION — cells stay ~2k vectors at any corpus size, the same
     size-capping discipline as the banding hot-bucket guard).  At the
     fixture scale n_cells=8 keeps the unrolled-CTE oracle tractable."""
-    from reddit_sse_stream_spark.operators.ml_lsh import ivf_fixedpoint_cells
+    from reddit_sse_stream_spark.operators.ml_lsh import ivf_train
 
-    cells = ivf_fixedpoint_cells(
+    cells = ivf_train(
         emb, vec_col=vec_col, id_col=id_col, n_cells=n_cells, iters=iters
-    ).select(id_col, "cell")
+    ).assignments
     v = emb.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
     )

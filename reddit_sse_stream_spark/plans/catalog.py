@@ -18,8 +18,8 @@ Section map (SURVEY.md §2 coverage):
       set ops, limits) proven with real plans + oracles.
   dedup_* / text_* / embed_* / knn_* / media_* — north-star extensions.
 
-Queries marked ``oracle=None`` are genuinely non-SQL-expressible in DuckDB
-(xxhash64-based sketches, LSH approximations, Arrow mapInPandas plumbing);
+Queries marked ``oracle=None`` (the xxhash64 fast paths ``dedup_minhash_lsh``
+and ``dedup_simhash``) are not SQL-expressible in DuckDB;
 ``tools/verify_local.py`` makes a weaker rows-only check for those.
 """
 
@@ -1143,17 +1143,22 @@ def embed_l2_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
-    "knn_bruteforce_cosine",
-    """
-    WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-    SELECT vec_id,
-           round(
+#: DuckDB twin of ``similarity.brute_force_topk``'s score: cosine of
+#: ``embedding`` against the query vector ``qv``, rounded to 6 places
+_COS_SIM_SQL = """round(
              list_sum(list_transform(range(1, len(embedding) + 1),
                i -> CAST(embedding[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE)))
              / (sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
                 * sqrt(list_sum(list_transform(qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-           6) AS cos_sim
+           6) AS cos_sim"""
+
+
+@_register(
+    "knn_bruteforce_cosine",
+    f"""
+    WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
+    SELECT vec_id,
+           {_COS_SIM_SQL}
     FROM embeddings, q
     WHERE vec_id <> 0
     ORDER BY cos_sim DESC, vec_id
@@ -3513,21 +3518,102 @@ def window_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("knn_ivf_cells", None)
+def _ivf_fixedpoint_ctes(
+    n_cells: int = 8,
+    iters: int = 2,
+    dim: int = 64,
+    train_pred: str | None = None,
+    assign_pred: str | None = None,
+) -> tuple[list[str], str]:
+    """CTE list + final-assignment CTE name for the fixed-point Lloyd
+    oracle (shared by ``knn_ivf_fixedpoint_cells``, the diversity
+    subsample that builds on its cells, and — via ``train_pred`` /
+    ``assign_pred`` — the IVF top-k twin, which trains without the
+    query row, and the incremental-assign twin, which trains the
+    quantizer on one id subset and assigns a DIFFERENT subset with the
+    final centroids)."""
+    ctes = [
+        f"ex0 AS (SELECT vec_id, unnest(range(0, {dim})) AS d,"
+        " unnest(CAST(embedding AS DOUBLE[])) AS val FROM embeddings)",
+        "nrm AS (SELECT vec_id, greatest(sqrt("
+        "sum(CAST(floor(val * val * 1e12 + 0.5) AS BIGINT)) / 1e12), 1e-12) AS nrm"
+        " FROM ex0 GROUP BY vec_id)",
+        "ex AS (SELECT e.vec_id, e.d, e.val / n.nrm AS u"
+        " FROM ex0 e JOIN nrm n USING (vec_id))",
+    ]
+    src_train = "ex"
+    if train_pred:
+        ctes.append(f"ext AS (SELECT * FROM ex WHERE {train_pred})")
+        src_train = "ext"
+    src_final = "ex"
+    if assign_pred:
+        ctes.append(f"exa AS (SELECT * FROM ex WHERE {assign_pred})")
+        src_final = "exa"
+    seed_where = f" WHERE {train_pred}" if train_pred else ""
+    ctes += [
+        "seed AS (SELECT vec_id, CAST(row_number() OVER (ORDER BY vec_id) - 1"
+        f" AS INTEGER) AS cell FROM (SELECT DISTINCT vec_id FROM ex0{seed_where}"
+        f" ORDER BY vec_id LIMIT {n_cells}))",
+        "cen0 AS (SELECT s.cell, e.d, e.u AS c FROM seed s JOIN ex e USING (vec_id))",
+    ]
+    for t in range(iters + 1):
+        src = src_train if t < iters else src_final
+        ctes.append(
+            f"d{t} AS (SELECT e.vec_id, c.cell,"
+            " sum(CAST(floor((e.u - c.c) * (e.u - c.c) * 1e12 + 0.5) AS BIGINT))"
+            f" AS dist FROM {src} e JOIN cen{t} c USING (d) GROUP BY e.vec_id, c.cell)"
+        )
+        ctes.append(
+            f"a{t} AS (SELECT vec_id, cell FROM (SELECT vec_id, cell,"
+            " row_number() OVER (PARTITION BY vec_id ORDER BY dist, cell) AS rk"
+            f" FROM d{t}) WHERE rk = 1)"
+        )
+        if t < iters:
+            ctes.append(
+                f"cen{t + 1} AS (SELECT a.cell, e.d,"
+                " (CAST(sum(CAST(floor(e.u * 1e6 + 0.5) AS BIGINT)) AS BIGINT)"
+                " / 1e6) / count(*) AS c"
+                f" FROM a{t} a JOIN ex e USING (vec_id) GROUP BY a.cell, e.d)"
+            )
+    return ctes, f"a{iters}"
+
+
+def _ivf_topk_oracle() -> str:
+    """Twin of ``ml_lsh.ivf_topk_cosine`` with vec_id 0 as the query: the
+    fixed-point Lloyd chain trained without the query row, vec_id 0's
+    cells ranked from the final-round distances ``d2`` by (dist, cell),
+    and the other members of the first 2 scored with
+    ``knn_bruteforce_cosine``'s cosine, top 5."""
+    ctes, final = _ivf_fixedpoint_ctes(train_pred="vec_id <> 0")
+    ctes += [
+        "probe AS (SELECT cell FROM d2 WHERE vec_id = 0"
+        " ORDER BY dist, cell LIMIT 2)",
+        f"cand AS (SELECT vec_id FROM {final}"
+        " WHERE vec_id <> 0 AND cell IN (SELECT cell FROM probe))",
+        "q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)",
+    ]
+    return (
+        "WITH " + ",\n".join(ctes)
+        + f"""
+    SELECT vec_id,
+           {_COS_SIM_SQL}
+    FROM embeddings JOIN cand USING (vec_id), q
+    ORDER BY cos_sim DESC, vec_id
+    LIMIT 5"""
+    )
+
+
+@_register("knn_ivf_cells", _ivf_topk_oracle())
 def knn_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN scale path: KMeans coarse quantizer on the unit sphere,
-    probe the 2 nearest cells only (operators/ml_lsh.py).  No oracle BY
-    DESIGN — DuckDB cannot reproduce Spark's KMeans, so there is no SQL
-    twin to hash against.  Verification surface: (1) the quantizer trains
-    on a coalesce(1) input, which pins the seeded model (and so every cell
-    assignment and this query's rows) run to run — the driver's
-    rows+schema check is therefore meaningful, not noise
-    (tests/test_operators.py::test_ivf_assignments_deterministic_under_repartition);
-    (2) recall-vs-brute-force is band-checked in pytest; (3) the
-    deterministic LSH bucket path (``knn_lsh_bucketed``) carries the
-    driver-checked value oracle for the ANN family; (4) the
-    driver-checkable row ``knn_ivf_metric_consistency`` pins that every
-    result this path returns is scored with EXACTLY the oracled cosine."""
+    """IVF ANN scale path (operators/ml_lsh.py:ivf_topk_cosine): the
+    fixed-point coarse quantizer trains 8 cells on the unit sphere, the
+    vec_id 0 query probes its 2 nearest cells only, and their members
+    are scored with the exact brute-force cosine.  Value-verified: the
+    oracle unrolls the same Lloyd rounds, ranks the query's cells from
+    the same integer distances and scores with ``knn_bruteforce_cosine``'s
+    SQL, so the top-5 rows match bit for bit.  Probing 2 of 8 cells
+    trades recall for a bounded candidate read
+    (``knn_ivf_nprobe_recall_curve`` grades that trade)."""
     from reddit_sse_stream_spark.operators.ml_lsh import ivf_topk_cosine
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -3632,19 +3718,14 @@ def dedup_simhash_exact_dup_invariant(spark: SparkSession, sf_dir: str) -> DataF
     " CAST(0 AS BIGINT) AS cos_mismatches",
 )
 def knn_ivf_metric_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ties the MLlib-KMeans IVF fast path ``knn_ivf_cells`` to the
-    oracled exact metric: every (vec_id, cos_sim) the IVF query returns
-    must carry EXACTLY the cosine the oracled brute-force scorer
-    (``knn_bruteforce_cosine``) computes for that vector — the IVF path
-    may search fewer candidates, but it must never score them differently
-    (an arithmetic drift in its distance kernel turns this row red).  The
-    constant oracle pins (k results, 0 mismatches).  Full top-k equality
-    with any oracled twin is impossible by design and NOT asserted:
-    MLlib's quantizer is a seeded iterative model DuckDB cannot
-    reproduce, and n_probe=2 of 8 cells legitimately trades recall
-    (measured 3/5 overlap with brute force at sf0.01) for a bounded
-    candidate read — the recall BAND is pinned in pytest
-    (tests/test_ml_lsh.py), the metric is pinned here.
+    """Ties the IVF path ``knn_ivf_cells`` to the oracled exact metric:
+    every (vec_id, cos_sim) the IVF query returns must carry EXACTLY the
+    cosine the Spark brute-force scorer (``knn_bruteforce_cosine``'s
+    plan) computes for that vector — the IVF path may search fewer
+    candidates, but it must never score them differently (an arithmetic
+    drift in its distance kernel turns this row red).  The constant
+    oracle pins (k results, 0 mismatches); ``knn_ivf_cells`` itself is
+    value-verified against its unrolled-CTE twin.
 
     Scale: the re-score joins k rows against the broadcast query vector —
     driver-side cost is k, data-side one scan."""
@@ -3680,67 +3761,8 @@ def knn_ivf_metric_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_fixedpoint_ctes(
-    n_cells: int = 8,
-    iters: int = 2,
-    dim: int = 64,
-    train_pred: str | None = None,
-    assign_pred: str | None = None,
-) -> tuple[list[str], str]:
-    """CTE list + final-assignment CTE name for the fixed-point Lloyd
-    oracle (shared by ``knn_ivf_fixedpoint_cells``, the diversity
-    subsample that builds on its cells, and — via ``train_pred`` /
-    ``assign_pred`` — the incremental-assign twin, which trains the
-    quantizer on one id subset and assigns a DIFFERENT subset with the
-    final centroids)."""
-    ctes = [
-        f"ex0 AS (SELECT vec_id, unnest(range(0, {dim})) AS d,"
-        " unnest(CAST(embedding AS DOUBLE[])) AS val FROM embeddings)",
-        "nrm AS (SELECT vec_id, greatest(sqrt("
-        "sum(CAST(floor(val * val * 1e12 + 0.5) AS BIGINT)) / 1e12), 1e-12) AS nrm"
-        " FROM ex0 GROUP BY vec_id)",
-        "ex AS (SELECT e.vec_id, e.d, e.val / n.nrm AS u"
-        " FROM ex0 e JOIN nrm n USING (vec_id))",
-    ]
-    src_train = "ex"
-    if train_pred:
-        ctes.append(f"ext AS (SELECT * FROM ex WHERE {train_pred})")
-        src_train = "ext"
-    src_final = "ex"
-    if assign_pred:
-        ctes.append(f"exa AS (SELECT * FROM ex WHERE {assign_pred})")
-        src_final = "exa"
-    seed_where = f" WHERE {train_pred}" if train_pred else ""
-    ctes += [
-        "seed AS (SELECT vec_id, CAST(row_number() OVER (ORDER BY vec_id) - 1"
-        f" AS INTEGER) AS cell FROM (SELECT DISTINCT vec_id FROM ex0{seed_where}"
-        f" ORDER BY vec_id LIMIT {n_cells}))",
-        "cen0 AS (SELECT s.cell, e.d, e.u AS c FROM seed s JOIN ex e USING (vec_id))",
-    ]
-    for t in range(iters + 1):
-        src = src_train if t < iters else src_final
-        ctes.append(
-            f"d{t} AS (SELECT e.vec_id, c.cell,"
-            " sum(CAST(floor((e.u - c.c) * (e.u - c.c) * 1e12 + 0.5) AS BIGINT))"
-            f" AS dist FROM {src} e JOIN cen{t} c USING (d) GROUP BY e.vec_id, c.cell)"
-        )
-        ctes.append(
-            f"a{t} AS (SELECT vec_id, cell FROM (SELECT vec_id, cell,"
-            " row_number() OVER (PARTITION BY vec_id ORDER BY dist, cell) AS rk"
-            f" FROM d{t}) WHERE rk = 1)"
-        )
-        if t < iters:
-            ctes.append(
-                f"cen{t + 1} AS (SELECT a.cell, e.d,"
-                " (CAST(sum(CAST(floor(e.u * 1e6 + 0.5) AS BIGINT)) AS BIGINT)"
-                " / 1e6) / count(*) AS c"
-                f" FROM a{t} a JOIN ex e USING (vec_id) GROUP BY a.cell, e.d)"
-            )
-    return ctes, f"a{iters}"
-
-
 def _ivf_fixedpoint_oracle(n_cells: int = 8, iters: int = 2, dim: int = 64) -> str:
-    """Unrolled-CTE twin of :func:`ml_lsh.ivf_fixedpoint_cells`: identical
+    """Unrolled-CTE twin of :func:`ml_lsh.ivf_train`'s cells: identical
     fixed-point Lloyd rounds over an exploded (vec_id, d, val) layout —
     integer squared distances, row_number argmin with cell-id tiebreak,
     1e-6-quantized centroid means — so the final assignment matches bit
@@ -3801,16 +3823,15 @@ def knn_ivf_incremental_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register("knn_ivf_fixedpoint_cells", _ivf_fixedpoint_oracle())
 def knn_ivf_fixedpoint_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ORACLED IVF quantizer (operators/ml_lsh.py:ivf_fixedpoint_cells):
+    """The ORACLED IVF quantizer (operators/ml_lsh.py:ivf_train):
     deterministic fixed-point Lloyd rounds on the unit sphere, initial
     centroids = the 8 smallest-id vectors, integer argmin assignment —
     the (vec_id, cell) index frame a 100 TB deployment writes as its
     partition column, verified bit-for-bit against the unrolled-CTE SQL
-    twin.  Complements ``knn_ivf_cells`` (seeded MLlib KMeans — the
-    library-integration path, rows-only by design)."""
-    from reddit_sse_stream_spark.operators.ml_lsh import ivf_fixedpoint_cells
+    twin.  ``knn_ivf_cells`` probes the same quantizer for a top-k."""
+    from reddit_sse_stream_spark.operators.ml_lsh import ivf_train
 
-    return ivf_fixedpoint_cells(_t(spark, sf_dir, "embeddings"))
+    return ivf_train(_t(spark, sf_dir, "embeddings")).assignments
 
 
 @_register("corpus_diverse_sample", _ivf_diverse_sample_oracle())
@@ -3828,9 +3849,9 @@ def corpus_diverse_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: quantizer as documented on its own entry; the cap is one
     window over the cell key with WindowGroupLimit pushing the top-k
     below the exchange."""
-    from reddit_sse_stream_spark.operators.ml_lsh import ivf_fixedpoint_cells
+    from reddit_sse_stream_spark.operators.ml_lsh import ivf_train
 
-    cells = ivf_fixedpoint_cells(_t(spark, sf_dir, "embeddings"))
+    cells = ivf_train(_t(spark, sf_dir, "embeddings")).assignments
     return corpus.cap_per_group(cells, group_col="cell", k=40, id_col="vec_id")
 
 
@@ -5464,53 +5485,88 @@ def embed_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus.pca_top_component(_t(spark, sf_dir, "embeddings"))
 
 
-def _kmeans_oracle(k: int = 4, iters: int = 3) -> str:
-    """Unrolled-CTE twin of :func:`corpus.kmeans_fixedpoint`: the same
-    quantize / assign / floor-mean update rounds, one CTE block per
-    iteration.  Every distance is an int64 sum of integer products and
-    every centroid coordinate one IEEE floor(double-quotient), so the
-    assignments and dist2_fp match the Spark+driver computation bit for
-    bit (see the operator docstring for the op-by-op argument)."""
+def _pq_ctes(
+    n_sub: int = 8,
+    k: int = 16,
+    iters: int = 2,
+    dim: int = 64,
+    p: str = "",
+    ex_cte: str | None = None,
+) -> tuple[list[str], str, str]:
+    """CTE list + (final-assignment, final-codebook) CTE names for the PQ
+    oracle chain; ``p`` prefixes every CTE name so the chain can be
+    composed with the IVF chain (which owns the bare ex/d/a names) in
+    one WITH block.  ``ex_cte`` overrides the source CTE body (must
+    produce (vec_id, sub, dd, xq)) — the residual IVF-PQ twin feeds the
+    chain 1e6-quantized residuals instead of raw coordinates."""
+    d_sub = dim // n_sub
     ctes = [
-        "ex AS (SELECT vec_id, CAST(ix.d AS INTEGER) AS d,"
-        " CAST(floor(CAST(embedding[ix.d + 1] AS DOUBLE) * 1000000 + 0.5)"
-        " AS BIGINT) AS xq"
-        " FROM embeddings CROSS JOIN (SELECT unnest(range(64)) AS d) ix)",
-        f"init AS (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT {k})",
-        "c0 AS (SELECT CAST(dense_rank() OVER (ORDER BY e.vec_id) - 1"
-        " AS INTEGER) AS cluster, e.d, e.xq FROM ex e JOIN init USING (vec_id))",
+        f"{p}ex AS ({ex_cte})"
+        if ex_cte is not None
+        else f"""{p}ex AS (
+      SELECT vec_id,
+             CAST(ix.d // {d_sub} AS INTEGER) AS sub,
+             CAST(ix.d % {d_sub} AS INTEGER) AS dd,
+             CAST(floor(CAST(embedding[ix.d + 1] AS DOUBLE) * 1000000 + 0.5)
+                  AS BIGINT) AS xq
+      FROM embeddings CROSS JOIN (SELECT unnest(range({dim})) AS d) ix)""",
+        f"""{p}init AS (
+      SELECT vec_id, CAST(row_number() OVER (ORDER BY vec_id) - 1
+                          AS INTEGER) AS code
+      FROM (SELECT DISTINCT vec_id FROM embeddings ORDER BY vec_id
+            LIMIT {k}))""",
+        f"{p}c0 AS (SELECT i.code, e.sub, e.dd, e.xq"
+        f" FROM {p}ex e JOIN {p}init i USING (vec_id))",
     ]
-    for t in range(1, iters + 1):
-        prev = f"c{t - 1}"
+    for t in range(1, iters + 2):
+        prev = f"{p}c{t - 1}"
         ctes += [
-            f"dist{t} AS (SELECT e.vec_id, c.cluster,"
-            " CAST(sum((e.xq - c.xq) * (e.xq - c.xq)) AS BIGINT) AS dist2"
-            f" FROM ex e JOIN {prev} c USING (d) GROUP BY e.vec_id, c.cluster)",
-            f"a{t} AS (SELECT vec_id, cluster FROM ("
-            " SELECT vec_id, cluster,"
-            " row_number() OVER (PARTITION BY vec_id ORDER BY dist2, cluster)"
-            f" AS rk FROM dist{t}) WHERE rk = 1)",
-            f"s{t} AS (SELECT a.cluster, e.d,"
-            " CAST(floor(CAST(sum(e.xq) AS DOUBLE) / count(*)) AS BIGINT) AS xq"
-            f" FROM a{t} a JOIN ex e USING (vec_id) GROUP BY a.cluster, e.d)",
-            f"c{t} AS (SELECT p.cluster, p.d, COALESCE(s.xq, p.xq) AS xq"
-            f" FROM {prev} p LEFT JOIN s{t} s"
-            " ON s.cluster = p.cluster AND s.d = p.d)",
-        ]
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f""",
-    distF AS (
-      SELECT e.vec_id, c.cluster,
+            f"""{p}d{t} AS (
+      SELECT e.vec_id, e.sub, c.code,
              CAST(sum((e.xq - c.xq) * (e.xq - c.xq)) AS BIGINT) AS dist2
-      FROM ex e JOIN c{iters} c USING (d) GROUP BY e.vec_id, c.cluster)
-    SELECT vec_id, CAST(cluster AS INTEGER) AS cluster, dist2 AS dist2_fp
-    FROM (
-      SELECT vec_id, cluster, dist2,
-             row_number() OVER (PARTITION BY vec_id ORDER BY dist2, cluster)
-               AS rk
-      FROM distF) WHERE rk = 1"""
+      FROM {p}ex e JOIN {prev} c ON c.sub = e.sub AND c.dd = e.dd
+      GROUP BY e.vec_id, e.sub, c.code)""",
+            f"""{p}a{t} AS (
+      SELECT vec_id, sub, code, dist2 FROM (
+        SELECT *, row_number() OVER (PARTITION BY vec_id, sub
+                                     ORDER BY dist2, code) AS rk
+        FROM {p}d{t}) WHERE rk = 1)""",
+        ]
+        if t <= iters:
+            ctes += [
+                f"""{p}s{t} AS (
+      SELECT a.sub, a.code, e.dd,
+             CAST(floor(CAST(sum(e.xq) AS DOUBLE) / count(*)) AS BIGINT)
+               AS xq
+      FROM {p}a{t} a JOIN {p}ex e ON e.vec_id = a.vec_id AND e.sub = a.sub
+      GROUP BY a.sub, a.code, e.dd)""",
+                f"""{p}c{t} AS (
+      SELECT p.sub, p.code, p.dd, COALESCE(s.xq, p.xq) AS xq
+      FROM {prev} p LEFT JOIN {p}s{t} s
+        ON s.sub = p.sub AND s.code = p.code AND s.dd = p.dd)""",
+            ]
+    return ctes, f"{p}a{iters + 1}", f"{p}c{iters}"
+
+
+def _pq_oracle(n_sub: int = 8, k: int = 16, iters: int = 2, dim: int = 64) -> str:
+    """Unrolled-CTE twin of :func:`ml_lsh.pq_train`'s codes: identical
+    quantize / per-subspace assign / floor-mean update rounds (one CTE
+    block per round), codes pivoted per vector at the end.  Every
+    distance is an int64 sum of integer products and every centroid
+    coordinate one IEEE floor(double-quotient), so codes and recon_fp
+    match the Spark+driver computation bit for bit."""
+    ctes, last, _cb = _pq_ctes(n_sub, k, iters, dim)
+    codes = ",\n           ".join(
+        f"CAST(max(CASE WHEN sub = {s} THEN code END) AS INTEGER) AS c{s}"
+        for s in range(n_sub)
+    )
+    return (
+        "WITH " + ",\n".join(ctes)
+        + f"""
+    SELECT vec_id,
+           {codes},
+           CAST(sum(dist2) AS BIGINT) AS recon_fp
+    FROM {last} GROUP BY vec_id"""
     )
 
 
@@ -5548,7 +5604,14 @@ def embed_matryoshka_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus.matryoshka_norm_retention(_t(spark, sf_dir, "embeddings"))
 
 
-@_register("embed_kmeans_fixedpoint", _kmeans_oracle())
+@_register(
+    "embed_kmeans_fixedpoint",
+    # k-means is PQ with one subspace: code c0 is the cluster, recon_fp
+    # the squared distance to it
+    "SELECT vec_id, c0 AS cluster, recon_fp AS dist2_fp FROM ("
+    + _pq_oracle(n_sub=1, k=4, iters=3)
+    + ")",
+)
 def embed_kmeans_fixedpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-integer Lloyd's k-means (k=4, 3 rounds) over the embedding
     column (operators/corpus.py:kmeans_fixedpoint) — the semantic-
@@ -9785,103 +9848,18 @@ def bpe_tokenize_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-def _pq_ctes(
-    n_sub: int = 8,
-    k: int = 16,
-    iters: int = 2,
-    dim: int = 64,
-    p: str = "",
-    ex_cte: str | None = None,
-) -> tuple[list[str], str, str]:
-    """CTE list + (final-assignment, final-codebook) CTE names for the PQ
-    oracle chain; ``p`` prefixes every CTE name so the chain can be
-    composed with the IVF chain (which owns the bare ex/d/a names) in
-    one WITH block.  ``ex_cte`` overrides the source CTE body (must
-    produce (vec_id, sub, dd, xq)) — the residual IVF-PQ twin feeds the
-    chain 1e6-quantized residuals instead of raw coordinates."""
-    d_sub = dim // n_sub
-    ctes = [
-        f"{p}ex AS ({ex_cte})"
-        if ex_cte is not None
-        else f"""{p}ex AS (
-      SELECT vec_id,
-             CAST(ix.d // {d_sub} AS INTEGER) AS sub,
-             CAST(ix.d % {d_sub} AS INTEGER) AS dd,
-             CAST(floor(CAST(embedding[ix.d + 1] AS DOUBLE) * 1000000 + 0.5)
-                  AS BIGINT) AS xq
-      FROM embeddings CROSS JOIN (SELECT unnest(range({dim})) AS d) ix)""",
-        f"""{p}init AS (
-      SELECT vec_id, CAST(row_number() OVER (ORDER BY vec_id) - 1
-                          AS INTEGER) AS code
-      FROM (SELECT DISTINCT vec_id FROM embeddings ORDER BY vec_id
-            LIMIT {k}))""",
-        f"{p}c0 AS (SELECT i.code, e.sub, e.dd, e.xq"
-        f" FROM {p}ex e JOIN {p}init i USING (vec_id))",
-    ]
-    for t in range(1, iters + 2):
-        prev = f"{p}c{t - 1}"
-        ctes += [
-            f"""{p}d{t} AS (
-      SELECT e.vec_id, e.sub, c.code,
-             CAST(sum((e.xq - c.xq) * (e.xq - c.xq)) AS BIGINT) AS dist2
-      FROM {p}ex e JOIN {prev} c ON c.sub = e.sub AND c.dd = e.dd
-      GROUP BY e.vec_id, e.sub, c.code)""",
-            f"""{p}a{t} AS (
-      SELECT vec_id, sub, code, dist2 FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-                                     ORDER BY dist2, code) AS rk
-        FROM {p}d{t}) WHERE rk = 1)""",
-        ]
-        if t <= iters:
-            ctes += [
-                f"""{p}s{t} AS (
-      SELECT a.sub, a.code, e.dd,
-             CAST(floor(CAST(sum(e.xq) AS DOUBLE) / count(*)) AS BIGINT)
-               AS xq
-      FROM {p}a{t} a JOIN {p}ex e ON e.vec_id = a.vec_id AND e.sub = a.sub
-      GROUP BY a.sub, a.code, e.dd)""",
-                f"""{p}c{t} AS (
-      SELECT p.sub, p.code, p.dd, COALESCE(s.xq, p.xq) AS xq
-      FROM {prev} p LEFT JOIN {p}s{t} s
-        ON s.sub = p.sub AND s.code = p.code AND s.dd = p.dd)""",
-            ]
-    return ctes, f"{p}a{iters + 1}", f"{p}c{iters}"
-
-
-def _pq_oracle(n_sub: int = 8, k: int = 16, iters: int = 2, dim: int = 64) -> str:
-    """Unrolled-CTE twin of :func:`ml_lsh.pq_codes_fixedpoint`: identical
-    quantize / per-subspace assign / floor-mean update rounds (one CTE
-    block per round), codes pivoted per vector at the end.  Same
-    exact-integer argument as the k-means oracle, with (sub, code) as
-    the model key."""
-    ctes, last, _cb = _pq_ctes(n_sub, k, iters, dim)
-    codes = ",\n           ".join(
-        f"CAST(max(CASE WHEN sub = {s} THEN code END) AS INTEGER) AS c{s}"
-        for s in range(n_sub)
-    )
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"""
-    SELECT vec_id,
-           {codes},
-           CAST(sum(dist2) AS BIGINT) AS recon_fp
-    FROM {last} GROUP BY vec_id"""
-    )
-
-
 @_register("embed_pq_codes", _pq_oracle())
 def embed_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization codes (operators/ml_lsh.py:pq_codes_fixedpoint
-    — Jégou et al. 2011, the FAISS IVF-PQ building block): per-subspace
+    """Product-quantization codes (operators/ml_lsh.py:pq_train — Jégou et al. 2011, the FAISS IVF-PQ building block): per-subspace
     exact-integer Lloyd codebooks learned for ALL 8 subspaces in one
     grouped-map job keyed by subspace (every round inside the task),
     every vector encoded as 8 one-byte codes + its integer
     reconstruction error — the compression that fits a billion-vector
     ANN index in RAM.  Codes and recon error are bit-verified
     against the unrolled-CTE twin."""
-    from reddit_sse_stream_spark.operators.ml_lsh import pq_codes_fixedpoint
+    from reddit_sse_stream_spark.operators.ml_lsh import pq_train
 
-    return pq_codes_fixedpoint(_t(spark, sf_dir, "embeddings"))
+    return pq_train(_t(spark, sf_dir, "embeddings")).codes
 
 
 
@@ -13999,9 +13977,11 @@ def knn_ivf_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the cell-pruned scan the IVF index exists to provide, with
     the sweep multiplying only the BOUNDED probe table, never the
     corpus."""
-    import math as _math
-
-    from reddit_sse_stream_spark.operators.ml_lsh import ivf_train, unit_cells
+    from reddit_sse_stream_spark.operators.ml_lsh import (
+        ivf_train,
+        rank_cells,
+        unit_cells,
+    )
 
     n_queries, k_out, probes_ladder = 8, 5, [1, 2, 4, 8]
     emb = _t(spark, sf_dir, "embeddings")
@@ -14024,19 +14004,11 @@ def knn_ivf_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Probe table: per query, cells ranked by the SAME fixed-point
     # integer distance the quantizer trains with (ties by cell id).
-    def _dfp(qu, cv):
-        return sum(
-            int(_math.floor((a - b) * (a - b) * 1e12 + 0.5))
-            for a, b in zip(qu, cv)
-        )
-
     probe_rows = []
     for r in qrows:
-        ranked = sorted(
-            (( _dfp(r["u"], cv), cell) for cell, cv in model.centroids),
-        )
+        ranked = rank_cells(r["u"], model.centroids)
         for p in probes_ladder:
-            for _, cell in ranked[:p]:
+            for cell in ranked[:p]:
                 probe_rows.append((p, int(r["_id"]), int(cell)))
     probes = F.broadcast(
         spark.createDataFrame(probe_rows, "nprobe long, qid long, cell int")

@@ -71,16 +71,11 @@ class SSEBroadcaster:
     #: refuses an unbounded batch from a misconfigured source
     DEFAULT_MAX_COLLECT_ROWS = 2 * DEFAULT_MAX_IDS
 
-    def __init__(
-        self,
-        clock: Callable[[], float] = time.time,
-        max_collect_rows: int = DEFAULT_MAX_COLLECT_ROWS,
-    ):
+    def __init__(self, clock: Callable[[], float] = time.time):
         self._clients: dict[str, ClientState] = {}
         #: guards every ClientState; notified whenever frames are appended
         self._cond = threading.Condition()
         self._clock = clock
-        self.max_collect_rows = max_collect_rows
 
     def register(self, client_id: str, spec: QuerySpec) -> ClientState:
         state = ClientState(spec=spec, last_sent=self._clock())
@@ -133,10 +128,10 @@ class SSEBroadcaster:
         transformations stay in the streaming plan upstream.
         """
         rows = batch_df.collect()
-        if len(rows) > self.max_collect_rows:
+        if len(rows) > self.DEFAULT_MAX_COLLECT_ROWS:
             raise RuntimeError(
                 f"SSE serving batch exceeds max_collect_rows="
-                f"{self.max_collect_rows}: the upstream source must cap ids "
+                f"{self.DEFAULT_MAX_COLLECT_ROWS}: the upstream source must cap ids "
                 "per trigger (max_ids_per_batch); the serving fan-out is not "
                 "a data-processing collect"
             )

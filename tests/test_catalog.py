@@ -11,24 +11,10 @@ Spark schema — HUGEINT (int128, which Spark cannot produce) always flags."""
 
 from __future__ import annotations
 
-import math
-
 import pytest
 
 from reddit_sse_stream_spark.plans.catalog import QUERIES
-
-
-def _norm(v):
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(v)
-    if isinstance(v, bool):
-        return int(v)
-    return v
-
-
-def _canon(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted((tuple(_norm(r[i]) for i in order) for r in rows), key=repr)
+from tools.verify_local import canon_rows, norm_value
 
 
 #: DuckDB type -> the Spark simpleString(s) that hash-match it. An empty set
@@ -90,7 +76,7 @@ def assert_no_complex_output(name, schema):
     sort_values/factorizes every output column, which dies on unhashable
     list/dict cells — so an oracled query must emit scalar columns ONLY
     (flatten arrays with posexplode in the catalog wrapper; the library
-    operator can keep returning arrays).  The local repr-based _canon
+    operator can keep returning arrays).  The repr-based canon_rows
     handles lists happily, which is exactly why this needs a schema-level
     assert instead of a value compare."""
     from pyspark.sql.types import ArrayType, MapType, StructType
@@ -123,7 +109,15 @@ def test_catalog_query(name, spark, duck, sf_dir):
     drows = res.fetchall()
     assert sorted(sdf.columns) == sorted(dcols)
     assert len(srows) == len(drows)
-    assert _canon(srows, sdf.columns) == _canon(drows, dcols)
+    assert canon_rows(srows, sdf.columns) == canon_rows(drows, dcols)
+
+
+def test_rows_without_oracle_are_the_two_fast_dedup_paths():
+    """Only the xxhash64 dedup fast paths go unoracled; each is tied to an
+    oracled md5 twin by an invariant row.  Every other row, the IVF top-k
+    included, is value-verified."""
+    unoracled = {n for n, q in QUERIES.items() if q.oracle is None}
+    assert unoracled == {"dedup_minhash_lsh", "dedup_simhash"}
 
 
 def test_gate_flags_hugeint_regression(duck):
@@ -202,8 +196,8 @@ def test_gate_flags_second_decimal_regression():
     """Regression for the round-2 blind spot: 47559.28 vs 47559.29 (banker's
     vs half-away rounding of 47559.285) normalized equal at 6 sig figs. The
     full-precision gate must distinguish them."""
-    assert _norm(47559.28) != _norm(47559.29)
-    assert _canon([(47559.28,)], ["c"]) != _canon([(47559.29,)], ["c"])
+    assert norm_value(47559.28) != norm_value(47559.29)
+    assert canon_rows([(47559.28,)], ["c"]) != canon_rows([(47559.29,)], ["c"])
 
 
 def test_approx_distinct_error_band(spark, duck, sf_dir):

@@ -1,4 +1,5 @@
-"""MLlib-backed IVF / PQ similarity operators: recall against exact ground truth."""
+"""Fixed-point IVF / PQ vector-index operators: exactness against brute force,
+determinism, guardrails and training job budgets."""
 
 from __future__ import annotations
 
@@ -55,30 +56,20 @@ def test_ivf_partial_probe_scores_are_exact_cosines(emb, qvec):
         assert exact_all[r["vec_id"]] == r["cos_sim"]
 
 
-def test_wrapper_plans_have_no_python_row_udf(spark, sf_dir):
-    """The VectorUDT interop must stay JVM-side (array_to_vector) — a
-    row-at-a-time Python UDF (BatchEvalPython node) in this wrapper plan
-    would serialize every row through the Python worker."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = ml_lsh._embedding_vectors(emb)
-    plan = vecs._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-
-
 def test_pq_codes_deterministic_and_reconstruction_sane(spark, sf_dir):
     """PQ codes must be partitioning-invariant (pure function of the
     data) and the learned codebook must beat the round-0 seeds: every
     vector's reconstruction error is <= its distance to the nearest
     SEED subvectors, summed — Lloyd rounds only improve the quantizer."""
-    from reddit_sse_stream_spark.operators.ml_lsh import pq_codes_fixedpoint
+    from reddit_sse_stream_spark.operators.ml_lsh import pq_train
     from reddit_sse_stream_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    a = sorted(map(tuple, pq_codes_fixedpoint(emb).collect()))
-    b = sorted(map(tuple, pq_codes_fixedpoint(emb.repartition(7)).collect()))
+    a = sorted(map(tuple, pq_train(emb).codes.collect()))
+    b = sorted(map(tuple, pq_train(emb.repartition(7)).codes.collect()))
     assert a == b and len(a) == emb.count()
     zero_rounds = sorted(
-        map(tuple, pq_codes_fixedpoint(emb, iters=0).collect())
+        map(tuple, pq_train(emb, iters=0).codes.collect())
     )
     trained = {t[0]: t[-1] for t in a}
     seeded = {t[0]: t[-1] for t in zero_rounds}
@@ -123,7 +114,7 @@ def test_ivfpq_topk_subset_and_pruning_semantics(spark, sf_dir):
     exactly, and with n_probe < n_cells every returned id must belong to
     a probed cell (the partition-pruning contract)."""
     from reddit_sse_stream_spark.operators.ml_lsh import (
-        ivf_fixedpoint_cells,
+        ivf_train,
         ivfpq_topk,
         pq_adc_topk,
     )
@@ -140,7 +131,7 @@ def test_ivfpq_topk_subset_and_pruning_semantics(spark, sf_dir):
 
     pruned = ivfpq_topk(emb, query_id=0, k_out=5, n_probe=2, n_cells=8)
     cells = {
-        r["vec_id"]: r["cell"] for r in ivf_fixedpoint_cells(emb).collect()
+        r["vec_id"]: r["cell"] for r in ivf_train(emb).assignments.collect()
     }
     rows = pruned.collect()
     assert 0 < len(rows) <= 5
@@ -199,12 +190,13 @@ def _jobs_during(spark, action) -> int:
     return marker("jobs_m2") - before - 2
 
 
-def test_lloyd_training_is_one_grouped_job(spark, sf_dir):
+def test_lloyd_training_is_one_grouped_job(spark, sf_dir, qvec):
     """Each fixed-point Lloyd training (IVF, PQ, and k-means as a
     one-subspace PQ) runs every round inside one grouped-map task and
     returns only its centroid table: the exchange feeding the task and
     the collect, whatever the round count (5 jobs for IVF and PQ, 7 for
-    k-means, with per-round driver loops)."""
+    k-means, with per-round driver loops).  Building the IVF top-k is
+    that training plus a driver-side probe."""
     from reddit_sse_stream_spark.operators import corpus
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -213,6 +205,9 @@ def test_lloyd_training_is_one_grouped_job(spark, sf_dir):
         "ivf_train(iters=6)": lambda: ml_lsh.ivf_train(emb, iters=6),
         "pq_train": lambda: ml_lsh.pq_train(emb),
         "kmeans_fixedpoint": lambda: corpus.kmeans_fixedpoint(emb),
+        "ivf_topk_cosine": lambda: ml_lsh.ivf_topk_cosine(
+            emb, qvec, k=5, n_cells=8, n_probe=2
+        ),
     }
     for name, build in builds.items():
         build()  # warm codegen and the scan
@@ -251,13 +246,13 @@ def test_ann_guardrails_fail_loudly(spark, sf_dir):
     from reddit_sse_stream_spark.operators.ml_lsh import (
         ivfpq_topk,
         pq_adc_topk,
-        pq_codes_fixedpoint,
+        pq_train,
     )
     from reddit_sse_stream_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     with _pytest.raises(ValueError, match="dim % n_sub"):
-        pq_codes_fixedpoint(emb, n_sub=7)
+        pq_train(emb, n_sub=7)
     with _pytest.raises(ValueError, match="not present"):
         ivfpq_topk(emb, query_id=-1)
     with _pytest.raises(ValueError, match="dims"):

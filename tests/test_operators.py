@@ -923,10 +923,9 @@ def test_media_features_payload_byte_deterministic(spark, sf_dir):
 
 
 def test_ivf_assignments_deterministic_under_repartition(spark, sf_dir):
-    """The IVF quantizer trains on a coalesce(1) input, so the seeded
-    KMeans model — and every cell assignment — must be identical no matter
-    how the parent frame is partitioned.  This is what makes the driver's
-    rows+schema check on the oracle-less ``knn_ivf_cells`` meaningful."""
+    """The IVF quantizer is exact fixed-point arithmetic, so the model —
+    and every cell assignment and top-k row — must be identical no matter
+    how the parent frame is partitioned."""
     from reddit_sse_stream_spark.operators.ml_lsh import ivf_topk_cosine
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1048,13 +1047,13 @@ def test_ivf_fixedpoint_cells_deterministic_and_useful(spark, sf_dir):
     cell cosine similarity (on unit vectors) above the global mean."""
     import numpy as np
 
-    from reddit_sse_stream_spark.operators.ml_lsh import ivf_fixedpoint_cells
+    from reddit_sse_stream_spark.operators.ml_lsh import ivf_train
 
     emb = load_table(spark, sf_dir, "embeddings")
-    got = {r["vec_id"]: r["cell"] for r in ivf_fixedpoint_cells(emb).collect()}
+    got = {r["vec_id"]: r["cell"] for r in ivf_train(emb).assignments.collect()}
     again = {
         r["vec_id"]: r["cell"]
-        for r in ivf_fixedpoint_cells(emb.repartition(9)).collect()
+        for r in ivf_train(emb.repartition(9)).assignments.collect()
     }
     assert got == again
     assert len(set(got.values())) > 1
@@ -1765,7 +1764,7 @@ def test_weighted_sample_priority_is_weight_monotone_in_expectation(spark):
 def test_semdedup_restricts_pairs_to_cells(spark):
     """Every returned pair must be co-located in one IVF cell, and every
     within-cell pair above threshold must be returned (cell-exhaustive)."""
-    from reddit_sse_stream_spark.operators.ml_lsh import ivf_fixedpoint_cells
+    from reddit_sse_stream_spark.operators.ml_lsh import ivf_train
     from reddit_sse_stream_spark.operators import similarity as simops
 
     import math
@@ -1778,9 +1777,9 @@ def test_semdedup_restricts_pairs_to_cells(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     pairs = simops.semdedup_cell_pairs(emb, threshold=0.5, n_cells=4, iters=1)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
-    cells = {r.vec_id: r.cell for r in ivf_fixedpoint_cells(
+    cells = {r.vec_id: r.cell for r in ivf_train(
         emb, n_cells=4, iters=1
-    ).collect()}
+    ).assignments.collect()}
     assert got, "expected some within-cell pairs above threshold"
     for a, b in got:
         assert cells[a] == cells[b]

@@ -7,8 +7,9 @@ bench, the examples, the tools and the perfbench harness — and fails if a
 ``__init__.py`` files import nothing, so a re-export cannot count as a
 caller: every module needs a real non-test importer.  README's "Running"
 block may name only scripts and ``-m`` subcommands that exist.  Every
-defaulted parameter of a public package function must be set by some
-call in the repo (tests included), or it is a constant with a name.
+defaulted parameter of a public package function or public class
+constructor must be set by some call in the repo (tests included), or it
+is a constant with a name.
 """
 
 from __future__ import annotations
@@ -193,22 +194,33 @@ def _passed_options() -> dict[str, set]:
     return passed
 
 
+def _public_signatures(tree: ast.Module):
+    """(called name, arguments, leading parameters a call does not pass)
+    for each public module-level function, and for each public class's
+    ``__init__``, which a call reaches by the class name without ``self``."""
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
+            yield node.name, node.args, 0
+        elif isinstance(node, ast.ClassDef) and not node.name.startswith("_"):
+            for fn in node.body:
+                if isinstance(fn, ast.FunctionDef) and fn.name == "__init__":
+                    yield node.name, fn.args, 1
+
+
 def test_every_operator_option_is_passed_somewhere():
     # A defaulted parameter no call sets is a constant with a name: the
     # value it always takes belongs in the body.
     passed = _passed_options()
     unset = []
     for path in sorted((REPO / PKG).rglob("*.py")):
-        for fn in ast.parse(path.read_text(), str(path)).body:
-            if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
-                continue
-            got = passed.get(fn.name, set())
-            positional = fn.args.posonlyargs + fn.args.args
-            first = len(positional) - len(fn.args.defaults)
+        for name, args, skip in _public_signatures(ast.parse(path.read_text(), str(path))):
+            got = passed.get(name, set())
+            positional = (args.posonlyargs + args.args)[skip:]
+            first = len(positional) - len(args.defaults)
             defaulted = [(i, a.arg) for i, a in enumerate(positional) if i >= first]
             defaulted += [
                 (None, a.arg)
-                for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
+                for a, d in zip(args.kwonlyargs, args.kw_defaults)
                 if d is not None
             ]
             for i, arg in defaulted:
@@ -216,5 +228,5 @@ def test_every_operator_option_is_passed_somewhere():
                     continue
                 if arg in got or (i is not None and (i in got or "*" in got)):
                     continue
-                unset.append(f"{_module_name(path)}.{fn.name}({arg})")
+                unset.append(f"{_module_name(path)}.{name}({arg})")
     assert not unset, f"{len(unset)} options no call sets: {unset}"

@@ -587,9 +587,9 @@ def test_foreach_batch_collect_bound(spark):
     """The serving fan-out collect is a circuit breaker, not a data path:
     a batch above max_collect_rows (misconfigured/uncapped source) raises
     instead of silently materializing on the driver."""
-    bc = SSEBroadcaster(max_collect_rows=10)
+    bc = SSEBroadcaster()
     bc.register("c1", QuerySpec())
-    big = spark.range(50).selectExpr(
+    big = spark.range(SSEBroadcaster.DEFAULT_MAX_COLLECT_ROWS + 1).selectExpr(
         "id", "'rc' AS event", "'a' AS author", "'s' AS subreddit",
         "CAST(NULL AS STRING) AS domain", "CAST(NULL AS BOOLEAN) AS over_18",
         "CAST(NULL AS BOOLEAN) AS is_self", "id AS created_utc",

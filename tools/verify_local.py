@@ -1,6 +1,6 @@
 """Local replica of the driver's correctness gate: run every catalog query
 in Spark AND its DuckDB oracle on the same sf dir; compare row count, sorted
-column names, and order-insensitive values.
+column names, and order-insensitive values at full float precision.
 
 Usage: python tools/verify_local.py [--plain-session] [sf_dir] [query ...]
 
@@ -26,20 +26,22 @@ from reddit_sse_stream_spark.sources.tables import TABLES
 from reddit_sse_stream_spark.session import get_spark, release_local_checkpoints
 
 
-def _norm(v):
+def norm_value(v):
+    """One cell at full precision: a float as its shortest round-trip
+    ``repr`` (so 47559.28 and 47559.29 stay distinct), NaN equal to
+    itself, a bool as the int the driver's hash sees."""
     if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return f"{v:.6g}"
+        return "NaN" if math.isnan(v) else repr(v)
     if isinstance(v, bool):
         return int(v)
     return v
 
 
-def _canon(rows, cols):
+def canon_rows(rows, cols):
+    """Rows as a sorted list of tuples, columns in name order: an
+    order-insensitive, full-precision form both engines' results compare in."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_norm(r[i]) for i in order) for r in rows]
-    return sorted(out, key=repr)
+    return sorted((tuple(norm_value(r[i]) for i in order) for r in rows), key=repr)
 
 
 def main() -> int:
@@ -111,8 +113,8 @@ def main() -> int:
         if len(srows) != len(drows):
             problems.append(f"rowcount spark={len(srows)} duck={len(drows)}")
         if not problems:
-            sc = _canon([tuple(r) for r in srows], scols)
-            dc = _canon(drows, dcols)
+            sc = canon_rows([tuple(r) for r in srows], scols)
+            dc = canon_rows(drows, dcols)
             if sc != dc:
                 diff = next((i for i, (a, b) in enumerate(zip(sc, dc)) if a != b), -1)
                 problems.append(
